@@ -211,8 +211,10 @@ def main() -> None:
         # instead of implicit in whichever earlier run in the container
         # paid it.  This doubles as the plain-copy warm-up the layout
         # comparison needs (both sides then pay read+join only).
-        cache_cold = not os.path.exists(
-            os.path.join(store_plain._cache_path("edges"), "_SUCCESS"))
+        cache_cold = any(
+            not os.path.exists(
+                os.path.join(store_plain._cache_path(name), "_SUCCESS"))
+            for name in ("edges", "edges_by_dst", "vertices"))
         t0 = time.perf_counter()
         store_plain.edges().write.format("noop").mode("overwrite").save()
         store_plain.edges(order_by="dst").write.format("noop").mode("overwrite").save()

@@ -38,6 +38,7 @@ bpe_encode's char fallback.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -196,9 +197,15 @@ def unigram_train(docs: DataFrame, n_iters: int = 1, max_piece_len: int = 4,
     `words` (r12, guide §2.4): callers that already hold the corpus'
     (word, freq) table — e.g. one materialized by word_freqs and shared
     with unigram_encode — pass it here so training never re-tokenizes
-    the corpus; it must equal word_freqs(docs, text_col).
+    the corpus; it must equal word_freqs(docs, text_col).  A `words`
+    table the caller has cached stays cached: training persists, and
+    later releases, only a table nobody had cached.
     """
-    words = (word_freqs(docs, text_col) if words is None else words).persist()
+    if words is None:
+        words = word_freqs(docs, text_col)
+    owns_cache = words.storageLevel == StorageLevel.NONE
+    if owns_cache:
+        words = words.persist()
     pieces = seed_pieces(words, max_piece_len, n_multi).persist()
     for _ in range(n_iters):
         seg = viterbi_segment(words, piece_scores(pieces), max_piece_len)
@@ -214,11 +221,13 @@ def unigram_train(docs: DataFrame, n_iters: int = 1, max_piece_len: int = 4,
     # cache hygiene (ADVICE r9): vocab is vocab-sized — cut it eagerly
     # to a checkpoint so the iteration caches (words + final pieces) can
     # be released HERE instead of leaking executor cache across repeated
-    # train calls in a long-lived session.  The returned words table is
-    # unpersisted but still valid (it recomputes from docs if used).
+    # train calls in a long-lived session.  A words table this call
+    # persisted is returned unpersisted but still valid (it recomputes
+    # from docs if used).
     vocab = vocab.localCheckpoint(eager=True)
     pieces.unpersist()
-    words.unpersist()
+    if owns_cache:
+        words.unpersist()
     return vocab, words
 
 

@@ -17,8 +17,12 @@ use map-side partial aggregation natively.
 
 from __future__ import annotations
 
+from typing import Any, Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from hugegraph_on_tikv_spark.operators.traversal import broadcast_fits
 
 
 def degrees(edges: DataFrame) -> DataFrame:
@@ -72,7 +76,6 @@ def aggregate_messages(edges: DataFrame, vertices: DataFrame | None,
 def pagerank(edges: DataFrame, iterations: int = 10, reset: float = 0.15,
              checkpoint_every: int = 3, broadcast_ranks: bool | None = None,
              state_partitions: int | None = None,
-             broadcast_max_vertices: int = 2_000_000,
              teleport_ids=None, weight_col: str | None = None,
              tol: float | None = None, init_ranks: DataFrame | None = None,
              _iters_out: list | None = None) -> DataFrame:
@@ -115,16 +118,12 @@ def pagerank(edges: DataFrame, iterations: int = 10, reset: float = 0.15,
     under-converges, so production runs pass tol.  `_iters_out`, when a
     list, receives the executed iteration count (test/telemetry hook).
 
-    broadcast_ranks=None (the default) auto-decides from the vertex count:
-    under broadcast_max_vertices the rank vector ships to every task so the
-    edge side never shuffles (measured 5.4 → 4.6s warm / 10.6 → 6.6s cold
-    at sf0.1); past it the contribution join shuffles on src, which a
-    bucketed-by-src edge table makes co-located.  Explicit True/False
-    overrides the heuristic.  The default threshold (2M rows ≈ tens of MB
-    of (id, rank) pairs) is sized so the broadcast relation stays well
-    under a 1g driver / modest-executor heap — comparable to
-    autoBroadcastJoinThreshold territory, NOT "whatever fits on a big
-    cluster"; raise it explicitly on beefier deployments.
+    broadcast_ranks=None (the default) asks `broadcast_fits` with the
+    vertex count: within the session's broadcast budget the rank vector
+    ships to every task so the edge side never shuffles (measured 5.4 →
+    4.6s warm / 10.6 → 6.6s cold at sf0.1); past it the contribution join
+    shuffles on src, which a bucketed-by-src edge table makes co-located.
+    Explicit True/False overrides the guard.
     """
     # state_partitions sizes every iteration's shuffle to the rank-state
     # scale instead of the session default: per-task fixed costs dominate
@@ -160,10 +159,6 @@ def pagerank(edges: DataFrame, iterations: int = 10, reset: float = 0.15,
     if state_partitions:
         norm_edges = norm_edges.repartition(state_partitions, "src")
     norm_edges = norm_edges.persist()
-    if broadcast_ranks is None:
-        # verts is persisted and needed immediately anyway; the count is one
-        # cheap job against the cached state
-        broadcast_ranks = verts.count() <= broadcast_max_vertices
     try:
         # broadcast_ranks=True ships the rank vector to every task so the edge
         # scan never shuffles — the right plan while |V| fits in an executor
@@ -195,6 +190,10 @@ def pagerank(edges: DataFrame, iterations: int = 10, reset: float = 0.15,
                 init_ranks.select("id", F.col("rank").alias("_ir")),
                 "id", "left")
                 .select("id", F.coalesce(F.col("_ir"), tele).alias("rank")))
+        if broadcast_ranks is None:
+            # verts is persisted and needed immediately anyway; the count
+            # is one cheap job against the cached state
+            broadcast_ranks = broadcast_fits(ranks, verts.count())
         prev_ck = None
         iters_done = 0
         for i in range(iterations):
@@ -277,9 +276,7 @@ def pagerank(edges: DataFrame, iterations: int = 10, reset: float = 0.15,
 def katz_centrality(edges: DataFrame, iterations: int = 8,
                     alpha: float = 0.05, beta: float = 1.0,
                     checkpoint_every: int = 3,
-                    broadcast_ranks: bool | None = None,
-                    state_partitions: int | None = None,
-                    broadcast_max_vertices: int = 2_000_000) -> DataFrame:
+                    state_partitions: int | None = None) -> DataFrame:
     """Katz centrality over the directed edge list: x_{t+1}(v) = beta +
     alpha · Σ_{(u,v)∈E} x_t(u), x_0 = beta — i.e. each vertex counts walks
     of every length arriving at it, damped by alpha^length (Katz 1953).
@@ -290,7 +287,7 @@ def katz_centrality(edges: DataFrame, iterations: int = 8,
     way).  Returns (id, katz), unnormalized.
 
     Plan shape is pagerank's (one shuffle per iteration on dst, rank
-    vector broadcast under the same vertex-count guard, localCheckpoint
+    vector broadcast under the same `broadcast_fits` guard, localCheckpoint
     cadence to bound lineage) minus the degree-normalization join — see
     pagerank's docstring for the 100×-scale posture.
     """
@@ -306,10 +303,9 @@ def katz_centrality(edges: DataFrame, iterations: int = 8,
     if state_partitions:
         e_sel = e_sel.repartition(state_partitions, "src")
     e_sel = e_sel.persist()
-    if broadcast_ranks is None:
-        broadcast_ranks = verts.count() <= broadcast_max_vertices
     try:
         ranks = verts.withColumn("katz", F.lit(float(beta)))
+        broadcast_ranks = broadcast_fits(ranks, verts.count())
         for i in range(iterations):
             rank_side = ranks.withColumnRenamed("id", "src")
             if broadcast_ranks:
@@ -432,8 +428,8 @@ def hits(edges: DataFrame, iterations: int = 8,
         verts.unpersist()
 
 
-def connected_components(edges: DataFrame, max_iterations: int = 20,
-                         broadcast_max_vertices: int = 4_000_000) -> DataFrame:
+def connected_components(edges: DataFrame,
+                         max_iterations: int = 20) -> DataFrame:
     """Undirected connected components by iterative min-id label propagation
     (HashMin).  Returns (id, component) where component = min vertex id in
     the component.  Converges in O(diameter) rounds; each round is one
@@ -458,11 +454,11 @@ def connected_components(edges: DataFrame, max_iterations: int = 20,
     # r11 (guide §3.1, the pagerank/coloring posture): the label table is
     # VERTEX-scale but joins the EDGE-scale adjacency every round, and the
     # checkpointed adj/label frames carry default (huge) size stats
-    # (_ckpt_fresh contract), so the planner never auto-broadcasts and AQE
+    # (_ckpt contract), so the planner never auto-broadcasts and AQE
     # can only demote AFTER the edge set has already shuffled.  One
     # vertex-count job up front (amortized over up to max_iterations
     # rounds) decides explicitly; past the guard the shuffle plan stays.
-    bcast = labels.count() <= broadcast_max_vertices
+    bcast = broadcast_fits(labels, labels.count())
     for i in range(max_iterations):
         lab_b = labels.withColumnRenamed("id", "b_id")
         if bcast:
@@ -485,9 +481,10 @@ def connected_components(edges: DataFrame, max_iterations: int = 20,
         )
         if (i + 1) % 3 == 0:
             # probe rides the checkpoint's materializing job (rule 31 /
-            # _ckpt_fresh_probe): one action per probe round instead of
+            # _ckpt's measure): one action per probe round instead of
             # eager-checkpoint + separate join-count job
-            probed, changed = _ckpt_fresh_probe(new_labels, F.col("_chg"))
+            probed, changed = _ckpt(
+                new_labels, lambda ck: ck.filter(F.col("_chg")).count())
             labels = probed.drop("_chg")
             if changed == 0:
                 break
@@ -497,8 +494,7 @@ def connected_components(edges: DataFrame, max_iterations: int = 20,
 
 
 def connected_components_star(edges: DataFrame, max_iterations: int = 25,
-                              _rounds_out: list | None = None,
-                              broadcast_max_vertices: int = 4_000_000) -> DataFrame:
+                              _rounds_out: list | None = None) -> DataFrame:
     """Undirected connected components by alternating large-star /
     small-star contraction (Kiveris et al., "Connected Components in
     MapReduce and Beyond") — the opt-in scale path next to HashMin
@@ -531,14 +527,6 @@ def connected_components_star(edges: DataFrame, max_iterations: int = 25,
     v0 = (edges.select(F.col("src").alias("id"))
           .unionByName(edges.select(F.col("dst").alias("id"))).distinct()
           .localCheckpoint(eager=True))
-    # r11 (guide §1.2 action budget): the canonical edge set's checkpoint
-    # is LAZY — the initial signature aggregate below materializes it, so
-    # setup costs one job instead of two; same fusion per round (the
-    # signature IS the round's materializing action, the rule-31 pattern).
-    e = (edges.filter(F.col("src") != F.col("dst"))
-         .select(F.least("src", "dst").alias("u"),
-                 F.greatest("src", "dst").alias("v"))
-         .distinct().localCheckpoint(eager=False))
 
     def _sig(df: DataFrame) -> tuple:
         """(count, hash-sum, seeded-hash-sum) of a DISTINCT canonical edge
@@ -552,8 +540,15 @@ def connected_components_star(edges: DataFrame, max_iterations: int = 25,
         ).collect()[0]
         return (row["n"], row["h1"], row["h2"])
 
-    sig_prev = _sig(e)           # materializes the lazy checkpoint
-    e = _fresh_from_ckpt(e, edges.sparkSession)
+    # r11 (guide §1.2 action budget): the canonical edge set's checkpoint
+    # is materialized by its initial signature aggregate, so setup costs
+    # one job instead of two; same fusion per round (the signature IS the
+    # round's materializing action, the rule-31 pattern).
+    e, sig_prev = _ckpt(
+        edges.filter(F.col("src") != F.col("dst"))
+        .select(F.least("src", "dst").alias("u"),
+                F.greatest("src", "dst").alias("v"))
+        .distinct(), _sig)
     # r11 (guide §3.1, the pagerank/coloring broadcast-under-guard
     # posture): `mins` and `mins2` are VERTEX-scale (one row per
     # still-active vertex), yet both per-round joins shuffled their
@@ -564,7 +559,7 @@ def connected_components_star(edges: DataFrame, max_iterations: int = 25,
     # the rounds keep the shuffle-join plan.  Plan choice only; inner
     # equi-joins on exact keys, results identical (equality pytest vs
     # HashMin + the fallback pin).
-    bcast = v0.count() <= broadcast_max_vertices
+    n_v = v0.count()
     rounds = 0
     converged = sig_prev[0] == 0
     for _ in range(max_iterations):
@@ -577,7 +572,7 @@ def connected_components_star(edges: DataFrame, max_iterations: int = 25,
                     e.select(F.col("v").alias("a"), F.col("u").alias("b"))))
         mins = (nbrs.groupBy("a")
                 .agg(F.least(F.min("b"), F.first("a")).alias("m")))
-        if bcast:
+        if broadcast_fits(mins, n_v):
             mins = F.broadcast(mins)
         # NOTE: no distinct here — duplicate (u, v) rows cannot change the
         # min aggregate below and the small-star output dedups anyway, so
@@ -597,22 +592,20 @@ def connected_components_star(edges: DataFrame, max_iterations: int = 25,
         # ---- small-star (edges already canonical u < v: group at v) ----
         mins2 = (large.groupBy(F.col("v").alias("a"))
                  .agg(F.min("u").alias("m")))
-        if bcast:
+        if broadcast_fits(mins2, n_v):
             mins2 = F.broadcast(mins2)
         joined = large.join(mins2, large.v == mins2.a)
-        small = (joined.select(F.col("a").alias("x"), F.col("m"))
-                 .unionByName(joined.select(F.col("u").alias("x"), F.col("m")))
-                 .filter(F.col("x") != F.col("m"))
-                 .select(F.col("m").alias("u"), F.col("x").alias("v"))
-                 .distinct()
-                 .localCheckpoint(eager=False))
         # fixpoint: same canonical edge set, checked by one aggregate
         # (count + two independent order-insensitive hash sums) — no
         # per-round exceptAll join over the edge set.  The aggregate runs
         # on the LAZY checkpoint and doubles as its materializing job
         # (one action per round, was eager-checkpoint + aggregate).
-        sig_now = _sig(small)
-        small = _fresh_from_ckpt(small, edges.sparkSession)
+        small, sig_now = _ckpt(
+            joined.select(F.col("a").alias("x"), F.col("m"))
+            .unionByName(joined.select(F.col("u").alias("x"), F.col("m")))
+            .filter(F.col("x") != F.col("m"))
+            .select(F.col("m").alias("u"), F.col("x").alias("v"))
+            .distinct(), _sig)
         converged = sig_now == sig_prev
         e, sig_prev = small, sig_now
     if _rounds_out is not None:
@@ -1477,25 +1470,6 @@ def modularity_score(edges: DataFrame, labels: DataFrame,
     return float(num or 0) / float(4 * m * m)
 
 
-# same sizing rationale as pagerank's broadcast_max_vertices: vertex-sized
-# (id, label/degree) tables up to 2M rows are tens of MB broadcast — well
-# inside a modest executor heap; raise explicitly on beefier deployments
-_LOUVAIN_BROADCAST_MAX = 2_000_000
-
-# A/B switch for the adj hash-partitioning plan below (plan choice only —
-# results are bit-identical either way); module-level so a single-session
-# alternated A/B can toggle it without code swaps.
-_LOUVAIN_ADJ_PARTITION = True
-
-# measurement aid (r12): per-round accept/reject + wall-clock trace, off by
-# default; enables action-schedule profiling without touching results
-import os as _os  # noqa: E402
-
-_LOUVAIN_TRACE = bool(_os.environ.get("LOUVAIN_TRACE"))
-# r12 A/B toggle (measurement only): disables the speculative next-round
-# fusion so alternated A/B pairs can isolate its effect.  Production
-# gating is `small` (the broadcast regime) — see _louvain_rounds.
-_LOUVAIN_NO_SPEC = bool(_os.environ.get("LOUVAIN_NO_SPEC"))
 # r12 probe, MEASURED NEUTRAL AND REVERTED (guide §1.1): running the
 # id-keyed vertex-scale joins (side, enriched⋈side, lab⟕best, deg⋈lab)
 # as plain co-partitioned joins instead of broadcasts did NOT drop the
@@ -1512,9 +1486,12 @@ def _bcast_if(df: DataFrame, small: bool) -> DataFrame:
     winners) are all VERTEX- or community-sized, so while the vertex
     count fits the guard they ship to every task and the edge-sized
     frames never shuffle for a join — only the groupBy aggregations
-    shuffle.  Past the guard the caller leaves small=False and every
-    join falls back to the shuffle plan (co-locatable via bucketing at
-    deployment scale).  Plan choice only; results are identical."""
+    shuffle.  `small` is one `broadcast_fits` verdict over the vertex
+    count, sized by a (long, long) row — the width of the (id,
+    label/degree) side tables.  Past the guard the caller leaves
+    small=False and every join falls back to the shuffle plan
+    (co-locatable via bucketing at deployment scale).  Plan choice only;
+    results are identical."""
     return F.broadcast(df) if small else df
 
 
@@ -1717,7 +1694,7 @@ def modularity_local_move(edges: DataFrame, labels: DataFrame,
         return labels.select(*out_cols)
     lab = (labels.select("id", F.col(label_col).alias("_c"))
            .localCheckpoint(eager=True))
-    small = lab.count() <= _LOUVAIN_BROADCAST_MAX
+    small = broadcast_fits(lab, lab.count())
     proposed = (_local_move_proposal(und, lab, m, small=small)
                 .withColumnRenamed("_c", label_col)
                 .localCheckpoint(eager=True))
@@ -1756,8 +1733,7 @@ def _louvain_invariants(und: DataFrame,
     adj_base = (und.select(F.col("u").alias("id"), F.col("v").alias("b"))
                 .unionByName(
                     und.select(F.col("v").alias("id"), F.col("u").alias("b"))))
-    adj = (adj_base.repartition("id") if _LOUVAIN_ADJ_PARTITION and small
-           else adj_base).persist()
+    adj = (adj_base.repartition("id") if small else adj_base).persist()
     return deg, adj
 
 
@@ -1852,7 +1828,6 @@ def _louvain_rounds(und: DataFrame, m: int, cur: DataFrame,
         # guard the per-round jobs are compute-bound edge-scale shuffles
         # where wasted speculative work is real money, and the latency
         # this overlaps no longer dominates.
-        speculate = small and not _LOUVAIN_NO_SPEC
         pending: tuple[DataFrame, int] | None = None
         i = 0
         while i < max_rounds:
@@ -1875,7 +1850,7 @@ def _louvain_rounds(und: DataFrame, m: int, cur: DataFrame,
                     else:
                         branches.append(_tagged(cur, "b"))
                 spec_prop = None
-                if speculate and i + 1 < max_rounds:
+                if small and i + 1 < max_rounds:
                     spec_prop = _mk_proposal(proposed, (i + 1) % 2, False)
                     branches.append(_tagged(spec_prop, "s"))
                 uni = branches[0]
@@ -1889,12 +1864,6 @@ def _louvain_rounds(und: DataFrame, m: int, cur: DataFrame,
                     prev_num = rows.get("b", 0)
                 spec = ((spec_prop, rows.get("s", 0))
                         if spec_prop is not None else None)
-            if _LOUVAIN_TRACE:
-                import time as _t
-                print(f"# louvain L1 round {i} parity {i % 2}: "
-                      f"num={num} prev={prev_num} "
-                      f"{'ACCEPT' if num > prev_num else 'reject'} "
-                      f"t={_t.perf_counter():.2f}", flush=True)
             # continue, not break: rounds alternate the parity bit, so a
             # rejected round's SUCCESSOR proposes a different move set
             # (the pre-r10 break was only valid while proposals were a
@@ -1939,7 +1908,7 @@ def louvain(edges: DataFrame, labels: DataFrame | None = None,
     This is the LOCAL-MOVE phase only — `louvain_full` adds the
     contraction phase.  Returns (id, <label_col>)."""
     und, m, n = _und_stats(edges)
-    small = n <= _LOUVAIN_BROADCAST_MAX
+    small = broadcast_fits(und, n)
     singles = labels is None
     if singles:
         cur = None  # _louvain_rounds derives the identity from deg
@@ -2230,7 +2199,7 @@ def louvain_full(edges: DataFrame, label_col: str = "community",
     callers don't re-run level 1 or re-aggregate O(m) numerators.
     Returns (id, <label_col>)."""
     und, m, n = _und_stats(edges)
-    small = n <= _LOUVAIN_BROADCAST_MAX
+    small = broadcast_fits(und, n)
     cur, prev_num, moved1 = _louvain_rounds(und, m, None, label_col,
                                             level1_rounds, small=small,
                                             init_singletons=True)
@@ -2305,9 +2274,7 @@ def louvain_full(edges: DataFrame, label_col: str = "community",
         # round's two super-graph aggregations reuse the cached
         # partitioning under the broadcast regime (r12, ADVICE r11:
         # gated on `small` like the level-1 invariants)
-        adj = (adj_base.repartition("sid")
-               if _LOUVAIN_ADJ_PARTITION and small
-               else adj_base).persist()
+        adj = (adj_base.repartition("sid") if small else adj_base).persist()
         slab = wdeg.select("sid", F.col("sid").alias("sc"))
         improved = False
         rejects = 0
@@ -2333,7 +2300,6 @@ def louvain_full(edges: DataFrame, label_col: str = "community",
         # r12 speculation — same schedule-preserving accept-assumed
         # fusion as _louvain_rounds (see its comment), on the contracted
         # graph; guard numerators stay the provably-equal sed form
-        speculate = small and not _LOUVAIN_NO_SPEC
         pending: tuple[DataFrame, int] | None = None
         try:
             r = 0
@@ -2346,7 +2312,7 @@ def louvain_full(edges: DataFrame, label_col: str = "community",
                     prop = _mk_prop(slab, r % 2, slab_identity)
                     branches = [_tagged_sed(prop, "n")]
                     spec_prop = None
-                    if speculate and r + 1 < level2_rounds:
+                    if small and r + 1 < level2_rounds:
                         spec_prop = _mk_prop(prop, (r + 1) % 2, False)
                         branches.append(_tagged_sed(spec_prop, "s"))
                     uni = branches[0]
@@ -2363,12 +2329,6 @@ def louvain_full(edges: DataFrame, label_col: str = "community",
                     num = rows.get("n", 0)
                     spec = ((spec_prop, rows.get("s", 0))
                             if spec_prop is not None else None)
-                if _LOUVAIN_TRACE:
-                    import time as _t
-                    print(f"# louvain L2+ round {r} parity {r % 2}: "
-                          f"num={num} prev={prev_num} "
-                          f"{'ACCEPT' if num > prev_num else 'reject'} "
-                          f"t={_t.perf_counter():.2f}", flush=True)
                 if num <= prev_num:
                     # two consecutive rejections across both parities =
                     # fixpoint; later rounds replay them (see
@@ -2745,64 +2705,48 @@ def hyperball_summary(edges: DataFrame, max_rounds: int = 16,
         "n_vertices double, avg_distance double, effective_diameter double")
 
 
-def _ckpt_fresh(df: DataFrame) -> DataFrame:
-    """localCheckpoint + rebuild as a bare LogicalRDD with NO inherited
-    size statistics.
+def _ckpt(df: DataFrame, measure: Callable[[DataFrame], Any] | None = None
+          ) -> tuple[DataFrame, Any]:
+    """localCheckpoint materialized by exactly ONE action and rebuilt as a
+    bare LogicalRDD with NO inherited size statistics; returns
+    (frame, value of that action).
 
-    localCheckpoint truncates lineage but copies the origin plan's
-    size-in-bytes ESTIMATE into the LogicalRDD, so estimates compound
-    across rounds; a pointer-doubling step (root ⨝ root) SQUARES the
-    estimate every iteration, and after a handful of rounds the BigInt
+    The action is `measure(ck)` over the lazy checkpoint when given — a
+    probe the caller needs anyway (connected_components' change count,
+    cc_star's edge-set signature, spanning_forest's moved count) — and
+    otherwise the JVM row count of the checkpoint RDD, so the caller gets
+    the exact row count for free (a DataFrame.count() over the lazy
+    checkpoint would plan an extra job).
+
+    Why the stats reset: localCheckpoint truncates lineage but copies the
+    origin plan's size-in-bytes ESTIMATE into the LogicalRDD, so estimates
+    compound across rounds; a pointer-doubling step (root ⨝ root) SQUARES
+    the estimate every iteration, and after a handful of rounds the BigInt
     holding it reaches megabytes — Catalyst's stats visitor then burns
     minutes in BigInteger.divide and OOMs the driver (observed at round 3
-    on a 3,638-edge graph).  Rebuilding from the already-materialized
-    checkpoint RDD (JVM-side, zero recompute, no Python boundary) resets
-    the estimate to defaultSizeInBytes; joins against these frames still
-    end up broadcast when AQE sees the real post-shuffle sizes.
+    on a 3,638-edge graph).  Rebuilding from the checkpoint RDD (JVM-side,
+    zero recompute, no Python boundary) resets the estimate to
+    spark.sql.defaultSizeInBytes, so the planner never auto-broadcasts
+    these frames: operators that want a broadcast ask `broadcast_fits`.
 
     Supported runtimes: classic py4j-backed Spark 3.4-4.x sessions ONLY.
     Uses private internals (DataFrame._jdf, QueryExecution.toRdd,
     SparkSession.internalCreateDataFrame) that do not exist on Spark
     Connect, so fail fast with a clear error instead of an opaque py4j
     AttributeError."""
-    ck = df.localCheckpoint(eager=True)
-    return _fresh_from_ckpt(ck, df.sparkSession)
-
-
-def _fresh_from_ckpt(ck: DataFrame, spark) -> DataFrame:
-    if not hasattr(ck, "_jdf"):
+    if not hasattr(df, "_jdf"):
         raise RuntimeError(
-            "_ckpt_fresh requires a classic (py4j) SparkSession; Spark "
+            "_ckpt requires a classic (py4j) SparkSession; Spark "
             "Connect sessions expose no DataFrame._jdf. Run iterative "
             "graph operators on a non-Connect session.")
+    spark = df.sparkSession
+    ck = df.localCheckpoint(eager=False)
     jdf = ck._jdf
+    rdd = jdf.queryExecution().toRdd()
+    value = measure(ck) if measure is not None else rdd.count()
     fresh = spark._jsparkSession.internalCreateDataFrame(
-        jdf.queryExecution().toRdd(), jdf.schema(), False)
-    return DataFrame(fresh, spark)
-
-
-def _ckpt_fresh_counted(df: DataFrame) -> tuple[DataFrame, int]:
-    """`_ckpt_fresh` whose materializing action doubles as a row count
-    (VERDICT r10 #4): the checkpoint is LAZY and realized by count() —
-    ONE job instead of eager-checkpoint + count — then rebuilt
-    stat-fresh exactly like `_ckpt_fresh`.  For loops whose guard needs
-    the materialized frame's size anyway (greedy_coloring's
-    broadcast-under-guard pick, spanning_forest's emptiness probe)."""
-    ck = df.localCheckpoint(eager=False)
-    cnt = ck.count()
-    return _fresh_from_ckpt(ck, df.sparkSession), cnt
-
-
-def _ckpt_fresh_probe(df: DataFrame, pred: Column) -> tuple[DataFrame, int]:
-    """`_ckpt_fresh` whose materializing action doubles as a PREDICATE
-    count: count(filter(pred)) over the lazy checkpoint realizes every
-    partition (localCheckpoint materializes the whole RDD on its first
-    job) while returning the probe the caller's fixpoint test needs —
-    spanning_forest's pointer-doubling moved-count, previously a
-    separate every-3rd-step job (VERDICT r10 #9)."""
-    ck = df.localCheckpoint(eager=False)
-    cnt = ck.filter(pred).count()
-    return _fresh_from_ckpt(ck, df.sparkSession), cnt
+        rdd, jdf.schema(), False)
+    return DataFrame(fresh, spark), value
 
 
 def _edge_priority(weight: Column, u: Column, v: Column,
@@ -2839,9 +2783,7 @@ def _edge_priority_struct() -> Column:
 
 def spanning_forest(weighted_edges: DataFrame, max_rounds: int = 16,
                     jump_steps: int = 24,
-                    weight_scale: int = 100,
-                    broadcast_components: bool | None = None,
-                    broadcast_max_components: int = 4_000_000) -> DataFrame:
+                    weight_scale: int = 100) -> DataFrame:
     """Minimum spanning forest by Boruvka contraction — the MapReduce-era
     classic, O(log n) rounds, each round a pair of keyed aggregations (no
     sequential union-find, no sorting the global edge list like Kruskal).
@@ -2857,13 +2799,12 @@ def spanning_forest(weighted_edges: DataFrame, max_rounds: int = 16,
     doubled edge list (full payload rides the shuffle) — the old shape
     aggregated min(key) per component and re-joined the edge set by
     string key, a second |ed|-scale shuffle every round.  The
-    per-component root table broadcasts UNDER AN EXPLICIT GUARD
-    (`broadcast_components`/`broadcast_max_components=4M`, the
-    greedy_coloring posture): within the guard the pointer-doubling
-    self-joins and the relabel's two edge-side joins are broadcast hash
-    joins — the shrinking edge set never reshuffles for relabeling —
-    and past it (a 100×-scale round 1) the same plans fall back to
-    shuffle joins instead of an executor-heap OOM.  With distinct priorities the pointer graph's only
+    per-component root table broadcasts while it passes `broadcast_fits`:
+    within the budget the pointer-doubling self-joins and the relabel's
+    two edge-side joins are broadcast hash joins — the shrinking edge set
+    never reshuffles for relabeling — and past it (a 100×-scale round 1)
+    the same plans fall back to shuffle joins instead of an executor-heap
+    OOM.  With distinct priorities the pointer graph's only
     cycles are mutual pairs, whose smaller id becomes the new root — the
     textbook invariant.
 
@@ -2878,12 +2819,11 @@ def spanning_forest(weighted_edges: DataFrame, max_rounds: int = 16,
     never the full input; the original (u, v, weight) ride along as
     payload.  r11 action budget (VERDICT r10 #9): every probe rides the
     frame's own materializing job — the edge set's emptiness check is
-    the count of its lazy checkpoint (`_ckpt_fresh_counted`), and each
-    pointer-doubling step's moved-count rides its checkpoint job
-    (`_ckpt_fresh_probe`), so the doubling loop exits at the EXACT
-    fixpoint step with zero extra jobs (previously it probed every 3rd
-    step as a separate job and overshot); moved == 0 remains the
-    convergence certificate.  The min-edge selection is a lazy
+    the row count of its checkpoint (`_ckpt`), and each pointer-doubling
+    step's moved-count rides its checkpoint job (`_ckpt`'s measure), so
+    the doubling loop exits at the EXACT fixpoint step with zero extra
+    jobs (previously it probed every 3rd step as a separate job and
+    overshot); moved == 0 remains the convergence certificate.  The min-edge selection is a lazy
     checkpoint materialized by the pointer-root job that consumes it.
     Accumulators are unions of per-round checkpointed deltas, never
     re-checkpointed cumulative frames.
@@ -2900,7 +2840,7 @@ def spanning_forest(weighted_edges: DataFrame, max_rounds: int = 16,
     Returns (u, v, weight) canonical u<v, one row per forest edge."""
     spark = weighted_edges.sparkSession
     pr = _edge_priority_struct()
-    ed, n_ed = _ckpt_fresh_counted(
+    ed, n_ed = _ckpt(
         weighted_edges
         .filter(F.col("src") != F.col("dst"))
         .select(F.least("src", "dst").alias("u"),
@@ -2952,13 +2892,10 @@ def spanning_forest(weighted_edges: DataFrame, max_rounds: int = 16,
         # 2·n_ed as the sound round-1 fallback (every live component
         # has ≥1 incident cross edge); past the guard the SMJ stands.
         pair_bound = prev_n_root if prev_n_root is not None else 2 * n_ed
-        bcast_pair = (pair_bound <= broadcast_max_components
-                      if broadcast_components is None
-                      else broadcast_components)
         other = ptr.select(F.col("c").alias("p"), F.col("p").alias("back"))
-        if bcast_pair:
+        if broadcast_fits(other, pair_bound):
             other = F.broadcast(other)
-        root, n_root = _ckpt_fresh_counted(
+        root, n_root = _ckpt(
             ptr.join(other, "p", "left")
             .select(
                 "c",
@@ -2967,16 +2904,13 @@ def spanning_forest(weighted_edges: DataFrame, max_rounds: int = 16,
         )
         prev_n_root = n_root
         # broadcast-under-guard (greedy_coloring's posture, r11): root is
-        # one row PER COMPONENT — 16 bytes a row, so up to the guard it
-        # ships to every task and the doubling/relabel joins stop
-        # shuffling the (much larger) edge set; past the guard (a
-        # 100×-scale first round) the shuffle plans below run unchanged.
-        # n_root rides the root job's own count (_ckpt_fresh_counted).
-        bcast = (n_root <= broadcast_max_components
-                 if broadcast_components is None else broadcast_components)
-
+        # one row PER COMPONENT, so up to the guard it ships to every task
+        # and the doubling/relabel joins stop shuffling the (much larger)
+        # edge set; past the guard (a 100×-scale first round) the shuffle
+        # plans below run unchanged.  n_root rides the root job's own
+        # count (_ckpt).
         def _b(df: DataFrame) -> DataFrame:
-            return F.broadcast(df) if bcast else df
+            return F.broadcast(df) if broadcast_fits(df, n_root) else df
 
         converged = False
         for s in range(1, jump_steps + 1):
@@ -2984,11 +2918,11 @@ def spanning_forest(weighted_edges: DataFrame, max_rounds: int = 16,
                                  F.col("p").alias("pp")))
             # the moved-count probe rides the step's own materializing
             # job (r11) — exact exit at the fixpoint step, no extra jobs
-            stepped, moved = _ckpt_fresh_probe(
+            stepped, moved = _ckpt(
                 root.join(hop, "p", "left")
                 .select("c", F.coalesce("pp", "p").alias("p"),
                         (F.col("pp") != F.col("p")).alias("moved")),
-                F.col("moved"))
+                lambda ck: ck.filter(F.col("moved")).count())
             root = stepped.select("c", "p")
             if moved == 0:
                 converged = True
@@ -3008,7 +2942,7 @@ def spanning_forest(weighted_edges: DataFrame, max_rounds: int = 16,
                     "u", "v", "weight", "kw")
             .filter(F.col("a") != F.col("b"))
         )
-        ed, n_ed = _ckpt_fresh_counted(
+        ed, n_ed = _ckpt(
             relab
             .groupBy(F.least("a", "b").alias("cu"),
                      F.greatest("a", "b").alias("cv"))
@@ -3026,8 +2960,7 @@ def spanning_forest(weighted_edges: DataFrame, max_rounds: int = 16,
 
 
 def maximal_independent_set(edges: DataFrame,
-                            max_rounds: int = 24,
-                            broadcast_max_vertices: int = 4_000_000) -> DataFrame:
+                            max_rounds: int = 24) -> DataFrame:
     """Maximal independent set by Luby's algorithm with DETERMINISTIC
     md5 priorities — the distributed-greedy workhorse behind scheduling,
     coloring seeds, and landmark selection.
@@ -3044,7 +2977,7 @@ def maximal_independent_set(edges: DataFrame,
     checkpointed DELTAS (each round's sel), never a re-checkpointed
     cumulative frame — the growing O(|mis|) rewrite per round is gone.
     `sel` itself stays eagerly checkpointed: the adj⋈sel neighbor-drop
-    join needs sel's REAL size (a filter derived from a _ckpt_fresh frame
+    join needs sel's REAL size (a filter derived from a _ckpt frame
     would carry defaultSizeInBytes and silently lose the broadcast,
     turning the drop join into a full adjacency shuffle — measured 1.5×
     regression at sf1).
@@ -3055,7 +2988,7 @@ def maximal_independent_set(edges: DataFrame,
     Returns (id, round) — round = 1-based selection round (deterministic,
     value-checkable)."""
     und = _undirected_simple(edges)
-    adj = _ckpt_fresh(
+    adj, _ = _ckpt(
         und.select(F.col("u").alias("a"), F.col("v").alias("b"))
         .unionByName(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
     )
@@ -3063,10 +2996,10 @@ def maximal_independent_set(edges: DataFrame,
         ":", F.md5(F.col("id").cast("string")),
         F.lpad(F.col("id").cast("string"), 12, "0"))
     # r11 (guide §1.2 action budget): the active set's row count rides its
-    # own checkpoint-materializing job (_ckpt_fresh_counted), so the
-    # per-round emptiness test is a driver-side integer compare instead of
-    # a separate isEmpty() action — one fewer job per round.
-    active, n_act = _ckpt_fresh_counted(
+    # own checkpoint-materializing job (_ckpt), so the per-round emptiness
+    # test is a driver-side integer compare instead of a separate
+    # isEmpty() action — one fewer job per round.
+    active, n_act = _ckpt(
         adj.select(F.col("a").alias("id")).distinct()
         .withColumn("prio", prio)
     )
@@ -3077,27 +3010,20 @@ def maximal_independent_set(edges: DataFrame,
         if n_act == 0:
             done = True
             break
-        # r11 (guide §3.1): `active`/`sel`/`dropped` are vertex-scale and
-        # their exact size (n_act) rides the round's own checkpoint count,
-        # so the broadcast decision costs no extra action; _ckpt_fresh
-        # frames carry default (huge) stats, so without the explicit hint
-        # every one of these joins shuffled the EDGE-scale adjacency
-        # (SortMergeJoin in the captured round plans).  Past the guard the
-        # shuffle plan stays.
-        # r12 (ADVICE r11, guide §2.3 "keys, not payloads"): the row-count
-        # guard ignored row WIDTH — the ~45-char prio string made a
-        # 4M-row broadcast ~250MB+.  Fixes: (a) the b-side broadcast now
+        # r11 (guide §3.1): `active`/`sel`/`dropped`/`min_nb` are
+        # vertex-scale and n_act (a sound bound on each) rides the round's
+        # own checkpoint count, so the broadcast decision costs no extra
+        # action; _ckpt frames carry default (huge) stats, so without the
+        # explicit hint every one of these joins shuffled the EDGE-scale
+        # adjacency (SortMergeJoin in the captured round plans).  The
+        # guard sizes each frame by its own schema (`broadcast_fits`), so
+        # min_nb's prio string counts against the budget.  r12 (ADVICE
+        # r11, guide §2.3 "keys, not payloads"): the b-side broadcast
         # carries BARE ids and prio_b is recomputed probe-side (prio is a
         # pure function of the id — identical strings, codegen'd md5 per
-        # probe row instead of 6× the broadcast bytes); (b) frames that
-        # still carry a prio-width string (min_nb's mn) broadcast under a
-        # HALVED guard (_bw) sized for their ~4× wider rows.
+        # probe row instead of 6× the broadcast bytes).
         def _b(df: DataFrame) -> DataFrame:
-            return F.broadcast(df) if n_act <= broadcast_max_vertices else df
-
-        def _bw(df: DataFrame) -> DataFrame:
-            return (F.broadcast(df)
-                    if n_act <= broadcast_max_vertices // 2 else df)
+            return F.broadcast(df) if broadcast_fits(df, n_act) else df
 
         prio_b = F.concat_ws(
             ":", F.md5(F.col("b").cast("string")),
@@ -3108,8 +3034,8 @@ def maximal_independent_set(edges: DataFrame,
             .withColumn("prio_b", prio_b)
         )
         min_nb = act_nb.groupBy("a").agg(F.min("prio_b").alias("mn"))
-        sel = _ckpt_fresh(
-            active.join(_bw(min_nb.withColumnRenamed("a", "id")), "id", "left")
+        sel, _ = _ckpt(
+            active.join(_b(min_nb.withColumnRenamed("a", "id")), "id", "left")
             .filter(F.col("mn").isNull() | (F.col("prio") < F.col("mn")))
             .select("id")
         )
@@ -3117,7 +3043,7 @@ def maximal_independent_set(edges: DataFrame,
         dropped = sel.unionByName(
             adj.join(_b(sel.withColumnRenamed("id", "a")), "a")
             .select(F.col("b").alias("id"))).distinct()
-        active, n_act = _ckpt_fresh_counted(
+        active, n_act = _ckpt(
             active.join(_b(dropped), "id", "left_anti"))
     if not done and n_act != 0:
         raise RuntimeError(
@@ -3130,8 +3056,6 @@ def maximal_independent_set(edges: DataFrame,
 
 
 def greedy_coloring(edges: DataFrame, max_rounds: int = 40,
-                    broadcast_picks: bool | None = None,
-                    broadcast_max_picks: int = 4_000_000,
                     _plan_out: list | None = None) -> DataFrame:
     """Jones-Plassmann greedy graph coloring with deterministic md5
     priorities — register allocation, schedule slotting, conflict-free
@@ -3191,21 +3115,17 @@ def greedy_coloring(edges: DataFrame, max_rounds: int = 40,
 
     The per-round pick joins (anti-join on `a`, color-join on `b`) are
     broadcast UNDER AN EXPLICIT GUARD (pagerank's posture, not AQE
-    luck): broadcast_picks=None auto-decides per round from the pick's
-    materialized row count — under broadcast_max_picks the frontier
-    ships to every task and the state's hash-partitioning on `a`
-    survives both joins, keeping the next round's groupBy Exchange-free.
-    Past the guard (an early Jones-Plassmann round on a 100×-scale
-    graph can color a large vertex fraction at once — a pick too big for
-    any executor heap) the round falls back to shuffle joins: the
-    b-join reshuffles the SHRINKING state and the round explicitly
-    repartitions its result back on `a` before persisting, so one
-    oversized round costs one state-sized exchange instead of an OOM —
-    and later rounds return to the Exchange-free path.  The default
-    threshold (4M rows ≈ tens of MB of (id, color) pairs) is sized like
-    pagerank's broadcast_max_vertices — executor-heap territory, not
-    "whatever a big cluster fits"; raise it explicitly on beefier
-    deployments.  `_plan_out`, when a list, receives the round-2
+    luck): each round asks `broadcast_fits` with the pick's materialized
+    row count — within the session's budget the frontier ships to every
+    task and the state's hash-partitioning on `a` survives both joins,
+    keeping the next round's groupBy Exchange-free.  Past the budget (an
+    early Jones-Plassmann round on a 100×-scale graph can color a large
+    vertex fraction at once — a pick too big for any executor heap) the
+    round falls back to shuffle joins: the b-join reshuffles the
+    SHRINKING state and the round explicitly repartitions its result
+    back on `a` before persisting, so one oversized round costs one
+    state-sized exchange instead of an OOM — and later rounds return to
+    the Exchange-free path.  `_plan_out`, when a list, receives the round-2
     aggregation's executed-plan string (test hook pinning the
     Exchange-free claim).
 
@@ -3236,7 +3156,7 @@ def greedy_coloring(edges: DataFrame, max_rounds: int = 40,
             if _plan_out is not None and t == 2:
                 _plan_out.append(
                     agg._jdf.queryExecution().executedPlan().toString())
-            pick, n_pick = _ckpt_fresh_counted(
+            pick, n_pick = _ckpt(
                 agg.filter(F.col("mn").isNull()
                            | (_prio(F.col("a")) < F.col("mn")))
                 .select(F.col("a").alias("id"), F.expr(
@@ -3245,9 +3165,9 @@ def greedy_coloring(edges: DataFrame, max_rounds: int = 40,
                     .alias("color")))
             colored_legs.append(pick)
             # explicit broadcast-under-guard: the guard count rode the
-            # pick's own materializing job (r11 — one action, not two)
-            bcast = (n_pick <= broadcast_max_picks
-                     if broadcast_picks is None else broadcast_picks)
+            # pick's own materializing job (r11 — one action, not two);
+            # pick's (id, color) rows are pick_b's width, the wider side
+            bcast = broadcast_fits(pick, n_pick)
             pick_a = pick.select(F.col("id").alias("a"))
             pick_b = pick.select(F.col("id").alias("b"),
                                  F.col("color").alias("nc"))

@@ -25,6 +25,29 @@ from pyspark.sql import functions as F
 OUT, IN, BOTH = "out", "in", "both"
 
 
+def broadcast_fits(df: DataFrame, rows: int) -> bool:
+    """The engine's one broadcast guard: True when `rows` rows of `df`'s
+    schema fit the session's `spark.sql.autoBroadcastJoinThreshold`.
+
+    A row is sized as Spark's own estimator sizes it: 8 bytes of row
+    overhead plus the schema's `defaultSize` (8 for a long or double, 4
+    for an int, 20 for a string).  A (long, long) frame therefore
+    broadcasts up to ~2.8M rows under the 64m budget `get_spark` sets,
+    and a bare-id frontier up to ~4M.  A threshold of -1 never
+    broadcasts.  Callers pass the exact (or a sound upper-bound) row
+    count they already hold, so the guard itself runs no job.
+
+    Why the operators need it: iteration state rebuilt by a stats-reset
+    checkpoint carries `spark.sql.defaultSizeInBytes`, so Catalyst never
+    auto-broadcasts it; an operator that wants a vertex-scale side to
+    ship to every task asks this guard and adds the hint, and past the
+    budget it keeps the shuffle plan instead of exhausting executor
+    heap."""
+    budget = (df.sparkSession._jsparkSession.sessionState().conf()
+              .autoBroadcastJoinThreshold())
+    return budget >= 0 and rows * (8 + df._jdf.schema().defaultSize()) <= budget
+
+
 def adjacent(edges: DataFrame, direction: str = OUT, label: str | None = None,
              edges_by_dst: DataFrame | None = None) -> DataFrame:
     """(vertex, neighbor) pairs in the given direction — the relational view
@@ -72,24 +95,23 @@ def neighbors(edges: DataFrame, vertex_ids: Sequence[int], direction: str = OUT,
 
 def k_hop(edges: DataFrame, start_ids: Sequence[int], k: int, direction: str = OUT,
           labels: Sequence[str] | None = None, checkpoint_every: int = 3,
-          broadcast_max_frontier: int = 5_000_000,
           edges_by_dst: DataFrame | None = None) -> DataFrame:
     """Vertices reachable in exactly <= k hops (excluding the start set),
     with hop distance = first time reached (BFS layering).  Returns
     (id, hops).
 
     Each iteration joins the frontier against the adjacency view.  While the
-    frontier is small (<= broadcast_max_frontier rows) it is broadcast so the
-    edge scan never shuffles; on a power-law graph the frontier reaches
-    O(|V|) by hop 2-3, at which point broadcasting it would OOM every
-    executor — past the threshold the hop falls back to a plain shuffle join
-    (AQE picks the physical strategy).  The frontier is materialized each hop
-    anyway (BFS is inherently iterative), so the size check reads a
-    checkpointed count, not a recompute.
+    frontier passes `broadcast_fits` it is broadcast so the edge scan never
+    shuffles; on a power-law graph the frontier reaches O(|V|) by hop 2-3,
+    at which point broadcasting it would OOM every executor — past the
+    budget the hop falls back to a plain shuffle join (AQE picks the
+    physical strategy).  The frontier is materialized each hop anyway (BFS
+    is inherently iterative), so the size check reads a checkpointed count,
+    not a recompute.
 
     `edges_by_dst` routes in-direction hops through the dst-bucketed copy of
     the dual edge layout (sources/edge_layout.py): past the broadcast
-    threshold, the shuffle-join fallback then moves ONLY the frontier — the
+    budget, the shuffle-join fallback then moves ONLY the frontier — the
     edge side is already distributed on the hop key (the persisted adjacency
     keeps the scan's bucket distribution; tests/test_plans.py pins it)."""
     spark = edges.sparkSession
@@ -106,7 +128,7 @@ def k_hop(edges: DataFrame, start_ids: Sequence[int], k: int, direction: str = O
     result = None
     for hop in range(1, k + 1):
         f = frontier.withColumnRenamed("id", "vertex")
-        if frontier_rows <= broadcast_max_frontier:
+        if broadcast_fits(f, frontier_rows):
             f = F.broadcast(f)
         nxt = (
             adj.join(f, "vertex")

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 from pyspark.sql import SparkSession
 
@@ -44,7 +46,6 @@ _SLOW_TESTS = {
     "test_graph_ops.py::test_diameter_double_sweep",
     "test_oracle_diff.py::test_query_matches_oracle[g_paths]",
     "test_similarity.py::test_contrastive_mining_index_path_equals_inline",
-    "test_graph_ops.py::test_cc_and_mis_broadcast_fallback_equality",
     "test_property.py::test_heavy_hitters_matches_exact_model",
     "test_graph_ops.py::test_spanning_forest_matches_kruskal_random",
     "test_graph_ops.py::test_louvain_full_three_level_schedule_is_monotone",
@@ -76,3 +77,24 @@ def spark() -> SparkSession:
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def no_broadcast(spark):
+    """`with no_broadcast():` runs its block under
+    spark.sql.autoBroadcastJoinThreshold=-1, so every broadcast guard takes
+    its shuffle fallback and AQE cannot demote a join to a broadcast
+    either; the previous value is restored on exit.  `no_broadcast(b)`
+    runs the block under budget `b` (e.g. "4k") instead."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+
+    @contextlib.contextmanager
+    def budget(value: str = "-1"):
+        prev = spark.conf.get(key)
+        spark.conf.set(key, value)
+        try:
+            yield
+        finally:
+            spark.conf.set(key, prev)
+
+    return budget

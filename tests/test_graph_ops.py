@@ -86,7 +86,7 @@ def test_personalized_pagerank_semantics(spark):
     assert g1 == g2
 
 
-def test_katz_centrality_matches_python(spark):
+def test_katz_centrality_matches_python(spark, no_broadcast):
     """Katz vs the literal recurrence x' = beta + alpha·A^T x on a small
     digraph, plus the no-normalization property that separates it from
     pagerank (a 2-out-edge source passes its FULL score to both heads)."""
@@ -105,18 +105,82 @@ def test_katz_centrality_matches_python(spark):
     # vertex 3 collects from three full-strength sources -> strictly top
     assert got[3] == max(got.values())
     # shuffle path == broadcast path (plan-only guard)
-    sh = {r["id"]: r["katz"] for r in
-          analytics.katz_centrality(edges, iterations=6, alpha=0.1,
-                                    broadcast_ranks=False).collect()}
+    with no_broadcast():
+        sh = {r["id"]: r["katz"] for r in
+              analytics.katz_centrality(edges, iterations=6,
+                                        alpha=0.1).collect()}
     assert all(abs(sh[v] - got[v]) < 1e-12 for v in x)
 
 
-def test_k_hop_shuffle_fallback_matches_broadcast(tiny):
-    """A tiny broadcast threshold forces the shuffle-join path; results are
+def test_broadcast_guard_sizes_rows_by_schema_width(spark, no_broadcast):
+    """The broadcast guard bounds BYTES, not rows: under a 4 KB budget a
+    bare-id vertex frame (100 rows x 16 B) broadcasts, while the same rows
+    carrying two strings (100 x 56 B) keep the shuffle plan, and both
+    joins return the same rows."""
+    n = 100
+    edges, _ = analytics._ckpt(spark.createDataFrame(
+        [(i, (7 * i + 1) % n) for i in range(n)], "src long, dst long"))
+    narrow, n_v = analytics._ckpt(edges.select(F.col("src").alias("id")))
+    wide = (narrow.withColumn("a", F.lpad(F.col("id").cast("string"), 40, "x"))
+            .withColumn("b", F.lpad(F.col("id").cast("string"), 40, "y")))
+    assert n_v == n
+
+    def hop(side):
+        if traversal.broadcast_fits(side, n_v):
+            side = F.broadcast(side)
+        return edges.join(side.withColumnRenamed("id", "src"), "src")
+
+    with no_broadcast("4k"):
+        assert traversal.broadcast_fits(narrow, n_v)
+        assert not traversal.broadcast_fits(wide, n_v)
+        on, off = hop(narrow), hop(wide)
+        plan = [df._jdf.queryExecution().executedPlan().toString()
+                for df in (on, off)]
+        assert "BroadcastExchange" in plan[0]
+        assert "BroadcastExchange" not in plan[1]
+        assert (sorted(on.select("src", "dst").collect())
+                == sorted(off.select("src", "dst").collect()))
+    with no_broadcast():
+        assert not traversal.broadcast_fits(narrow, 0)
+
+
+def test_ckpt_exact_count_no_extra_jobs_fresh_stats(spark):
+    """_ckpt's contract: the exact row count, no more jobs than an eager
+    localCheckpoint of the same input, and a frame carrying NO inherited
+    size estimate (sizeInBytes == spark.sql.defaultSizeInBytes — what
+    keeps pointer doubling out of the compounding-estimate blow-up)."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def shuffled():
+        return (spark.range(0, 5000, 1, 4)
+                .select((F.col("id") % 97).alias("k"), "id")
+                .groupBy("k").agg(F.sum("id").alias("s")))
+
+    j0 = dag.nextJobId()
+    shuffled().localCheckpoint(eager=True)
+    eager_jobs = dag.nextJobId() - j0
+    j0 = dag.nextJobId()
+    ck, rows = analytics._ckpt(shuffled())
+    ckpt_jobs = dag.nextJobId() - j0
+    assert rows == 97
+    assert ckpt_jobs <= eager_jobs
+    size = ck._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert int(size) == (spark._jsparkSession.sessionState().conf()
+                         .defaultSizeInBytes())
+    assert sorted(ck.collect()) == sorted(shuffled().collect())
+    # a measure replaces the row count as the materializing action
+    _, odd = analytics._ckpt(shuffled(),
+                             lambda f: f.filter(F.col("k") % 2 == 1).count())
+    assert odd == 48
+
+
+def test_k_hop_shuffle_fallback_matches_broadcast(tiny, no_broadcast):
+    """A disabled broadcast budget forces the shuffle-join path; results are
     identical to the broadcast path (the scale-safety guard is plan-only)."""
     bc = {(r["id"], r["hops"]) for r in traversal.k_hop(tiny, [1], k=3).collect()}
-    sh = {(r["id"], r["hops"])
-          for r in traversal.k_hop(tiny, [1], k=3, broadcast_max_frontier=0).collect()}
+    with no_broadcast():
+        sh = {(r["id"], r["hops"])
+              for r in traversal.k_hop(tiny, [1], k=3).collect()}
     assert bc == sh == {(2, 1), (3, 1), (4, 2)}
 
 
@@ -634,7 +698,7 @@ def test_cc_star_equals_hashmin_on_fixtures(spark):
     assert got == want
 
 
-def test_cc_and_mis_broadcast_fallback_equality(spark):
+def test_cc_and_mis_broadcast_fallback_equality(spark, no_broadcast):
     """r11: HashMin components and Luby MIS produce identical results
     whether the vertex-scale side tables broadcast (guard default) or
     fall back to shuffle joins — plan choice only."""
@@ -649,17 +713,18 @@ def test_cc_and_mis_broadcast_fallback_equality(spark):
     edges = spark.createDataFrame(rows, "src long, dst long")
     cc_on = {(r["id"], r["component"]) for r in connected_components(
         edges).collect()}
-    cc_off = {(r["id"], r["component"]) for r in connected_components(
-        edges, broadcast_max_vertices=0).collect()}
-    assert cc_on == cc_off
     mis_on = {(r["id"], r["round"]) for r in maximal_independent_set(
         edges).collect()}
-    mis_off = {(r["id"], r["round"]) for r in maximal_independent_set(
-        edges, broadcast_max_vertices=0).collect()}
+    with no_broadcast():
+        cc_off = {(r["id"], r["component"]) for r in connected_components(
+            edges).collect()}
+        mis_off = {(r["id"], r["round"]) for r in maximal_independent_set(
+            edges).collect()}
+    assert cc_on == cc_off
     assert mis_on == mis_off
 
 
-def test_cc_star_broadcast_fallback_equality(spark):
+def test_cc_star_broadcast_fallback_equality(spark, no_broadcast):
     """r11: labels are identical whether the per-round mins/mins2 tables
     broadcast (guard default) or fall back to shuffle joins — the guard
     changes plans, never results."""
@@ -673,9 +738,10 @@ def test_cc_star_broadcast_fallback_equality(spark):
     rows += [(200 + i, 200 + i + 1) for i in range(40)]   # a chain
     edges = spark.createDataFrame(rows, "src long, dst long")
     on = {(r["id"], r["component"]) for r in connected_components_star(
-        edges, broadcast_max_vertices=4_000_000).collect()}
-    off = {(r["id"], r["component"]) for r in connected_components_star(
-        edges, broadcast_max_vertices=0).collect()}
+        edges).collect()}
+    with no_broadcast():
+        off = {(r["id"], r["component"]) for r in connected_components_star(
+            edges).collect()}
     assert on == off
 
 
@@ -1494,17 +1560,18 @@ def test_node2vec_bias_steers_walks(spark):
         analytics.node2vec_walks(e, [0], 3, p=0.0)
 
 
-def test_greedy_coloring_shuffle_fallback_same_colors(spark):
+def test_greedy_coloring_shuffle_fallback_same_colors(spark, no_broadcast):
     """The broadcast guard is a PLAN choice, never a semantics choice:
-    forcing the shuffle fallback (broadcast_picks=False — the >4M-pick
-    regime at 100x scale) yields the identical deterministic coloring."""
+    forcing the shuffle fallback (a disabled broadcast budget — the
+    regime of an over-budget pick at 100x scale) yields the identical
+    deterministic coloring."""
     rows = [(i, (i * 5 + 2) % 37) for i in range(37) if i != (i * 5 + 2) % 37]
     e = spark.createDataFrame(rows, "src long, dst long")
     a = sorted((r.id, r.color)
                for r in analytics.greedy_coloring(e).collect())
-    b = sorted((r.id, r.color)
-               for r in analytics.greedy_coloring(
-                   e, broadcast_picks=False).collect())
+    with no_broadcast():
+        b = sorted((r.id, r.color)
+                   for r in analytics.greedy_coloring(e).collect())
     assert a == b
 
 
@@ -1698,7 +1765,7 @@ def test_edge_priority_struct_order_equals_string_order(spark):
     assert by_struct == by_string
 
 
-def test_spanning_forest_broadcast_fallback_equality(spark):
+def test_spanning_forest_broadcast_fallback_equality(spark, no_broadcast):
     """r11: the forest is identical whether the per-component root table
     broadcasts (guard default) or falls back to shuffle joins — the
     guard changes plans, never results."""
@@ -1709,8 +1776,7 @@ def test_spanning_forest_broadcast_fallback_equality(spark):
             for a in range(30) for b in range(a + 1, 30)
             if rng.random() < 0.2]
     e = spark.createDataFrame(rows, "src long, dst long, weight double")
-    on = sorted(analytics.spanning_forest(
-        e, broadcast_components=True).collect())
-    off = sorted(analytics.spanning_forest(
-        e, broadcast_components=False).collect())
+    on = sorted(analytics.spanning_forest(e).collect())
+    with no_broadcast():
+        off = sorted(analytics.spanning_forest(e).collect())
     assert on == off and len(on) > 0

@@ -87,6 +87,19 @@ def test_train_matches_python_reference(spark, toy):
     assert {p: i for p, (_, i) in got.items()} == ref_ids
 
 
+def test_train_keeps_caller_cached_words(spark, toy):
+    """A (word, freq) table the caller persisted is still cached after
+    training: unigram_train releases only the caches it created."""
+    words = U.word_freqs(toy).persist()
+    try:
+        vocab, _ = U.unigram_train(toy, n_iters=1, max_piece_len=4,
+                                   n_multi=200, words=words)
+        vocab.collect()
+        assert words.is_cached
+    finally:
+        words.unpersist()
+
+
 def test_encode_matches_python_reference(spark, toy):
     vocab, _ = U.unigram_train(toy, n_iters=1, max_piece_len=4, n_multi=200)
     enc = U.unigram_encode(toy, vocab, max_piece_len=4)

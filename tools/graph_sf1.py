@@ -5,7 +5,7 @@ coloring) next to star-contraction CC on the same graph.
 The driver-checked fixtures for these ops (the co-purchase graph) are a
 few thousand edges — fine for correctness, silent about scale.  This probe
 times the ACTUAL loop machinery (per-round shuffles, pointer doubling,
-the _ckpt_fresh stats reset) at ~sf1 volume:
+the _ckpt stats reset) at ~sf1 volume:
 
 * Data: a SYNTHETIC union of multiplicative rings over n vertices —
   edges (i, (a_k * i + k) mod n) for K distinct multipliers — giving a

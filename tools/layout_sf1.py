@@ -28,6 +28,7 @@ Run ALONE on an idle box:  python tools/layout_sf1.py
 """
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -132,17 +133,19 @@ def main() -> None:
                          edges_by_dst=layout.edges("dst"))
 
         # the regime the layout exists for: at 100x scale the frontier
-        # exceeds any broadcast threshold and the hop join becomes a
-        # shuffle join — forced here with broadcast_max_frontier=0 so the
-        # edge side's pre-bucketing is the only difference between sides
-        def khop_plain_shuffle():
-            return k_hop(plain_src, [start], k=2, direction=OUT,
-                         broadcast_max_frontier=0, edges_by_dst=plain_dst)
-
-        def khop_layout_shuffle():
-            return k_hop(layout.edges("src"), [start], k=2, direction=OUT,
-                         broadcast_max_frontier=0,
-                         edges_by_dst=layout.edges("dst"))
+        # exceeds any broadcast budget and the hop join becomes a shuffle
+        # join — forced here by running the same thunks with broadcasts
+        # off, so the edge side's pre-bucketing is the only difference
+        # between sides
+        @contextlib.contextmanager
+        def no_broadcast():
+            key = "spark.sql.autoBroadcastJoinThreshold"
+            prev = spark.conf.get(key)
+            spark.conf.set(key, "-1")
+            try:
+                yield
+            finally:
+                spark.conf.set(key, prev)
 
         def run_isolated(mk) -> float:
             spark.catalog.clearCache()
@@ -159,8 +162,9 @@ def main() -> None:
         for i in range(3):
             plain_s.append(run_isolated(khop_plain))
             layout_s.append(run_isolated(khop_layout))
-            plain_sh.append(run_isolated(khop_plain_shuffle))
-            layout_sh.append(run_isolated(khop_layout_shuffle))
+            with no_broadcast():
+                plain_sh.append(run_isolated(khop_plain))
+                layout_sh.append(run_isolated(khop_layout))
             print(f"# series[{i}] plain={plain_s[-1]}s layout={layout_s[-1]}s "
                   f"plain_shuffle={plain_sh[-1]}s layout_shuffle={layout_sh[-1]}s",
                   file=sys.stderr)
