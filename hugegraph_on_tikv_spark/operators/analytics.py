@@ -4,7 +4,7 @@ The reference has no analytics operators (its splits API, TikvTable.java:
 284-336, exists precisely so OLAP engines like Spark can scan the graph in
 parallel and do this work).  These are GraphX-style algorithms re-expressed
 as DataFrame programs: aggregate-messages = groupBy on message destination;
-iterative algorithms cut lineage with localCheckpoint.
+iterative algorithms run their rounds through `_fixpoint`.
 
 Scale posture: every iteration is a self-join on the edge table.  For a
 100 TB graph, persist `edges` as the dual bucketed layout
@@ -110,13 +110,13 @@ def pagerank(edges: DataFrame, iterations: int = 10, reset: float = 0.15,
     value; departed vertices' stale entries drop out in the join.
 
     `tol` (opt-in) adds convergence early-exit: on the checkpoint cadence
-    the max |Δrank| since the previous checkpoint is probed (one max-abs
-    aggregate over the already-checkpointed state — the same probe shape as
-    connected_components' change check), and iteration stops once it falls
-    under tol.  The default (None) keeps the exact fixed-iteration plan for
-    oracle determinism; at 100× scale a fixed count either wastes rounds or
-    under-converges, so production runs pass tol.  `_iters_out`, when a
-    list, receives the executed iteration count (test/telemetry hook).
+    the max |Δrank| since the previous checkpoint — the start vector at the
+    first probe, so a start already within tol stops there — is probed by
+    the checkpoint's own job (`_fixpoint`), and iteration stops once it
+    falls under tol.  The default (None) keeps the exact fixed-iteration
+    plan for oracle determinism; at 100× scale a fixed count either wastes
+    rounds or under-converges, so production runs pass tol.  `_iters_out`,
+    when a list, receives the executed iteration count (test/telemetry hook).
 
     broadcast_ranks=None (the default) asks `broadcast_fits` with the
     vertex count: within the session's broadcast budget the rank vector
@@ -135,11 +135,7 @@ def pagerank(edges: DataFrame, iterations: int = 10, reset: float = 0.15,
     # materialize the iteration-invariant state ONCE: vertex set and the
     # out-degree-normalized edge list (src, dst, out_degree).  Without this
     # every iteration's plan re-reads and re-unions the raw edge sources.
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    verts = _endpoints(edges)
     if state_partitions:
         verts = verts.repartition(state_partitions, "id")
     verts = verts.persist()
@@ -194,10 +190,8 @@ def pagerank(edges: DataFrame, iterations: int = 10, reset: float = 0.15,
             # verts is persisted and needed immediately anyway; the count
             # is one cheap job against the cached state
             broadcast_ranks = broadcast_fits(ranks, verts.count())
-        prev_ck = None
-        iters_done = 0
-        for i in range(iterations):
-            iters_done = i + 1
+
+        def step(ranks: DataFrame, i: int) -> DataFrame:
             rank_side = ranks.withColumnRenamed("id", "src")
             if broadcast_ranks:
                 rank_side = F.broadcast(rank_side)
@@ -224,7 +218,7 @@ def pagerank(edges: DataFrame, iterations: int = 10, reset: float = 0.15,
             )
             if state_partitions:
                 contribs = contribs.repartition(state_partitions, "id")
-            ranks = (
+            return (
                 contribs.groupBy("id")
                 .agg(F.sum("contrib").alias("contrib"))
                 .select(
@@ -233,27 +227,10 @@ def pagerank(edges: DataFrame, iterations: int = 10, reset: float = 0.15,
                      + F.lit(1.0 - reset) * F.coalesce("contrib", F.lit(0.0))).alias("rank"),
                 )
             )
-            if checkpoint_every and (i + 1) % checkpoint_every == 0:
-                # r12 (guide §1.2 action budget): with no tolerance probe
-                # there is nothing to LOOK at between iterations — the
-                # in-loop checkpoints still cut lineage when materialized,
-                # so they can all ride the final action instead of paying
-                # one eager driver round trip each (5 actions → 1 for the
-                # 10-iteration flagship).  Single-reference chain, so no
-                # lineage doubling (the node2vec failure mode).  With
-                # tol set, the delta probe needs each checkpoint NOW —
-                # keep those eager.
-                ranks = ranks.localCheckpoint(eager=tol is not None)
-                if tol is not None:
-                    if prev_ck is not None:
-                        delta = (ranks.alias("n")
-                                 .join(prev_ck.alias("o"), "id")
-                                 .agg(F.max(F.abs(
-                                     F.col("n.rank") - F.col("o.rank")))
-                                     .alias("d")).collect()[0]["d"])
-                        if delta is not None and delta < tol:
-                            break
-                    prev_ck = ranks
+
+        ranks, iters_done, _ = _fixpoint(
+            step, ranks, iterations, every=checkpoint_every,
+            probe=None if tol is None else _within(tol, "rank"))
         if _iters_out is not None:
             _iters_out.append(iters_done)
         if iters_done:
@@ -263,11 +240,7 @@ def pagerank(edges: DataFrame, iterations: int = 10, reset: float = 0.15,
             ranks = verts.join(ranks, "id", "left").select(
                 "id",
                 F.coalesce(F.col("rank"), F.lit(reset) * tele).alias("rank"))
-        # force the remaining (post-checkpoint) iterations to execute while
-        # the persisted state (verts/norm_edges) is still alive; the
-        # checkpointed result no longer references it after unpersist
-        ranks = ranks.localCheckpoint(eager=True)
-        return ranks
+        return ranks.localCheckpoint(eager=True)
     finally:
         verts.unpersist()
         norm_edges.unpersist()
@@ -287,15 +260,11 @@ def katz_centrality(edges: DataFrame, iterations: int = 8,
     way).  Returns (id, katz), unnormalized.
 
     Plan shape is pagerank's (one shuffle per iteration on dst, rank
-    vector broadcast under the same `broadcast_fits` guard, localCheckpoint
-    cadence to bound lineage) minus the degree-normalization join — see
+    vector broadcast under the same `broadcast_fits` guard, `_fixpoint`
+    lineage cuts) minus the degree-normalization join — see
     pagerank's docstring for the 100×-scale posture.
     """
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    verts = _endpoints(edges)
     if state_partitions:
         verts = verts.repartition(state_partitions, "id")
     verts = verts.persist()
@@ -306,7 +275,8 @@ def katz_centrality(edges: DataFrame, iterations: int = 8,
     try:
         ranks = verts.withColumn("katz", F.lit(float(beta)))
         broadcast_ranks = broadcast_fits(ranks, verts.count())
-        for i in range(iterations):
+
+        def step(ranks: DataFrame, i: int) -> DataFrame:
             rank_side = ranks.withColumnRenamed("id", "src")
             if broadcast_ranks:
                 rank_side = F.broadcast(rank_side)
@@ -326,7 +296,7 @@ def katz_centrality(edges: DataFrame, iterations: int = 8,
             )
             if state_partitions:
                 contribs = contribs.repartition(state_partitions, "id")
-            ranks = (
+            return (
                 contribs.groupBy("id").agg(F.sum("c").alias("c"))
                 .select(
                     "id",
@@ -334,11 +304,9 @@ def katz_centrality(edges: DataFrame, iterations: int = 8,
                      * F.coalesce("c", F.lit(0.0))).alias("katz"),
                 )
             )
-            if checkpoint_every and (i + 1) % checkpoint_every == 0:
-                # r12: lazy — nothing reads the state between iterations
-                # (see pagerank); all in-loop checkpoints ride the final
-                # eager action
-                ranks = ranks.localCheckpoint(eager=False)
+
+        ranks, _, _ = _fixpoint(step, ranks, iterations,
+                                every=checkpoint_every)
         if iterations:
             ranks = verts.join(ranks, "id", "left").select(
                 "id",
@@ -364,26 +332,22 @@ def hits(edges: DataFrame, iterations: int = 8,
 
     Plan shape per iteration: two aggregate-messages shuffles + two scalar
     max aggregates broadcast back; iteration-invariant edge list persisted
-    once; localCheckpoint every 2 rounds cuts lineage — the same posture
-    as pagerank, and the same bucketed-by-key co-location note applies at
-    cluster scale.  `tol` (opt-in, like pagerank's) early-exits when the
-    max |Δauth| AND max |Δhub| since the previous checkpoint both fall
-    under tol; default None keeps the fixed-iteration oracle plan."""
+    once; `_fixpoint` cuts the (id, auth, hub) state every round (a round
+    reads its input several times, so a two-round lazy chain re-plans those
+    reads at about 3× the Spark jobs) — the same bucketed-by-key
+    co-location note as pagerank applies at cluster scale.  `tol` (opt-in,
+    like pagerank's) early-exits when the max |Δauth| AND max |Δhub| since
+    the previous round both fall under tol, the first probe comparing
+    against the start vectors; default None keeps the fixed-iteration
+    oracle plan."""
     e = edges.select("src", "dst").distinct()
     if state_partitions:
         e = e.repartition(state_partitions, "src")
     e = e.persist()
-    verts = (e.select(F.col("src").alias("id"))
-             .unionByName(e.select(F.col("dst").alias("id"))).distinct()
-             .persist())
+    verts = _endpoints(e).persist()
     try:
-        h = verts.withColumn("hub", F.lit(1.0))
-        a = verts.withColumn("auth", F.lit(0.0))
-        prev_a, prev_h = None, None
-        iters_done = 0
-        for i in range(iterations):
-            iters_done = i + 1
-            a = (e.join(h.withColumnRenamed("id", "src"), "src")
+        def step(ah: DataFrame, i: int) -> DataFrame:
+            a = (e.join(ah.select(F.col("id").alias("src"), "hub"), "src")
                  .groupBy(F.col("dst").alias("id"))
                  .agg(F.sum("hub").alias("auth")))
             a = verts.join(a, "id", "left").select(
@@ -403,26 +367,20 @@ def hits(edges: DataFrame, iterations: int = 8,
                 "id", F.when(F.col("hmax") > 0,
                              F.col("hub") / F.col("hmax"))
                 .otherwise(F.lit(0.0)).alias("hub"))
-            if (i + 1) % 2 == 0:
-                a = a.localCheckpoint(eager=True)
-                h = h.localCheckpoint(eager=True)
-                if tol is not None:
-                    if prev_a is not None:
-                        da = (a.alias("n").join(prev_a.alias("o"), "id")
-                              .agg(F.max(F.abs(
-                                  F.col("n.auth") - F.col("o.auth")))
-                                  .alias("d")).collect()[0]["d"])
-                        dh = (h.alias("n").join(prev_h.alias("o"), "id")
-                              .agg(F.max(F.abs(
-                                  F.col("n.hub") - F.col("o.hub")))
-                                  .alias("d")).collect()[0]["d"])
-                        if (da is not None and dh is not None
-                                and da < tol and dh < tol):
-                            break
-                    prev_a, prev_h = a, h
+            # one row per vertex; union + group, not a ⋈ h, whose size
+            # estimate (product of the sides) would square every round
+            return (a.unionByName(h, allowMissingColumns=True)
+                    .groupBy("id")
+                    .agg(F.max("auth").alias("auth"),
+                         F.max("hub").alias("hub")))
+
+        ah, iters_done, _ = _fixpoint(
+            step, verts.select("id", F.lit(0.0).alias("auth"),
+                               F.lit(1.0).alias("hub")), iterations,
+            probe=None if tol is None else _within(tol, "auth", "hub"))
         if _iters_out is not None:
             _iters_out.append(iters_done)
-        return a.join(h, "id").select("id", "auth", "hub")
+        return ah.select("id", "auth", "hub").localCheckpoint(eager=True)
     finally:
         e.unpersist()
         verts.unpersist()
@@ -440,14 +398,10 @@ def connected_components(edges: DataFrame,
     # (r11, guide §2.4) — previously this union+distinct subtree, AND the
     # caller's entire upstream lineage (e.g. er_clusters passes the raw
     # linkage pipeline in), re-executed inside every round's message join
-    # and the label init.  One edge-scale job up front, every round after
-    # reads the checkpointed RDD.
-    adj = (
-        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    # and the label init.  One edge-scale job up front, which also counts
+    # the vertices; every round after reads the checkpointed RDD.
+    adj, n_v = _ckpt(_symmetric(edges, "src", "dst").distinct(),
+                     lambda ck: ck.select("a").distinct().count())
     labels = (
         adj.select(F.col("a").alias("id")).distinct().withColumn("component", F.col("id"))
     )
@@ -455,11 +409,13 @@ def connected_components(edges: DataFrame,
     # VERTEX-scale but joins the EDGE-scale adjacency every round, and the
     # checkpointed adj/label frames carry default (huge) size stats
     # (_ckpt contract), so the planner never auto-broadcasts and AQE
-    # can only demote AFTER the edge set has already shuffled.  One
-    # vertex-count job up front (amortized over up to max_iterations
-    # rounds) decides explicitly; past the guard the shuffle plan stays.
-    bcast = broadcast_fits(labels, labels.count())
-    for i in range(max_iterations):
+    # can only demote AFTER the edge set has already shuffled.  The vertex
+    # count from adj's checkpoint decides explicitly; past the guard the
+    # shuffle plan stays.
+    bcast = broadcast_fits(labels, n_v)
+
+    def step(labels: DataFrame, i: int) -> DataFrame:
+        labels = labels.select("id", "component")
         lab_b = labels.withColumnRenamed("id", "b_id")
         if bcast:
             lab_b = F.broadcast(lab_b)
@@ -470,7 +426,7 @@ def connected_components(edges: DataFrame,
         )
         if bcast:
             msgs = F.broadcast(msgs)
-        new_labels = (
+        return (
             labels.join(msgs, "id", "left")
             .select("id",
                     F.least(F.col("component"), F.coalesce("nbr_min", F.col("component"))).alias("component"),
@@ -479,18 +435,11 @@ def connected_components(edges: DataFrame,
                     # smaller neighbor minimum arrived
                     (F.coalesce("nbr_min", F.col("component")) < F.col("component")).alias("_chg"))
         )
-        if (i + 1) % 3 == 0:
-            # probe rides the checkpoint's materializing job (rule 31 /
-            # _ckpt's measure): one action per probe round instead of
-            # eager-checkpoint + separate join-count job
-            probed, changed = _ckpt(
-                new_labels, lambda ck: ck.filter(F.col("_chg")).count())
-            labels = probed.drop("_chg")
-            if changed == 0:
-                break
-        else:
-            labels = new_labels.drop("_chg")
-    return labels
+
+    labels, _, _ = _fixpoint(
+        step, labels, max_iterations, every=3,
+        probe=lambda ck, prev: ck.filter(F.col("_chg")).count() == 0)
+    return labels.drop("_chg")
 
 
 def connected_components_star(edges: DataFrame, max_iterations: int = 25,
@@ -524,9 +473,7 @@ def connected_components_star(edges: DataFrame, max_iterations: int = 25,
 
     Returns (id, component) for every vertex of the input (isolated
     self-loop-only vertices are their own components)."""
-    v0 = (edges.select(F.col("src").alias("id"))
-          .unionByName(edges.select(F.col("dst").alias("id"))).distinct()
-          .localCheckpoint(eager=True))
+    v0, n_v = _ckpt(_endpoints(edges))
 
     def _sig(df: DataFrame) -> tuple:
         """(count, hash-sum, seeded-hash-sum) of a DISTINCT canonical edge
@@ -544,32 +491,25 @@ def connected_components_star(edges: DataFrame, max_iterations: int = 25,
     # is materialized by its initial signature aggregate, so setup costs
     # one job instead of two; same fusion per round (the signature IS the
     # round's materializing action, the rule-31 pattern).
-    e, sig_prev = _ckpt(
+    e, sig0 = _ckpt(
         edges.filter(F.col("src") != F.col("dst"))
         .select(F.least("src", "dst").alias("u"),
                 F.greatest("src", "dst").alias("v"))
         .distinct(), _sig)
+
     # r11 (guide §3.1, the pagerank/coloring broadcast-under-guard
     # posture): `mins` and `mins2` are VERTEX-scale (one row per
     # still-active vertex), yet both per-round joins shuffled their
     # EDGE-scale side (nbrs by a, large by v).  Broadcast them while the
     # vertex count fits: the initial vertex set bounds every round's
-    # active set (stars only shrink it), and v0 is already checkpointed,
-    # so the bound is one cheap cached count at setup.  Past the guard
+    # active set (stars only shrink it), and v0's checkpoint returns its
+    # row count (`_ckpt`), so the bound costs no job.  Past the guard
     # the rounds keep the shuffle-join plan.  Plan choice only; inner
     # equi-joins on exact keys, results identical (equality pytest vs
     # HashMin + the fallback pin).
-    n_v = v0.count()
-    rounds = 0
-    converged = sig_prev[0] == 0
-    for _ in range(max_iterations):
-        if converged:
-            break
-        rounds += 1
+    def step(e: DataFrame, i: int) -> DataFrame:
         # ---- large-star ----
-        nbrs = (e.select(F.col("u").alias("a"), F.col("v").alias("b"))
-                .unionByName(
-                    e.select(F.col("v").alias("a"), F.col("u").alias("b"))))
+        nbrs = _symmetric(e, "u", "v")
         mins = (nbrs.groupBy("a")
                 .agg(F.least(F.min("b"), F.first("a")).alias("m")))
         if broadcast_fits(mins, n_v):
@@ -595,22 +535,27 @@ def connected_components_star(edges: DataFrame, max_iterations: int = 25,
         if broadcast_fits(mins2, n_v):
             mins2 = F.broadcast(mins2)
         joined = large.join(mins2, large.v == mins2.a)
-        # fixpoint: same canonical edge set, checked by one aggregate
-        # (count + two independent order-insensitive hash sums) — no
-        # per-round exceptAll join over the edge set.  The aggregate runs
-        # on the LAZY checkpoint and doubles as its materializing job
-        # (one action per round, was eager-checkpoint + aggregate).
-        small, sig_now = _ckpt(
-            joined.select(F.col("a").alias("x"), F.col("m"))
-            .unionByName(joined.select(F.col("u").alias("x"), F.col("m")))
-            .filter(F.col("x") != F.col("m"))
-            .select(F.col("m").alias("u"), F.col("x").alias("v"))
-            .distinct(), _sig)
-        converged = sig_now == sig_prev
-        e, sig_prev = small, sig_now
+        return (joined.select(F.col("a").alias("x"), F.col("m"))
+                .unionByName(joined.select(F.col("u").alias("x"), F.col("m")))
+                .filter(F.col("x") != F.col("m"))
+                .select(F.col("m").alias("u"), F.col("x").alias("v"))
+                .distinct())
+
+    # fixpoint: same canonical edge set, checked by one aggregate (count +
+    # two independent order-insensitive hash sums) — no per-round
+    # exceptAll join over the edge set — that is also the cut's job
+    sigs = [sig0]
+
+    def same_edges(ck: DataFrame, prev: DataFrame) -> bool:
+        sigs.append(_sig(ck))
+        return sigs[-1] == sigs[-2]
+
+    empty = sig0[0] == 0
+    e, rounds, converged = _fixpoint(
+        step, e, 0 if empty else max_iterations, probe=same_edges)
     if _rounds_out is not None:
         _rounds_out.append(rounds)
-    if not converged:
+    if not (converged or empty):
         raise RuntimeError(
             f"connected_components_star did not converge in "
             f"{max_iterations} rounds — raise max_iterations")
@@ -682,9 +627,7 @@ def link_prediction(edges: DataFrame, max_neighbor_degree: int | None = None,
     the join at least distributes the quadratic output."""
     canon = (_undirected_simple(edges)                # (u < v), each once
              .localCheckpoint(eager=True))            # reused 3×
-    adj = (canon.select(F.col("u").alias("a"), F.col("v").alias("b"))
-           .unionByName(canon.select(F.col("v").alias("a"),
-                                     F.col("u").alias("b"))))
+    adj = _symmetric(canon, "u", "v")
     # r11 (guide §2.4): deg is vertex-sized but consumed by THREE separate
     # join subtrees (the hub-cap semi-join plus the final deg_u/deg_v
     # joins) — without the lazy checkpoint each re-ran the edge-scale
@@ -763,16 +706,14 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 4,
     like connected_components' bounded iterations — never a wrong merge).
     Self-loops are SCC-neutral and dropped up front; vertices appearing
     only in self-loops are singletons."""
-    v0 = (edges.select(F.col("src").alias("id"))
-          .unionByName(edges.select(F.col("dst").alias("id"))).distinct())
+    v0 = _endpoints(edges)
     e = (edges.filter(F.col("src") != F.col("dst"))
          .select("src", "dst").distinct().localCheckpoint(eager=True))
 
     assigned = []  # list of (id, scc) DataFrames
 
     # vertices with no non-self edge at all: singletons immediately
-    ev = (e.select(F.col("src").alias("id"))
-          .unionByName(e.select(F.col("dst").alias("id"))).distinct())
+    ev = _endpoints(e)
     lonely = v0.join(ev, "id", "left_anti")
     assigned.append(lonely.withColumn("scc", F.col("id")))
 
@@ -796,8 +737,7 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 4,
         e = _trim(e)
         if e.limit(1).count() == 0:
             break
-        verts = (e.select(F.col("src").alias("id"))
-                 .unionByName(e.select(F.col("dst").alias("id"))).distinct())
+        verts = _endpoints(e)
         colors = verts.withColumn("color", F.col("id"))
         colors_converged = False
         for i in range(prop_iterations):
@@ -963,6 +903,18 @@ def four_clique_count(edges: DataFrame) -> DataFrame:
     return k4.agg(F.count(F.lit(1)).alias("n_4cliques"))
 
 
+def _endpoints(edges: DataFrame) -> DataFrame:
+    """(id) of every vertex appearing in an edge, once each."""
+    return (edges.select(F.col("src").alias("id"))
+            .unionByName(edges.select(F.col("dst").alias("id"))).distinct())
+
+
+def _symmetric(df: DataFrame, x: str, y: str) -> DataFrame:
+    """(a, b) for both directions (x, y) and (y, x) of every row."""
+    return (df.select(F.col(x).alias("a"), F.col(y).alias("b"))
+            .unionByName(df.select(F.col(y).alias("a"), F.col(x).alias("b"))))
+
+
 def _undirected_simple(edges: DataFrame) -> DataFrame:
     """Canonical undirected simple edges (u < v), self-loops dropped."""
     return (
@@ -982,26 +934,30 @@ def k_core(edges: DataFrame, k: int, max_iterations: int = 30) -> DataFrame:
     aggregation (map-side combinable) plus two semi-joins that restrict the
     adjacency to surviving endpoints — O(rounds × |E|) shuffled, rounds
     bounded by the peeling depth (typically ≪ diameter).  State between
-    rounds is only the shrinking adjacency list, localCheckpoint'ed so the
+    rounds is only the shrinking adjacency list, cut by `_fixpoint` so the
     lineage stays flat.  The fixpoint is unique, so early exit on a
     no-vertex-removed round is safe regardless of max_iterations."""
     und = _undirected_simple(edges)
-    adj = (und.select(F.col("u").alias("a"), F.col("v").alias("b"))
-           .unionByName(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
-           .localCheckpoint(eager=True))
-    n_prev = adj.select("a").distinct().count()
-    for _ in range(max_iterations):
+    # vertex counts of adj and of the probed cuts; the first bounds every
+    # round's `keep` for the broadcast guard (peeling only shrinks it)
+    adj, n_v = _ckpt(_symmetric(und, "u", "v"),
+                     lambda ck: ck.select("a").distinct().count())
+    sizes = [n_v]
+
+    def step(adj: DataFrame, i: int) -> DataFrame:
         keep = (adj.groupBy("a").agg(F.count(F.lit(1)).alias("_d"))
                 .filter(F.col("_d") >= k).select("a"))
-        nxt = (adj.join(keep, "a")
-               .join(keep.withColumnRenamed("a", "b"), "b")
-               .select("a", "b")
-               .localCheckpoint(eager=True))
-        n_now = nxt.select("a").distinct().count()
-        adj = nxt
-        if n_now == n_prev:
-            break
-        n_prev = n_now
+        if broadcast_fits(keep, n_v):
+            keep = F.broadcast(keep)
+        return (adj.join(keep, "a")
+                .join(keep.withColumnRenamed("a", "b"), "b")
+                .select("a", "b"))
+
+    def no_vertex_removed(ck: DataFrame, prev: DataFrame) -> bool:
+        sizes.append(ck.select("a").distinct().count())
+        return sizes[-1] == sizes[-2]
+
+    adj, _, _ = _fixpoint(step, adj, max_iterations, probe=no_vertex_removed)
     return (adj.groupBy(F.col("a").alias("id"))
             .agg(F.count(F.lit(1)).alias("degree")))
 
@@ -1075,33 +1031,32 @@ def core_numbers(edges: DataFrame, max_iterations: int = 30) -> DataFrame:
     Early exit on an unchanged round is safe (monotone convergence).
     Raises if still changing after max_iterations (never wrong values)."""
     und = _undirected_simple(edges)
-    adj = (und.select(F.col("u").alias("a"), F.col("v").alias("b"))
-           .unionByName(und.select(F.col("v").alias("a"),
-                                   F.col("u").alias("b")))
-           .localCheckpoint(eager=True))
+    adj, _ = _ckpt(_symmetric(und, "u", "v"))
     deg = (adj.groupBy(F.col("a").alias("id"))
            .agg(F.count(F.lit(1)).alias("c")))
     bound = _hindex_of_degree_distribution(deg)
-    c = (deg.select("id", F.least(F.col("c"), F.lit(bound)).alias("c"))
-         .localCheckpoint(eager=True))
+    c, n_v = _ckpt(deg.select("id", F.least(F.col("c"), F.lit(bound))
+                              .alias("c")))
+    # every round's state has one row per vertex of adj
+    bcast = broadcast_fits(c, n_v)
 
-    converged = False
-    for _ in range(max_iterations):
-        nxt = _hindex_round(adj, c).localCheckpoint(eager=True)
-        changed = (nxt.alias("n").join(c.alias("o"), "id")
-                   .filter(F.col("n.c") != F.col("o.c"))
-                   .limit(1).count())
-        c = nxt
-        if changed == 0:
-            converged = True
-            break
+    def unchanged(ck: DataFrame, prev: DataFrame) -> bool:
+        if bcast:
+            prev = F.broadcast(prev)
+        return (ck.alias("n").join(prev.alias("o"), "id")
+                .filter(F.col("n.c") != F.col("o.c"))
+                .limit(1).count()) == 0
+
+    c, _, converged = _fixpoint(
+        lambda c, i: _hindex_round(adj, F.broadcast(c) if bcast else c),
+        c, max_iterations, probe=unchanged)
     if not converged:
         raise RuntimeError(
             f"core_numbers did not converge in {max_iterations} rounds")
     # vertices only in self-loops / isolated: core 0
-    v0 = (edges.select(F.col("src").alias("id"))
-          .unionByName(edges.select(F.col("dst").alias("id"))).distinct())
-    return (v0.join(c.select("id", F.col("c").alias("core")), "id", "left")
+    v0 = _endpoints(edges)
+    c = c.select("id", F.col("c").alias("core"))
+    return (v0.join(F.broadcast(c) if bcast else c, "id", "left")
             .select("id", F.coalesce("core", F.lit(0)).alias("core")))
 
 
@@ -1353,19 +1308,21 @@ def shortest_paths(edges: DataFrame, landmarks: list[int], iterations: int = 10)
         dists = spark.createDataFrame(
             [(int(l), int(l), 0) for l in landmarks], "id long, landmark long, distance int"
         )
-        for _ in range(iterations):
+
+        def step(dists: DataFrame, i: int) -> DataFrame:
             msgs = (
                 adj.join(dists.withColumnRenamed("id", "dst"), "dst")
                 .select(F.col("src").alias("id"), "landmark",
                         (F.col("distance") + 1).alias("distance"))
             )
-            dists = (
+            return (
                 dists.unionByName(msgs)
                 .groupBy("id", "landmark")
                 .agg(F.min("distance").alias("distance"))
-                .localCheckpoint(eager=True)
             )
-        return dists
+
+        dists, _, _ = _fixpoint(step, dists, iterations)
+        return dists.localCheckpoint(eager=True)
     finally:
         adj.unpersist()
 
@@ -1377,29 +1334,26 @@ def label_propagation(edges: DataFrame, iterations: int = 5) -> DataFrame:
     count is oracle-matchable.  Returns (id, community)."""
     from pyspark.sql.window import Window
 
-    adj = (
-        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
-        .persist()
-    )
+    adj = _symmetric(edges, "src", "dst").distinct().persist()
     try:
         labels = adj.select(F.col("a").alias("id")).distinct().withColumn("community", F.col("id"))
         w = Window.partitionBy("a").orderBy(F.col("n").desc(), F.col("community").asc())
-        for _ in range(iterations):
+
+        def step(labels: DataFrame, i: int) -> DataFrame:
             counts = (
                 adj.join(labels.withColumnRenamed("id", "b"), "b")
                 .groupBy("a", "community")
                 .agg(F.count(F.lit(1)).alias("n"))
             )
-            best = (
+            # vertices with no neighbors keep their label (none here: adj covers all)
+            return (
                 counts.withColumn("rn", F.row_number().over(w))
                 .filter(F.col("rn") == 1)
                 .select(F.col("a").alias("id"), "community")
             )
-            # vertices with no neighbors keep their label (none here: adj covers all)
-            labels = best.localCheckpoint(eager=True)
-        return labels
+
+        labels, _, _ = _fixpoint(step, labels, iterations)
+        return labels.localCheckpoint(eager=True)
     finally:
         adj.unpersist()
 
@@ -1932,14 +1886,6 @@ def _und_stats(edges: DataFrame) -> tuple[DataFrame, int, int]:
     return und, int(row["c2"]) // 2, int(row["n"])
 
 
-def _modularity_numerator(edges: DataFrame, labels: DataFrame,
-                          label_col: str = "community") -> int:
-    """Exact-integer modularity numerator Σ contrib = Σ (4·m·e_c − d_c²)
-    of a labeling (Q = numerator / 4m²) — the monotone-guard currency."""
-    und = _undirected_simple(edges).localCheckpoint(eager=True)
-    return _numerator_from_und(und, und.count(), labels, label_col)
-
-
 def _numerator_from_sed(sed: DataFrame, m: int, slab: DataFrame,
                         small: bool = False,
                         wdeg: DataFrame | None = None) -> int:
@@ -2394,18 +2340,20 @@ def sssp(weighted_edges: DataFrame, source: int, iterations: int = 8) -> DataFra
     e = weighted_edges.select("src", "dst", "weight").persist()
     try:
         dists = spark.createDataFrame([(int(source), 0.0)], "id long, distance double")
-        for _ in range(iterations):
+
+        def step(dists: DataFrame, i: int) -> DataFrame:
             relaxed = (
                 e.join(dists.withColumnRenamed("id", "src"), "src")
                 .select(F.col("dst").alias("id"), (F.col("distance") + F.col("weight")).alias("distance"))
             )
-            dists = (
+            return (
                 dists.unionByName(relaxed)
                 .groupBy("id")
                 .agg(F.min("distance").alias("distance"))
-                .localCheckpoint(eager=True)
             )
-        return dists
+
+        dists, _, _ = _fixpoint(step, dists, iterations)
+        return dists.localCheckpoint(eager=True)
     finally:
         e.unpersist()
 
@@ -2635,33 +2583,32 @@ def hyperball(edges: DataFrame, max_rounds: int = 16, lg_k: int = 12,
     spark = edges.sparkSession
     e = edges.select("src", "dst").persist()
     try:
-        verts = (e.select(F.col("src").alias("id"))
-                 .unionByName(e.select(F.col("dst").alias("id")))
-                 .distinct())
-        state = (verts.groupBy("id")
-                 .agg(F.hll_sketch_agg("id", F.lit(lg_k)).alias("ball"))
-                 .localCheckpoint(eager=True))
-        t0 = state.agg(F.sum(F.hll_sketch_estimate("ball")).alias("t")) \
-            .collect()[0]["t"]
+        verts = _endpoints(e)
+
+        def total(df: DataFrame):
+            return (df.agg(F.sum(F.hll_sketch_estimate("ball")).alias("t"))
+                    .collect()[0]["t"])
+
+        state, t0 = _ckpt(
+            verts.groupBy("id")
+            .agg(F.hll_sketch_agg("id", F.lit(lg_k)).alias("ball")), total)
         if t0 is None:  # empty edge set: no vertices, no curve
             return spark.createDataFrame(
                 [], "radius int, reachable_pairs double")
         totals = [float(t0)]
-        rounds = 0
-        for _ in range(max_rounds):
-            rounds += 1
+
+        def step(state: DataFrame, i: int) -> DataFrame:
             msgs = (e.join(state.withColumnRenamed("id", "dst"), "dst")
                     .select(F.col("src").alias("id"), "ball"))
-            state = (state.unionByName(msgs)
-                     .groupBy("id")
-                     .agg(F.hll_union_agg("ball").alias("ball"))
-                     .localCheckpoint(eager=True))
-            t = float(state.agg(
-                F.sum(F.hll_sketch_estimate("ball")).alias("t"))
-                .collect()[0]["t"])
-            totals.append(t)
-            if t - totals[-2] < rel_tol * totals[-2]:
-                break
+            return (state.unionByName(msgs)
+                    .groupBy("id")
+                    .agg(F.hll_union_agg("ball").alias("ball")))
+
+        def plateau(ck: DataFrame, prev: DataFrame) -> bool:
+            totals.append(float(total(ck)))
+            return totals[-1] - totals[-2] < rel_tol * totals[-2]
+
+        _, rounds, _ = _fixpoint(step, state, max_rounds, probe=plateau)
         if _rounds_out is not None:
             _rounds_out.append(rounds)
         return spark.createDataFrame(
@@ -2747,6 +2694,52 @@ def _ckpt(df: DataFrame, measure: Callable[[DataFrame], Any] | None = None
     fresh = spark._jsparkSession.internalCreateDataFrame(
         rdd, jdf.schema(), False)
     return DataFrame(fresh, spark), value
+
+
+def _fixpoint(step: Callable[[DataFrame, int], DataFrame], state: DataFrame,
+              rounds: int, *, every: int | None = 1,
+              probe: Callable[[DataFrame, DataFrame], bool] | None = None
+              ) -> tuple[DataFrame, int, bool]:
+    """The round loop of the iterative graph operators: up to `rounds`
+    times `state = step(state, i)`, each step building its round lazily;
+    returns (state, rounds run, whether the probe reported convergence).
+
+    Every `every` rounds (never if falsy) the lineage is cut, lazy unless
+    probed.  Unprobed, the cut is `localCheckpoint(eager=False)`: nothing
+    reads the state between rounds, so the cuts ride the caller's final
+    action (pagerank's 10 rounds at checkpoint_every=2: 5 actions → 1);
+    such a cut keeps the inherited size estimate, so a step must not join
+    two frames derived from its state (the estimate would square).
+    Probed, the cut is `_ckpt` whose one action is `probe(cut, prev)` —
+    `prev` being the previous probed cut, or the initial state at the
+    first probe — and True stops the loop.  The probed cut carries no
+    inherited size estimate, so its joins ask `broadcast_fits`.  Callers
+    that persisted inputs end with one `localCheckpoint(eager=True)`
+    before releasing them."""
+    prev = state
+    for i in range(rounds):
+        state = step(state, i)
+        if not every or (i + 1) % every:
+            continue
+        if probe is None:
+            state = state.localCheckpoint(eager=False)
+            continue
+        state, stop = _ckpt(state, lambda ck: probe(ck, prev))
+        if stop:
+            return state, i + 1, True
+        prev = state
+    return state, rounds, False
+
+
+def _within(tol: float, *cols: str) -> Callable[[DataFrame, DataFrame], bool]:
+    """`_fixpoint` probe: True when every max |Δcol| between the cut and
+    `prev`, joined on id, is under tol — one aggregate job."""
+    def probe(ck: DataFrame, prev: DataFrame) -> bool:
+        row = (ck.alias("n").join(prev.alias("o"), "id")
+               .agg(*(F.max(F.abs(F.col(f"n.{c}") - F.col(f"o.{c}")))
+                      for c in cols)).collect()[0])
+        return all(d is not None and d < tol for d in row)
+    return probe
 
 
 def _edge_priority(weight: Column, u: Column, v: Column,
@@ -2988,10 +2981,7 @@ def maximal_independent_set(edges: DataFrame,
     Returns (id, round) — round = 1-based selection round (deterministic,
     value-checkable)."""
     und = _undirected_simple(edges)
-    adj, _ = _ckpt(
-        und.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .unionByName(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
-    )
+    adj, _ = _ckpt(_symmetric(und, "u", "v"))
     prio = F.concat_ws(
         ":", F.md5(F.col("id").cast("string")),
         F.lpad(F.col("id").cast("string"), 12, "0"))
@@ -3136,9 +3126,7 @@ def greedy_coloring(edges: DataFrame, max_rounds: int = 40,
         return F.concat_ws(":", F.md5(c.cast("string")),
                            F.lpad(c.cast("string"), 12, "0"))
 
-    both = (und.select(F.col("u").alias("a"), F.col("v").alias("b"))
-            .unionByName(und.select(F.col("v").alias("a"),
-                                    F.col("u").alias("b"))))
+    both = _symmetric(und, "u", "v")
     state = (both.repartition("a")
              .withColumn("prio_b", _prio(F.col("b")))
              .withColumn("color", F.lit(None).cast("int"))).persist()

@@ -23,8 +23,6 @@ _SLOW_TESTS = {
     "test_graph_ops.py::test_k_truss_delta_matches_full_recount",
     "test_oracle_diff.py::test_query_matches_oracle[text_quality_suite]",
     "test_graph_ops.py::test_louvain_full_never_decreases_and_keeps_planted",
-    "test_oracle_diff.py::test_query_matches_oracle[g_components]",
-    "test_oracle_diff.py::test_query_matches_oracle[g_pagerank]",
     "test_oracle_diff.py::test_query_matches_oracle[dsl_counts]",
     "test_graph_ops.py::test_louvain_full_contraction_improves_resolution_limit",
     "test_graph_ops.py::test_louvain_identity_proposal_fastpath_equal",
@@ -44,7 +42,6 @@ _SLOW_TESTS = {
     "test_oracle_diff.py::test_query_matches_oracle[g_khop2]",
     "test_graph_ops.py::test_hits_known_values",
     "test_graph_ops.py::test_diameter_double_sweep",
-    "test_oracle_diff.py::test_query_matches_oracle[g_paths]",
     "test_similarity.py::test_contrastive_mining_index_path_equals_inline",
     "test_property.py::test_heavy_hitters_matches_exact_model",
     "test_graph_ops.py::test_spanning_forest_matches_kruskal_random",

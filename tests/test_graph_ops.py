@@ -174,6 +174,57 @@ def test_ckpt_exact_count_no_extra_jobs_fresh_stats(spark):
     assert odd == 48
 
 
+def test_fixpoint_driver_contract(spark):
+    """_fixpoint's contract: a probe returning True stops the loop at that
+    round and the round count is reported; the first probe sees the
+    initial state as `prev`; a probed cut costs exactly the probe's own
+    jobs; unprobed lazy cuts submit fewer jobs than eager ones and give
+    the same rows."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    start = spark.range(0, 50, 1, 2).select("id", F.lit(0).alias("v"))
+
+    def vmax(df):
+        return df.agg(F.max("v")).first()[0]
+
+    seen, probe_jobs = [], []
+
+    def probe(ck, prev):
+        j0 = dag.nextJobId()
+        seen.append((vmax(ck), vmax(prev)))
+        probe_jobs.append(dag.nextJobId() - j0)
+        return len(seen) == 2
+
+    j0 = dag.nextJobId()
+    out, rounds, converged = analytics._fixpoint(
+        lambda df, i: df.select("id", (F.col("v") + 1).alias("v")),
+        start, 10, every=2, probe=probe)
+    loop_jobs = dag.nextJobId() - j0
+    assert (rounds, converged) == (4, True)
+    assert seen == [(2, 0), (4, 2)]
+    assert loop_jobs == sum(probe_jobs)
+    assert vmax(out) == 4
+
+    def shuffled_step(df, i):
+        return df.groupBy("id").agg((F.max("v") + i).alias("v"))
+
+    def run(cut):
+        j0 = dag.nextJobId()
+        rows = sorted(cut().collect())
+        return dag.nextJobId() - j0, rows
+
+    def eager():
+        df = start
+        for i in range(3):
+            df = shuffled_step(df, i).localCheckpoint(eager=True)
+        return df
+
+    lazy_jobs, lazy_rows = run(
+        lambda: analytics._fixpoint(shuffled_step, start, 3)[0])
+    eager_jobs, eager_rows = run(eager)
+    assert lazy_jobs < eager_jobs
+    assert lazy_rows == eager_rows and lazy_rows[0]["v"] == 3
+
+
 def test_k_hop_shuffle_fallback_matches_broadcast(tiny, no_broadcast):
     """A disabled broadcast budget forces the shuffle-join path; results are
     identical to the broadcast path (the scale-safety guard is plan-only)."""

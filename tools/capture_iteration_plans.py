@@ -1,12 +1,13 @@
 """Capture the REAL per-iteration plans of the iterative operators, whose
 final `.explain` is truncated by their own localCheckpoint calls: hook
 DataFrame.localCheckpoint to record the formatted plan of every frame the
-operator checkpoints while it runs, then write the first N captured plans.
+operator checkpoints while it runs (the lineage cuts of
+`analytics._fixpoint` and `_ckpt` included), then write the first 3.
 
 Usage: python tools/capture_iteration_plans.py <suffix> [op ...]
-  op in {pagerank, katz, cc} (default: all three)
+  op: a key of `runners` in main() (default: pagerank katz cc)
 
-Writes plans/r11/<op>_iteration_<suffix>.txt.
+Writes $PLANS_DIR/<op>_iteration_<suffix>.txt (default plans/r12).
 """
 from __future__ import annotations
 
@@ -21,7 +22,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 PLANS_DIR = os.environ.get(
     "PLANS_DIR",
     os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                 "plans", "r11"))
+                 "plans", "r12"))
 
 
 def main() -> None:
@@ -84,6 +85,11 @@ def main() -> None:
         "kcore": lambda: analytics.k_core(edges, k=3, max_iterations=6),
         "corenum": lambda: analytics.core_numbers(edges),
         "lpa": lambda: analytics.label_propagation(edges, iterations=4),
+        "hits": lambda: analytics.hits(edges, iterations=4),
+        "paths": lambda: analytics.shortest_paths(edges, [1, 2], iterations=3),
+        "sssp": lambda: analytics.sssp(
+            edges.withColumn("weight", F.lit(1.0)), 1, iterations=3),
+        "hyperball": lambda: analytics.hyperball(edges, max_rounds=3),
     }
     for op in ops:
         captured.clear()

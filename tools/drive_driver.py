@@ -33,6 +33,9 @@ print(f"entry(): {len(rows)} rows", flush=True)
 qs = E.queries()
 oracles = E.oracle_sql()
 only = set(sys.argv[1:])
+if only:  # named rows may also be raw registrations fused into the roster
+    qs = {**E._RAW_QUERIES, **qs}
+    oracles = {**E._RAW_ORACLES, **oracles}
 con = duck_connection(SF)
 failed = []
 for name, fn in qs.items():
