@@ -6,13 +6,17 @@ parallel and do this work).  These are GraphX-style algorithms re-expressed
 as DataFrame programs: aggregate-messages = groupBy on message destination;
 iterative algorithms run their rounds through `_fixpoint`.
 
-Scale posture: every iteration is a self-join on the edge table.  For a
-100 TB graph, persist `edges` as the dual bucketed layout
+Scale posture: every iteration joins the edge table with the vertex
+state.  While the state fits the broadcast budget, pagerank, katz and
+label propagation broadcast it over an edge side partitioned on the key
+the round aggregates, so a round moves nothing but the state (the rule is
+stated once in pagerank's docstring; tests/test_plans.py pins the round
+plans).  Past the budget, persist `edges` as the dual bucketed layout
 (sources/edge_layout.py) and pass the by-src copy in — pagerank's
-out-degree aggregate and per-iteration contribution join both key on `src`,
-so they run exchange-free on that copy (tests/test_plans.py pins the plan);
-AQE handles skewed hub vertices (skew-join splitting).  Degrees/messages
-use map-side partial aggregation natively.
+out-degree aggregate and shuffle-path contribution join both key on
+`src`, so they run exchange-free on that copy; AQE handles skewed hub
+vertices (skew-join splitting).  Degrees/messages use map-side partial
+aggregation natively.
 """
 
 from __future__ import annotations
@@ -98,8 +102,7 @@ def pagerank(edges: DataFrame, iterations: int = 10, reset: float = 0.15,
     rows; the unweighted path keeps its exact count-based arithmetic.
 
     Each iteration: contributions = rank/out_degree shipped along edges,
-    grouped by dst (one shuffle per iteration on the same key → a cluster
-    run pre-buckets edges by src to make the contribution join co-located).
+    grouped by dst.
 
     `init_ranks` (opt-in, (id, rank)) warm-starts the iteration from a
     previous run's output — the incremental path after an edge delta:
@@ -119,11 +122,24 @@ def pagerank(edges: DataFrame, iterations: int = 10, reset: float = 0.15,
     when a list, receives the executed iteration count (test/telemetry hook).
 
     broadcast_ranks=None (the default) asks `broadcast_fits` with the
-    vertex count: within the session's broadcast budget the rank vector
-    ships to every task so the edge side never shuffles (measured 5.4 →
-    4.6s warm / 10.6 → 6.6s cold at sf0.1); past it the contribution join
-    shuffles on src, which a bucketed-by-src edge table makes co-located.
-    Explicit True/False overrides the guard.
+    vertex count; explicit True/False overrides the guard.  The verdict
+    picks the partitioning of the loop-invariant edge side, which is
+    built after it.  This partition rule is shared with katz_centrality
+    and label_propagation:
+
+    * state broadcast: the edge side is persisted hash-partitioned on the
+      round's AGGREGATION key (`dst` here), into `state_partitions`
+      partitions or the session's shuffle partitions when None.  The
+      broadcast-hash join keeps the edge side's partitioning, so the
+      round's group-by runs in place and a round is one job, the state's
+      BroadcastExchange.  Only the first round still shuffles its
+      contributions: its plan is made before the edge side's cache is
+      filled, and AQE reports no partitioning for an unfilled cache.
+    * state past the budget: the edge side stays keyed on the JOIN key
+      (`src`; repartitioned only when `state_partitions` is given, and
+      exchange-free on a bucketed-by-src copy).  Each round shuffles the
+      state to `src` for the join and the contributions to `dst` for the
+      group-by.
     """
     # state_partitions sizes every iteration's shuffle to the rank-state
     # scale instead of the session default: per-task fixed costs dominate
@@ -139,28 +155,8 @@ def pagerank(edges: DataFrame, iterations: int = 10, reset: float = 0.15,
     if state_partitions:
         verts = verts.repartition(state_partitions, "id")
     verts = verts.persist()
-    if weight_col is None:
-        out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-            F.count(F.lit(1)).alias("out_degree"))
-        e_sel = edges.select("src", "dst")
-    else:
-        w = F.coalesce(F.col(weight_col).cast("double"), F.lit(1.0))
-        out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-            F.sum(w).alias("out_degree"))
-        e_sel = edges.select("src", "dst", w.alias("_w"))
-    norm_edges = (
-        e_sel
-        .join(out_deg.withColumnRenamed("id", "src"), "src")
-    )
-    if state_partitions:
-        norm_edges = norm_edges.repartition(state_partitions, "src")
-    norm_edges = norm_edges.persist()
+    norm_edges = None
     try:
-        # broadcast_ranks=True ships the rank vector to every task so the edge
-        # scan never shuffles — the right plan while |V| fits in an executor
-        # (hundreds of millions of rows at typical executor memory).  Beyond
-        # that, leave False: the join shuffles on src, which a bucketed-by-src
-        # edge table makes co-located.
         def tele_of(col: Column) -> Column:
             # teleport vector as a function of an arbitrary id column: the
             # iteration needs it on "id" AND (r11) on the edge side's "src"
@@ -190,6 +186,23 @@ def pagerank(edges: DataFrame, iterations: int = 10, reset: float = 0.15,
             # verts is persisted and needed immediately anyway; the count
             # is one cheap job against the cached state
             broadcast_ranks = broadcast_fits(ranks, verts.count())
+        if weight_col is None:
+            out_deg = edges.groupBy(F.col("src").alias("id")).agg(
+                F.count(F.lit(1)).alias("out_degree"))
+            e_sel = edges.select("src", "dst")
+        else:
+            w = F.coalesce(F.col(weight_col).cast("double"), F.lit(1.0))
+            out_deg = edges.groupBy(F.col("src").alias("id")).agg(
+                F.sum(w).alias("out_degree"))
+            e_sel = edges.select("src", "dst", w.alias("_w"))
+        norm_edges = e_sel.join(out_deg.withColumnRenamed("id", "src"), "src")
+        # the partition rule (docstring): keyed on the aggregation key
+        # under a broadcast state, else on the join key
+        if broadcast_ranks:
+            norm_edges = _keyed(norm_edges, "dst", state_partitions)
+        elif state_partitions:
+            norm_edges = norm_edges.repartition(state_partitions, "src")
+        norm_edges = norm_edges.persist()
 
         def step(ranks: DataFrame, i: int) -> DataFrame:
             rank_side = ranks.withColumnRenamed("id", "src")
@@ -216,7 +229,7 @@ def pagerank(edges: DataFrame, iterations: int = 10, reset: float = 0.15,
                 norm_edges.join(rank_side, "src", "left")
                 .select(F.col("dst").alias("id"), contrib_expr.alias("contrib"))
             )
-            if state_partitions:
+            if state_partitions and not broadcast_ranks:
                 contribs = contribs.repartition(state_partitions, "id")
             return (
                 contribs.groupBy("id")
@@ -243,7 +256,8 @@ def pagerank(edges: DataFrame, iterations: int = 10, reset: float = 0.15,
         return ranks.localCheckpoint(eager=True)
     finally:
         verts.unpersist()
-        norm_edges.unpersist()
+        if norm_edges is not None:
+            norm_edges.unpersist()
 
 
 def katz_centrality(edges: DataFrame, iterations: int = 8,
@@ -259,22 +273,25 @@ def katz_centrality(edges: DataFrame, iterations: int = 8,
     for the test graphs; fixed `iterations` bounds the computation either
     way).  Returns (id, katz), unnormalized.
 
-    Plan shape is pagerank's (one shuffle per iteration on dst, rank
-    vector broadcast under the same `broadcast_fits` guard, `_fixpoint`
-    lineage cuts) minus the degree-normalization join — see
-    pagerank's docstring for the 100×-scale posture.
+    Plan shape is pagerank's (rank vector broadcast under the same
+    `broadcast_fits` guard, the edge side partitioned by pagerank's
+    partition rule, `_fixpoint` lineage cuts) minus the
+    degree-normalization join — see pagerank's docstring.
     """
     verts = _endpoints(edges)
     if state_partitions:
         verts = verts.repartition(state_partitions, "id")
     verts = verts.persist()
-    e_sel = edges.select("src", "dst")
-    if state_partitions:
-        e_sel = e_sel.repartition(state_partitions, "src")
-    e_sel = e_sel.persist()
+    e_sel = None
     try:
         ranks = verts.withColumn("katz", F.lit(float(beta)))
         broadcast_ranks = broadcast_fits(ranks, verts.count())
+        e_sel = edges.select("src", "dst")
+        if broadcast_ranks:
+            e_sel = _keyed(e_sel, "dst", state_partitions)
+        elif state_partitions:
+            e_sel = e_sel.repartition(state_partitions, "src")
+        e_sel = e_sel.persist()
 
         def step(ranks: DataFrame, i: int) -> DataFrame:
             rank_side = ranks.withColumnRenamed("id", "src")
@@ -294,7 +311,7 @@ def katz_centrality(edges: DataFrame, iterations: int = 8,
                         F.coalesce(F.col("katz"), F.lit(float(beta)))
                         .alias("c"))
             )
-            if state_partitions:
+            if state_partitions and not broadcast_ranks:
                 contribs = contribs.repartition(state_partitions, "id")
             return (
                 contribs.groupBy("id").agg(F.sum("c").alias("c"))
@@ -314,7 +331,8 @@ def katz_centrality(edges: DataFrame, iterations: int = 8,
         return ranks.localCheckpoint(eager=True)
     finally:
         verts.unpersist()
-        e_sel.unpersist()
+        if e_sel is not None:
+            e_sel.unpersist()
 
 
 def hits(edges: DataFrame, iterations: int = 8,
@@ -909,6 +927,14 @@ def _endpoints(edges: DataFrame) -> DataFrame:
             .unionByName(edges.select(F.col("dst").alias("id"))).distinct())
 
 
+def _keyed(df: DataFrame, key: str, partitions: int | None) -> DataFrame:
+    """`df` hash-partitioned on `key` into `partitions` partitions, or the
+    session's spark.sql.shuffle.partitions when None (pagerank's partition
+    rule)."""
+    n = partitions or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, key)
+
+
 def _symmetric(df: DataFrame, x: str, y: str) -> DataFrame:
     """(a, b) for both directions (x, y) and (y, x) of every row."""
     return (df.select(F.col(x).alias("a"), F.col(y).alias("b"))
@@ -1331,17 +1357,31 @@ def label_propagation(edges: DataFrame, iterations: int = 5) -> DataFrame:
     """Synchronous label propagation (community detection): each round every
     vertex adopts the most frequent label among its undirected neighbors,
     ties broken by smallest label — fully deterministic, so a fixed round
-    count is oracle-matchable.  Returns (id, community)."""
+    count is oracle-matchable.  Returns (id, community).
+
+    The labels broadcast under `broadcast_fits` with the vertex count;
+    the symmetric adjacency then follows pagerank's partition rule keyed
+    on `a`, the vertex whose label the round decides, so the join, the
+    (a, community) count and the per-`a` window all run in place.  Past
+    the budget each round shuffles for the join, the count and the
+    window."""
     from pyspark.sql.window import Window
 
-    adj = _symmetric(edges, "src", "dst").distinct().persist()
+    # every endpoint is an `a` of the symmetric adjacency; the one action
+    # of the cut counts the vertices for the broadcast guard
+    labels, n_v = _ckpt(_endpoints(edges).withColumn("community", F.col("id")))
+    bcast = broadcast_fits(labels, n_v)
+    adj = _symmetric(edges, "src", "dst")
+    if bcast:
+        adj = _keyed(adj, "a", None)
+    adj = adj.distinct().persist()
     try:
-        labels = adj.select(F.col("a").alias("id")).distinct().withColumn("community", F.col("id"))
         w = Window.partitionBy("a").orderBy(F.col("n").desc(), F.col("community").asc())
 
         def step(labels: DataFrame, i: int) -> DataFrame:
+            side = labels.withColumnRenamed("id", "b")
             counts = (
-                adj.join(labels.withColumnRenamed("id", "b"), "b")
+                adj.join(F.broadcast(side) if bcast else side, "b")
                 .groupBy("a", "community")
                 .agg(F.count(F.lit(1)).alias("n"))
             )

@@ -29,6 +29,8 @@ the DuckDB oracle SQL).
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -182,11 +184,18 @@ class GraphStore:
         key = hashlib.md5(spec.encode()).hexdigest()[:12]
         return f"/tmp/hugegraph_spark_cache/{key}/{name}.parquet"
 
-    def _materialized(self, name: str, df: DataFrame, part_col: str) -> DataFrame:
+    def _materialized(self, name: str, build: Callable[[], DataFrame],
+                      part_col: str) -> DataFrame:
+        """The view `build()` returns, read from its cache when materializing.
+        `build` runs only on a cache miss: each source read plans a schema
+        job, so a warm view costs the one cache read."""
+        if not self.materialize:
+            return build()
         import os
 
         path = self._cache_path(name)
         if not os.path.exists(os.path.join(path, "_SUCCESS")):
+            df = build()
             try:
                 (df.repartition(32, part_col)
                    .sortWithinPartitions(part_col)
@@ -213,10 +222,7 @@ class GraphStore:
         if self.vertex_layout is not None:
             return self.vertex_layout.vertices()
         if self._vertices is None:
-            out = self._build_vertices()
-            if self.materialize:
-                out = self._materialized("vertices", out, "id")
-            self._vertices = out
+            self._vertices = self._materialized("vertices", self._build_vertices, "id")
         return self._vertices
 
     def _build_edges(self) -> DataFrame:
@@ -251,14 +257,9 @@ class GraphStore:
             return self.layout.edges(order_by)
         if order_by == "src":
             if self._edges is None:
-                out = self._build_edges()
-                if self.materialize:
-                    out = self._materialized("edges", out, "src")
-                self._edges = out
+                self._edges = self._materialized("edges", self._build_edges, "src")
             return self._edges
         if self._edges_by_dst is None:
-            out = self._build_edges()
-            if self.materialize:
-                out = self._materialized("edges_by_dst", out, "dst")
-            self._edges_by_dst = out
+            self._edges_by_dst = self._materialized(
+                "edges_by_dst", self._build_edges, "dst")
         return self._edges_by_dst

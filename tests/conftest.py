@@ -39,7 +39,6 @@ _SLOW_TESTS = {
     "test_property.py::test_bloom_decontam_equals_set_mode_property",
     "test_oracle_diff.py::test_query_matches_oracle[dedup_pairs]",
     "test_graph_ops.py::test_greedy_coloring_proper_and_minimal_palette",
-    "test_oracle_diff.py::test_query_matches_oracle[g_khop2]",
     "test_graph_ops.py::test_hits_known_values",
     "test_graph_ops.py::test_diameter_double_sweep",
     "test_similarity.py::test_contrastive_mining_index_path_equals_inline",

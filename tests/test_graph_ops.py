@@ -174,6 +174,24 @@ def test_ckpt_exact_count_no_extra_jobs_fresh_stats(spark):
     assert odd == 48
 
 
+def test_graph_store_warm_view_is_one_job(spark):
+    """A warm view cache builds no source plan: `edges()` and `vertices()`
+    of a fresh GraphStore cost at most the cache read's one job (each of
+    the six source reads would plan a schema job of its own)."""
+    from hugegraph_on_tikv_spark.sources.graph import GraphStore
+    from tests.conftest import SF_DIR
+
+    warm = GraphStore(spark, SF_DIR)
+    n_e, n_v = warm.edges().count(), warm.vertices().count()
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    store = GraphStore(spark, SF_DIR)
+    for view, rows in ((store.edges, n_e), (store.vertices, n_v)):
+        j0 = dag.nextJobId()
+        df = view()
+        assert dag.nextJobId() - j0 <= 1
+        assert df.count() == rows
+
+
 def test_fixpoint_driver_contract(spark):
     """_fixpoint's contract: a probe returning True stops the loop at that
     round and the round count is reported; the first probe sees the
@@ -773,6 +791,36 @@ def test_cc_and_mis_broadcast_fallback_equality(spark, no_broadcast):
             edges).collect()}
     assert cc_on == cc_off
     assert mis_on == mis_off
+
+
+def test_label_propagation_broadcast_fallback_equality(spark, no_broadcast):
+    """Label propagation gives the same labels whether the labels
+    broadcast over the adjacency partitioned on `a` (guard default) or
+    every round falls back to shuffle joins, and both equal the literal
+    synchronous rule: most frequent neighbour label, ties to the
+    smallest."""
+    import random
+    from collections import Counter
+
+    rng = random.Random(7)
+    rows = [(rng.randint(0, 40), rng.randint(0, 40)) for _ in range(90)]
+    rows += [(60 + i, 60 + (i + 1) % 6) for i in range(6)] + [(60, 62)]
+    edges = spark.createDataFrame(rows, "src long, dst long")
+    on = {r["id"]: r["community"] for r in
+          analytics.label_propagation(edges, iterations=4).collect()}
+    with no_broadcast():
+        off = {r["id"]: r["community"] for r in
+               analytics.label_propagation(edges, iterations=4).collect()}
+    assert on == off
+    nbrs: dict[int, set] = {}
+    for s, d in rows:
+        nbrs.setdefault(s, set()).add(d)
+        nbrs.setdefault(d, set()).add(s)
+    lab = {v: v for v in nbrs}
+    for _ in range(4):
+        counts = {v: Counter(lab[u] for u in nbrs[v]) for v in nbrs}
+        lab = {v: min(c, key=lambda x: (-c[x], x)) for v, c in counts.items()}
+    assert on == lab
 
 
 def test_cc_star_broadcast_fallback_equality(spark, no_broadcast):

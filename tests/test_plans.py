@@ -190,6 +190,62 @@ def test_pagerank_static_side_exchange_free_on_bucketed_edges(spark, tmp_path):
         layout.drop()
 
 
+def _above_cached_scans(tree: str) -> str:
+    """A physical-plan tree string without the subtrees under its
+    InMemoryTableScan nodes: the cached plan's own exchanges ran once,
+    when the cache was filled, not in the frame being planned."""
+    kept, skip_below = [], None
+    for line in tree.splitlines():
+        node = line.lstrip(" :+-")
+        depth = len(line) - len(node)
+        if skip_below is not None and depth > skip_below:
+            continue
+        skip_below = depth if node.startswith("InMemoryTableScan") else None
+        kept.append(line)
+    return "\n".join(kept)
+
+
+@pytest.mark.parametrize("op", ["pagerank_p8", "pagerank", "katz", "lpa"])
+def test_broadcast_rounds_are_exchange_free(spark, monkeypatch, op):
+    """pagerank's partition rule: under the default broadcast budget the
+    loop-invariant edge side is partitioned on the key the round
+    aggregates, so every round after the first (whose plan is made before
+    the edge side's cache is filled) broadcasts the state and shuffles
+    nothing."""
+    from hugegraph_on_tikv_spark.operators import analytics
+
+    edges = spark.createDataFrame(
+        [(i, (i * j + 1) % 61) for i in range(61) for j in (2, 5, 7)],
+        "src long, dst long")
+    run = {
+        "pagerank_p8": lambda: analytics.pagerank(
+            edges, iterations=3, checkpoint_every=1, state_partitions=8),
+        "pagerank": lambda: analytics.pagerank(
+            edges, iterations=3, checkpoint_every=1),
+        "katz": lambda: analytics.katz_centrality(
+            edges, iterations=3, checkpoint_every=1),
+        "lpa": lambda: analytics.label_propagation(edges, iterations=3),
+    }[op]
+    rounds: list[str] = []
+    fixpoint = analytics._fixpoint
+
+    def spy(step, state, n, **kw):
+        def planned_step(df, i):
+            out = step(df, i)
+            rounds.append(out._jdf.queryExecution().executedPlan().toString())
+            return out
+        return fixpoint(planned_step, state, n, **kw)
+
+    monkeypatch.setattr(analytics, "_fixpoint", spy)
+    run().collect()
+    assert len(rounds) == 3
+    for plan in rounds[1:]:
+        top = _above_cached_scans(plan)
+        assert "BroadcastExchange" in top, plan
+        assert not [line for line in top.splitlines()
+                    if "Exchange" in line and "BroadcastExchange" not in line], plan
+
+
 def test_agg_view_bucketed_merge_shuffles_only_delta(spark, tmp_path):
     """Incremental aggregate-view refresh at scale: with the view persisted
     BUCKETED on its group keys, the full-outer merge join leaves the view
