@@ -5695,8 +5695,10 @@ _register("g_modularity", _g_modularity, _modularity_sql())
 #    super-vertices, inter-community edge counts as weights, intra counts
 #    as self-loops) with parity-alternating weighted local-move rounds,
 #    every proposal accept/rejected by the exact-integer modularity
-#    numerator (contracted levels compute it on the contracted graph —
-#    provably equal, _numerator_from_sed).  The oracle unrolls the
+#    numerator; every level is one run of analytics._louvain_level
+#    (_weighted_move_proposal + _contrib_from_sed; level 1 on unit
+#    weights, contracted levels on the contracted graph — provably
+#    equal to the original graph's numerator).  The oracle unrolls the
 #    identical schedule with the same md5-bit predicates; a rejected
 #    round is a CASE no-op, which makes unconditional unrolling exact
 #    (Spark's two-consecutive-rejections break is label-identical, and
@@ -5718,7 +5720,7 @@ def _g_louvain(spark: SparkSession, sf: str) -> DataFrame:
     e = GraphStore(spark, sf).edges()
     # the capture hook hands back the guard loop's own exact numerators:
     # level1_num IS the labeling a standalone louvain(e, max_rounds=L1)
-    # would produce (same _louvain_rounds schedule), so the -2 cert needs
+    # would produce (same _louvain_level schedule), so the -2 cert needs
     # no second level-1 run and neither cert re-aggregates O(m)
     cap: dict = {}
     full = analytics.louvain_full(

@@ -1410,7 +1410,8 @@ def modularity(edges: DataFrame, labels: DataFrame,
     edges, far past 100 TB graphs, and bit-identical across engines
     (no float sums).  Completes the community family next to
     label_propagation the way core_numbers completed k_core: LPA gives
-    labelings, modularity scores them.
+    labelings, modularity scores them.  The frame is Louvain's own
+    contrib frame (`_contrib_from_sed`) on the unit-weight graph.
 
     Returns (community, intra_edges, degree_sum, contrib, q_share) — one
     row per community that contains at least one non-isolated vertex;
@@ -1418,34 +1419,13 @@ def modularity(edges: DataFrame, labels: DataFrame,
     contrib is the exact integer the oracle checks."""
     und = _undirected_simple(edges).localCheckpoint(eager=True)
     m = und.count()  # 1 driver scalar, metadata-sized by contract
-    lab = labels.select("id", F.col(label_col).alias("_c"))
-    deg = (und.select(F.col("u").alias("id"))
-           .unionByName(und.select(F.col("v").alias("id")))
-           .groupBy("id").agg(F.count(F.lit(1)).alias("_d")))
-    lu = lab.select(F.col("id").alias("u"), F.col("_c").alias("_cu"))
-    lv = lab.select(F.col("id").alias("v"), F.col("_c").alias("_cv"))
-    e_c = (und.join(lu, "u").join(lv, "v")
-           .filter(F.col("_cu") == F.col("_cv"))
-           .groupBy(F.col("_cu").alias("community"))
-           .agg(F.count(F.lit(1)).alias("intra_edges")))
-    d_c = (deg.join(lab, "id")
-           .groupBy(F.col("_c").alias("community"))
-           .agg(F.sum("_d").alias("degree_sum")))
-
-    def _dec(c) -> Column:
-        return (F.col(c) if isinstance(c, str) else c).cast("decimal(38,0)")
-
-    four_m = F.lit(4 * m).cast("decimal(38,0)")
+    slab = labels.select(F.col("id").alias("sid"),
+                         F.col(label_col).alias("sc"))
     denom = float(4 * m * m) if m else 1.0
-    return (d_c.join(e_c, "community", "left")
-            .select("community",
-                    F.coalesce("intra_edges", F.lit(0).cast("long"))
-                    .alias("intra_edges"),
-                    "degree_sum")
-            .withColumn("contrib",
-                        (four_m * _dec("intra_edges")
-                         - _dec("degree_sum") * _dec("degree_sum"))
-                        .cast("decimal(38,0)"))
+    return (_contrib_from_sed(_unit(und), m, slab)
+            .select(F.col("_c").alias("community"),
+                    F.col("_e").alias("intra_edges"),
+                    F.col("_ds").alias("degree_sum"), "contrib")
             .withColumn("q_share",
                         F.round(F.col("contrib").cast("double") / F.lit(denom),
                                 6)))
@@ -1465,8 +1445,8 @@ def modularity_score(edges: DataFrame, labels: DataFrame,
 
 
 # r12 probe, MEASURED NEUTRAL AND REVERTED (guide §1.1): running the
-# id-keyed vertex-scale joins (side, enriched⋈side, lab⟕best, deg⋈lab)
-# as plain co-partitioned joins instead of broadcasts did NOT drop the
+# vertex-keyed joins (side, enriched⋈side, slab⟕best, wdeg⋈slab) as
+# plain co-partitioned joins instead of broadcasts did NOT drop the
 # job count (136 → 141) or the wall clock (41.9/45.9 → 41.3/41.2
 # alternated): the planner does not see the checkpoint/cache hash(id)
 # co-partitioning at plan time, inserts exchanges, and AQE then demotes
@@ -1489,501 +1469,85 @@ def _bcast_if(df: DataFrame, small: bool) -> DataFrame:
     return F.broadcast(df) if small else df
 
 
-def _contrib_from_und(und: DataFrame, m: int, labels: DataFrame,
-                      label_col: str = "community",
-                      small: bool = False,
-                      deg: DataFrame | None = None) -> DataFrame:
-    """Per-community modularity contribs 4·m·e_c − d_c² as a one-column
-    DataFrame — the shared plan behind `_numerator_from_und` and the
-    fused round-1 guard (r11: two labelings' numerators collected in ONE
-    action by unioning their tagged contrib frames)."""
-    lab = labels.select("id", F.col(label_col).alias("_c"))
-    if deg is None:
-        deg = (und.select(F.col("u").alias("id"))
-               .unionByName(und.select(F.col("v").alias("id")))
-               .groupBy("id").agg(F.count(F.lit(1)).alias("_d")))
-    lu = lab.select(F.col("id").alias("u"), F.col("_c").alias("_cu"))
-    lv = lab.select(F.col("id").alias("v"), F.col("_c").alias("_cv"))
-    e_c = (und.join(_bcast_if(lu, small), "u")
-           .join(_bcast_if(lv, small), "v")
-           .filter(F.col("_cu") == F.col("_cv"))
-           .groupBy(F.col("_cu").alias("_c"))
-           .agg(F.count(F.lit(1)).alias("_e")))
-    d_c = (deg.join(_bcast_if(lab, small), "id")
-           .groupBy("_c").agg(F.sum("_d").alias("_ds")))
-    four_m = F.lit(4 * m).cast("decimal(38,0)")
-    return (d_c.join(_bcast_if(e_c, small), "_c", "left")
-            .select((four_m
-                     * F.coalesce("_e", F.lit(0)).cast("decimal(38,0)")
-                     - F.col("_ds").cast("decimal(38,0)")
-                     * F.col("_ds").cast("decimal(38,0)"))
-                    .alias("contrib")))
+def _dec(c: str) -> Column:
+    return F.col(c).cast("decimal(38,0)")
 
 
-def _numerator_from_und(und: DataFrame, m: int, labels: DataFrame,
-                        label_col: str = "community",
-                        small: bool = False,
-                        deg: DataFrame | None = None) -> int:
-    """Exact-integer modularity numerator Σ (4·m·e_c − d_c²) over a
-    PRECOMPUTED undirected simple edge set (the guard-loop fast path —
-    one keyed aggregation instead of re-deriving und + m per probe).
-    `deg` (opt-in) reuses a caller-persisted degree table — it is
-    labeling-independent, so guard loops compute it once; `small`
-    broadcasts the vertex-sized sides (see _bcast_if)."""
-    if m == 0:
-        return 0
-    contrib = _contrib_from_und(und, m, labels, label_col, small, deg)
-    n = contrib.agg(F.sum("contrib").alias("n")).collect()[0]["n"]
-    return int(n or 0)
+def _unit(und: DataFrame) -> DataFrame:
+    """The undirected simple graph as a Louvain level: canonical weighted
+    edges (u2, v2, w) with w = 1 and no self-loops."""
+    return und.select(F.col("u").alias("u2"), F.col("v").alias("v2"),
+                      F.lit(1).cast("long").alias("w"))
 
 
-def _local_move_proposal(und: DataFrame, lab: DataFrame, m: int,
-                         small: bool = False,
-                         deg: DataFrame | None = None,
-                         adj: DataFrame | None = None,
-                         parity: int | None = None,
-                         identity: bool = False) -> DataFrame:
-    """UNGUARDED synchronous local-move proposal over a precomputed
-    undirected simple edge set: every vertex v evaluates moving to each
-    NEIGHBOR community c, scoring by the exact integer gain
-
-        ΔQ·4m² = 4m·(k_{v,c} − k_{v,c_v∖v}) − 2·k_v·(d_c − (d_{c_v} − k_v))
-
-    (k_{v,c} = edges from v into c, d_c = community degree sum, k_v = v's
-    degree), takes the best strictly-positive move (ties → smallest
-    community id, argmax-then-min — no id negation, type-safe for any
-    ordered id), and applies all winning moves SIMULTANEOUSLY.  `lab` is
-    (id, _c); returns the proposed (id, _c).  Callers guard acceptance
-    with `_numerator_from_und`.
-
-    `deg`/`adj` (opt-in) reuse caller-persisted iteration invariants —
-    both are labeling-independent, so guard loops derive them once
-    instead of per round.  `small` ships every vertex/community-sized
-    side table broadcast (_bcast_if) so the only shuffles left are the
-    aggregations themselves.  r10 plan: TWO edge-scale passes total
-    (adj→nbr aggregation, nbr→per-vertex min_by argmax) — the old shape
-    recomputed the nbr/cand chain twice through an mx self-join.
-
-    `identity=True` (r11, guide §2.4): the caller asserts `lab` IS the
-    singleton labeling (_c == id for every vertex).  Then every
-    label-dependent intermediate is a pure projection of the persisted
-    invariants — nbr ≡ adj with cand=b, k_to=1 (und is simple, so each
-    (id, b) occurs once); d_c ≡ deg (each community is one vertex);
-    side ≡ deg with _c=id, d_cur=_d — which deletes the edge-scale
-    (id, cand) aggregation exchange and both label joins from the
-    ROUND-1 plan.  The downstream scoring/argmax code is shared, so the
-    winner, gain and parity decisions are expression-identical."""
-    if deg is None:
-        deg = (und.select(F.col("u").alias("id"))
-               .unionByName(und.select(F.col("v").alias("id")))
-               .groupBy("id").agg(F.count(F.lit(1)).alias("_d")))
-    if adj is None:
-        adj = (und.select(F.col("u").alias("id"), F.col("v").alias("b"))
-               .unionByName(
-                   und.select(F.col("v").alias("id"), F.col("u").alias("b"))))
-    if identity:
-        nbr = adj.select("id", F.col("b").alias("cand"),
-                         F.lit(1).cast("long").alias("k_to"))
-        d_c = deg.select(F.col("id").alias("cand"),
-                         F.col("_d").alias("d_cand"))
-        side = deg.select("id", F.col("id").alias("_c"), "_d",
-                          F.col("_d").alias("d_cur"))
-        lab = deg.select("id", F.col("id").alias("_c"))
-    else:
-        # k_{v,c}: edge count from each vertex into each neighbor community
-        nbr = (adj.join(_bcast_if(lab.select(F.col("id").alias("b"),
-                                             F.col("_c").alias("cand")),
-                                  small), "b")
-               .groupBy("id", "cand").agg(F.count(F.lit(1)).alias("k_to")))
-        d_c = (deg.join(_bcast_if(lab, small), "id")
-               .groupBy(F.col("_c").alias("cand"))
-               .agg(F.sum("_d").alias("d_cand")))
-        side = (lab.join(_bcast_if(deg, small), "id")
-                .join(_bcast_if(d_c.select(F.col("cand").alias("_c"),
-                                           F.col("d_cand").alias("d_cur")),
-                                small), "_c"))
-
-    def _dec(c) -> Column:
-        return F.col(c).cast("decimal(38,0)")
-
-    four_m = F.lit(4 * m).cast("decimal(38,0)")
-    two = F.lit(2).cast("decimal(38,0)")
-    # r10 single-pass argmax (see _weighted_move_proposal): per-vertex
-    # constants shift every candidate's gain equally, so one min_by over
-    # the partial score p = 4m·k_to − 2·k_v·d_cand picks the identical
-    # winner and the full gain gates only that one row.
-    # r12 (guide §2.4): the FULL side table (incl. d_cur) joins enriched
-    # once and its per-vertex constants ride the argmax as EXTRA GROUP
-    # KEYS — _c/_d/d_cur are functions of id, so the groups (and the
-    # min_by winner) are identical, hash(id) still satisfies the
-    # clustered distribution, and the old second side broadcast + the
-    # scored join stage disappear from every round's critical path.
-    enriched = (nbr.join(_bcast_if(d_c, small), "cand")
-                .join(_bcast_if(side.select("id", "_c", "_d", "d_cur"),
-                                small), "id"))
-    p = four_m * _dec("k_to") - two * _dec("_d") * _dec("d_cand")
-    is_own = F.when(F.col("cand") == F.col("_c"), F.lit(1)).otherwise(
-        F.lit(0))
-    ordk = F.struct(is_own.alias("o"), (-p).alias("np"),
-                    F.col("cand").alias("c"))
-    agg = (enriched.groupBy("id", "_c", "_d", "d_cur")
-           .agg(F.min_by(F.struct(F.col("cand").alias("c"),
-                                  F.col("k_to").alias("kt"),
-                                  F.col("d_cand").alias("dc")),
-                         ordk).alias("win"),
-                F.max(F.when(F.col("cand") == F.col("_c"),
-                             F.col("k_to"))).alias("k_own")))
-    scored = (agg
-              .withColumn(
-                  "gain",
-                  four_m * (F.col("win.kt").cast("decimal(38,0)")
-                            - F.coalesce(F.col("k_own")
-                                         .cast("decimal(38,0)"),
-                                         F.lit(0).cast("decimal(38,0)")))
-                  - two * _dec("_d")
-                  * (F.col("win.dc").cast("decimal(38,0)")
-                     - (F.col("d_cur").cast("decimal(38,0)")
-                        - _dec("_d")))))
-    moved = (F.col("win.c") != F.col("_c")) & (F.col("gain") > 0)
-    if parity is not None:
-        # the level-2 symmetry breaker, now available at level 1 too
-        # (r10): only vertices whose deterministic md5 bit matches move
-        # this round — a fully synchronous sweep from singletons swaps
-        # whole neighborhoods simultaneously and the guard rejects the
-        # permuted-but-no-better result, so unparitied level-1 rounds
-        # accept nothing on symmetric-ish graphs (measured at sf0.1)
-        bit = (F.conv(F.substring(F.md5(F.col("id").cast("string")), 1, 1),
-                      16, 10).cast("int") % 2)
-        moved = moved & (bit == F.lit(parity))
-    best = (scored.filter(moved)
-            .select("id", F.col("win.c").alias("_new")))
-    return (lab.join(_bcast_if(best, small), "id", "left")
-            .select("id", F.coalesce("_new", F.col("_c")).alias("_c")))
+def _wdeg(sed: DataFrame) -> DataFrame:
+    """Weighted degree (sid, _d) of a level: an edge adds w to each
+    endpoint, so a self-loop adds 2w (Newman)."""
+    return (sed.select(F.col("u2").alias("sid"), "w")
+            .unionByName(sed.select(F.col("v2").alias("sid"), "w"))
+            .groupBy("sid").agg(F.sum("w").alias("_d")))
 
 
-def modularity_local_move(edges: DataFrame, labels: DataFrame,
-                          label_col: str = "community") -> DataFrame:
-    """One GUARDED synchronous Louvain-style local-move round on top of an
-    existing labeling (e.g. label_propagation output) — the proposal shape
-    is `_local_move_proposal` (see its docstring for the exact-integer
-    gain formula and tie-breaks).
-
-    Synchronous application can oscillate on symmetric graphs (the known
-    parallel-Louvain caveat), so the round is guarded: modularity of the
-    proposed labeling is compared against the input's — in exact integer
-    numerators, same denominator — and the input labeling is returned
-    unchanged unless the round strictly improved it.  The returned
-    labeling therefore NEVER has lower modularity than the input.
-
-    Cost: three keyed aggregations + small-dimension joins + ONE O(m)
-    guard aggregation (the input's numerator is recomputed here because
-    this is the stateless public entry; `louvain` threads numerators
-    through its loop and skips it), nothing quadratic; candidate set is
-    bounded by the neighbor-community count, itself bounded by degree.
-    Returns (id, <label_col>)."""
-    out_cols = ["id", label_col]
-    und = _undirected_simple(edges).localCheckpoint(eager=True)
-    m = und.count()
-    if m == 0:
-        return labels.select(*out_cols)
-    lab = (labels.select("id", F.col(label_col).alias("_c"))
-           .localCheckpoint(eager=True))
-    small = broadcast_fits(lab, lab.count())
-    proposed = (_local_move_proposal(und, lab, m, small=small)
-                .withColumnRenamed("_c", label_col)
-                .localCheckpoint(eager=True))
-    # monotone guard: exact integer numerators, same 4m² denominator
-    q_old = _numerator_from_und(
-        und, m, lab.withColumnRenamed("_c", label_col), label_col,
-        small=small)
-    q_new = _numerator_from_und(und, m, proposed, label_col, small=small)
-    if q_new > q_old:
-        return proposed
-    return labels.select(*out_cols)
-
-
-def _louvain_invariants(und: DataFrame,
-                        small: bool = True) -> tuple[DataFrame, DataFrame]:
-    """The labeling-independent Louvain level-1 iteration invariants,
-    persisted: the degree table and the symmetric adjacency.
-
-    r11 (guide §2.4, the greedy_coloring idiom): the adjacency is
-    hash-partitioned on `id` ONCE before the persist, so under the
-    broadcast regime (`small`) BOTH edge-scale aggregations of every
-    round's proposal — groupBy(id, cand) and the min_by argmax
-    groupBy(id) — reuse the cached partitioning (hash(id) satisfies both
-    clustered distributions; broadcast joins preserve it) instead of
-    paying two edge-scale Exchanges per round.  One up-front exchange
-    buys 2×rounds of them; results are bit-identical (exact
-    integer/decimal aggregates, total-order min_by key).  Executed-plan
-    pin: tests/test_graph_ops.py::test_louvain_proposal_round_exchange_free.
-    r12 (ADVICE r11): the repartition is gated on the BROADCAST regime —
-    past the guard (small=False) the per-round joins shuffle by other
-    keys anyway, so the up-front edge-scale exchange would be pure
-    overhead."""
-    deg = (und.select(F.col("u").alias("id"))
-           .unionByName(und.select(F.col("v").alias("id")))
-           .groupBy("id").agg(F.count(F.lit(1)).alias("_d"))).persist()
-    adj_base = (und.select(F.col("u").alias("id"), F.col("v").alias("b"))
-                .unionByName(
-                    und.select(F.col("v").alias("id"), F.col("u").alias("b"))))
-    adj = (adj_base.repartition("id") if small else adj_base).persist()
-    return deg, adj
-
-
-def _louvain_rounds(und: DataFrame, m: int, cur: DataFrame,
-                    label_col: str, max_rounds: int,
-                    small: bool = False,
-                    init_singletons: bool = False) -> tuple[DataFrame, int, bool]:
-    """Guarded local-move rounds with the modularity numerator THREADED
-    through the loop: each round costs the proposal joins plus exactly ONE
-    O(m) numerator aggregation (the previous round's accepted numerator is
-    reused as the guard baseline instead of being recomputed — the r8
-    plan-audit fix; accept decisions are identical because q_old of round
-    t always equals the accepted q of round t−1).  Guards compare EXACT
-    integer numerators at every scale (a float Q comparison can collapse
-    a genuine integer improvement once numerators exceed 2^53).
-    r10: the labeling-independent degree and adjacency tables are
-    derived ONCE and persisted across rounds, and `small` threads the
-    broadcast-under-guard plan into every proposal/guard join.  Rounds
-    alternate the md5-parity symmetry breaker (level 2's posture,
-    brought to level 1): a fully synchronous sweep from singletons
-    swaps whole neighborhoods at once and the guard rejects the
-    permuted-but-no-better labeling — measured at sf0.1, unparitied
-    level 1 accepted NOTHING, leaving the contraction an identity.
-    All max_rounds run (a rejected round's successor proposes a
-    DIFFERENT move set under the flipped parity), which is exactly the
-    unconditional unroll the SQL oracle replays.
-    Returns (labels, final numerator, any round accepted).
-
-    r11 action budget: the baseline numerator is NOT its own job any
-    more — round 1's guard action computes BOTH numerators at once by
-    unioning the proposed labeling's tagged contrib frame with the
-    baseline's (for `init_singletons` the baseline contrib is the
-    closed form −d_v² per vertex over the persisted degree table, so it
-    adds a vertex-sized branch to an O(m) job; callers that BUILT the
-    identity labeling opt in and `cur` is re-derived from `deg` here —
-    zero extra shuffle, identical domain).  One eager action per round,
-    none before."""
-    if m == 0:
-        if cur is None:  # singleton start over an empty edge set
-            cur = und.select(F.col("u").alias("id"),
-                             F.col("u").alias(label_col))
-        return cur, _numerator_from_und(und, m, cur, label_col), False
-    deg, adj = _louvain_invariants(und, small)
-    try:
-        if init_singletons:
-            # the identity labeling over the und vertex domain IS
-            # deg's key set — reuse the persisted table instead of a
-            # caller-side distinct
-            cur = deg.select("id", F.col("id").alias(label_col))
-        prev_num: int | None = None
-        if max_rounds <= 0:
-            prev_num = _numerator_from_und(und, m, cur, label_col,
-                                           small=small, deg=deg)
-        moved = False
-        consecutive_rejects = 0
-        # r11: while no proposal has been ACCEPTED yet from a singleton
-        # start, the current labeling is still the identity, so the
-        # proposal can take the label-join-free identity fast path (a
-        # rejected round leaves the labeling unchanged — the invariant
-        # survives rejections, only an accept clears it)
-        is_identity = init_singletons
-
-        def _mk_proposal(base: DataFrame, parity: int,
-                         identity: bool) -> DataFrame:
-            # lazy checkpoint: the guard's numerator aggregation is the
-            # next action anyway, so it materializes the checkpoint as a
-            # side effect — one fewer eager job on the round's critical
-            # path (round count is bounded, so plan depth stays bounded)
-            lab = base.select("id", F.col(label_col).alias("_c"))
-            return (_local_move_proposal(und, lab, m, small=small,
-                                         deg=deg, adj=adj, parity=parity,
-                                         identity=identity)
-                    .withColumnRenamed("_c", label_col)
-                    .localCheckpoint(eager=False))
-
-        def _tagged(labels: DataFrame, tag: str) -> DataFrame:
-            return _contrib_from_und(und, m, labels, label_col,
-                                     small=small, deg=deg) \
-                .select(F.lit(tag).alias("t"), "contrib")
-
-        # r12 speculation (guide §2.6 — overlap independent work): each
-        # fused action computes the CURRENT proposal's numerator AND, on
-        # the accept-assumed branch, the NEXT round's proposal +
-        # numerator (the next proposal is a deterministic function of
-        # (labeling, parity), so when the accept lands — the measured
-        # common case — the following round costs zero actions and its
-        # job latency already overlapped this action's).  A rejected
-        # round discards the speculative branch and round i+1 re-derives
-        # from the unchanged labeling — decisions stay bit-identical to
-        # the sequential schedule because every (base, parity, prev_num)
-        # triple is the same.  Gated on the broadcast regime: past the
-        # guard the per-round jobs are compute-bound edge-scale shuffles
-        # where wasted speculative work is real money, and the latency
-        # this overlaps no longer dominates.
-        pending: tuple[DataFrame, int] | None = None
-        i = 0
-        while i < max_rounds:
-            if pending is not None:
-                proposed, num = pending
-                pending = None
-                spec = None  # consumed; the next fused action re-arms
-            else:
-                proposed = _mk_proposal(cur, i % 2, is_identity)
-                branches = [_tagged(proposed, "n")]
-                if prev_num is None:
-                    # fused round-1 guard: baseline numerator rides the
-                    # same collect
-                    if init_singletons:
-                        # singleton closed form: e_c = 0 ⇒ contrib = −d_v²
-                        d38 = F.col("_d").cast("decimal(38,0)")
-                        branches.append(
-                            deg.select(F.lit("b").alias("t"),
-                                       (-(d38 * d38)).alias("contrib")))
-                    else:
-                        branches.append(_tagged(cur, "b"))
-                spec_prop = None
-                if small and i + 1 < max_rounds:
-                    spec_prop = _mk_proposal(proposed, (i + 1) % 2, False)
-                    branches.append(_tagged(spec_prop, "s"))
-                uni = branches[0]
-                for b in branches[1:]:
-                    uni = uni.unionByName(b)
-                rows = {r["t"]: int(r["n"] or 0)
-                        for r in uni.groupBy("t")
-                        .agg(F.sum("contrib").alias("n")).collect()}
-                num = rows.get("n", 0)
-                if prev_num is None:
-                    prev_num = rows.get("b", 0)
-                spec = ((spec_prop, rows.get("s", 0))
-                        if spec_prop is not None else None)
-            # continue, not break: rounds alternate the parity bit, so a
-            # rejected round's SUCCESSOR proposes a different move set
-            # (the pre-r10 break was only valid while proposals were a
-            # function of the labeling alone); the unconditional loop is
-            # exactly what the SQL oracle unrolls.  EXCEPT: after two
-            # CONSECUTIVE rejections the labels are unchanged across
-            # both parities, so every later round replays one of the
-            # two rejected proposals — breaking is label-identical to
-            # the oracle's unroll (its CASE makes rejected rounds
-            # no-ops) and skips the dead O(m) work
-            if num <= prev_num:
-                consecutive_rejects += 1
-                # the speculative branch assumed an accept: discard it
-                if consecutive_rejects >= 2:
-                    break
-                i += 1
-                continue
-            consecutive_rejects = 0
-            cur, prev_num, moved = proposed, num, True
-            is_identity = False
-            pending = spec
-            i += 1
-    finally:
-        deg.unpersist()
-        adj.unpersist()
-    return cur, prev_num, moved
-
-
-def louvain(edges: DataFrame, labels: DataFrame | None = None,
-            label_col: str = "community", max_rounds: int = 5) -> DataFrame:
-    """Louvain-style community refinement: repeated guarded local-move
-    rounds from an initial labeling (default: singleton communities over
-    the undirected simple vertex domain — the classic Louvain start; the
-    und-derived domain matches `louvain_full` and the SQL oracle, so
-    self-loop-only vertices — modularity-neutral by definition — are
-    consistently excluded) for max_rounds parity-alternated rounds (r10;
-    see _louvain_rounds — a rejected round leaves the labeling unchanged
-    and the next parity proposes a different move set).  Each round is
-    monotone by the exact-integer numerator guard, so the modularity
-    sequence is non-decreasing.
-
-    This is the LOCAL-MOVE phase only — `louvain_full` adds the
-    contraction phase.  Returns (id, <label_col>)."""
-    und, m, n = _und_stats(edges)
-    small = broadcast_fits(und, n)
-    singles = labels is None
-    if singles:
-        cur = None  # _louvain_rounds derives the identity from deg
-    else:
-        cur = labels.select("id", label_col).localCheckpoint(eager=True)
-    out, _, _ = _louvain_rounds(und, m, cur, label_col, max_rounds,
-                                small=small, init_singletons=singles)
-    return out
-
-
-def _und_stats(edges: DataFrame) -> tuple[DataFrame, int, int]:
-    """Lazy-checkpointed undirected simple edge set plus (m, n) in ONE
-    action (r11 action budget): the stats aggregation over the exploded
-    endpoint column materializes the checkpoint as a side effect, so
-    callers no longer pay a separate eager-checkpoint job + count + a
-    vertex-distinct job just to size broadcast decisions."""
-    und = _undirected_simple(edges).localCheckpoint(eager=False)
-    row = (und.select(F.explode(F.array("u", "v")).alias("id"))
-           .agg(F.count(F.lit(1)).alias("c2"),
-                F.countDistinct("id").alias("n")).collect()[0])
-    return und, int(row["c2"]) // 2, int(row["n"])
-
-
-def _numerator_from_sed(sed: DataFrame, m: int, slab: DataFrame,
-                        small: bool = False,
-                        wdeg: DataFrame | None = None) -> int:
-    """Exact-integer modularity numerator Σ (4·m·e_c − d_c²) computed on
-    the CONTRACTED weighted super-graph — provably equal to
-    `_numerator_from_und` on the original graph for any labeling of the
-    super-vertices (the louvain_full docstring's own equivalence, used
-    here as the guard): contraction preserves both terms exactly.
-    e_c (original intra-community edge count) = Σ w of plain super-edges
-    whose endpoints share a community + Σ w of self-loops in it (each
-    self-loop's w IS the intra-super-vertex original-edge count, counted
-    once); d_c (community degree mass) = Σ super-vertex weighted degrees,
-    where a plain super-edge contributes w to each endpoint and a
-    self-loop 2w (Newman) — exactly Σ of the member vertices' original
-    degrees.  One super-graph-sized aggregation instead of an O(m)
-    original-graph pass, so the level-2 probe loop never touches the
-    original edge set (VERDICT r9 #4: one O(m) pass per accepted LEVEL,
-    not per probed round)."""
-    if m == 0:
-        return 0
-    contrib = _contrib_from_sed(sed, m, slab, small=small, wdeg=wdeg)
-    n = contrib.agg(F.sum("contrib").alias("n")).collect()[0]["n"]
-    return int(n or 0)
+def _wadj(sed: DataFrame) -> DataFrame:
+    """Symmetric weighted adjacency (sid, b, w) of a level, self-loops
+    excluded (they never enter a candidate set — they move with their
+    vertex)."""
+    plain = sed.filter(F.col("u2") != F.col("v2"))
+    return (plain.select(F.col("u2").alias("sid"), F.col("v2").alias("b"),
+                         "w")
+            .unionByName(plain.select(F.col("v2").alias("sid"),
+                                      F.col("u2").alias("b"), "w")))
 
 
 def _contrib_from_sed(sed: DataFrame, m: int, slab: DataFrame,
                       small: bool = False,
                       wdeg: DataFrame | None = None) -> DataFrame:
-    """Per-community contrib frame behind `_numerator_from_sed` — factored
-    out (r12) so the speculative round fusion can collect two labelings'
-    contracted-graph numerators in one tagged-union action."""
-    plain = sed.filter(F.col("u2") != F.col("v2"))
-    loops = sed.filter(F.col("u2") == F.col("v2"))
+    """Per-community modularity terms (_c, _e, _ds, contrib) of the
+    labeling `slab` (sid → sc) on a level's weighted edge set `sed`
+    (canonical u2 <= v2, u2 == v2 rows are self-loops), with contrib =
+    4·m·e_c − d_c² in decimal(38,0).  e_c (`_e`) = Σ w of the edges
+    whose endpoints share the community — self-loops included, counted
+    once (a self-loop's w IS the intra-super-vertex original-edge
+    count); d_c (`_ds`) = Σ of its members' weighted degrees.
+
+    Contraction preserves both terms exactly, so on a contracted
+    super-graph this equals the original graph's terms for the projected
+    labeling — and on the unit-weight graph (`_unit`) it IS the original
+    graph's.  `m` is always the original edge count, so every level
+    shares the 4m² denominator.  `wdeg` (opt-in) reuses a persisted
+    degree table; `small` broadcasts the vertex-sized sides
+    (`_bcast_if`)."""
     su = slab.select(F.col("sid").alias("u2"), F.col("sc").alias("_cu"))
     sv = slab.select(F.col("sid").alias("v2"), F.col("sc").alias("_cv"))
-    e_c = (plain.join(_bcast_if(su, small), "u2")
+    e_c = (sed.join(_bcast_if(su, small), "u2")
            .join(_bcast_if(sv, small), "v2")
            .filter(F.col("_cu") == F.col("_cv"))
-           .select(F.col("_cu").alias("_c"), "w")
-           .unionByName(loops.join(_bcast_if(su, small), "u2")
-                        .select(F.col("_cu").alias("_c"), "w"))
-           .groupBy("_c").agg(F.sum("w").alias("_e")))
+           .groupBy(F.col("_cu").alias("_c"))
+           .agg(F.sum("w").alias("_e")))
     if wdeg is None:
-        wdeg = (plain.select(F.col("u2").alias("sid"), "w")
-                .unionByName(plain.select(F.col("v2").alias("sid"), "w"))
-                .unionByName(loops.select(F.col("u2").alias("sid"),
-                                          (F.col("w") * 2).alias("w")))
-                .groupBy("sid").agg(F.sum("w").alias("_d")))
+        wdeg = _wdeg(sed)
     d_c = (wdeg.join(_bcast_if(slab, small), "sid")
            .groupBy(F.col("sc").alias("_c"))
            .agg(F.sum("_d").alias("_ds")))
     four_m = F.lit(4 * m).cast("decimal(38,0)")
     return (d_c.join(_bcast_if(e_c, small), "_c", "left")
-            .select((four_m
-                     * F.coalesce("_e", F.lit(0)).cast("decimal(38,0)")
-                     - F.col("_ds").cast("decimal(38,0)")
-                     * F.col("_ds").cast("decimal(38,0)"))
-                    .alias("contrib")))
+            .select("_c", F.coalesce("_e", F.lit(0).cast("long")).alias("_e"),
+                    "_ds")
+            .withColumn("contrib",
+                        (four_m * _dec("_e") - _dec("_ds") * _dec("_ds"))
+                        .cast("decimal(38,0)")))
+
+
+def _numerator_from_sed(sed: DataFrame, m: int, slab: DataFrame,
+                        small: bool = False,
+                        wdeg: DataFrame | None = None) -> int:
+    """Exact-integer modularity numerator Σ (4·m·e_c − d_c²) of `slab`
+    on the level `sed` (see `_contrib_from_sed`) — one action."""
+    if m == 0:
+        return 0
+    contrib = _contrib_from_sed(sed, m, slab, small=small, wdeg=wdeg)
+    n = contrib.agg(F.sum("contrib").alias("n")).collect()[0]["n"]
+    return int(n or 0)
 
 
 def _weighted_move_proposal(sedges: DataFrame, slab: DataFrame,
@@ -1992,63 +1556,55 @@ def _weighted_move_proposal(sedges: DataFrame, slab: DataFrame,
                             wdeg: DataFrame | None = None,
                             adj: DataFrame | None = None,
                             identity: bool = False) -> DataFrame:
-    """One synchronous weighted local-move proposal on a contracted
-    (super-vertex) graph — the level-2+ Louvain step.
+    """One UNGUARDED synchronous Louvain local-move proposal on a level's
+    weighted edge set `sedges` (see `_contrib_from_sed`; level 1 is the
+    unit-weight graph, contracted levels carry w = number of original
+    edges between two super-vertices).  `slab` maps sid → community sc.
+    Every vertex v evaluates moving to each NEIGHBOR community c, scoring
+    by the exact integer gain
 
-    `sedges` is the canonical weighted super-graph (u2 <= v2, integer
-    weight w = number of original edges between the two super-vertices;
-    u2 == v2 rows are self-loops carrying intra-community edge counts).
-    `slab` maps super-vertex sid -> community sc.  Total weight is the
-    ORIGINAL graph's m, so gains share the original 4m² denominator and
-    a gain here IS a gain on the original graph (standard Louvain
-    equivalence).  Weighted degree counts self-loops twice (Newman).
-    Self-loops never enter the candidate set — they move with their
-    vertex.  Deterministic tie-break: argmax gain, then smallest
-    community id (the modularity_local_move contract).
+        ΔQ·4m² = 4m·(k_{v,c} − k_{v,c_v∖v}) − 2·k_v·(d_c − (d_{c_v} − k_v))
 
-    `parity` (0 or 1): when set, only super-vertices whose deterministic
-    md5 bit equals it may move this round — the standard parallel-Louvain
-    symmetry breaker.  A fully synchronous sweep on a symmetric structure
-    (ring, cycle) has every vertex swap simultaneously, producing a
-    permuted-but-no-better labeling that the guard then rejects; holding
-    half the vertices still each round lets the other half's moves
-    actually land.  The bit is engine-portable (first md5 hex nibble mod
-    2), so the SQL oracle replays the same schedule.
+    (k_{v,c} = edge weight from v into c, d_c = community degree mass,
+    k_v = v's weighted degree; the original m throughout, so a gain here
+    IS a gain on the original graph), takes the best strictly-positive
+    move (ties → smallest community id, argmax-then-min — no id
+    negation, type-safe for any ordered id), and applies all winning
+    moves SIMULTANEOUSLY.  Returns (sid, sc); the caller guards it with
+    the exact numerator.
 
-    Returns (sid, sc) with winning strictly-positive moves applied
-    simultaneously — UNGUARDED; the caller guards with the exact
-    numerator (contracted-graph form, see _numerator_from_sed).
+    Plan: TWO edge-scale passes — the adj→nbr aggregation, then ONE
+    min_by argmax over the partial score p = 4m·k_to − 2·_d·d_cand (the
+    per-vertex terms shift every candidate's gain equally, so the winner
+    is identical and the exact gain gates only the winner row).  The own
+    community rides along ranked strictly last, so a winner equal to sc
+    simply does not move.  The per-vertex constants (sc, _d, d_cur) are
+    functions of sid and ride the argmax as extra group keys: identical
+    groups, and hash(sid) still satisfies the clustered distribution.
+    `wdeg`/`adj` reuse the persisted level invariants
+    (`_level_invariants`); `small` broadcasts every vertex- or
+    community-sized side table, so only the aggregations shuffle.
 
-    r10 plan (rule 34): TWO edge-scale passes — adj→nbr aggregation,
-    then ONE min_by argmax over the partial score 4m·k_to − 2·_d·d_cand
-    (per-sid constants shift every candidate's gain equally, so the
-    winner is identical and the exact gain gates only the winner row);
-    `wdeg`/`adj` opt-in reuse caller-persisted level invariants and
-    `small` broadcasts the vertex/community-sized side tables."""
-    plain = sedges.filter(F.col("u2") != F.col("v2"))
-    loops = sedges.filter(F.col("u2") == F.col("v2")) \
-        .select(F.col("u2").alias("sid"), (F.col("w") * 2).alias("lw"))
+    `parity` (0 or 1): only vertices whose first md5 hex nibble of the
+    id has that parity may move — the parallel-Louvain symmetry breaker.
+    A fully synchronous sweep on a symmetric structure (ring, cycle, a
+    singleton start) swaps whole neighborhoods at once into a
+    permuted-but-no-better labeling the guard rejects; holding half the
+    vertices still lets the other half's moves land.  The bit is
+    engine-portable, so the SQL oracle replays the same schedule.
+
+    `identity=True`: the caller asserts `slab` IS the singleton labeling
+    (sc == sid for every vertex).  Then every label-dependent frame is a
+    projection of the invariants — cand = the neighbor itself, k_to = the
+    edge weight ((sid, b) is unique in the canonical adjacency), d_c ≡
+    side ≡ wdeg — which deletes the label joins and the (sid, cand)
+    aggregation exchange; the scoring is shared, so the proposal is
+    identical (pinned by test_louvain_identity_proposal_fastpath_equal)."""
     if wdeg is None:
-        wdeg = (
-            plain.select(F.col("u2").alias("sid"), "w")
-            .unionByName(plain.select(F.col("v2").alias("sid"), "w"))
-            .unionByName(loops.select("sid", F.col("lw").alias("w")))
-            .groupBy("sid").agg(F.sum("w").alias("_d"))
-        )
+        wdeg = _wdeg(sedges)
     if adj is None:
-        adj = (
-            plain.select(F.col("u2").alias("sid"), F.col("v2").alias("b"), "w")
-            .unionByName(
-                plain.select(F.col("v2").alias("sid"), F.col("u2").alias("b"),
-                             "w"))
-        )
+        adj = _wadj(sedges)
     if identity:
-        # r11 identity fast path (see _local_move_proposal): from the
-        # per-level singleton start, cand = the neighbor super-vertex
-        # itself and k_to = the super-edge weight ((sid, b) is unique in
-        # the canonical adjacency), d_c ≡ wdeg, side ≡ wdeg — the
-        # label joins and the (sid, cand) aggregation exchange vanish
-        # from each level's round-1 plan; downstream scoring is shared.
         nbr = adj.select("sid", F.col("b").alias("cand"),
                          F.col("w").alias("k_to"))
         d_c = wdeg.select(F.col("sid").alias("cand"),
@@ -2064,32 +1620,13 @@ def _weighted_move_proposal(sedges: DataFrame, slab: DataFrame,
         d_c = (wdeg.join(_bcast_if(slab, small), "sid")
                .groupBy(F.col("sc").alias("cand"))
                .agg(F.sum("_d").alias("d_cand")))
-        # per-vertex constants (community, own weighted degree, own
-        # community's mass) — vertex-sized, meets the flow in broadcast
-        # joins
         side = (slab.join(_bcast_if(wdeg, small), "sid")
                 .join(_bcast_if(d_c.select(F.col("cand").alias("sc"),
                                            F.col("d_cand").alias("d_cur")),
                                 small), "sc"))
 
-    def _dec(c) -> Column:
-        return F.col(c).cast("decimal(38,0)")
-
     four_m = F.lit(4 * m).cast("decimal(38,0)")
     two = F.lit(2).cast("decimal(38,0)")
-    # r10 single-pass argmax: for a fixed sid, k_own / d_cur / _d shift
-    # every candidate's gain by the SAME constant, so
-    # argmax(gain) == argmax(p) with p = 4m·k_to − 2·_d·d_cand, and the
-    # full gain formula only needs evaluating on the one winner row.
-    # One min_by aggregation replaces the old mx-join + second cand pass
-    # (which recomputed the edge-scale nbr/cand chain twice); the own-
-    # community row rides along ranked strictly last (is_own flag) so no
-    # pre-filter pass is needed — a winner equal to sc simply doesn't
-    # move, exactly the old coalesce semantics.
-    # r12 (guide §2.4, same as _local_move_proposal): full side joins
-    # enriched once; its per-vertex constants become extra group keys
-    # (functions of sid — identical groups, identical winner, hash(sid)
-    # still clusters), deleting the second side broadcast + scored join.
     enriched = (nbr.join(_bcast_if(d_c, small), "cand")
                 .join(_bcast_if(side.select("sid", "sc", "_d", "d_cur"),
                                 small), "sid"))
@@ -2127,246 +1664,309 @@ def _weighted_move_proposal(sedges: DataFrame, slab: DataFrame,
             .select("sid", F.coalesce("_new", F.col("sc")).alias("sc")))
 
 
+def _level_invariants(sed: DataFrame,
+                      small: bool) -> tuple[DataFrame, DataFrame]:
+    """The labeling-independent invariants of one Louvain level, derived
+    once and persisted across its rounds: the weighted degree table
+    (`_wdeg`) and the symmetric adjacency (`_wadj`).
+
+    Hash partitioning: under the broadcast regime (`small`) the adjacency
+    is repartitioned on `sid` ONCE before the persist, so both edge-scale
+    aggregations of every round's proposal — groupBy(sid, cand) and the
+    min_by argmax groupBy(sid) — reuse the cached partitioning (hash(sid)
+    satisfies both clustered distributions; broadcast joins preserve it)
+    instead of paying two exchanges per round.  Past the guard the
+    round's joins shuffle by other keys anyway, so the up-front exchange
+    would be pure overhead and is skipped.  Results are identical either
+    way (exact integer/decimal aggregates, total-order min_by key).
+    Executed-plan pin:
+    tests/test_graph_ops.py::test_louvain_proposal_round_exchange_free."""
+    adj = _wadj(sed)
+    return (_wdeg(sed).persist(),
+            (adj.repartition("sid") if small else adj).persist())
+
+
+def _louvain_level(sed: DataFrame, m: int, rounds: int, small: bool,
+                   slab: DataFrame | None = None,
+                   base: int | None = None) -> tuple[DataFrame, int, bool]:
+    """The one guarded Louvain round loop, run once per level on its
+    weighted edge set `sed` — level 1 is the unit-weight graph
+    (`_unit`), contracted levels the super-graph.  `slab` is the start
+    labeling (sid, sc), None for singletons; `base` its numerator when
+    the caller already knows it.  Returns (labeling, its numerator,
+    whether any round was accepted).
+
+    Guard: each round's proposal (`_weighted_move_proposal`, parity
+    alternating 0, 1, 0, …) is accepted only if its exact-integer
+    numerator (`_contrib_from_sed`) STRICTLY exceeds the current one —
+    so modularity never decreases — and the accepted numerator is
+    threaded as the next round's baseline.  A rejected round leaves the
+    labeling unchanged and the next parity proposes a different move set;
+    two CONSECUTIVE rejections are a fixpoint across both parities, so
+    every later round would replay one of them and the loop breaks —
+    label-identical to the SQL oracle's unconditional unroll, whose CASE
+    makes rejected rounds no-ops.
+
+    Actions: one collect per round, none before.  Round 1's collect also
+    sums the baseline numerator when `base` is None — for a singleton
+    start as the closed form Σ(4m·w_loop − d²) over the persisted
+    weighted degrees (−d² at level 1), else the start labeling's tagged
+    contrib frame.  While no round has been accepted from a singleton
+    start the labeling is still the identity, so the proposal takes its
+    identity fast path.
+
+    Speculation: under the broadcast regime each collect also computes,
+    on the accept-assumed branch, the NEXT round's proposal and numerator
+    (a deterministic function of (labeling, parity)); when the accept
+    lands the next round costs no action.  A rejection discards it, and
+    the next round re-derives from the unchanged labeling, so decisions
+    are identical to the sequential schedule.  Past the guard the rounds
+    are compute-bound edge-scale shuffles where wasted speculative work
+    is real money, so it is off.  Proposals are checkpointed lazily: the
+    guard's collect materializes them."""
+    if m == 0:
+        if slab is None:
+            slab = sed.select(F.col("u2").alias("sid"),
+                              F.col("u2").alias("sc"))
+        return slab, 0, False
+    wdeg, adj = _level_invariants(sed, small)
+    try:
+        identity = slab is None
+        if identity:
+            slab = wdeg.select("sid", F.col("sid").alias("sc"))
+
+        def propose(lab: DataFrame, parity: int, ident: bool) -> DataFrame:
+            return _weighted_move_proposal(
+                sed, lab, m, parity=parity, small=small, wdeg=wdeg,
+                adj=adj, identity=ident).localCheckpoint(eager=False)
+
+        def tagged(tag: str, lab: DataFrame) -> DataFrame:
+            return _contrib_from_sed(sed, m, lab, small=small, wdeg=wdeg) \
+                .select(F.lit(tag).alias("t"), "contrib")
+
+        def sums(branches: list[DataFrame]) -> dict:
+            uni = branches[0]
+            for b in branches[1:]:
+                uni = uni.unionByName(b)
+            return {r["t"]: int(r["n"] or 0)
+                    for r in uni.groupBy("t")
+                    .agg(F.sum("contrib").alias("n")).collect()}
+
+        num = base
+        start: list[DataFrame] = []  # the start labeling's "b" branches
+        if num is None:
+            if identity:
+                four_m = F.lit(4 * m).cast("decimal(38,0)")
+                start = [sed.filter(F.col("u2") == F.col("v2"))
+                         .select(F.lit("b").alias("t"),
+                                 (four_m * _dec("w")).alias("contrib")),
+                         wdeg.select(F.lit("b").alias("t"),
+                                     (-(_dec("_d") * _dec("_d")))
+                                     .alias("contrib"))]
+            else:
+                start = [tagged("b", slab)]
+            if rounds <= 0:
+                num = sums(start).get("b", 0)
+        improved = False
+        rejects = 0
+        pending: tuple[DataFrame, int] | None = None
+        for r in range(rounds):
+            if pending is not None:
+                (prop, new), spec, pending = pending, None, None
+            else:
+                prop = propose(slab, r % 2, identity)
+                branches = [tagged("n", prop)]
+                if num is None:
+                    branches += start
+                spec_prop = (propose(prop, (r + 1) % 2, False)
+                             if small and r + 1 < rounds else None)
+                if spec_prop is not None:
+                    branches.append(tagged("s", spec_prop))
+                got = sums(branches)
+                new = got.get("n", 0)
+                if num is None:
+                    num = got.get("b", 0)
+                spec = ((spec_prop, got.get("s", 0))
+                        if spec_prop is not None else None)
+            if new <= num:
+                rejects += 1
+                if rejects >= 2:
+                    break
+                continue
+            rejects = 0
+            slab, num, improved, identity = prop, new, True, False
+            pending = spec
+    finally:
+        wdeg.unpersist()
+        adj.unpersist()
+    return slab, num, improved
+
+
+def modularity_local_move(edges: DataFrame, labels: DataFrame,
+                          label_col: str = "community") -> DataFrame:
+    """One GUARDED synchronous Louvain-style local-move round on top of an
+    existing labeling (e.g. label_propagation output) — the proposal is
+    `_weighted_move_proposal` on the unit-weight graph without a parity
+    bit (see its docstring for the exact-integer gain and tie-breaks).
+
+    Synchronous application can oscillate on symmetric graphs (the known
+    parallel-Louvain caveat), so the round is guarded: modularity of the
+    proposed labeling is compared against the input's — in exact integer
+    numerators, same denominator — and the input labeling is returned
+    unchanged unless the round strictly improved it.  The returned
+    labeling therefore NEVER has lower modularity than the input.
+
+    Cost: three keyed aggregations + small-dimension joins + ONE O(m)
+    guard aggregation per labeling (the input's numerator is computed
+    here because this is the stateless public entry), nothing quadratic;
+    the candidate set is bounded by the neighbor-community count, itself
+    bounded by degree.  Returns (id, <label_col>)."""
+    out_cols = ["id", label_col]
+    und = _undirected_simple(edges).localCheckpoint(eager=True)
+    m = und.count()
+    if m == 0:
+        return labels.select(*out_cols)
+    sed = _unit(und)
+    lab = (labels.select(F.col("id").alias("sid"),
+                         F.col(label_col).alias("sc"))
+           .localCheckpoint(eager=True))
+    small = broadcast_fits(lab, lab.count())
+    proposed = (_weighted_move_proposal(sed, lab, m, small=small)
+                .localCheckpoint(eager=True))
+    # monotone guard: exact integer numerators, same 4m² denominator
+    q_old = _numerator_from_sed(sed, m, lab, small=small)
+    q_new = _numerator_from_sed(sed, m, proposed, small=small)
+    if q_new > q_old:
+        return proposed.select(F.col("sid").alias("id"),
+                               F.col("sc").alias(label_col))
+    return labels.select(*out_cols)
+
+
+def louvain(edges: DataFrame, labels: DataFrame | None = None,
+            label_col: str = "community", max_rounds: int = 5) -> DataFrame:
+    """Louvain-style community refinement: up to max_rounds guarded,
+    parity-alternated local-move rounds (`_louvain_level` on the
+    unit-weight graph) from an initial labeling — default: singleton
+    communities over the undirected simple vertex domain, the classic
+    Louvain start (the domain matches `louvain_full` and the SQL oracle,
+    so self-loop-only vertices — modularity-neutral by definition — are
+    consistently excluded).  The modularity sequence is non-decreasing.
+
+    This is the LOCAL-MOVE phase only — `louvain_full` adds the
+    contraction phase.  Returns (id, <label_col>)."""
+    und, m, n = _und_stats(edges)
+    small = broadcast_fits(und, n)
+    slab = None
+    if labels is not None:
+        slab = (labels.select(F.col("id").alias("sid"),
+                              F.col(label_col).alias("sc"))
+                .localCheckpoint(eager=True))
+    out, _, _ = _louvain_level(_unit(und), m, max_rounds, small, slab=slab)
+    return out.select(F.col("sid").alias("id"), F.col("sc").alias(label_col))
+
+
+def _und_stats(edges: DataFrame) -> tuple[DataFrame, int, int]:
+    """Lazy-checkpointed undirected simple edge set plus (m, n) in ONE
+    action (r11 action budget): the stats aggregation over the exploded
+    endpoint column materializes the checkpoint as a side effect, so
+    callers no longer pay a separate eager-checkpoint job + count + a
+    vertex-distinct job just to size broadcast decisions."""
+    und = _undirected_simple(edges).localCheckpoint(eager=False)
+    row = (und.select(F.explode(F.array("u", "v")).alias("id"))
+           .agg(F.count(F.lit(1)).alias("c2"),
+                F.countDistinct("id").alias("n")).collect()[0])
+    return und, int(row["c2"]) // 2, int(row["n"])
+
+
 def louvain_full(edges: DataFrame, label_col: str = "community",
                  level1_rounds: int = 5, level2_rounds: int = 4,
                  max_levels: int = 3,
                  _capture: dict | None = None) -> DataFrame:
-    """FULL Louvain: the local-move phase (`louvain`) plus the contraction
-    phase — communities contract to super-vertices (one groupBy relabel;
-    super-edge weight = inter-community edge count, self-loop weight =
-    intra count), weighted local-move rounds run on the contracted graph,
-    and accepted labelings project back to the original vertices.
-    Contraction ITERATES (r11, VERDICT r10 #6): while a contracted level
-    accepts at least one round and levels remain under `max_levels`, the
-    accepted super-graph contracts again — the standard Louvain
-    "loop until no level improves" termination, capped for oracle
-    replayability.  Default max_levels=3 (two contraction levels).
+    """FULL Louvain: local-move rounds plus contraction, every level one
+    run of `_louvain_level` (rules in its docstring).  Level 1 runs
+    level1_rounds on the unit-weight graph from singletons; while a level
+    accepts a round and levels remain under `max_levels`, its communities
+    contract to super-vertices (one groupBy relabel of the level's edge
+    set: super-edge weight = Σ w between two communities, self-loop
+    weight = Σ w inside one) and the next level runs level2_rounds from
+    singletons on that super-graph — the standard Louvain "loop until no
+    level improves" termination, capped for oracle replayability.
+    Default max_levels=3 (two contraction levels).  When level 1 accepts
+    nothing its contraction is the identity, so level 2 reuses the
+    unit-weight graph without the O(m) groupBy.  A contracted level that
+    accepts nothing ends the loop: an oracle unrolling deeper levels
+    replays its rejected proposals (same identity start, same parities)
+    and rejects them again, so the break is label-identical.
 
-    Monotone guard: every contracted-round proposal is scored with the
-    exact-integer modularity numerator ON THE CONTRACTED GRAPH
-    (`_numerator_from_sed` — provably equal to the original-graph
-    numerator for any super-vertex labeling, proof in its docstring; same
-    4m² denominator throughout, so accept decisions are bit-identical to
-    scoring the projection on the original graph); a proposal is accepted
-    only on STRICT improvement, so modularity never decreases across
-    rounds or levels.  Rounds alternate the parity symmetry-breaker (see
-    `_weighted_move_proposal`; since r10 level 1 alternates it too) — a
-    rejected round leaves the labeling unchanged (the proposal is a
-    deterministic function of the labeling and parity, so re-running it
-    later is a no-op), which makes the loop exactly replayable by an
-    unconditionally unrolled SQL oracle; two CONSECUTIVE rejections are a
-    fixpoint across both parities, so the loop breaks there —
-    label-identical to the unroll, skipping only dead work.  Likewise a
-    level that accepts nothing terminates the level loop: an oracle that
-    unconditionally unrolls deeper levels replays the rejected proposals
-    (same identity start, same parities) and rejects them again, so the
-    break is label-identical.
-
-    Scale / action budget (r11): level ℓ ≥ 3 contracts the PREVIOUS
-    super-graph by its accepted labeling instead of re-grouping the
-    original edge set — exactly equal (each sed row's w sums the
-    original edges between two super-vertices, and every one of those
-    edges maps to the same community pair), so only level 2's
-    contraction is O(m).  Projection back to original vertices happens
-    ONCE after the level loop (accepted per-level mappings composed
-    left-to-right), followed by ONE O(m) original-graph numerator pass
-    that re-derives the threaded accepted numerator as a never-wrong
-    consistency check of the whole contraction chain (previously this
-    projection + check ran per accepted level).  The undirected edge
-    set is derived once (`_und_stats` — stats and checkpoint fused into
-    one action) and the accepted numerator is threaded through every
-    level.
+    Contracted levels guard on the contracted graph's numerator, provably
+    equal to the original graph's for the projected labeling
+    (`_contrib_from_sed`; same 4m² denominator throughout), threaded from
+    level to level, so accepts never decrease modularity across rounds
+    or levels and each contracted round costs a super-graph-sized
+    aggregation.  Only level 2's contraction is O(m): level ℓ ≥ 3
+    contracts the previous super-graph.  The accepted per-level mappings
+    project back to the original vertices ONCE after the loop, followed
+    by ONE O(m) unit-weight numerator pass that re-derives the threaded
+    numerator — a never-wrong consistency check of the whole contraction
+    chain.  The undirected edge set is derived once (`_und_stats`).
 
     `_capture` (private): when a dict is passed, the already-computed
     exact numerators are recorded into it — "level1_num" (the
     local-move-only labeling's, identical to what a standalone
-    `louvain(edges, max_rounds=level1_rounds)` run would re-derive) and
+    `louvain(edges, max_rounds=level1_rounds)` run would re-derive),
+    "level_nums" (each accepted contracted level's, non-decreasing) and
     "final_num" (the returned labeling's) — so certificate-emitting
     callers don't re-run level 1 or re-aggregate O(m) numerators.
     Returns (id, <label_col>)."""
     und, m, n = _und_stats(edges)
     small = broadcast_fits(und, n)
-    cur, prev_num, moved1 = _louvain_rounds(und, m, None, label_col,
-                                            level1_rounds, small=small,
-                                            init_singletons=True)
-    if _capture is not None:
-        _capture["level1_num"] = prev_num
-    if m == 0:
-        if _capture is not None:
-            _capture["final_num"] = prev_num
-        return cur
-    contracted = moved1
-    base_lab = cur.select("id", F.col(label_col).alias("_c"))
-    maps: list[DataFrame] = []   # accepted per-level sid→sc mappings
-    prev_sed: DataFrame | None = None
-    for _ in range(1, max_levels):
-        if prev_sed is None:
-            if contracted:
-                lu = base_lab.select(F.col("id").alias("u"),
-                                     F.col("_c").alias("cu"))
-                lv = base_lab.select(F.col("id").alias("v"),
-                                     F.col("_c").alias("cv"))
-                sed = (
-                    und.join(_bcast_if(lu, small), "u")
-                    .join(_bcast_if(lv, small), "v")
-                    .select(F.least("cu", "cv").alias("u2"),
-                            F.greatest("cu", "cv").alias("v2"))
-                    .groupBy("u2", "v2").agg(F.count(F.lit(1)).alias("w"))
-                    .localCheckpoint(eager=True)
-                )
-            else:
-                # identity-contraction elision (r10): when no local-move
-                # round accepted, the labeling IS the identity, so the
-                # contracted graph is the undirected edge set with unit
-                # weights (no self-loops possible) — skip the O(m)
-                # groupBy entirely (und is already checkpointed)
-                sed = und.select(F.col("u").alias("u2"),
-                                 F.col("v").alias("v2"),
-                                 F.lit(1).cast("long").alias("w"))
-        else:
-            # level ≥ 3: contract the previous SUPER-graph by its
-            # accepted mapping — provably equal to contracting the
-            # original graph by the composed labeling (every original
-            # edge inside a prev-sed row shares that row's community
-            # pair), and super-graph-sized instead of O(m)
-            mu = maps[-1].select(F.col("sid").alias("u2"),
+    unit = sed = _unit(und)
+    # level 1's labeling, then each accepted contracted level's sid → sc
+    labs: list[DataFrame] = []
+    num: int | None = None
+    improved = False
+    for level in range(max(max_levels, 1)):
+        if improved:
+            mu = labs[-1].select(F.col("sid").alias("u2"),
                                  F.col("sc").alias("cu"))
-            mv = maps[-1].select(F.col("sid").alias("v2"),
+            mv = labs[-1].select(F.col("sid").alias("v2"),
                                  F.col("sc").alias("cv"))
-            sed = (
-                prev_sed.join(_bcast_if(mu, small), "u2")
-                .join(_bcast_if(mv, small), "v2")
-                .select(F.least("cu", "cv").alias("u2"),
-                        F.greatest("cu", "cv").alias("v2"), "w")
-                .groupBy("u2", "v2").agg(F.sum("w").alias("w"))
-                .localCheckpoint(eager=True)
-            )
-        # level-invariant tables (labeling-independent): weighted degree
-        # and symmetric adjacency of the super-graph, derived once and
-        # persisted across every probe round of this level; the identity
-        # start labeling reads off wdeg's key set (no separate distinct)
-        plain = sed.filter(F.col("u2") != F.col("v2"))
-        wdeg = (plain.select(F.col("u2").alias("sid"), "w")
-                .unionByName(plain.select(F.col("v2").alias("sid"), "w"))
-                .unionByName(sed.filter(F.col("u2") == F.col("v2"))
-                             .select(F.col("u2").alias("sid"),
-                                     (F.col("w") * 2).alias("w")))
-                .groupBy("sid").agg(F.sum("w").alias("_d"))).persist()
-        adj_base = (plain.select(F.col("u2").alias("sid"),
-                                 F.col("v2").alias("b"), "w")
-                    .unionByName(plain.select(F.col("v2").alias("sid"),
-                                              F.col("u2").alias("b"), "w")))
-        # same hash(sid) posture as _louvain_rounds' adj: every probe
-        # round's two super-graph aggregations reuse the cached
-        # partitioning under the broadcast regime (r12, ADVICE r11:
-        # gated on `small` like the level-1 invariants)
-        adj = (adj_base.repartition("sid") if small else adj_base).persist()
-        slab = wdeg.select("sid", F.col("sid").alias("sc"))
-        improved = False
-        rejects = 0
-        # r11: the level's labeling stays the identity until a proposal
-        # is ACCEPTED (rejections leave slab unchanged), so those rounds
-        # take the label-join-free identity fast path
-        slab_identity = True
-
-        def _mk_prop(base: DataFrame, parity: int,
-                     identity: bool) -> DataFrame:
-            # lazy checkpoint (see _louvain_rounds): the sed-numerator
-            # guard materializes it in the same action
-            return _weighted_move_proposal(sed, base, m, parity=parity,
-                                           small=small, wdeg=wdeg,
-                                           adj=adj, identity=identity) \
-                .localCheckpoint(eager=False)
-
-        def _tagged_sed(labels: DataFrame, tag: str) -> DataFrame:
-            return _contrib_from_sed(sed, m, labels, small=small,
-                                     wdeg=wdeg) \
-                .select(F.lit(tag).alias("t"), "contrib")
-
-        # r12 speculation — same schedule-preserving accept-assumed
-        # fusion as _louvain_rounds (see its comment), on the contracted
-        # graph; guard numerators stay the provably-equal sed form
-        pending: tuple[DataFrame, int] | None = None
-        try:
-            r = 0
-            while r < level2_rounds:
-                if pending is not None:
-                    prop, num = pending
-                    pending = None
-                    spec = None
-                else:
-                    prop = _mk_prop(slab, r % 2, slab_identity)
-                    branches = [_tagged_sed(prop, "n")]
-                    spec_prop = None
-                    if small and r + 1 < level2_rounds:
-                        spec_prop = _mk_prop(prop, (r + 1) % 2, False)
-                        branches.append(_tagged_sed(spec_prop, "s"))
-                    uni = branches[0]
-                    for b in branches[1:]:
-                        uni = uni.unionByName(b)
-                    rows = {row["t"]: int(row["n"] or 0)
-                            for row in uni.groupBy("t")
-                            .agg(F.sum("contrib").alias("n")).collect()}
-                    # guard on the CONTRACTED graph: _numerator_from_sed
-                    # is provably equal to the original-graph numerator
-                    # for this labeling (docstring proof), so accept
-                    # decisions are bit-identical while each probe costs
-                    # a super-graph aggregation instead of an O(m) pass
-                    num = rows.get("n", 0)
-                    spec = ((spec_prop, rows.get("s", 0))
-                            if spec_prop is not None else None)
-                if num <= prev_num:
-                    # two consecutive rejections across both parities =
-                    # fixpoint; later rounds replay them (see
-                    # _louvain_rounds — label-identical to the oracle)
-                    rejects += 1
-                    if rejects >= 2:
-                        break
-                    r += 1
-                    continue
-                rejects = 0
-                slab, prev_num, improved = prop, num, True
-                slab_identity = False
-                pending = spec
-                r += 1
-        finally:
-            wdeg.unpersist()
-            adj.unpersist()
-        if not improved:
+            sed = (sed.join(_bcast_if(mu, small), "u2")
+                   .join(_bcast_if(mv, small), "v2")
+                   .select(F.least("cu", "cv").alias("u2"),
+                           F.greatest("cu", "cv").alias("v2"), "w")
+                   .groupBy("u2", "v2").agg(F.sum("w").alias("w"))
+                   .localCheckpoint(eager=True))
+        slab, num, improved = _louvain_level(
+            sed, m, level2_rounds if level else level1_rounds, small,
+            base=num)
+        if level and not improved:
             break
-        maps.append(slab)
-        prev_sed = sed
-        contracted = True
+        labs.append(slab)
         if _capture is not None:
-            # accepted numerator after each contracted level — the
-            # monotone-across-levels certificate (non-decreasing by the
-            # strict-improvement guard; pytest-pinned)
-            _capture.setdefault("level_nums", []).append(prev_num)
-    if maps:
-        # ONE composed projection + ONE O(m) original-graph pass for the
-        # whole level chain: the und numerator re-derives the threaded
-        # accepted score as a never-wrong consistency check of every
-        # contraction step at once.  left + coalesce: a community absent
-        # from a super-edge set (possible only with caller-supplied
-        # exotic labelings) keeps its previous-level label instead of
-        # silently dropping its vertices
-        out = base_lab
-        for mp in maps:
-            out = (out.join(_bcast_if(mp.withColumnRenamed("sid", "_c"),
-                                      small), "_c", "left")
-                   .select("id",
-                           F.coalesce("sc", F.col("_c")).alias("_c")))
-        cur = (out.select("id", F.col("_c").alias(label_col))
-               .localCheckpoint(eager=False))
-        check = _numerator_from_und(und, m, cur, label_col, small=small)
-        if check != prev_num:
+            if level:
+                _capture.setdefault("level_nums", []).append(num)
+            else:
+                _capture["level1_num"] = num
+    out = labs[0]
+    if len(labs) > 1:
+        # left + coalesce: a community absent from a super-edge set
+        # (possible only with exotic labelings) keeps its previous label
+        for mp in labs[1:]:
+            out = (out.join(_bcast_if(mp.select(F.col("sid").alias("sc"),
+                                                 F.col("sc").alias("_n")),
+                                      small), "sc", "left")
+                   .select("sid", F.coalesce("_n", F.col("sc")).alias("sc")))
+        out = out.localCheckpoint(eager=False)
+        check = _numerator_from_sed(unit, m, out, small=small)
+        if check != num:
             raise RuntimeError(
                 "louvain_full: contracted-graph numerator diverged from "
-                f"the original graph ({prev_num} != {check}) — "
+                f"the original graph ({num} != {check}) — "
                 "contraction invariant violated")
     if _capture is not None:
-        _capture["final_num"] = prev_num
-    return cur
+        _capture["final_num"] = num
+    return out.select(F.col("sid").alias("id"), F.col("sc").alias(label_col))
 
 
 def sssp(weighted_edges: DataFrame, source: int, iterations: int = 8) -> DataFrame:

@@ -30,7 +30,6 @@ _SLOW_TESTS = {
     "test_oracle_diff.py::test_query_matches_oracle[dsl_rows]",
     "test_property.py::test_kmv_join_size_exact_when_k_covers_domain",
     "test_graph_ops.py::test_modularity_local_move_improves_and_never_decreases",
-    "test_graph_ops.py::test_louvain_level1_parity_breaks_ring_oscillation",
     "test_oracle_diff.py::test_query_matches_oracle[sim_ivf_topk]",
     "test_graph_ops.py::test_pagerank_warm_start_converges_faster",
     "test_similarity.py::test_ivf_maybe_compact_refits_drifted_index",
@@ -44,7 +43,6 @@ _SLOW_TESTS = {
     "test_similarity.py::test_contrastive_mining_index_path_equals_inline",
     "test_property.py::test_heavy_hitters_matches_exact_model",
     "test_graph_ops.py::test_spanning_forest_matches_kruskal_random",
-    "test_graph_ops.py::test_louvain_full_three_level_schedule_is_monotone",
 }
 
 

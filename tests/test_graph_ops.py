@@ -1676,10 +1676,14 @@ def test_greedy_coloring_shuffle_fallback_same_colors(spark, no_broadcast):
 
 def test_numerator_from_sed_equals_original_graph(spark):
     """VERDICT r9 #4 pin: the contracted-graph numerator guard
-    (_numerator_from_sed) must equal the original-graph numerator
-    (_numerator_from_und) for ANY labeling of the super-vertices —
-    random graphs, random contractions, random super-labelings."""
+    (_numerator_from_sed on a super-graph) must equal the original
+    graph's numerator for ANY labeling of the super-vertices — random
+    graphs, random contractions, random super-labelings.  The reference
+    is computed in pure Python from the row lists (Σ 4m·e_c − d_c² over
+    communities), and the unit-weight original graph — louvain_full's
+    final consistency check — must agree with both."""
     import random
+    from collections import Counter
 
     from pyspark.sql import functions as F
 
@@ -1693,6 +1697,7 @@ def test_numerator_from_sed_equals_original_graph(spark):
         e = spark.createDataFrame(rows, "src long, dst long")
         und = analytics._undirected_simple(e).localCheckpoint(eager=True)
         m = und.count()
+        assert m == len(rows)
         ids = sorted({x for r in rows for x in r})
         # random contraction: vertex -> community of the level below
         lvl1 = {v: rng.choice(ids[: max(2, n // 3)]) for v in ids}
@@ -1708,12 +1713,20 @@ def test_numerator_from_sed_equals_original_graph(spark):
         # random super-labeling on top of the contraction
         sl = {s: rng.choice(sids) for s in sids}
         slab = spark.createDataFrame(list(sl.items()), "sid long, sc long")
-        projected = spark.createDataFrame(
-            [(v, sl[lvl1[v]]) for v in ids if lvl1[v] in sl],
-            "id long, community long")
+        comm = {v: sl[lvl1[v]] for v in ids}
+        e_c = Counter(comm[u] for u, v in rows if comm[u] == comm[v])
+        d_c = Counter()
+        for u, v in rows:
+            d_c[comm[u]] += 1
+            d_c[comm[v]] += 1
+        want = sum(4 * m * e_c[c] - d * d for c, d in d_c.items())
         got = analytics._numerator_from_sed(sed, m, slab)
-        want = analytics._numerator_from_und(und, m, projected)
         assert got == want, (trial, got, want)
+        projected = spark.createDataFrame(list(comm.items()),
+                                          "sid long, sc long")
+        unit = analytics._numerator_from_sed(analytics._unit(und), m,
+                                             projected)
+        assert unit == want, (trial, unit, want)
 
 
 def test_louvain_level1_parity_breaks_ring_oscillation(spark):
@@ -1754,50 +1767,44 @@ def test_louvain_full_three_level_schedule_is_monotone(spark):
 
 
 def test_louvain_identity_proposal_fastpath_equal(spark):
-    """r11: the identity fast path in both proposal functions (taken on
-    rounds where the labeling is provably still the singleton identity)
-    must propose EXACTLY the generic path's labeling — winner, gain gate
-    and parity decisions included — on graphs with hubs, ties and
-    parallel-ish structure, for both parities."""
+    """r11: the proposal's identity fast path (taken on rounds where the
+    labeling is provably still the singleton identity) must propose
+    EXACTLY the generic path's labeling — winner, gain gate and parity
+    decisions included — for both parities and none, on the unit-weight
+    graph of level 1 (hubs, ties, parallel-ish structure) and on a
+    contracted-style super-graph with self-loops."""
     edges = [(i, (i + 1) % 30) for i in range(30)]          # cycle
     edges += [(0, j) for j in range(2, 12)]                  # hub fan
     edges += [(40, 41), (41, 42), (40, 42), (42, 43)]        # triangle+tail
     e = spark.createDataFrame(edges, "src long, dst long")
     und = analytics._undirected_simple(e).localCheckpoint(eager=True)
-    m = und.count()
-    ident = (und.select(F.col("u").alias("id"))
-             .unionByName(und.select(F.col("v").alias("id"))).distinct()
-             .select("id", F.col("id").alias("_c")))
-    for par in (0, 1, None):
-        gen = {(r["id"], r["_c"]) for r in analytics._local_move_proposal(
-            und, ident, m, parity=par).collect()}
-        fast = {(r["id"], r["_c"]) for r in analytics._local_move_proposal(
-            und, ident, m, parity=par, identity=True).collect()}
-        assert fast == gen, (par, fast ^ gen)
-    # weighted twin on a contracted-style graph with self-loops
+    unit = (analytics._unit(und), und.count())
     sed = spark.createDataFrame(
         [(1, 2, 3), (1, 3, 1), (2, 3, 2), (1, 1, 4), (3, 4, 1),
          (4, 5, 2), (5, 5, 1)], "u2 long, v2 long, w long")
-    sm = 14  # total weight = Σ w
-    sident = (sed.select(F.col("u2").alias("sid"))
-              .unionByName(sed.select(F.col("v2").alias("sid"))).distinct()
-              .select("sid", F.col("sid").alias("sc")))
-    for par in (0, 1, None):
-        gen = {(r["sid"], r["sc"]) for r in analytics._weighted_move_proposal(
-            sed, sident, sm, parity=par).collect()}
-        fast = {(r["sid"], r["sc"]) for r in analytics._weighted_move_proposal(
-            sed, sident, sm, parity=par, identity=True).collect()}
-        assert fast == gen, (par, fast ^ gen)
+    weighted = (sed, 14)  # total weight = Σ w
+    for g, m in (unit, weighted):
+        ident = (g.select(F.col("u2").alias("sid"))
+                 .unionByName(g.select(F.col("v2").alias("sid"))).distinct()
+                 .select("sid", F.col("sid").alias("sc")))
+        for par in (0, 1, None):
+            gen = {(r["sid"], r["sc"])
+                   for r in analytics._weighted_move_proposal(
+                       g, ident, m, parity=par).collect()}
+            fast = {(r["sid"], r["sc"])
+                    for r in analytics._weighted_move_proposal(
+                        g, ident, m, parity=par, identity=True).collect()}
+            assert fast == gen, (m, par, fast ^ gen)
 
 
 def test_louvain_proposal_round_exchange_free(spark):
     """r11 plan pin (the greedy_coloring posture brought to Louvain):
-    with the persisted adjacency hash-partitioned on `id`
-    (_louvain_invariants), a broadcast-regime proposal round's two
-    edge-scale aggregations — groupBy(id, cand) and the min_by argmax
-    groupBy(id) — must reuse the cached partitioning: the EXECUTED plan
-    may contain no ENSURE_REQUIREMENTS exchange keyed on the vertex id
-    (the only id-keyed exchange is the one-time REPARTITION_BY_COL
+    with the level's persisted adjacency hash-partitioned on `sid`
+    (_level_invariants), a broadcast-regime proposal round's two
+    edge-scale aggregations — groupBy(sid, cand) and the min_by argmax
+    groupBy(sid) — must reuse the cached partitioning: the EXECUTED plan
+    may contain no ENSURE_REQUIREMENTS exchange keyed on the vertex sid
+    (the only sid-keyed exchange is the one-time REPARTITION_BY_COL
     inside the cached relation).  Community-keyed exchanges (d_c)
     are vertex-scale and allowed."""
     import re
@@ -1807,35 +1814,37 @@ def test_louvain_proposal_round_exchange_free(spark):
     e = spark.createDataFrame(edges, "src long, dst long")
     und = analytics._undirected_simple(e).localCheckpoint(eager=True)
     m = und.count()
-    deg, adj = analytics._louvain_invariants(und)
+    sed = analytics._unit(und)
+    wdeg, adj = analytics._level_invariants(sed, small=True)
     try:
         adj.count()   # materialize the cache as round 1's job would
-        lab = deg.select("id", (F.col("id") % 7).alias("_c"))
-        prop = analytics._local_move_proposal(
-            und, lab, m, small=True, deg=deg, adj=adj, parity=0)
+        lab = wdeg.select("sid", (F.col("sid") % 7).alias("sc"))
+        prop = analytics._weighted_move_proposal(
+            sed, lab, m, small=True, wdeg=wdeg, adj=adj, parity=0)
         prop.write.format("noop").mode("overwrite").save()
         txt = prop._jdf.queryExecution().executedPlan().toString()
-        # every id-keyed hashpartitioning exchange must be either the
-        # cached REPARTITION_BY_COL or deg's one-time cached build (child
-        # = the id-keyed partial_count aggregate, textually repeated per
-        # InMemoryTableScan of deg) — never a per-round insertion: the
-        # removed exchanges were keyed (id, cand) (the nbr aggregation)
-        # and id-with-a-min_by-child (the argmax)
+        # every sid-keyed hashpartitioning exchange must be either the
+        # cached REPARTITION_BY_COL or wdeg's one-time cached build
+        # (child = the sid-keyed partial_sum aggregate over the edge
+        # endpoints, textually repeated per InMemoryTableScan of wdeg) —
+        # never a per-round insertion: the removed exchanges were keyed
+        # (sid, cand) (the nbr aggregation) and sid-with-a-min_by-child
+        # (the argmax)
         lines = txt.splitlines()
         bad = []
         for i, l in enumerate(lines):
-            if not re.search(r"Exchange hashpartitioning\(id#\d+", l):
+            if not re.search(r"Exchange hashpartitioning\(sid#\d+", l):
                 continue
             if "REPARTITION_BY_COL" in l:
                 continue
             nxt = lines[i + 1] if i + 1 < len(lines) else ""
-            is_deg_build = ("partial_count(1)" in nxt
+            is_deg_build = ("partial_sum(w" in nxt
                             and "cand" not in l and "cand" not in nxt)
             if not is_deg_build:
                 bad.append((l.strip()[:110], nxt.strip()[:110]))
         assert not bad, bad
     finally:
-        deg.unpersist()
+        wdeg.unpersist()
         adj.unpersist()
 
 
