@@ -106,14 +106,18 @@ def k_hop(edges: DataFrame, start_ids: Sequence[int], k: int, direction: str = O
     at which point broadcasting it would OOM every executor — past the
     budget the hop falls back to a plain shuffle join (AQE picks the
     physical strategy).  The frontier is materialized each hop anyway (BFS
-    is inherently iterative), so the size check reads a checkpointed count,
-    not a recompute.
+    is inherently iterative) by `analytics._ckpt`, whose one action returns
+    the row count the size check reads, not a recompute.
 
     `edges_by_dst` routes in-direction hops through the dst-bucketed copy of
     the dual edge layout (sources/edge_layout.py): past the broadcast
     budget, the shuffle-join fallback then moves ONLY the frontier — the
     edge side is already distributed on the hop key (the persisted adjacency
     keeps the scan's bucket distribution; tests/test_plans.py pins it)."""
+    # analytics imports this module, so its checkpoint primitive is
+    # imported at call time
+    from hugegraph_on_tikv_spark.operators.analytics import _ckpt
+
     spark = edges.sparkSession
     e = edges.filter(F.col("label").isin(list(labels))) if labels else edges
     e_dst = (edges_by_dst.filter(F.col("label").isin(list(labels)))
@@ -137,10 +141,9 @@ def k_hop(edges: DataFrame, start_ids: Sequence[int], k: int, direction: str = O
         )
         frontier = nxt.join(visited.select("id"), "id", "left_anti")
         if (checkpoint_every and hop % checkpoint_every == 0) or hop < k:
-            # cut lineage AND materialize so the next hop's broadcast
-            # decision reads a cached count instead of recomputing the join
-            frontier = frontier.localCheckpoint(eager=True)
-            frontier_rows = frontier.count()
+            # cut lineage AND materialize: the checkpoint's one action is
+            # its row count, which the next hop's broadcast decision reads
+            frontier, frontier_rows = _ckpt(frontier)
         layer = frontier.withColumn("hops", F.lit(hop))
         visited = visited.unionByName(layer)
         result = layer if result is None else result.unionByName(layer)

@@ -25,16 +25,17 @@ reference's twin tables + vertex table; each layout's copies are written
 from one logical DataFrame so they cannot drift.
 
 INCREMENTAL MAINTENANCE (the reference maintains its tables per-mutation,
-TikvTables.java:128-149 / TikvStore.java:176-210; here the same contract is
+TikvTables.java:128-149 / TikvStore.java:176-210, and flushes a buffered
+batch in one commit, TikvStdSessions:239-279; here the same contract is
 per-batch):  each copy lives in a VERSIONED directory (`by_src/v000001`,
-...).  `upsert(delta)` computes the touched buckets — `pmod(hash(key),
-buckets)`, the exact partition-id expression `bucketBy` and
-`repartition(n, key)` share — reads ONLY those buckets' files, merges by
-row key, and builds the next version by hard-linking every untouched
-bucket file (no rewrite, no data copy) and writing fresh files for the
-touched buckets alone.  The catalog table then swaps to the new directory
-with a metadata-only `ALTER TABLE SET LOCATION`: readers planned against
-version N keep their file list and are never disturbed (the same
+...).  One batch (`upsert(delta)`) is one touched-set aggregate for all
+copies — over `pmod(hash(key), buckets)`, the exact partition-id expression
+`bucketBy` and `repartition(n, key)` share — then, per copy, a guarded
+anti-join merge of ONLY the touched buckets' files and one bucketed write
+of those buckets.  The next version hard-links every untouched bucket file
+(no rewrite, no data copy).  The catalog table then swaps to the new
+directory with a metadata-only `ALTER TABLE SET LOCATION`: readers planned
+against version N keep their file list and are never disturbed (the same
 atomic-pointer contract as sources/table_catalog.py).  Work per refresh is
 O(touched buckets), not O(table) — at 100 TB a trickle of mutations
 touches a few hundred of tens of thousands of buckets.  `compact()` is the
@@ -54,10 +55,12 @@ import os
 import re
 import shutil
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hugegraph_on_tikv_spark.operators.traversal import broadcast_fits
 from hugegraph_on_tikv_spark.sources.bucketing import write_bucketed
 
 BY_SRC_SUFFIX = "_by_src"
@@ -162,20 +165,19 @@ class BucketedLayout:
         return self.spark.table(f"{self.name}_by_{key}")
 
     # -- incremental maintenance -------------------------------------------
-    def _merge_copy(self, key: str, version: int,
-                    upserts: DataFrame | None, delete_keys: DataFrame | None,
-                    key_cols: tuple[str, ...]) -> int:
-        """Build version+1 of one copy: rewrite touched buckets, hard-link
-        the rest.  Returns the number of buckets rewritten."""
+    def _merge_copy(self, key: str, version: int, upserts: DataFrame | None,
+                    gone: DataFrame | None, touched: set[int], rows: int) -> int:
+        """Build version+1 of one copy from the batch `upsert` prepared:
+        read the `touched` buckets, drop every row whose key is in `gone`
+        (`rows` rows of key columns) with one anti-join, add `upserts`, and
+        write the result as fresh files for those buckets alone; every
+        other bucket file is hard-linked.  A left-anti join ignores
+        duplicate right-side keys, so `gone` needs no distinct; it is
+        broadcast when `broadcast_fits(gone, rows)` and shuffled past the
+        budget.  Returns the number of buckets rewritten."""
         spark, b = self.spark, self.buckets
         cur = self._copy_dir(key, version)
         nxt = self._copy_dir(key, version + 1)
-        bucket_expr = F.pmod(F.hash(F.col(key)), F.lit(b))
-        touched: set[int] = set()
-        for d in (upserts, delete_keys):
-            if d is not None:
-                touched |= {r[0] for r in
-                            d.select(bucket_expr.alias("b")).distinct().collect()}
         files = _data_files(cur)
         if not touched:
             return 0
@@ -184,12 +186,8 @@ class BucketedLayout:
         existing = (spark.read.schema(schema).parquet(*touched_files)
                     if touched_files else
                     spark.createDataFrame([], schema))
-        # keys to retract: every upserted key (replaced) plus explicit deletes
-        gone = upserts.select(*key_cols) if upserts is not None else None
-        if delete_keys is not None:
-            dk = delete_keys.select(*key_cols)
-            gone = dk if gone is None else gone.unionByName(dk)
-        merged = existing.join(gone.distinct(), list(key_cols), "left_anti")
+        merged = existing.join(F.broadcast(gone) if broadcast_fits(gone, rows)
+                               else gone, gone.columns, "left_anti")
         if upserts is not None:
             merged = merged.unionByName(upserts.select(*schema.fieldNames()))
         # stage the touched buckets through a throwaway bucketed table: the
@@ -233,6 +231,12 @@ class BucketedLayout:
         `key_cols` (default: the subclass row identity); `delete_keys` rows
         (key columns only) are removed.
 
+        The batch's retracted keys (`gone`: the upserted keys plus the
+        deleted keys) are built once.  One aggregate groups them on the
+        bucket id of every copy key and collects one row per distinct
+        bucket tuple: each copy's touched buckets and the exact batch row
+        count.  `_merge_copy` then rewrites each copy.
+
         Exactly-once under at-least-once redelivery: pass a monotonically
         increasing `batch_id` and a replayed batch becomes a no-op (the id
         is committed in layout.json only after ALL copies swapped, so a
@@ -247,8 +251,20 @@ class BucketedLayout:
         if upserts is not None:
             upserts = upserts.persist()
         try:
+            keys = [d.select(*key_cols) for d in (upserts, delete_keys)
+                    if d is not None]
+            gone = reduce(DataFrame.unionByName, keys) if keys else None
+            touched = {k: set() for k in self.COPY_KEYS}
+            rows = 0
+            if gone is not None:
+                bucket_of = [F.pmod(F.hash(F.col(k)), F.lit(self.buckets)).alias(k)
+                             for k in self.COPY_KEYS]
+                for r in gone.groupBy(*bucket_of).count().collect():
+                    for k in self.COPY_KEYS:
+                        touched[k].add(r[k])
+                    rows += r["count"]
             v = meta["version"]
-            counts = {k: self._merge_copy(k, v, upserts, delete_keys, key_cols)
+            counts = {k: self._merge_copy(k, v, upserts, gone, touched[k], rows)
                       for k in self.COPY_KEYS}
         finally:
             if upserts is not None:

@@ -53,6 +53,14 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(pytest.mark.slow)
 
 
+def jobs_since(spark: SparkSession):
+    """Start a job counter: returns a callable giving the number of Spark
+    jobs the session's DAG scheduler has submitted since this call."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    start = dag.nextJobId()
+    return lambda: dag.nextJobId() - start
+
+
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
     s = (

@@ -14,8 +14,10 @@ import os
 
 from pyspark.sql import functions as F
 
+from hugegraph_on_tikv_spark.sources import edge_layout
 from hugegraph_on_tikv_spark.sources.edge_layout import (DualEdgeLayout,
                                                          _data_files)
+from tests.conftest import jobs_since
 
 EDGE_SCHEMA = ("src long, dst long, label string, linenumber int, "
                "quantity double")
@@ -155,8 +157,8 @@ def test_upsert_crash_between_copies_heals_on_retry(spark, tmp_path):
         real_merge = layout._merge_copy
         calls = []
 
-        def crashing_merge(key, version, upserts, delete_keys, key_cols):
-            n = real_merge(key, version, upserts, delete_keys, key_cols)
+        def crashing_merge(key, *rest):
+            n = real_merge(key, *rest)
             calls.append(key)
             if len(calls) == 1:
                 raise RuntimeError("simulated crash between copy swaps")
@@ -390,3 +392,103 @@ def test_graphstore_vertex_layout_routing(spark, tmp_path):
     finally:
         layout.drop()
         store.vertex_layout = None
+
+
+# -- one batch: one touched-set aggregate, one guarded merge per copy ------
+
+def _inodes(layout, version):
+    out = {}
+    for key in layout.COPY_KEYS:
+        d = layout._copy_dir(key, version)
+        for b, f in _data_files(d).items():
+            out[key, b] = os.stat(os.path.join(d, f)).st_ino
+    return out
+
+
+def test_upsert_broadcast_merge_equals_shuffle_fallback(spark, tmp_path,
+                                                        no_broadcast,
+                                                        monkeypatch):
+    """The merge's fast path (the retracted keys broadcast into the
+    anti-join) and its shuffle fallback (broadcast budget -1) leave every
+    copy of an edge and a vertex layout with the same rows and the same
+    rewritten-bucket counts, and both hard-link every untouched bucket."""
+    from hugegraph_on_tikv_spark.sources.edge_layout import VertexLayout
+
+    real_write = edge_layout.write_bucketed
+    plans = []
+
+    def spy(df, *args):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        real_write(df, *args)
+
+    monkeypatch.setattr(edge_layout, "write_bucketed", spy)
+
+    def apply(layout, ups, dels):
+        before = _inodes(layout, 1)
+        plans.clear()
+        counts = layout.upsert(upserts=ups, delete_keys=dels, batch_id=1)
+        merge_plans = list(plans)
+        after = _inodes(layout, 2)
+        rows = {k: sorted(layout.copy(k).collect()) for k in layout.COPY_KEYS}
+        linked = {kb for kb, ino in before.items() if after[kb] == ino}
+        return (counts, rows, linked), merge_plans
+
+    edge_ups = _edges(spark, [(3, 121, "e", 3, 555.0), (7, 770, "e", 7000, 2.0)])
+    edge_dels = _edges(spark, [(5, 135, "e", 5, 0.0)]).select(
+        "src", "dst", "label", "linenumber")
+    vertex_ups = _vertices(spark, [(3, "customer", "renamed", 999.0),
+                                   (301, "customer", "new", 1.0)])
+    vertex_dels = _vertices(spark, [(5, "customer", "x", 0.0)]).select("id")
+    cases = (
+        (lambda name, sub: _mk_layout(spark, tmp_path / sub, name),
+         edge_ups, edge_dels),
+        (lambda name, sub: VertexLayout.materialize(
+            _vertices(spark, _vertex_rows()), name, str(tmp_path / sub), 8),
+         vertex_ups, vertex_dels),
+    )
+    for i, (mk, ups, dels) in enumerate(cases):
+        fast_layout = mk(f"t_ivm_eq{i}_fast", f"fast{i}")
+        slow_layout = mk(f"t_ivm_eq{i}_slow", f"slow{i}")
+        try:
+            fast, fast_plans = apply(fast_layout, ups, dels)
+            with no_broadcast():
+                slow, slow_plans = apply(slow_layout, ups, dels)
+            assert fast == slow
+            counts, _, linked = fast
+            b = fast_layout.buckets
+            touched = {k: {r[0] for r in
+                           ups.select(F.pmod(F.hash(k), F.lit(b)))
+                           .union(dels.select(F.pmod(F.hash(k), F.lit(b))))
+                           .distinct().collect()}
+                       for k in fast_layout.COPY_KEYS}
+            assert counts == {k: len(t) for k, t in touched.items()}
+            assert linked == {(k, bid) for k in fast_layout.COPY_KEYS
+                              for bid in range(b) if bid not in touched[k]}
+            assert len(fast_plans) == len(slow_plans) \
+                == len(fast_layout.COPY_KEYS)
+            assert all("BroadcastHashJoin" in p and "LeftAnti" in p
+                       for p in fast_plans), fast_plans
+            assert all("Broadcast" not in p and "LeftAnti" in p
+                       for p in slow_plans), slow_plans
+        finally:
+            fast_layout.drop()
+            slow_layout.drop()
+
+
+def test_upsert_batch_job_count(spark, tmp_path):
+    """A dual edge layout applies one batch of upserts and deletes in at
+    most 9 Spark jobs: one touched-set aggregate for both copies, then per
+    copy one broadcast anti-join merge and one bucketed write.  Computing
+    each copy's touched set per input and shuffling the anti-join's
+    right side cost 19 jobs in this fixture."""
+    layout = _mk_layout(spark, tmp_path, "t_ivm_jobs")
+    try:
+        ups = _edges(spark, [(3, 121, "e", 3, 555.0),
+                             (7, 770, "e", 7000, 2.0)])
+        dels = _edges(spark, [(5, 135, "e", 5, 0.0)]).select(
+            "src", "dst", "label", "linenumber")
+        jobs = jobs_since(spark)
+        layout.upsert(upserts=ups, delete_keys=dels, batch_id=1)
+        assert jobs() <= 9
+    finally:
+        layout.drop()

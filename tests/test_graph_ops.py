@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hugegraph_on_tikv_spark.operators import analytics, traversal
+from tests.conftest import jobs_since
 
 
 @pytest.fixture(scope="module")
@@ -149,19 +150,17 @@ def test_ckpt_exact_count_no_extra_jobs_fresh_stats(spark):
     localCheckpoint of the same input, and a frame carrying NO inherited
     size estimate (sizeInBytes == spark.sql.defaultSizeInBytes — what
     keeps pointer doubling out of the compounding-estimate blow-up)."""
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-
     def shuffled():
         return (spark.range(0, 5000, 1, 4)
                 .select((F.col("id") % 97).alias("k"), "id")
                 .groupBy("k").agg(F.sum("id").alias("s")))
 
-    j0 = dag.nextJobId()
+    jobs = jobs_since(spark)
     shuffled().localCheckpoint(eager=True)
-    eager_jobs = dag.nextJobId() - j0
-    j0 = dag.nextJobId()
+    eager_jobs = jobs()
+    jobs = jobs_since(spark)
     ck, rows = analytics._ckpt(shuffled())
-    ckpt_jobs = dag.nextJobId() - j0
+    ckpt_jobs = jobs()
     assert rows == 97
     assert ckpt_jobs <= eager_jobs
     size = ck._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -183,12 +182,11 @@ def test_graph_store_warm_view_is_one_job(spark):
 
     warm = GraphStore(spark, SF_DIR)
     n_e, n_v = warm.edges().count(), warm.vertices().count()
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
     store = GraphStore(spark, SF_DIR)
     for view, rows in ((store.edges, n_e), (store.vertices, n_v)):
-        j0 = dag.nextJobId()
+        jobs = jobs_since(spark)
         df = view()
-        assert dag.nextJobId() - j0 <= 1
+        assert jobs() <= 1
         assert df.count() == rows
 
 
@@ -198,7 +196,6 @@ def test_fixpoint_driver_contract(spark):
     initial state as `prev`; a probed cut costs exactly the probe's own
     jobs; unprobed lazy cuts submit fewer jobs than eager ones and give
     the same rows."""
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
     start = spark.range(0, 50, 1, 2).select("id", F.lit(0).alias("v"))
 
     def vmax(df):
@@ -207,16 +204,16 @@ def test_fixpoint_driver_contract(spark):
     seen, probe_jobs = [], []
 
     def probe(ck, prev):
-        j0 = dag.nextJobId()
+        jobs = jobs_since(spark)
         seen.append((vmax(ck), vmax(prev)))
-        probe_jobs.append(dag.nextJobId() - j0)
+        probe_jobs.append(jobs())
         return len(seen) == 2
 
-    j0 = dag.nextJobId()
+    jobs = jobs_since(spark)
     out, rounds, converged = analytics._fixpoint(
         lambda df, i: df.select("id", (F.col("v") + 1).alias("v")),
         start, 10, every=2, probe=probe)
-    loop_jobs = dag.nextJobId() - j0
+    loop_jobs = jobs()
     assert (rounds, converged) == (4, True)
     assert seen == [(2, 0), (4, 2)]
     assert loop_jobs == sum(probe_jobs)
@@ -226,9 +223,9 @@ def test_fixpoint_driver_contract(spark):
         return df.groupBy("id").agg((F.max("v") + i).alias("v"))
 
     def run(cut):
-        j0 = dag.nextJobId()
+        jobs = jobs_since(spark)
         rows = sorted(cut().collect())
-        return dag.nextJobId() - j0, rows
+        return jobs(), rows
 
     def eager():
         df = start
