@@ -21,6 +21,7 @@ aggregation natively.
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame
@@ -454,9 +455,8 @@ def connected_components(edges: DataFrame,
                     (F.coalesce("nbr_min", F.col("component")) < F.col("component")).alias("_chg"))
         )
 
-    labels, _, _ = _fixpoint(
-        step, labels, max_iterations, every=3,
-        probe=lambda ck, prev: ck.filter(F.col("_chg")).count() == 0)
+    labels, _, _ = _fixpoint(step, labels, max_iterations, every=3,
+                             probe=_settled)
     return labels.drop("_chg")
 
 
@@ -717,96 +717,90 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 4,
        pivot forward, so pivot→v ∧ v→pivot ⇒ SCC(pivot).  Assign, peel,
        back to 1.
 
-    Every step is a join+groupBy on (src|dst) — the aggregate-messages
-    shuffle shape — with localCheckpoint lineage cuts per round, so the
-    plan never grows with the iteration count.  Vertices still unresolved
-    after max_rounds come back with scc NULL (bounded-rounds contract,
-    like connected_components' bounded iterations — never a wrong merge).
-    Self-loops are SCC-neutral and dropped up front; vertices appearing
-    only in self-loops are singletons."""
+    Every step is a join+groupBy on (src|dst), the aggregate-messages
+    shuffle shape.  The three loops run on `_fixpoint`: trim and marking
+    probe every round, colouring every 3rd and its last.  A vertex
+    never marked is a singleton unless it is still in the live edge set
+    when the rounds end: vertices unresolved after max_rounds come back
+    with scc NULL (bounded-rounds contract, like connected_components'
+    bounded iterations — never a wrong merge).  Self-loops are
+    SCC-neutral and dropped up front; vertices appearing only in
+    self-loops are singletons."""
     v0 = _endpoints(edges)
-    e = (edges.filter(F.col("src") != F.col("dst"))
-         .select("src", "dst").distinct().localCheckpoint(eager=True))
+    e, n_e = _ckpt(edges.filter(F.col("src") != F.col("dst"))
+                   .select("src", "dst").distinct())
+    assigned = [v0.select("id", F.lit(None).cast("long").alias("scc"))]
 
-    assigned = []  # list of (id, scc) DataFrames
+    def _b(df: DataFrame) -> DataFrame:
+        # vertex-scale join sides: the live edge set has ≤ 2·n_e vertices
+        return F.broadcast(df) if broadcast_fits(df, 2 * n_e) else df
 
-    # vertices with no non-self edge at all: singletons immediately
-    ev = _endpoints(e)
-    lonely = v0.join(ev, "id", "left_anti")
-    assigned.append(lonely.withColumn("scc", F.col("id")))
+    def _peel(e: DataFrame, gone: DataFrame) -> DataFrame:
+        gone = _b(gone.select("id"))
+        return (e.join(gone.withColumnRenamed("id", "src"), "src", "left_anti")
+                .join(gone.withColumnRenamed("id", "dst"), "dst", "left_anti"))
 
-    def _trim(e):
-        for _ in range(trim_iterations):
-            has_in = e.select(F.col("dst").alias("id")).distinct()
-            has_out = e.select(F.col("src").alias("id")).distinct()
-            verts = has_in.unionByName(has_out).distinct()
-            core = has_in.join(has_out, "id")  # in ≥ 1 AND out ≥ 1
-            trivial = verts.join(core, "id", "left_anti") \
-                .localCheckpoint(eager=True)
-            if trivial.limit(1).count() == 0:
-                return e
-            assigned.append(trivial.withColumn("scc", F.col("id")))
-            e = (e.join(trivial.select(F.col("id").alias("src")), "src", "left_anti")
-                 .join(trivial.select(F.col("id").alias("dst")), "dst", "left_anti")
-                 .localCheckpoint(eager=True))
-        return e
+    # trim: a vertex only ever src or only ever dst sits on no cycle
+    def trim(e: DataFrame, i: int) -> DataFrame:
+        return _peel(e, e.select(F.col("src").alias("id"),
+                                 F.lit(True).alias("out"))
+                     .unionByName(e.select(F.col("dst").alias("id"),
+                                           F.lit(False).alias("out")))
+                     .groupBy("id")
+                     .agg((F.min("out") == F.max("out")).alias("trivial"))
+                     .filter("trivial"))
+
+    def none_trimmed(ck: DataFrame, prev: DataFrame) -> bool:
+        nonlocal n_e
+        before, n_e = n_e, _rows(ck)
+        return n_e == before
+
+    # colouring: color(v) = min id over {v} ∪ ancestors(v); `_chg` marks a
+    # vertex whose color fell this round
+    def color(c: DataFrame, i: int) -> DataFrame:
+        msgs = (e.join(_b(c.select(F.col("id").alias("src"), "color")), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.min("color").alias("in_min")))
+        return (c.join(_b(msgs), "id", "left")
+                .select("id", F.least("color", F.coalesce("in_min", "color"))
+                        .alias("color"),
+                        (F.col("in_min") < F.col("color")).alias("_chg")))
+
+    # backward marking: within color c, v joins when an edge v→u has u
+    # marked (seeded at the pivot c); `_chg` marks this round's newcomers
+    def mark(m: DataFrame, i: int) -> DataFrame:
+        newly = (ce.join(_b(m.select(F.col("id").alias("dst"),
+                                     F.col("color").alias("m_color"))), "dst")
+                 .filter(F.col("color") == F.col("m_color"))
+                 .select(F.col("src").alias("id"), "color").distinct()
+                 .join(_b(m.select("id")), "id", "left_anti"))
+        return (m.select("id", "color", F.lit(False).alias("_chg"))
+                .unionByName(newly.withColumn("_chg", F.lit(True))))
 
     for _ in range(max_rounds):
-        e = _trim(e)
-        if e.limit(1).count() == 0:
+        e, _, _ = _fixpoint(trim, e, trim_iterations, probe=none_trimmed)
+        if n_e == 0:
             break
-        verts = _endpoints(e)
-        colors = verts.withColumn("color", F.col("id"))
-        colors_converged = False
-        for i in range(prop_iterations):
-            msgs = (e.join(colors.withColumnRenamed("id", "src"), "src")
-                    .groupBy(F.col("dst").alias("id"))
-                    .agg(F.min("color").alias("in_min")))
-            nxt = (colors.join(msgs, "id", "left")
-                   .select("id", F.least(F.col("color"),
-                                         F.coalesce("in_min", F.col("color"))
-                                         ).alias("color")))
-            if (i + 1) % 3 == 0 or i == prop_iterations - 1:
-                nxt = nxt.localCheckpoint(eager=True)
-                changed = (nxt.alias("n").join(colors.alias("o"), "id")
-                           .filter(F.col("n.color") != F.col("o.color"))
-                           .limit(1).count())
-                colors = nxt
-                if changed == 0:
-                    colors_converged = True
-                    break
-            else:
-                colors = nxt
-        if not colors_converged:
+        colors, _, converged = _fixpoint(
+            color, _endpoints(e).withColumn("color", F.col("id")),
+            prop_iterations, every=3, probe=_settled)
+        if not converged:
             # Coloring did not reach fixpoint within the bound: colors are
             # mixed inside at least one SCC, so any assignment this round
             # could split a component.  Honor the documented contract —
             # remaining vertices come back NULL — instead of a wrong merge.
             break
-        colors = colors.localCheckpoint(eager=True)
-        # backward membership from each pivot within its color class
-        marked = colors.filter(F.col("id") == F.col("color"))
-        ce = (e.join(colors.withColumnRenamed("id", "src")
-                     .withColumnRenamed("color", "c_src"), "src")
-              .join(colors.withColumnRenamed("id", "dst")
-                    .withColumnRenamed("color", "c_dst"), "dst")
-              .filter(F.col("c_src") == F.col("c_dst"))
-              .select("src", "dst", F.col("c_src").alias("color"))
-              .localCheckpoint(eager=True))
-        marking_converged = False
-        for i in range(prop_iterations):
-            newly = (ce.join(marked.select(F.col("id").alias("dst"),
-                                           F.col("color").alias("m_color")),
-                             "dst")
-                     .filter(F.col("color") == F.col("m_color"))
-                     .select(F.col("src").alias("id"), "color").distinct()
-                     .join(marked.select("id"), "id", "left_anti"))
-            newly = newly.localCheckpoint(eager=True)
-            if newly.limit(1).count() == 0:
-                marking_converged = True
-                break
-            marked = marked.unionByName(newly).localCheckpoint(eager=True)
-        if not marking_converged:
+        ce, _ = _ckpt(
+            e.join(_b(colors.select(F.col("id").alias("src"),
+                                    F.col("color").alias("c_src"))), "src")
+            .join(_b(colors.select(F.col("id").alias("dst"),
+                                   F.col("color").alias("c_dst"))), "dst")
+            .filter(F.col("c_src") == F.col("c_dst"))
+            .select("src", "dst", F.col("c_src").alias("color")))
+        marked, _, converged = _fixpoint(
+            mark, colors.filter(F.col("id") == F.col("color")),
+            prop_iterations, probe=_settled)
+        if not converged:
             # Backward marking stopped early: `marked` holds only a subset
             # of each pivot's SCC.  Assigning and peeling the subset would
             # leave the rest to be trimmed as fake singletons next round —
@@ -814,14 +808,13 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 4,
             # NULL.
             break
         assigned.append(marked.select("id", F.col("color").alias("scc")))
-        e = (e.join(marked.select(F.col("id").alias("src")), "src", "left_anti")
-             .join(marked.select(F.col("id").alias("dst")), "dst", "left_anti")
-             .localCheckpoint(eager=True))
+        e, n_e = _ckpt(_peel(e, marked))
 
-    out = assigned[0]
-    for a in assigned[1:]:
-        out = out.unionByName(a)
-    return v0.join(out, "id", "left").select("id", "scc")
+    live = _endpoints(e).withColumn("live", F.lit(True))
+    return (_union(assigned).groupBy("id").agg(F.max("scc").alias("scc"))
+            .join(live, "id", "left")
+            .select("id", F.when(F.col("live").isNull(),
+                                 F.coalesce("scc", "id")).alias("scc")))
 
 
 def _degree_oriented(und: DataFrame) -> DataFrame:
@@ -1203,23 +1196,25 @@ def k_truss(edges: DataFrame, k: int, max_iterations: int = 20) -> DataFrame:
     survivors' support by the destroyed-triangle count.  Support can only
     fall as edges leave, so the fixpoint is unique and the early exit safe;
     rounds are bounded by peeling depth and each costs O(Σ min-degree over
-    removals), the changed neighborhood, not O(wedges) again.
+    removals), the changed neighborhood, not O(wedges) again.  The rounds
+    run on `_fixpoint`, probed by the count of edges left to remove.
     Returns the surviving canonical edges as (u, v, support) with support
     measured INSIDE the truss."""
     cur = _undirected_simple(edges).localCheckpoint(eager=True)
     thresh = k - 2
+    weak = F.col("support") < thresh
     # full edge set with support (0 for triangle-free edges — they peel
     # first): the ONLY full wedge enumeration in the whole call
-    sup = (cur.join(_edge_support(cur), ["u", "v"], "left")
-           .select("u", "v",
-                   F.coalesce("support", F.lit(0).cast("long"))
-                   .alias("support"))
-           .localCheckpoint(eager=True))
-    for _ in range(max_iterations):
-        drop = (sup.filter(F.col("support") < thresh).select("u", "v")
-                .localCheckpoint(eager=True))
-        if drop.isEmpty():
-            break
+    sup, (n, n_weak) = _ckpt(
+        cur.join(_edge_support(cur), ["u", "v"], "left")
+        .select("u", "v",
+                F.coalesce("support", F.lit(0).cast("long")).alias("support")),
+        lambda ck: ck.agg(F.count(F.lit(1)), F.count(F.when(weak, 1))).first())
+
+    def peel(sup: DataFrame, i: int) -> DataFrame:
+        drop = sup.filter(weak).select("u", "v")
+        if broadcast_fits(drop, n):  # n bounds every round: peeling shrinks
+            drop = F.broadcast(drop)
         survivors = sup.join(drop, ["u", "v"], "left_anti")
         # fan out each removed edge from its LOWER-degree endpoint
         # (degrees over the pre-removal graph) — hub-proof delta wedges
@@ -1260,11 +1255,14 @@ def k_truss(edges: DataFrame, k: int, max_iterations: int = 20) -> DataFrame:
                    .alias("e"))
                .select("e.u", "e.v")
                .groupBy("u", "v").agg(F.count(F.lit(1)).alias("dec")))
-        sup = (survivors.join(dec, ["u", "v"], "left")
-               .select("u", "v",
-                       (F.col("support") - F.coalesce("dec", F.lit(0)))
-                       .alias("support"))
-               .localCheckpoint(eager=True))
+        return (survivors.join(dec, ["u", "v"], "left")
+                .select("u", "v",
+                        (F.col("support") - F.coalesce("dec", F.lit(0)))
+                        .alias("support")))
+
+    sup, _, _ = _fixpoint(
+        peel, sup, max_iterations if n_weak else 0,
+        probe=lambda ck, prev: ck.filter(weak).count() == 0)
     out = sup
     if thresh < 1:
         # parity with the recount formulation for k <= 2: only edges that
@@ -2073,10 +2071,12 @@ def betweenness_centrality(edges: DataFrame, sources: list[int],
 
     Plan shape: the per-level state is keyed (source, vertex) like
     shortest_paths — state size |V|×|sources|, so keep the source sample
-    small (that is the estimator's contract anyway).  Each forward level
-    is one join+groupBy shuffle; each backward level joins the level's
-    vertices to their predecessors and aggregates — O(depth) rounds total,
-    every frame localCheckpoint'ed so lineage stays flat.  δ sums are
+    small (that is the estimator's contract anyway).  The forward BFS runs
+    on `_fixpoint` over every (source, vertex) reached so far, tagged with
+    its depth, and stops when the cut's row count stops growing.  Each
+    forward level is one join+groupBy shuffle; each backward level joins
+    the level's vertices to their predecessors and aggregates — O(depth)
+    rounds total, every frame cut so lineage stays flat.  δ sums are
     float; the output is rounded to 6dp (σ ratios are exact small
     rationals, so 6dp is stable in practice, unlike raw last-bit floats).
 
@@ -2088,25 +2088,30 @@ def betweenness_centrality(edges: DataFrame, sources: list[int],
                                    F.col("src").alias("dst")))
     e = e.distinct().persist()
     try:
-        levels: list[DataFrame] = []
-        frontier = spark.createDataFrame(
-            [(int(s), int(s), 1.0) for s in sources],
-            "s long, v long, sigma double").localCheckpoint(eager=True)
-        seen = frontier.select("s", "v")
-        levels.append(frontier)
-        for _ in range(max_depth):
-            msgs = (frontier.join(e, frontier.v == e.src)
-                    .select("s", F.col("dst").alias("v"), "sigma"))
-            nxt = (msgs.groupBy("s", "v")
+        sizes = [len(sources)]  # row counts of the visited set's cuts
+
+        def _b(df: DataFrame) -> DataFrame:
+            return F.broadcast(df) if broadcast_fits(df, sizes[-1]) else df
+
+        def bfs(seen: DataFrame, i: int) -> DataFrame:
+            frontier = _b(seen.filter(F.col("depth") == i))
+            nxt = (frontier.join(e, frontier.v == e.src)
+                   .groupBy("s", F.col("dst").alias("v"))
                    .agg(F.sum("sigma").alias("sigma"))
-                   .join(seen, ["s", "v"], "left_anti")
-                   .localCheckpoint(eager=True))
-            if nxt.limit(1).count() == 0:
-                break
-            levels.append(nxt)
-            seen = (seen.unionByName(nxt.select("s", "v"))
-                    .localCheckpoint(eager=True))
-            frontier = nxt
+                   .join(_b(seen.select("s", "v")), ["s", "v"], "left_anti"))
+            return seen.unionByName(nxt.withColumn("depth", F.lit(i + 1)))
+
+        def nothing_new(ck: DataFrame, prev: DataFrame) -> bool:
+            sizes.append(_rows(ck))
+            return sizes[-1] == sizes[-2]
+
+        seen, depth, converged = _fixpoint(
+            bfs, spark.createDataFrame(
+                [(int(s), int(s), 1.0, 0) for s in sources],
+                "s long, v long, sigma double, depth int"),
+            max_depth, probe=nothing_new)
+        levels = [_b(seen.filter(F.col("depth") == d).drop("depth"))
+                  for d in range(depth if converged else depth + 1)]
         # backward dependency accumulation, deepest level first
         deltas: list[DataFrame] = [None] * len(levels)
         deltas[-1] = levels[-1].select(
@@ -2134,10 +2139,7 @@ def betweenness_centrality(edges: DataFrame, sources: list[int],
                                      F.coalesce("delta", F.lit(0.0))
                                      .alias("delta"))
                              .localCheckpoint(eager=True))
-        out = deltas[0]
-        for d in deltas[1:]:
-            out = out.unionByName(d)
-        return (out.filter(F.col("s") != F.col("v"))
+        return (_union(deltas).filter(F.col("s") != F.col("v"))
                 .groupBy(F.col("v").alias("id"))
                 .agg(F.round(F.sum("delta"), 6).alias("betweenness")))
     finally:
@@ -2161,32 +2163,37 @@ def random_walks(edges: DataFrame, start_ids: list[int], length: int,
 
     Plan: per step, one join of the O(#walks) frontier against the
     adjacency (frontier broadcasts; the edge side never shuffles) and one
-    tiny min_by aggregate per walk.  Step count is the iteration bound;
-    lineage is cut every few steps.  At 100 TB the edge side is the by-src
-    copy of the dual layout and each step stays co-located."""
+    tiny min_by aggregate per walk.  The steps run on `_fixpoint`, cut
+    lazily every 4th step; each step's frontier is a walk leg.  At 100 TB
+    the edge side is the by-src copy of the dual layout and each step
+    stays co-located."""
     spark = edges.sparkSession
     adj = edges.select(F.col("src").alias("cur"), F.col("dst").alias("nbr")).persist()
     try:
         seeds = [(i * walks_per_node + j, int(v), 0)
                  for i, v in enumerate(start_ids) for j in range(walks_per_node)]
-        frontier = spark.createDataFrame(seeds, "wid int, vertex long, step int")
-        out = frontier
-        for t in range(1, length + 1):
+        legs: list[DataFrame] = []
+
+        def walk(frontier: DataFrame, i: int) -> DataFrame:
+            legs.append(frontier)
+            t = i + 1
             choice = F.md5(F.concat_ws(
                 ":", F.col("wid").cast("string"), F.lit(str(t)),
                 F.col("nbr").cast("string"), F.lit(salt)))
-            frontier = (
+            return (
                 F.broadcast(frontier.select("wid", F.col("vertex").alias("cur")))
                 .join(adj, "cur")
                 .groupBy("wid")
                 .agg(F.min_by(F.col("nbr"), choice).alias("vertex"))
                 .select("wid", "vertex", F.lit(t).alias("step"))
             )
-            if t % 4 == 0:
-                frontier = frontier.localCheckpoint(eager=True)
-            out = out.unionByName(frontier)
+
+        last, _, _ = _fixpoint(
+            walk, spark.createDataFrame(seeds, "wid int, vertex long, step int"),
+            length, every=4)
         # materialize while the adjacency cache is alive (pagerank's rule)
-        return out.select("wid", "step", "vertex").localCheckpoint(eager=True)
+        return (_union(legs + [last]).select("wid", "step", "vertex")
+                .localCheckpoint(eager=True))
     finally:
         adj.unpersist()
 
@@ -2299,11 +2306,8 @@ def _ckpt(df: DataFrame, measure: Callable[[DataFrame], Any] | None = None
     (frame, value of that action).
 
     The action is `measure(ck)` over the lazy checkpoint when given — a
-    probe the caller needs anyway (connected_components' change count,
-    cc_star's edge-set signature, spanning_forest's moved count) — and
-    otherwise the JVM row count of the checkpoint RDD, so the caller gets
-    the exact row count for free (a DataFrame.count() over the lazy
-    checkpoint would plan an extra job).
+    `_fixpoint` probe or a count the caller needs anyway — and otherwise
+    `_rows`, so the caller gets the exact row count for free.
 
     Why the stats reset: localCheckpoint truncates lineage but copies the
     origin plan's size-in-bytes ESTIMATE into the LogicalRDD, so estimates
@@ -2329,11 +2333,24 @@ def _ckpt(df: DataFrame, measure: Callable[[DataFrame], Any] | None = None
     spark = df.sparkSession
     ck = df.localCheckpoint(eager=False)
     jdf = ck._jdf
-    rdd = jdf.queryExecution().toRdd()
-    value = measure(ck) if measure is not None else rdd.count()
+    value = measure(ck) if measure is not None else _rows(ck)
     fresh = spark._jsparkSession.internalCreateDataFrame(
-        rdd, jdf.schema(), False)
+        jdf.queryExecution().toRdd(), jdf.schema(), False)
     return DataFrame(fresh, spark), value
+
+
+def _rows(ck: DataFrame) -> int:
+    """Exact row count of a lazy checkpoint in its one materializing job:
+    the JVM count of the checkpoint RDD (a DataFrame.count() over it would
+    plan an aggregate, one job more).  `_ckpt`'s default action, and the
+    row-count probe of `_fixpoint` callers."""
+    return ck._jdf.queryExecution().toRdd().count()
+
+
+def _settled(ck: DataFrame, prev: DataFrame) -> bool:
+    """`_fixpoint` probe of the change-flag operators: True when no row of
+    the cut carries the `_chg` flag its last step set."""
+    return ck.filter(F.col("_chg")).count() == 0
 
 
 def _fixpoint(step: Callable[[DataFrame, int], DataFrame], state: DataFrame,
@@ -2345,21 +2362,25 @@ def _fixpoint(step: Callable[[DataFrame, int], DataFrame], state: DataFrame,
     returns (state, rounds run, whether the probe reported convergence).
 
     Every `every` rounds (never if falsy) the lineage is cut, lazy unless
-    probed.  Unprobed, the cut is `localCheckpoint(eager=False)`: nothing
-    reads the state between rounds, so the cuts ride the caller's final
-    action (pagerank's 10 rounds at checkpoint_every=2: 5 actions → 1);
-    such a cut keeps the inherited size estimate, so a step must not join
+    probed; a probed loop also cuts and probes its last round, so its
+    verdict covers the state it returns.  Unprobed, the cut is
+    `localCheckpoint(eager=False)`: nothing reads the state between
+    rounds, so the cuts ride the caller's final action (pagerank's 10
+    rounds at checkpoint_every=2: 5 actions → 1); such a cut keeps the inherited size estimate, so a step must not join
     two frames derived from its state (the estimate would square).
     Probed, the cut is `_ckpt` whose one action is `probe(cut, prev)` —
     `prev` being the previous probed cut, or the initial state at the
     first probe — and True stops the loop.  The probed cut carries no
-    inherited size estimate, so its joins ask `broadcast_fits`.  Callers
+    inherited size estimate, so its joins ask `broadcast_fits`.  A step
+    with side outputs (walk legs, assigned vertices) takes them from the
+    state it is handed — the cut, when the previous round was cut — so
+    they read materialized rows instead of replaying the round.  Callers
     that persisted inputs end with one `localCheckpoint(eager=True)`
     before releasing them."""
     prev = state
     for i in range(rounds):
         state = step(state, i)
-        if not every or (i + 1) % every:
+        if not every or ((i + 1) % every and (probe is None or i + 1 < rounds)):
             continue
         if probe is None:
             state = state.localCheckpoint(eager=False)
@@ -2369,6 +2390,11 @@ def _fixpoint(step: Callable[[DataFrame, int], DataFrame], state: DataFrame,
             return state, i + 1, True
         prev = state
     return state, rounds, False
+
+
+def _union(frames: list[DataFrame]) -> DataFrame:
+    """unionByName of the frames in order: an operator's side-output legs."""
+    return reduce(lambda a, b: a.unionByName(b), frames)
 
 
 def _within(tol: float, *cols: str) -> Callable[[DataFrame, DataFrame], bool]:
@@ -2428,10 +2454,8 @@ def spanning_forest(weighted_edges: DataFrame, max_rounds: int = 16,
     is UNIQUE and both engines converge to the same edge set); selected
     edges join the forest; the component-pointer graph they induce (each
     component points at the neighbor its chosen edge reaches) is contracted
-    by pointer doubling.  r11: the pick is ONE min_by aggregation over the
-    doubled edge list (full payload rides the shuffle) — the old shape
-    aggregated min(key) per component and re-joined the edge set by
-    string key, a second |ed|-scale shuffle every round.  The
+    by pointer doubling.  The pick is ONE min_by aggregation over the
+    doubled edge list (full payload rides the shuffle).  The
     per-component root table broadcasts while it passes `broadcast_fits`:
     within the budget the pointer-doubling self-joins and the relabel's
     two edge-side joins are broadcast hash joins — the shrinking edge set
@@ -2441,8 +2465,7 @@ def spanning_forest(weighted_edges: DataFrame, max_rounds: int = 16,
     cycles are mutual pairs, whose smaller id becomes the new root — the
     textbook invariant.
 
-    Orchestration (r8 — cuts the driver-probe constant measured at sf1):
-    the live state is the RELABELED cross-edge set itself — after each
+    Orchestration: the live state is the RELABELED cross-edge set — after each
     contraction the edges are rewritten to their component endpoints,
     intra-component edges dropped, and parallel edges between the same
     component pair deduped to the minimum-priority one (safe by the cut
@@ -2450,16 +2473,10 @@ def spanning_forest(weighted_edges: DataFrame, max_rounds: int = 16,
     the forest while they are separate, and is intra once they merge).
     So the per-round joins run over a GEOMETRICALLY SHRINKING edge set,
     never the full input; the original (u, v, weight) ride along as
-    payload.  r11 action budget (VERDICT r10 #9): every probe rides the
-    frame's own materializing job — the edge set's emptiness check is
-    the row count of its checkpoint (`_ckpt`), and each pointer-doubling
-    step's moved-count rides its checkpoint job (`_ckpt`'s measure), so
-    the doubling loop exits at the EXACT fixpoint step with zero extra
-    jobs (previously it probed every 3rd step as a separate job and
-    overshot); moved == 0 remains the convergence certificate.  The min-edge selection is a lazy
-    checkpoint materialized by the pointer-root job that consumes it.
-    Accumulators are unions of per-round checkpointed deltas, never
-    re-checkpointed cumulative frames.
+    payload.  The rounds run on `_fixpoint`, probed by the cut's row
+    count; each round's pointer doubling runs on it too, probed by its
+    `_chg` (moved) flag, so it exits at the exact fixpoint step.  The
+    forest is the union of the per-round selections.
 
     Scale: per-round work is keyed aggregations over the shrinking
     cross-edge set plus log-depth pointer doubling over one row PER
@@ -2485,18 +2502,10 @@ def spanning_forest(weighted_edges: DataFrame, max_rounds: int = 16,
                 "u", "v", "weight", "kw")
     )
     forest_legs: list[DataFrame] = []
-    done = False
-    prev_n_root: int | None = None
-    for _ in range(max_rounds):
-        if n_ed == 0:
-            done = True
-            break
-        # each component's minimum-priority incident cross edge in ONE
-        # aggregation (r11): min_by over the doubled edge list carrying
-        # the full payload — the old shape aggregated (c, key) then
-        # re-joined the edge set BY STRING KEY, a second |ed|-scale
-        # shuffle every round; map-side partial min_by keeps one
-        # candidate per component per partition
+
+    def boruvka(ed: DataFrame, i: int) -> DataFrame:
+        # each component's minimum-priority incident cross edge; map-side
+        # partial min_by keeps one candidate per component per partition
         doubled = (ed.select(F.col("cu").alias("c"),
                              "cu", "cv", "u", "v", "weight", "kw")
                    .unionByName(ed.select(F.col("cv").alias("c"),
@@ -2516,17 +2525,11 @@ def spanning_forest(weighted_edges: DataFrame, max_rounds: int = 16,
             F.when(F.col("cu") == F.col("c"), F.col("cv"))
              .otherwise(F.col("cu")).alias("p"))
         # break mutual pairs: the smaller id of a 2-cycle roots itself.
-        # r11 (guide §3.1): both sides are COMPONENT-scale, but sel is a
-        # lazy checkpoint carrying default stats, so this left join
-        # planned SortMergeJoin every round (the one residual SMJ in the
-        # captured round plans).  The exact n_root isn't known yet (it
-        # rides this join's own count), so the guard bound is the
-        # PREVIOUS round's n_root — components only shrink — with
-        # 2·n_ed as the sound round-1 fallback (every live component
-        # has ≥1 incident cross edge); past the guard the SMJ stands.
-        pair_bound = prev_n_root if prev_n_root is not None else 2 * n_ed
+        # Both sides are component-scale; the component count rides this
+        # join's own job, so the guard bound is 2·n_ed (every live
+        # component has ≥1 incident cross edge).
         other = ptr.select(F.col("c").alias("p"), F.col("p").alias("back"))
-        if broadcast_fits(other, pair_bound):
+        if broadcast_fits(other, 2 * n_ed):
             other = F.broadcast(other)
         root, n_root = _ckpt(
             ptr.join(other, "p", "left")
@@ -2535,31 +2538,21 @@ def spanning_forest(weighted_edges: DataFrame, max_rounds: int = 16,
                 F.when((F.col("back") == F.col("c")) & (F.col("c") < F.col("p")),
                        F.col("c")).otherwise(F.col("p")).alias("p"))
         )
-        prev_n_root = n_root
-        # broadcast-under-guard (greedy_coloring's posture, r11): root is
-        # one row PER COMPONENT, so up to the guard it ships to every task
-        # and the doubling/relabel joins stop shuffling the (much larger)
-        # edge set; past the guard (a 100×-scale first round) the shuffle
-        # plans below run unchanged.  n_root rides the root job's own
-        # count (_ckpt).
+
+        # root is one row PER COMPONENT: under the guard it ships to every
+        # task and the doubling/relabel joins never shuffle the edge set
         def _b(df: DataFrame) -> DataFrame:
             return F.broadcast(df) if broadcast_fits(df, n_root) else df
 
-        converged = False
-        for s in range(1, jump_steps + 1):
+        def double(root: DataFrame, s: int) -> DataFrame:
             hop = _b(root.select(F.col("c").alias("p"),
                                  F.col("p").alias("pp")))
-            # the moved-count probe rides the step's own materializing
-            # job (r11) — exact exit at the fixpoint step, no extra jobs
-            stepped, moved = _ckpt(
-                root.join(hop, "p", "left")
-                .select("c", F.coalesce("pp", "p").alias("p"),
-                        (F.col("pp") != F.col("p")).alias("moved")),
-                lambda ck: ck.filter(F.col("moved")).count())
-            root = stepped.select("c", "p")
-            if moved == 0:
-                converged = True
-                break
+            return (root.join(hop, "p", "left")
+                    .select("c", F.coalesce("pp", "p").alias("p"),
+                            (F.col("pp") != F.col("p")).alias("_chg")))
+
+        root, _, converged = _fixpoint(double, root, jump_steps,
+                                       probe=_settled)
         if not converged:
             raise RuntimeError(
                 "spanning_forest: pointer doubling did not reach the roots "
@@ -2575,21 +2568,24 @@ def spanning_forest(weighted_edges: DataFrame, max_rounds: int = 16,
                     "u", "v", "weight", "kw")
             .filter(F.col("a") != F.col("b"))
         )
-        ed, n_ed = _ckpt(
-            relab
-            .groupBy(F.least("a", "b").alias("cu"),
-                     F.greatest("a", "b").alias("cv"))
-            .agg(F.min_by(F.struct("u", "v", "weight", "kw"),
-                          pr).alias("e"))
-            .select("cu", "cv", "e.u", "e.v", "e.weight", "e.kw")
-        )
-    if not done and n_ed != 0:
+        return (relab
+                .groupBy(F.least("a", "b").alias("cu"),
+                         F.greatest("a", "b").alias("cv"))
+                .agg(F.min_by(F.struct("u", "v", "weight", "kw"),
+                              pr).alias("e"))
+                .select("cu", "cv", "e.u", "e.v", "e.weight", "e.kw"))
+
+    def no_cross_edge(ck: DataFrame, prev: DataFrame) -> bool:
+        nonlocal n_ed
+        n_ed = _rows(ck)
+        return n_ed == 0
+
+    _fixpoint(boruvka, ed, max_rounds if n_ed else 0, probe=no_cross_edge)
+    if n_ed != 0:
         raise RuntimeError(
             f"spanning_forest: not converged in {max_rounds} rounds")
-    forest = spark.createDataFrame([], "u long, v long, weight double")
-    for leg in forest_legs:
-        forest = forest.unionByName(leg)
-    return forest
+    return _union([spark.createDataFrame([], "u long, v long, weight double")]
+                  + forest_legs)
 
 
 def maximal_independent_set(edges: DataFrame,
@@ -2606,14 +2602,13 @@ def maximal_independent_set(edges: DataFrame,
     (Luby's lemma), so O(log n) rounds — each round two keyed aggregations
     over the ACTIVE subgraph only, which collapses geometrically.
 
-    Orchestration (r8): the MIS accumulator is a union of per-round
-    checkpointed DELTAS (each round's sel), never a re-checkpointed
-    cumulative frame — the growing O(|mis|) rewrite per round is gone.
-    `sel` itself stays eagerly checkpointed: the adj⋈sel neighbor-drop
-    join needs sel's REAL size (a filter derived from a _ckpt frame
-    would carry defaultSizeInBytes and silently lose the broadcast,
-    turning the drop join into a full adjacency shuffle — measured 1.5×
-    regression at sf1).
+    Orchestration: the rounds run on `_fixpoint` over the active set,
+    probed by the cut's row count, which also bounds the next round's
+    broadcasts.  The MIS is the union of each round's `sel`, a `_ckpt`
+    cut of its own.  Like every `_ckpt` frame it carries no size
+    estimate, so the adj⋈sel neighbor-drop join broadcasts it only
+    through `_b` → `broadcast_fits` under the active count; past the
+    budget that join shuffles.
 
     Never-wrong contract: raises RuntimeError if the active set is not
     empty after max_rounds — a prefix of an MIS is not an MIS.
@@ -2622,46 +2617,30 @@ def maximal_independent_set(edges: DataFrame,
     value-checkable)."""
     und = _undirected_simple(edges)
     adj, _ = _ckpt(_symmetric(und, "u", "v"))
-    prio = F.concat_ws(
-        ":", F.md5(F.col("id").cast("string")),
-        F.lpad(F.col("id").cast("string"), 12, "0"))
-    # r11 (guide §1.2 action budget): the active set's row count rides its
-    # own checkpoint-materializing job (_ckpt), so the per-round emptiness
-    # test is a driver-side integer compare instead of a separate
-    # isEmpty() action — one fewer job per round.
+
+    def prio(c: str) -> Column:
+        return F.concat_ws(":", F.md5(F.col(c).cast("string")),
+                           F.lpad(F.col(c).cast("string"), 12, "0"))
+
     active, n_act = _ckpt(
         adj.select(F.col("a").alias("id")).distinct()
-        .withColumn("prio", prio)
-    )
+        .withColumn("prio", prio("id")))
     spark = edges.sparkSession
     mis_legs: list[DataFrame] = []
-    done = False
-    for t in range(1, max_rounds + 1):
-        if n_act == 0:
-            done = True
-            break
-        # r11 (guide §3.1): `active`/`sel`/`dropped`/`min_nb` are
-        # vertex-scale and n_act (a sound bound on each) rides the round's
-        # own checkpoint count, so the broadcast decision costs no extra
-        # action; _ckpt frames carry default (huge) stats, so without the
-        # explicit hint every one of these joins shuffled the EDGE-scale
-        # adjacency (SortMergeJoin in the captured round plans).  The
-        # guard sizes each frame by its own schema (`broadcast_fits`), so
-        # min_nb's prio string counts against the budget.  r12 (ADVICE
-        # r11, guide §2.3 "keys, not payloads"): the b-side broadcast
-        # carries BARE ids and prio_b is recomputed probe-side (prio is a
-        # pure function of the id — identical strings, codegen'd md5 per
-        # probe row instead of 6× the broadcast bytes).
-        def _b(df: DataFrame) -> DataFrame:
-            return F.broadcast(df) if broadcast_fits(df, n_act) else df
 
-        prio_b = F.concat_ws(
-            ":", F.md5(F.col("b").cast("string")),
-            F.lpad(F.col("b").cast("string"), 12, "0"))
+    # `active`/`sel`/`dropped`/`min_nb` are vertex-scale and n_act bounds
+    # each; the guard sizes each frame by its own schema, so min_nb's prio
+    # string counts against the budget.  The b-side broadcast carries
+    # BARE ids and prio_b is recomputed probe-side (a pure function of the
+    # id), not shipped.
+    def _b(df: DataFrame) -> DataFrame:
+        return F.broadcast(df) if broadcast_fits(df, n_act) else df
+
+    def luby(active: DataFrame, i: int) -> DataFrame:
         act_nb = (
             adj.join(_b(active.select(F.col("id").alias("a"))), "a")
             .join(_b(active.select(F.col("id").alias("b"))), "b")
-            .withColumn("prio_b", prio_b)
+            .withColumn("prio_b", prio("b"))
         )
         min_nb = act_nb.groupBy("a").agg(F.min("prio_b").alias("mn"))
         sel, _ = _ckpt(
@@ -2669,20 +2648,24 @@ def maximal_independent_set(edges: DataFrame,
             .filter(F.col("mn").isNull() | (F.col("prio") < F.col("mn")))
             .select("id")
         )
-        mis_legs.append(sel.select("id", F.lit(t).alias("round")))
+        mis_legs.append(sel.select("id", F.lit(i + 1).alias("round")))
         dropped = sel.unionByName(
             adj.join(_b(sel.withColumnRenamed("id", "a")), "a")
             .select(F.col("b").alias("id"))).distinct()
-        active, n_act = _ckpt(
-            active.join(_b(dropped), "id", "left_anti"))
-    if not done and n_act != 0:
+        return active.join(_b(dropped), "id", "left_anti")
+
+    def emptied(ck: DataFrame, prev: DataFrame) -> bool:
+        nonlocal n_act
+        n_act = _rows(ck)
+        return n_act == 0
+
+    _fixpoint(luby, active, max_rounds if n_act else 0, probe=emptied)
+    if n_act != 0:
         raise RuntimeError(
             f"maximal_independent_set: active set nonempty after "
             f"{max_rounds} rounds")
-    mis = spark.createDataFrame([], "id long, round int")
-    for leg in mis_legs:
-        mis = mis.unionByName(leg)
-    return mis
+    return _union([spark.createDataFrame([], "id long, round int")]
+                  + mis_legs)
 
 
 def greedy_coloring(edges: DataFrame, max_rounds: int = 40,
@@ -2857,6 +2840,7 @@ def node2vec_walks(edges: DataFrame, start_ids: list[int], length: int,
     it is repartition-persisted on the join key once, so each step's
     flag join shuffles only the tiny candidate side and reuses the
     cached partitioning.  Broadcast is used only for the frontier side.
+    The steps run on `_fixpoint` as in `random_walks`.
 
     Returns (wid, step, vertex), step 0 = seed."""
     if p <= 0 or q <= 0:
@@ -2882,10 +2866,11 @@ def node2vec_walks(edges: DataFrame, start_ids: list[int], length: int,
     try:
         seeds = [(i * walks_per_node + j, int(v), 0)
                  for i, v in enumerate(start_ids) for j in range(walks_per_node)]
-        frontier = spark.createDataFrame(seeds, "wid int, vertex long, step int") \
-            .withColumn("prev", F.lit(None).cast("long"))
-        out = frontier.select("wid", "step", "vertex")
-        for t in range(1, length + 1):
+        legs: list[DataFrame] = []
+
+        def walk(frontier: DataFrame, i: int) -> DataFrame:
+            legs.append(frontier.select("wid", "step", "vertex"))
+            t = i + 1
             h = F.conv(F.substring(F.md5(F.concat_ws(
                 ":", F.col("wid").cast("string"), F.lit(str(t)),
                 F.col("nbr").cast("string"), F.lit(salt))), 1, 12), 16, 10) \
@@ -2912,16 +2897,18 @@ def node2vec_walks(edges: DataFrame, start_ids: list[int], length: int,
                 .withColumn("_a", alpha)
             )
             cand = cand.withColumn("_prio", prio)
-            frontier = (
+            return (
                 cand.groupBy("wid")
                 .agg(F.min_by(F.col("nbr"), F.col("_prio")).alias("vertex"),
                      F.min("cur").alias("prev"))
                 .select("wid", "vertex", F.lit(t).alias("step"), "prev")
             )
-            if t % 4 == 0:
-                frontier = frontier.localCheckpoint(eager=True)
-            out = out.unionByName(frontier.select("wid", "step", "vertex"))
-        return out.localCheckpoint(eager=True)
+
+        last, _, _ = _fixpoint(
+            walk, spark.createDataFrame(seeds, "wid int, vertex long, step int")
+            .withColumn("prev", F.lit(None).cast("long")), length, every=4)
+        return (_union(legs + [last.select("wid", "step", "vertex")])
+                .localCheckpoint(eager=True))
     finally:
         adj.unpersist()
         undp.unpersist()

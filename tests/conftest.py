@@ -42,7 +42,6 @@ _SLOW_TESTS = {
     "test_graph_ops.py::test_diameter_double_sweep",
     "test_similarity.py::test_contrastive_mining_index_path_equals_inline",
     "test_property.py::test_heavy_hitters_matches_exact_model",
-    "test_graph_ops.py::test_spanning_forest_matches_kruskal_random",
 }
 
 

@@ -195,7 +195,8 @@ def test_fixpoint_driver_contract(spark):
     round and the round count is reported; the first probe sees the
     initial state as `prev`; a probed cut costs exactly the probe's own
     jobs; unprobed lazy cuts submit fewer jobs than eager ones and give
-    the same rows."""
+    the same rows; a step is handed the cut (a LogicalRDD scan); a
+    row-count probe costs one job; a probed loop probes its last round."""
     start = spark.range(0, 50, 1, 2).select("id", F.lit(0).alias("v"))
 
     def vmax(df):
@@ -238,6 +239,69 @@ def test_fixpoint_driver_contract(spark):
     eager_jobs, eager_rows = run(eager)
     assert lazy_jobs < eager_jobs
     assert lazy_rows == eager_rows and lazy_rows[0]["v"] == 3
+
+    # a step's side outputs come from the state it is handed: after a
+    # probed round that state is the cut, planned as a bare RDD scan
+    handed = []
+
+    def recording_step(df, i):
+        handed.append(df)
+        return df.select("id", (F.col("v") + 1).alias("v"))
+
+    jobs = jobs_since(spark)
+    out, rounds, converged = analytics._fixpoint(
+        recording_step, start, 3,
+        probe=lambda ck, prev: analytics._rows(ck) < 0)
+    assert (rounds, converged) == (3, False)
+    # a row-count probe is the cut's one job
+    assert jobs() == 3
+    assert handed[0] is start
+    for df in handed[1:] + [out]:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        assert plan.getClass().getSimpleName() == "LogicalRDD"
+    assert [vmax(df) for df in handed + [out]] == [0, 1, 2, 3]
+
+    # a probed loop also probes its last round, off the `every` grid
+    probed = []
+    _, rounds, converged = analytics._fixpoint(
+        lambda df, i: df.select("id", (F.col("v") + 1).alias("v")),
+        start, 5, every=2,
+        probe=lambda ck, prev: probed.append(vmax(ck)) or vmax(ck) == 5)
+    assert probed == [2, 4, 5]
+    assert (rounds, converged) == (5, True)
+
+
+def test_iteration_ports_job_counts(spark):
+    """SCC, k_truss and betweenness run their rounds on `_fixpoint`: each
+    probe rides its cut's one job, so a small ring-plus-DAG SCC, a K4
+    truss and a 3-path betweenness stay at these job counts (the hand
+    loops, with a separate probe action per round, submitted 103, 35 and
+    47)."""
+    def run(op):
+        jobs = jobs_since(spark)
+        rows = sorted(tuple(r) for r in op().collect())
+        return jobs(), rows
+
+    ring = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 0), (2, 10), (10, 11), (12, 0)],
+        "src long, dst long")
+    jobs, rows = run(lambda: analytics.strongly_connected_components(ring))
+    assert rows == [(0, 0), (1, 0), (2, 0), (10, 10), (11, 11), (12, 12)]
+    assert jobs <= 50
+
+    k4 = spark.createDataFrame(
+        [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
+         (4, 5), (5, 6), (6, 7), (7, 8), (6, 8)], "src long, dst long")
+    jobs, rows = run(lambda: analytics.k_truss(k4, k=4))
+    assert rows == [(1, 2, 2), (1, 3, 2), (1, 4, 2), (2, 3, 2), (2, 4, 2),
+                    (3, 4, 2)]
+    assert jobs <= 31
+
+    path = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    jobs, rows = run(
+        lambda: analytics.betweenness_centrality(path, [1, 2, 3]))
+    assert rows == [(1, 0.0), (2, 2.0), (3, 0.0)]
+    assert jobs <= 30
 
 
 def test_k_hop_shuffle_fallback_matches_broadcast(tiny, no_broadcast):
