@@ -1107,16 +1107,23 @@ _register("g_walks", _g_walks, _walks_sql())
 #    p/q-tunable generalization — candidate priority = H48 DIV the scaled
 #    bias weight (integer quotient in BOTH engines; a double quotient can
 #    round across the truncation boundary), ties on the neighbor id.
-#    p=4, q=0.25 = exploration-biased (DFS-ish), visibly different
-#    trajectories from the uniform walks on the same seeds. ----------------
+#    p=4, q=0.25 = exploration-biased (DFS-ish).  The walks run on the
+#    symmetric edge view: the directed edges form a DAG, on which no
+#    candidate is ever the return vertex or a neighbour of the previous
+#    vertex, so the bias would never apply and the rows would equal
+#    g_walks'.  On the symmetric view both cases occur, and the rows differ
+#    from random_walks' on the same view and seeds. ------------------------
 
 _N2V_P, _N2V_Q = 4.0, 0.25
 
 
 def _g_n2v_walks(spark: SparkSession, sf: str) -> DataFrame:
-    edges = GraphStore(spark, sf).edges()
+    e = GraphStore(spark, sf).edges()
+    sym = e.select("src", "dst").unionByName(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct()
     return analytics.node2vec_walks(
-        edges, list(_WALK_SEEDS), _WALK_LEN, p=_N2V_P, q=_N2V_Q,
+        sym, list(_WALK_SEEDS), _WALK_LEN, p=_N2V_P, q=_N2V_Q,
         walks_per_node=_WALKS_PER)
 
 
@@ -1126,8 +1133,10 @@ def _n2v_sql() -> str:
     seeds = ", ".join(
         f"({i * _WALKS_PER + j}, {v})"
         for i, v in enumerate(_WALK_SEEDS) for j in range(_WALKS_PER))
+    # `sym` is the symmetric edge view the walks run on; it is also the
+    # undirected pair set of the distance-1 test (symmetric already)
     ctes = [
-        "undp AS MATERIALIZED (SELECT src AS pa, dst AS pb FROM edges "
+        "sym AS MATERIALIZED (SELECT src, dst FROM edges "
         "UNION SELECT dst, src FROM edges)",
         f"n0 AS (SELECT wid, vertex, CAST(NULL AS BIGINT) AS prev "
         f"FROM (VALUES {seeds}) AS s(wid, vertex))",
@@ -1138,7 +1147,7 @@ def _n2v_sql() -> str:
                f"AS UBIGINT) AS BIGINT)")
         alpha = (f"CASE WHEN w.prev IS NULL THEN 1000000 "
                  f"WHEN e.dst = w.prev THEN {ret_w} "
-                 f"WHEN u.pa IS NOT NULL THEN 1000000 "
+                 f"WHEN u.src IS NOT NULL THEN 1000000 "
                  f"ELSE {far_w} END")
         # width 15: H48 max is 2^48-1 = 15 digits; a 12-wide lpad would
         # TRUNCATE quotients above 12 digits (divisor 1 when alpha rounds
@@ -1148,8 +1157,8 @@ def _n2v_sql() -> str:
         ctes.append(
             f"n{t} AS (SELECT w.wid, arg_min(e.dst, {prio}) AS vertex, "
             f"MIN(w.vertex) AS prev "
-            f"FROM n{t-1} w JOIN edges e ON e.src = w.vertex "
-            f"LEFT JOIN undp u ON u.pa = w.prev AND u.pb = e.dst "
+            f"FROM n{t-1} w JOIN sym e ON e.src = w.vertex "
+            f"LEFT JOIN sym u ON u.src = w.prev AND u.dst = e.dst "
             f"GROUP BY w.wid)")
     selects = "\nUNION ALL\n".join(
         f"SELECT CAST(wid AS INTEGER) AS wid, CAST({t} AS INTEGER) AS step, "

@@ -13,8 +13,11 @@ single-pass protocol cannot distinguish that from a plan regression.  Fixes:
   samples run interleaved around the query series (T S1 T S2 T S3 T); the
   JSON reports each probe's samples, median, the calibration recorded in
   BENCH_TWIN.json, and a `reference_drift` flag when any probe's median
-  moved >30% from calibration — a flagged round's query deltas are machine
-  state until proven otherwise.
+  left the band stated at `DRIFT_TOLERANCE` — a flagged round's query
+  deltas are machine state until proven otherwise.  The same twin
+  certificate (warm-up, isolated timer, twin sampler, drift rule, artifact
+  writer with its `box` block) is defined once below the frozen probes and
+  used by tools/recalibrate_twins.py and the tools/*_sf1.py sidecars.
 * **Median-of-3 + dispersion**: the isolated series runs three times
   interleaved with the twin; "queries" reports per-query medians and
   "dispersion" the min/max spread, so every number carries its error bar.
@@ -40,11 +43,12 @@ single pass); queries/value is cold-cache isolated (clearCache+GC per
 query), the MEDIAN of 3 series interleaved T S T S T S T with the pinned
 twin; dispersion is the per-query min/max across the 3 runs; pinned_twin
 probes measure THE MACHINE — reference_drift=true means a probe median
-moved >30% from BENCH_TWIN.json calibration and cross-round query deltas
-are suspect; queries_layout / queries_layout_plain run the same graph
-shapes on the dual bucketed layout vs a pre-materialized plain copy (both
-pay read+join only); steady_state is min-of-2 warm repeats of the
-iterative flagship.
+left the `DRIFT_TOLERANCE` band around its BENCH_TWIN.json calibration and
+cross-round query deltas are suspect; box names the machine (resolved
+master, defaultParallelism, $SPARK_GRAFT_CPUS, SF dir); queries_layout /
+queries_layout_plain run the same graph shapes on the dual bucketed layout
+vs a pre-materialized plain copy (both pay read+join only); steady_state
+is min-of-2 warm repeats of the iterative flagship.
 """
 
 from __future__ import annotations
@@ -60,8 +64,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from hugegraph_on_tikv_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-TWIN_FILE = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "BENCH_TWIN.json")
+REPO = os.path.dirname(os.path.abspath(__file__))
+TWIN_FILE = os.path.join(REPO, "BENCH_TWIN.json")
 
 # headline subset: one per operator family — scans, aggregation, join-heavy,
 # graph traversal, graph analytics, windows, text/dedup, similarity.
@@ -84,6 +88,16 @@ HEADLINERS = [
 # (the vectorized twin sat at exact parity), and the two paths are pinned
 # result-equal by tests/test_similarity.py::test_vectorized_equals_expression_topk.
 EXTRAS = ["dedup_minhash_lsh", "sim_cosine_topk", "g_pagerank"]
+
+# sf1-scale sidecar artifacts embedded into BENCH_FULL.json when present
+# (each written by the tools/ script of the same name, lower-cased)
+SIDECARS = {
+    "layout_sf1": "LAYOUT_SF1.json",
+    "ann_sf1": "ANN_SF1.json",
+    "dedup_sf1": "DEDUP_SF1.json",
+    "graph_sf1": "GRAPH_SF1.json",
+    "graph_sf1_skew": "GRAPH_SF1_SKEW.json",
+}
 
 
 # ---------------------------------------------------------------------------
@@ -131,7 +145,138 @@ _TWIN_PROBES = {
     "twin_iter": _twin_iter,
 }
 
-DRIFT_TOLERANCE = 0.30  # ±30% on any probe median ⇒ reference_drift
+
+# ---------------------------------------------------------------------------
+# The twin certificate, shared by main() below, tools/recalibrate_twins.py
+# and the tools/*_sf1.py sidecars: one warm-up, one isolated timer, one twin
+# sampler, one drift rule and one artifact writer.
+# ---------------------------------------------------------------------------
+
+# reference_drift: some probe's median divided by its BENCH_TWIN.json
+# calibration lies outside [1 - t, 1 / (1 - t)] = [0.70, 1.43].  Only a
+# calibration recorded at this SF_DIR is compared against.
+DRIFT_TOLERANCE = 0.30
+
+
+def _med(xs: list[float]) -> float:
+    return round(statistics.median(xs), 3)
+
+
+def run_timed(thunk) -> float:
+    """Seconds to build thunk()'s DataFrame and write it to the noop sink:
+    full materialization of every column (a bare count() would let
+    Catalyst prune the scan down to row counting)."""
+    t0 = time.perf_counter()
+    thunk().write.format("noop").mode("overwrite").save()
+    return round(time.perf_counter() - t0, 3)
+
+
+def run_isolated(spark, thunk) -> float:
+    """`run_timed` after dropping persisted intermediates and nudging a
+    full GC, so the measurement neither pays for nor profits from earlier
+    work's cache/heap state (stale localCheckpoint blocks are only freed
+    by the ContextCleaner after GC notices they're unreferenced)."""
+    spark.catalog.clearCache()
+    spark.sparkContext._jvm.System.gc()
+    return run_timed(thunk)
+
+
+def twin_pass(spark, tag: str) -> dict[str, float]:
+    """One isolated sample of every pinned twin probe."""
+    out = {}
+    for pname, pfn in _TWIN_PROBES.items():
+        out[pname] = run_isolated(spark, lambda: pfn(spark, SF_DIR))
+        print(f"# twin[{tag}] {pname}: {out[pname]}s", file=sys.stderr)
+    return out
+
+
+def twin_median(spark, tag: str) -> dict[str, float]:
+    """Per-probe median of three twin passes."""
+    passes = [twin_pass(spark, tag) for _ in range(3)]
+    return {p: _med([ps[p] for ps in passes]) for p in passes[0]}
+
+
+def warm_up(spark) -> None:
+    """Session + JIT warm-up before anything is timed: the iterative
+    join/agg shape once on a toy graph (first compilation of the codegen
+    paths measured ~2x on the iterative queries; a long-lived cluster is
+    always past it), then two untimed twin passes (a cold probe measures
+    compiler and footer-cache state: pass 0 ran ~5x, pass 1 still ~1.5x
+    its steady time)."""
+    from pyspark.sql import functions as F
+
+    from hugegraph_on_tikv_spark.operators.analytics import pagerank
+
+    spark.range(1).count()
+    toy = spark.range(200).select(
+        F.col("id").alias("src"), ((F.col("id") * 7 + 1) % 200).alias("dst"))
+    run_timed(lambda: pagerank(toy, iterations=4, checkpoint_every=2))
+    for _ in range(2):
+        twin_pass(spark, "warm-up")
+    spark.catalog.clearCache()
+
+
+def settle(spark) -> None:
+    """Before re-sampling the twins after a heavy workload: let the
+    ContextCleaner drain its checkpoint/broadcast garbage, then run one
+    throwaway catch-up pass."""
+    for _ in range(3):
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(15)
+    twin_pass(spark, "settle")
+
+
+def load_calibration() -> dict:
+    """The BENCH_TWIN.json document, or {} when there is none."""
+    if not os.path.exists(TWIN_FILE):
+        return {}
+    with open(TWIN_FILE) as f:
+        return json.load(f)
+
+
+def twin_drift(medians: dict[str, float],
+               calibration: dict) -> tuple[dict[str, float], bool]:
+    """(ratio of each twin median to its calibration, reference_drift).
+    Keys of `medians` are probe names, optionally prefixed "<tag>."; the
+    ratios keep those keys.  The flag is the `DRIFT_TOLERANCE` band; a
+    calibration from another SF_DIR yields no ratios and no flag."""
+    cal = (calibration.get("medians", {})
+           if calibration.get("sf_dir") == SF_DIR else {})
+    ratios: dict[str, float] = {}
+    drift = False
+    for key, m in medians.items():
+        c = cal.get(key.rsplit(".", 1)[-1])
+        if c:
+            ratios[key] = round(m / c, 3)
+            drift |= not (1 - DRIFT_TOLERANCE <= m / c
+                          <= 1 / (1 - DRIFT_TOLERANCE))
+    return ratios, drift
+
+
+def box(spark) -> dict:
+    """Which machine produced an artifact."""
+    sc = spark.sparkContext
+    return {"master": sc.master,
+            "default_parallelism": sc.defaultParallelism,
+            "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS"),
+            "sf_dir": SF_DIR}
+
+
+def write_artifact(spark, name: str, doc: dict,
+                   twins: dict[str, dict[str, float]] | None = None) -> None:
+    """Write `doc` to <repo>/`name`, stamped with its `box`.  Sidecars pass
+    `twins` ({"before": twin_median, "after": twin_median}) to add the twin
+    certificate: twin_runs, twin_ratios_vs_calibration, reference_drift."""
+    if twins is not None:
+        ratios, drift = twin_drift(
+            {f"{tag}.{p}": m for tag, tw in twins.items()
+             for p, m in tw.items()}, load_calibration())
+        doc.update(twin_runs=twins, twin_ratios_vs_calibration=ratios,
+                   reference_drift=drift)
+    doc["box"] = box(spark)
+    with open(os.path.join(REPO, name), "w") as f:
+        json.dump(doc, f, indent=1)
+        f.write("\n")
 
 
 def main() -> None:
@@ -139,19 +284,9 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     spark = get_spark("hugegraph-on-tikv-spark-bench")
-    # Session + JIT warm-up: run the iterative join/agg shape once on a toy
-    # graph so headline numbers measure steady-state plan execution, not the
-    # JVM's first-compilation of the codegen paths (measured ~2x on the
-    # iterative queries).  A long-lived cluster is always in this regime.
-    spark.range(1).count()
+    warm_up(spark)
 
     from hugegraph_on_tikv_spark.operators.analytics import pagerank
-
-    toy = spark.range(200).select(
-        F.col("id").alias("src"), ((F.col("id") * 7 + 1) % 200).alias("dst")
-    )
-    pagerank(toy, iterations=4, checkpoint_every=2).write.format("noop").mode("overwrite").save()
-    spark.catalog.clearCache()
 
     # bench individual operators from the pre-fusion registry (queries()
     # exports tagged-union fusions sized for the driver's correctness cap;
@@ -162,28 +297,13 @@ def main() -> None:
         if extra in qs and extra not in names:
             names.append(extra)
 
-    def run_plain(fn) -> float:
-        t0 = time.perf_counter()
-        df = fn(spark, SF_DIR)
-        # noop sink: full materialization of every column (a bare count()
-        # would let Catalyst prune the scan down to row counting)
-        df.write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 3)
-
-    def run_isolated(fn) -> float:
-        # drop persisted intermediates (pagerank state, shingle sets,
-        # adjacency projections) and nudge a full GC so this query doesn't
-        # pay or profit from earlier queries' cache/heap state (stale
-        # localCheckpoint blocks are only freed by the ContextCleaner after
-        # GC notices they're unreferenced)
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-        return run_plain(fn)
+    def query(fn):
+        return lambda: fn(spark, SF_DIR)
 
     # ---- round-1-comparable shared-cache pass (FIRST, after warm-up) ------
     shared: dict[str, float] = {}
     for name in names:
-        shared[name] = run_plain(qs[name])
+        shared[name] = run_timed(query(qs[name]))
         print(f"# shared {name}: {shared[name]}s", file=sys.stderr)
 
     # ---- layout + plain-copy materialization (timed, outside the series) --
@@ -273,68 +393,53 @@ def main() -> None:
     layout_samples: dict[str, list[float]] = {n: [] for n in layout_queries}
     plain_samples: dict[str, list[float]] = {n: [] for n in plain_queries}
 
-    def twin_pass(tag: str) -> None:
-        for pname, pfn in _TWIN_PROBES.items():
-            t = run_isolated(pfn)
+    def sample_twins(tag: str) -> None:
+        for pname, t in twin_pass(spark, tag).items():
             twin_samples[pname].append(t)
-            print(f"# twin[{tag}] {pname}: {t}s", file=sys.stderr)
 
-    twin_pass("0")
+    sample_twins("0")
     for series in range(3):
         for name in names:
-            t = run_isolated(qs[name])
+            t = run_isolated(spark, query(qs[name]))
             samples[name].append(t)
             print(f"# isolated[{series}] {name}: {t}s", file=sys.stderr)
         for name, fn in plain_queries.items():
-            t = run_isolated(fn)
+            t = run_isolated(spark, query(fn))
             plain_samples[name].append(t)
             print(f"# layout-plain[{series}] {name}: {t}s", file=sys.stderr)
         for name, fn in layout_queries.items():
-            t = run_isolated(fn)
+            t = run_isolated(spark, query(fn))
             layout_samples[name].append(t)
             print(f"# layout-on[{series}] {name}: {t}s", file=sys.stderr)
-        twin_pass(str(series + 1))
+        sample_twins(str(series + 1))
 
-    def med(xs: list[float]) -> float:
-        return round(statistics.median(xs), 3)
-
-    isolated = {n: med(v) for n, v in samples.items()}
+    isolated = {n: _med(v) for n, v in samples.items()}
     dispersion = {n: {"min": min(v), "max": max(v)} for n, v in samples.items()}
 
     # ---- pinned-twin drift vs calibration ---------------------------------
+    cal_doc = load_calibration()
+    ratios, drift_flag = twin_drift(
+        {p: _med(r) for p, r in twin_samples.items()}, cal_doc)
     twin_out: dict[str, object] = {}
-    drift_flag = False
-    calibration: dict[str, float] = {}
-    if os.path.exists(TWIN_FILE):
-        with open(TWIN_FILE) as f:
-            cal_doc = json.load(f)
-        # calibration is only meaningful at the SF it was recorded at
-        if cal_doc.get("sf_dir") == SF_DIR:
-            calibration = cal_doc.get("medians", {})
     for pname, runs in twin_samples.items():
-        m = med(runs)
-        entry = {"runs": runs, "median": m}
-        if pname in calibration:
-            ratio = m / calibration[pname] if calibration[pname] else float("nan")
-            entry["calibration"] = calibration[pname]
-            entry["ratio_vs_calibration"] = round(ratio, 3)
-            if not (1 - DRIFT_TOLERANCE <= ratio <= 1 / (1 - DRIFT_TOLERANCE)):
-                drift_flag = True
+        entry = {"runs": runs, "median": _med(runs)}
+        if pname in ratios:
+            entry["calibration"] = cal_doc["medians"][pname]
+            entry["ratio_vs_calibration"] = ratios[pname]
         twin_out[pname] = entry
-    if not calibration and SF_DIR.rstrip("/").endswith("sf0.1"):
+    if not ratios and SF_DIR.rstrip("/").endswith("sf0.1"):
         # first run at the canonical SF: self-calibrate so the NEXT run has
         # a reference (committed BENCH_TWIN.json pins it across rounds)
-        with open(TWIN_FILE, "w") as f:
-            json.dump({"medians": {p: med(r) for p, r in twin_samples.items()},
-                       "sf_dir": SF_DIR,
-                       "note": "pinned-twin calibration; delete to recalibrate"},
-                      f, indent=1)
+        write_artifact(spark, "BENCH_TWIN.json", {
+            "medians": {p: _med(r) for p, r in twin_samples.items()},
+            "sf_dir": SF_DIR,
+            "note": "pinned-twin calibration; delete to recalibrate"})
 
     # ---- steady-state of the iterative flagship ---------------------------
     steady: dict[str, float] = {}
     if "g_pagerank" in isolated:
         steady["g_pagerank_warm"] = min(
-            run_isolated(qs["g_pagerank"]) for _ in range(2)
+            run_isolated(spark, query(qs["g_pagerank"])) for _ in range(2)
         )
         print(f"# steady g_pagerank_warm: {steady['g_pagerank_warm']}s", file=sys.stderr)
 
@@ -350,9 +455,10 @@ def main() -> None:
                 .select("a", "mid", "c")
             )
             spark.catalog.clearCache()
-            layout_metrics["two_hop_plain_smj"] = run_isolated(lambda s, sf: plain2h)
+            layout_metrics["two_hop_plain_smj"] = run_isolated(
+                spark, lambda: plain2h)
             layout_metrics["two_hop_bucketed"] = run_isolated(
-                lambda s, sf: layout.two_hop("out", "out"))
+                spark, lambda: layout.two_hop("out", "out"))
             for k in ("two_hop_plain_smj", "two_hop_bucketed"):
                 print(f"# layout {k}: {layout_metrics[k]}s", file=sys.stderr)
         except Exception as ex:
@@ -369,9 +475,9 @@ def main() -> None:
 
         docs = load_table(spark, SF_DIR, "documents")
         extras["simhash_arrow"] = run_isolated(
-            lambda s, sf: simhash_signatures(docs))
+            spark, lambda: simhash_signatures(docs))
         extras["simhash_jvm"] = run_isolated(
-            lambda s, sf: simhash_signatures(docs, use_arrow=False))
+            spark, lambda: simhash_signatures(docs, use_arrow=False))
         for name in ("asof_last_view", "contamination", "g_walks", "cm_sketch",
                      "g_kcore", "g_clustering", "sim_quantized_topk",
                      "bm25_ranked", "sim_hybrid_rrf", "profile_orders",
@@ -406,13 +512,13 @@ def main() -> None:
                      "text_train_order",
                      "text_budget_select", "pipe_assemble"):
             if name in qs:
-                extras[name] = run_isolated(qs[name])
+                extras[name] = run_isolated(spark, query(qs[name]))
         # the longest extra is also the noisiest across box windows
         # (r11: observed 28.7-38.9s for identical code): take min-of-2 so
         # the artifact reflects the operator, not one window's tenancy
         if "g_louvain" in extras and isinstance(extras["g_louvain"], float):
             extras["g_louvain"] = min(extras["g_louvain"],
-                                      run_isolated(qs["g_louvain"]))
+                                      run_isolated(spark, query(qs["g_louvain"])))
         # contrastive mining measured on its DEPLOYMENT path (VERDICT r9
         # #5): mining runs repeatedly against one trained index, so the
         # index build happens once, untimed (an amortized artifact, like
@@ -427,9 +533,9 @@ def main() -> None:
             _sim.ivf_write_index(emb, ctr_idx, n_cells=16,
                                  quantize_bits=None)
             extras["sim_contrastive_pairs"] = run_isolated(
-                lambda s, sf: _sim.mine_contrastive_pairs(
+                spark, lambda: _sim.mine_contrastive_pairs(
                     None, pos_threshold=0.4, neg_band=(0.2, 0.35),
-                    n_neg=2, n_cells=16, spark=s, index_path=ctr_idx))
+                    n_neg=2, n_cells=16, spark=spark, index_path=ctr_idx))
         except Exception as ex:
             extras["sim_contrastive_pairs"] = "err: " + str(ex)[:150]
         for k, v in extras.items():
@@ -460,7 +566,7 @@ def main() -> None:
     # twin runs, protocol prose — see the module docstring) goes to the
     # committed BENCH_FULL.json; stdout gets ONE COMPACT line with the
     # per-query medians and summary flags, hard-capped below the capture
-    # limit by dropping detail sections (never `queries`/`value`).
+    # limit by dropping detail sections (never `queries`/`value`/`box`).
     result_full = {
         "metric": "headline_query_total_time",
         "value": round(sum(isolated.values()), 3),
@@ -469,8 +575,8 @@ def main() -> None:
         "dispersion": dispersion,
         "queries_shared_cache": shared,
         "shared_cache_total": round(sum(shared.values()), 3),
-        "queries_layout": {n: med(v) for n, v in layout_samples.items() if v},
-        "queries_layout_plain": {n: med(v) for n, v in plain_samples.items() if v},
+        "queries_layout": {n: _med(v) for n, v in layout_samples.items() if v},
+        "queries_layout_plain": {n: _med(v) for n, v in plain_samples.items() if v},
         "pinned_twin": twin_out,
         "reference_drift": drift_flag,
         "steady_state": steady,
@@ -478,57 +584,15 @@ def main() -> None:
         "extras": extras,
         "sf": sf_val,
     }
-    # one-shot sf1-scale layout datapoint (tools/layout_sf1.py writes the
-    # sidecar; benched separately because the 10x amplified edge set takes
-    # minutes to materialize and would distort the headline series)
-    sidecar = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "LAYOUT_SF1.json")
-    if os.path.exists(sidecar):
+    # one-shot sf1-scale sidecars (benched separately: each takes minutes
+    # and would distort the headline series)
+    for key, fname in SIDECARS.items():
         try:
-            with open(sidecar) as f:
-                result_full["layout_sf1"] = json.load(f)
-        except Exception:
+            with open(os.path.join(REPO, fname)) as f:
+                result_full[key] = json.load(f)
+        except (OSError, ValueError):
             pass
-    # one-shot sf1-scale ANN datapoint (tools/ann_sf1.py sidecar)
-    ann_sidecar = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "ANN_SF1.json")
-    if os.path.exists(ann_sidecar):
-        try:
-            with open(ann_sidecar) as f:
-                result_full["ann_sf1"] = json.load(f)
-        except Exception:
-            pass
-    # one-shot sf1-scale dedup datapoint (tools/dedup_sf1.py sidecar)
-    dedup_sidecar = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                 "DEDUP_SF1.json")
-    if os.path.exists(dedup_sidecar):
-        try:
-            with open(dedup_sidecar) as f:
-                result_full["dedup_sf1"] = json.load(f)
-        except Exception:
-            pass
-    # one-shot sf1-scale graph-iteration datapoint (tools/graph_sf1.py)
-    graph_sidecar = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                 "GRAPH_SF1.json")
-    if os.path.exists(graph_sidecar):
-        try:
-            with open(graph_sidecar) as f:
-                result_full["graph_sf1"] = json.load(f)
-        except Exception:
-            pass
-    # one-shot sf1-scale SKEWED (power-law) graph datapoint
-    # (tools/graph_sf1_skew.py — exercises the hub defenses GRAPH_SF1's
-    # degree-uniform ring graph never touches)
-    skew_sidecar = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                "GRAPH_SF1_SKEW.json")
-    if os.path.exists(skew_sidecar):
-        try:
-            with open(skew_sidecar) as f:
-                result_full["graph_sf1_skew"] = json.load(f)
-        except Exception:
-            pass
-    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "BENCH_FULL.json")
+    full_path = os.path.join(REPO, "BENCH_FULL.json")
 
     # ---- twin-normalized cross-round deltas (VERDICT r10 #5, rule 35) ----
     # Raw medians divide by THIS run's twin factor (median of the pinned
@@ -550,8 +614,7 @@ def main() -> None:
         # delta vs an uncommitted intermediate is window-relative noise
         import subprocess
         raw = subprocess.run(
-            ["git", "-C", os.path.dirname(os.path.abspath(__file__)),
-             "show", "HEAD:BENCH_FULL.json"],
+            ["git", "-C", REPO, "show", "HEAD:BENCH_FULL.json"],
             capture_output=True, timeout=30)
         if raw.returncode == 0:
             prev_doc = json.loads(raw.stdout)
@@ -583,9 +646,7 @@ def main() -> None:
     result_full["twin_factor"] = tf
     result_full["normalized"] = normalized
 
-    with open(full_path, "w") as f:
-        json.dump(result_full, f, indent=1)
-        f.write("\n")
+    write_artifact(spark, "BENCH_FULL.json", result_full)
 
     compact = {
         "metric": "headline_query_total_time",
@@ -593,6 +654,7 @@ def main() -> None:
         "unit": "sec",
         "queries": isolated,
         "sf": sf_val,
+        "box": result_full["box"],
         "reference_drift": drift_flag,
         "twin_ratios": {p: e.get("ratio_vs_calibration")
                         for p, e in twin_out.items()},
@@ -616,7 +678,7 @@ def main() -> None:
     }
     line = json.dumps(compact, separators=(",", ":"))
     # capture-limit guard: shed detail (kept in BENCH_FULL.json) until the
-    # line fits; queries/value are never shed.
+    # line fits; queries/value and box are never shed.
     for shed in ("extras", "queries_layout_plain", "queries_layout",
                  "steady_state", "amortized", "twin_ratios"):
         if len(line) <= 1800:

@@ -64,27 +64,17 @@ def word_shingles(col: Column, k: int = 3) -> Column:
     )
 
 
-def shingle_set(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                k: int = 3) -> DataFrame:
-    """(doc_id, shingle) distinct pairs — the exploded set representation all
-    similarity ops share."""
-    return (
-        docs.select(F.col(id_col).alias("doc_id"),
-                    F.explode(F.array_distinct(word_shingles(F.col(text_col), k))).alias("shingle"))
-    )
-
-
 def shingle_set_arrow(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                       k: int = 3) -> DataFrame:
-    """Arrow-batched twin of shingle_set: identical (doc_id, shingle) output,
-    built in pandas batches via mapInPandas.  The JVM HOF pipeline
-    (arrays_zip + transform + concat_ws) runs interpreted, not codegen'd —
-    measured ~3s of the minhash pipeline at sf0.1 — while a per-batch Python
-    loop over tokenized rows is cheap and transfers only the exploded pairs.
-    Tokenization mirrors text.tokens() exactly: lower → split on
-    [^a-z0-9]+ → drop empties (same result as Java's regex for this class).
-    The output doc_id keeps the input id column's type (string ids work the
-    same as the HOF twin's)."""
+    """(doc_id, shingle) distinct pairs — the exploded k-word shingle set
+    representation the MinHash and n-gram Jaccard ops share — built in
+    pandas batches via mapInPandas.  A JVM HOF pipeline over
+    `word_shingles` (arrays_zip + transform + concat_ws) runs interpreted,
+    not codegen'd — measured ~3s of the minhash pipeline at sf0.1 — while a
+    per-batch Python loop over tokenized rows is cheap and transfers only
+    the exploded pairs.  Tokenization mirrors text.tokens() exactly: lower →
+    split on [^a-z0-9]+ → drop empties (same result as Java's regex for
+    this class).  The output doc_id keeps the input id column's type."""
     import re
 
     import pandas as pd
@@ -116,8 +106,7 @@ def shingle_set_arrow(docs: DataFrame, text_col: str = "text", id_col: str = "do
 # -- MinHash + LSH -----------------------------------------------------------
 
 def minhash_signatures(docs: DataFrame, num_hashes: int = 32, k: int = 3,
-                       text_col: str = "text", id_col: str = "doc_id",
-                       use_arrow_shingles: bool = True) -> DataFrame:
+                       text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Wide minhash signatures: (doc_id, mh_0 .. mh_{n-1}) where mh_i = min
     over shingles of (a_i * h(shingle) + b_i) mod P, portable md5-based h.
 
@@ -125,8 +114,7 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 32, k: int = 3,
     min-aggregates (map-side partial aggregation); the per-shingle base hash
     is computed once.  This beats the (doc_id, i)-exploded layout by ~n× in
     shuffle volume — the shape that matters at corpus scale."""
-    make = shingle_set_arrow if use_arrow_shingles else shingle_set
-    sh = make(docs, text_col, id_col, k).withColumn(
+    sh = shingle_set_arrow(docs, text_col, id_col, k).withColumn(
         "h", md5_long(F.col("shingle")) % MINHASH_P
     )
     aggs = []
@@ -231,13 +219,12 @@ def cross_corpus_contamination(train: DataFrame, test: DataFrame,
 def minhash_lsh_duplicates(docs: DataFrame, num_hashes: int = 32, rows_per_band: int = 4,
                            k: int = 3, threshold: float = 0.7,
                            text_col: str = "text", id_col: str = "doc_id",
-                           max_bucket_size: int | None = 1000,
-                           use_arrow_shingles: bool = True) -> DataFrame:
+                           max_bucket_size: int | None = 1000) -> DataFrame:
     """Full near-dup pipeline: LSH candidates verified with exact Jaccard
     over shingle sets; returns (doc_a, doc_b, jaccard) above threshold.
     `max_bucket_size` caps degenerate band buckets (see lsh_candidate_pairs)."""
     pairs, _sh = _minhash_pairs(docs, num_hashes, rows_per_band, k, threshold,
-                                text_col, id_col, max_bucket_size, use_arrow_shingles)
+                                text_col, id_col, max_bucket_size)
     # the returned plan references the persisted shingles (they feed
     # signatures, sizes, AND verification); callers that materialize the
     # result and want the cache back use near_duplicate_clusters' pattern
@@ -246,16 +233,11 @@ def minhash_lsh_duplicates(docs: DataFrame, num_hashes: int = 32, rows_per_band:
 
 def _minhash_pairs(docs: DataFrame, num_hashes: int, rows_per_band: int, k: int,
                    threshold: float, text_col: str, id_col: str,
-                   max_bucket_size: int | None,
-                   use_arrow_shingles: bool = True) -> tuple[DataFrame, DataFrame]:
+                   max_bucket_size: int | None) -> tuple[DataFrame, DataFrame]:
     """(pairs plan, persisted shingle handle) — the handle lets callers that
     eagerly materialize the pairs unpersist the shingle cache afterwards."""
-    # one shingle materialization feeds signatures, sizes, and verification.
-    # Arrow shingling by default: identical output to the HOF pipeline,
-    # measured ~5x faster warm (the JVM higher-order functions run
-    # interpreted, outside whole-stage codegen).
-    make = shingle_set_arrow if use_arrow_shingles else shingle_set
-    sh = make(docs, text_col, id_col, k).persist()
+    # one shingle materialization feeds signatures, sizes, and verification
+    sh = shingle_set_arrow(docs, text_col, id_col, k).persist()
     hashed = sh.withColumn("h", md5_long(F.col("shingle")) % MINHASH_P)
     aggs = []
     for i in range(num_hashes):
@@ -369,8 +351,7 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text",
     """48-bit SimHash over the token multiset: bit j of the signature is the
     sign of sum over tokens of (2*bit_j(h(token)) - 1).
 
-    Two bit-identical implementations (same dispatch discipline as
-    shingle_set/shingle_set_arrow): the default Arrow path vectorizes the
+    Two bit-identical implementations: the default Arrow path vectorizes the
     whole per-doc bit-count in numpy — measured 17× faster at sf0.1
     (0.6s vs 10.2s) because the JVM form's tokens×48 explode pays interpreted
     per-row expression evaluation on the amplified stream; the JVM form
@@ -463,13 +444,11 @@ def simhash_near_pairs(signatures: DataFrame, max_hamming: int = 3) -> DataFrame
 # -- exact n-gram Jaccard ----------------------------------------------------
 
 def ngram_jaccard_pairs(docs: DataFrame, k: int = 3, threshold: float = 0.5,
-                        text_col: str = "text", id_col: str = "doc_id",
-                        use_arrow_shingles: bool = True) -> DataFrame:
+                        text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact all-pairs Jaccard over k-word shingle sets via the inverted
     shingle index (only docs sharing ≥1 shingle ever meet — no cross join).
     Returns (doc_a, doc_b, jaccard ≥ threshold)."""
-    make = shingle_set_arrow if use_arrow_shingles else shingle_set
-    sh = make(docs, text_col, id_col, k)
+    sh = shingle_set_arrow(docs, text_col, id_col, k)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")

@@ -94,7 +94,7 @@ def neighbors(edges: DataFrame, vertex_ids: Sequence[int], direction: str = OUT,
 
 
 def k_hop(edges: DataFrame, start_ids: Sequence[int], k: int, direction: str = OUT,
-          labels: Sequence[str] | None = None, checkpoint_every: int = 3,
+          labels: Sequence[str] | None = None,
           edges_by_dst: DataFrame | None = None) -> DataFrame:
     """Vertices reachable in exactly <= k hops (excluding the start set),
     with hop distance = first time reached (BFS layering).  Returns
@@ -105,9 +105,10 @@ def k_hop(edges: DataFrame, start_ids: Sequence[int], k: int, direction: str = O
     shuffles; on a power-law graph the frontier reaches O(|V|) by hop 2-3,
     at which point broadcasting it would OOM every executor — past the
     budget the hop falls back to a plain shuffle join (AQE picks the
-    physical strategy).  The frontier is materialized each hop anyway (BFS
-    is inherently iterative) by `analytics._ckpt`, whose one action returns
-    the row count the size check reads, not a recompute.
+    physical strategy).  The frontier of every hop but the last is
+    materialized (BFS is inherently iterative) by `analytics._ckpt`, whose
+    one action returns the row count the next hop's size check reads, not a
+    recompute; the last hop's frontier stays lazy inside the result.
 
     `edges_by_dst` routes in-direction hops through the dst-bucketed copy of
     the dual edge layout (sources/edge_layout.py): past the broadcast
@@ -140,7 +141,7 @@ def k_hop(edges: DataFrame, start_ids: Sequence[int], k: int, direction: str = O
             .distinct()
         )
         frontier = nxt.join(visited.select("id"), "id", "left_anti")
-        if (checkpoint_every and hop % checkpoint_every == 0) or hop < k:
+        if hop < k:
             # cut lineage AND materialize: the checkpoint's one action is
             # its row count, which the next hop's broadcast decision reads
             frontier, frontier_rows = _ckpt(frontier)

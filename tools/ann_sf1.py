@@ -13,9 +13,8 @@ vector volume (50k × 64 dims):
   - exact: brute-force cosine_topk over the float parquet;
   - pq: persisted PQ index (m=8), ADC over the codes column only;
   - ivfpq: IVF-PQ (16 cells, probe 4) — partition pruning × code scan.
-* Drift honesty: the frozen bench twin probes run before and after at
-  sf0.1 against BENCH_TWIN.json, so the datapoint carries its own
-  machine-state certificate.
+* Drift honesty: bench.py's twin certificate (the band at
+  `bench.DRIFT_TOLERANCE`), as on every SF1 sidecar.
 
 Writes ANN_SF1.json at the repo root; bench.py embeds it into
 BENCH_FULL.json under "ann_sf1" when present.
@@ -32,10 +31,9 @@ import sys
 import tempfile
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _TWIN_PROBES, SF_DIR, TWIN_FILE  # noqa: E402
+import bench  # noqa: E402
 from hugegraph_on_tikv_spark.session import get_spark  # noqa: E402
 
 N_VECS = 50_000
@@ -52,34 +50,12 @@ def main() -> None:
         pq_write_index)
 
     spark = get_spark("ann-sf1")
-    spark.range(1).count()
-
-    def run_isolated(thunk) -> float:
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-        t0 = time.perf_counter()
-        thunk().write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 3)
-
-    def twin_pass() -> dict:
-        out = {}
-        for name, fn in _TWIN_PROBES.items():
-            out[name] = run_isolated(lambda f=fn: f(spark, SF_DIR))
-        return out
+    bench.warm_up(spark)
+    twins = {"before": bench.twin_median(spark, "before")}
 
     tmp = tempfile.mkdtemp(prefix="ann_sf1_")
     doc: dict = {"n_vectors": N_VECS, "dim": DIM}
     try:
-        # twin sampling mirrors BENCH_TWIN's calibration shape (median with
-        # cold passes absorbed): two throwaway passes cover JIT warmup,
-        # then the recorded twin is the per-probe MEDIAN of 3 passes.
-        def twin_median() -> dict:
-            ps = [twin_pass() for _ in range(3)]
-            return {k: round(statistics.median([p[k] for p in ps]), 3)
-                    for k in ps[0]}
-        twin_pass(); twin_pass()     # throwaway: JIT warmup
-        twin_before = twin_median()
-
         dims = F.array(*[
             (((F.col("id") * 31 + d * 17) % 1000) / F.lit(500.0) - 1.0)
             for d in range(DIM)])
@@ -110,7 +86,7 @@ def main() -> None:
         samples: dict = {k: [] for k in series}
         for _ in range(3):
             for name, thunk in series.items():
-                samples[name].append(run_isolated(thunk))
+                samples[name].append(bench.run_isolated(spark, thunk))
         doc["queries"] = {k: round(statistics.median(v), 3)
                           for k, v in samples.items()}
         doc["samples"] = samples
@@ -118,7 +94,7 @@ def main() -> None:
         # r10: the closed recall loop at sf1 volume — build an IVF-flat
         # index and let ann_autotune walk n_probe up to the recall
         # target.  This is a driver-side action loop (returns a dict),
-        # so it is timed end-to-end, once, not via run_isolated.
+        # so it is timed end-to-end, once, not via bench.run_isolated.
         t0 = time.perf_counter()
         ivf_write_index(emb, f"{tmp}/ivf", n_cells=16, quantize_bits=None)
         doc["build_ivf_index"] = round(time.perf_counter() - t0, 3)
@@ -154,31 +130,12 @@ def main() -> None:
             "recluster": tune_q["recluster"],
             "steps": len(tune_q["history"]),
         }
-
-        # settle: let the ContextCleaner drain the workload's
-        # checkpoint/broadcast garbage before sampling the box again
-        for _ in range(3):
-            spark.sparkContext._jvm.System.gc()
-            time.sleep(15)
-        twin_pass()                  # throwaway: post-workload catchup pass
-        twin_after = twin_median()
-        doc["twin_before"], doc["twin_after"] = twin_before, twin_after
-        cal = {}
-        if os.path.exists(TWIN_FILE):
-            with open(TWIN_FILE) as f:
-                cal = json.load(f).get("medians", {})
-        drift = False
-        for tw in (twin_before, twin_after):
-            for p, v in tw.items():
-                if cal.get(p) and abs(v / cal[p] - 1.0) > 0.30:
-                    drift = True
-        doc["reference_drift"] = drift
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
-    out_path = os.path.join(REPO, "ANN_SF1.json")
-    with open(out_path, "w") as f:
-        json.dump(doc, f, indent=1)
+    bench.settle(spark)
+    twins["after"] = bench.twin_median(spark, "after")
+    bench.write_artifact(spark, "ANN_SF1.json", doc, twins)
     print(json.dumps(doc["queries"]))
 
 

@@ -2,7 +2,9 @@
 final `.explain` is truncated by their own localCheckpoint calls: hook
 DataFrame.localCheckpoint to record the formatted plan of every frame the
 operator checkpoints while it runs (the lineage cuts of
-`analytics._fixpoint` and `_ckpt` included), then write the first 3.
+`analytics._fixpoint` and `_ckpt` included), then write every one of them,
+numbered in call order (the first frames are often setup cuts; the round
+plans come after them).
 
 Usage: python tools/capture_iteration_plans.py <suffix> [op ...]
   op: a key of `runners` in main() (default: pagerank katz cc)
@@ -111,8 +113,8 @@ def main() -> None:
             D.DataFrame.localCheckpoint = orig
         out = os.path.join(PLANS_DIR, f"{op}_iteration_{suffix}.txt")
         with open(out, "w") as f:
-            for i, p in enumerate(captured[:3]):
-                f.write(f"===== checkpointed frame {i} "
+            for i, p in enumerate(captured):
+                f.write(f"===== checkpointed frame {i} of {len(captured)} "
                         f"(plan at its localCheckpoint call) =====\n{p}\n")
         print(f"# wrote {out} ({len(captured)} checkpoints observed)",
               file=sys.stderr)

@@ -21,9 +21,8 @@ reports quality-at-scale (planted-pair recall) next to wall time:
 * Quality: recall of the 5 000 planted (source, copy) pairs in the
   minhash_lsh output (reported, not asserted — it is a property of the
   LSH parameters, ~57-token docs with 3 mutations).
-* Drift honesty: the frozen bench twin probes run before and after at
-  sf0.1 against BENCH_TWIN.json — the datapoint carries its own
-  machine-state certificate.
+* Drift honesty: bench.py's twin certificate (the band at
+  `bench.DRIFT_TOLERANCE`), as on every SF1 sidecar.
 
 Writes DEDUP_SF1.json at the repo root; bench.py embeds it into
 BENCH_FULL.json under "dedup_sf1" when present.
@@ -38,12 +37,10 @@ import shutil
 import statistics
 import sys
 import tempfile
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _TWIN_PROBES, SF_DIR, TWIN_FILE  # noqa: E402
+import bench  # noqa: E402
 from hugegraph_on_tikv_spark.session import get_spark  # noqa: E402
 
 N_DOCS = 50_000
@@ -58,39 +55,13 @@ def main() -> None:
     from hugegraph_on_tikv_spark.functions import dedup
 
     spark = get_spark("dedup-sf1")
-    spark.range(1).count()
-
-    def run_isolated(thunk) -> float:
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-        t0 = time.perf_counter()
-        thunk().write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 3)
-
-    def twin_pass() -> dict:
-        out = {}
-        for name, fn in _TWIN_PROBES.items():
-            out[name] = run_isolated(lambda f=fn: f(spark, SF_DIR))
-        return out
+    bench.warm_up(spark)
+    twins = {"before": bench.twin_median(spark, "before")}
 
     tmp = tempfile.mkdtemp(prefix="dedup_sf1_")
     doc: dict = {"n_docs": N_DOCS, "n_planted": N_PLANTED,
                  "doc_len": DOC_LEN, "vocab": VOCAB}
     try:
-        # twin sampling mirrors BENCH_TWIN's own calibration shape
-        # (median over passes with the cold ones absorbed): two
-        # throwaway passes cover JIT/parquet-footer warmup (pass 0
-        # is ~5x, pass 1 still ~1.5x on this box), then the
-        # recorded twin is the per-probe MEDIAN of 3 passes --
-        # a single cold-JVM pass measures compiler state, not the
-        # box state the drift flag exists to catch.
-        def twin_median() -> dict:
-            ps = [twin_pass() for _ in range(3)]
-            return {k: round(statistics.median([p[k] for p in ps]), 3)
-                    for k in ps[0]}
-        twin_pass(); twin_pass()     # throwaway: JIT warmup
-        twin_before = twin_median()
-
         # token = murmur-style multiply-XORSHIFT avalanche of an INJECTIVE
         # pre-image x = base*61 + i (stride 61 > doc length: disjoint
         # x-windows per doc).  THREE fixture designs failed before this
@@ -140,7 +111,7 @@ def main() -> None:
         samples: dict = {k: [] for k in series}
         for _ in range(3):
             for name, thunk in series.items():
-                samples[name].append(run_isolated(thunk))
+                samples[name].append(bench.run_isolated(spark, thunk))
         doc["queries"] = {k: round(statistics.median(v), 3)
                           for k, v in samples.items()}
         doc["samples"] = samples
@@ -152,31 +123,12 @@ def main() -> None:
             & (F.col("doc_a") < N_PLANTED)).count()
         doc["planted_recall_minhash"] = round(hits / N_PLANTED, 4)
         doc["minhash_pairs_total"] = pairs.count()
-
-        # settle: let the ContextCleaner drain the workload's
-        # checkpoint/broadcast garbage before sampling the box again
-        for _ in range(3):
-            spark.sparkContext._jvm.System.gc()
-            time.sleep(15)
-        twin_pass()                  # throwaway: post-workload catchup pass
-        twin_after = twin_median()
-        doc["twin_before"], doc["twin_after"] = twin_before, twin_after
-        cal = {}
-        if os.path.exists(TWIN_FILE):
-            with open(TWIN_FILE) as f:
-                cal = json.load(f).get("medians", {})
-        drift = False
-        for tw in (twin_before, twin_after):
-            for p, v in tw.items():
-                if cal.get(p) and abs(v / cal[p] - 1.0) > 0.30:
-                    drift = True
-        doc["reference_drift"] = drift
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
-    out_path = os.path.join(REPO, "DEDUP_SF1.json")
-    with open(out_path, "w") as f:
-        json.dump(doc, f, indent=1)
+    bench.settle(spark)
+    twins["after"] = bench.twin_median(spark, "after")
+    bench.write_artifact(spark, "DEDUP_SF1.json", doc, twins)
     print(json.dumps(doc["queries"]))
 
 

@@ -18,9 +18,9 @@ the _ckpt stats reset) at ~sf1 volume:
   plans, so the median-of-3 protocol would triple a multi-minute probe for
   dispersion the round counts already dominate); round counts ride the
   artifact.
-* Drift honesty: the frozen bench twin probes run before and after at
-  sf0.1 against BENCH_TWIN.json — the same machine-state certificate the
-  other SF1 artifacts carry.
+* Drift honesty: bench.py's twin certificate (twin medians before and
+  after the workload against BENCH_TWIN.json, the band at
+  `bench.DRIFT_TOLERANCE`) rides the artifact, as on every SF1 sidecar.
 
 Writes GRAPH_SF1.json at the repo root; bench.py embeds it into
 BENCH_FULL.json under "graph_sf1" when present.
@@ -31,14 +31,10 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N_VERTICES = 1_000_000
 MULTIPLIERS = (3, 7, 11, 17, 23, 31, 43, 59)   # 8 rings ≈ 8M directed edges
 
@@ -57,31 +53,8 @@ def main() -> None:
     from hugegraph_on_tikv_spark.session import get_spark
 
     spark = get_spark("graph-sf1-probe")
-    spark.range(1).count()
-
-    def twin_pass(tag: str) -> dict[str, float]:
-        out = {}
-        for pname, pfn in bench._TWIN_PROBES.items():
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.perf_counter()
-            pfn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            out[pname] = round(time.perf_counter() - t0, 3)
-            print(f"# twin[{tag}] {pname}: {out[pname]}s", file=sys.stderr)
-        return out
-
-    # twin sampling mirrors BENCH_TWIN's calibration shape (median with
-    # cold passes absorbed): two throwaway passes cover JIT warmup, then
-    # the recorded twin is the per-probe MEDIAN of 3 passes.
-    def twin_median(tag: str) -> dict[str, float]:
-        ps = [twin_pass(tag) for _ in range(3)]
-        return {k: round(statistics.median([p[k] for p in ps]), 3)
-                for k in ps[0]}
-
-    for _ in range(2):                        # throwaway: JIT warm-up
-        for pfn in bench._TWIN_PROBES.values():
-            pfn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-    twins = {"before": twin_median("before")}
+    bench.warm_up(spark)
+    twins = {"before": bench.twin_median(spark, "before")}
 
     base = spark.range(N_VERTICES).select(F.col("id").alias("src"))
     rings = [
@@ -110,53 +83,29 @@ def main() -> None:
                  "correctness inputs are untouched"),
     }
 
-    def timed(tag, fn):
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-        t0 = time.perf_counter()
-        n = fn()
-        doc[f"{tag}_sec"] = round(time.perf_counter() - t0, 3)
-        doc[f"{tag}_rows"] = n
-        print(f"# {tag}: {doc[f'{tag}_sec']}s rows={n}", file=sys.stderr)
+    def timed(tag, build):
+        # the op's build plus its count() job (the same global count
+        # aggregate) on the shared isolated timer; cache() keeps the one
+        # count row for the untimed read below
+        counts = []
 
-    timed("spanning_forest",
-          lambda: spanning_forest(weighted, max_rounds=20).count())
-    timed("mis", lambda: maximal_independent_set(edges).count())
-    timed("coloring", lambda: greedy_coloring(edges, max_rounds=60).count())
-    timed("cc_star", lambda: connected_components_star(edges).count())
+        def counted():
+            counts.append(build().groupBy().count().cache())
+            return counts[0]
 
-    # settle: let the ContextCleaner drain the workload's
-    # checkpoint/broadcast garbage before sampling the box again
-    for _ in range(3):
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(15)
-    twin_pass('settle')                  # throwaway: post-workload catchup pass
-    twins["after"] = twin_median("after")
-    cal = {}
-    if os.path.exists(bench.TWIN_FILE):
-        with open(bench.TWIN_FILE) as f:
-            cal_doc = json.load(f)
-        if cal_doc.get("sf_dir") == SF_DIR:
-            cal = cal_doc.get("medians", {})
-    drift = False
-    ratios = {}
-    for tag, tp in twins.items():
-        for pname, val in tp.items():
-            if pname in cal and cal[pname]:
-                r = round(val / cal[pname], 3)
-                ratios[f"{tag}.{pname}"] = r
-                if not (0.7 <= r <= 1 / 0.7):
-                    drift = True
-    doc.update({
-        "twin_runs": twins,
-        "twin_ratios_vs_calibration": ratios,
-        "reference_drift": drift,
-    })
+        doc[f"{tag}_sec"] = bench.run_isolated(spark, counted)
+        doc[f"{tag}_rows"] = counts[0].first()[0]
+        print(f"# {tag}: {doc[f'{tag}_sec']}s rows={doc[f'{tag}_rows']}",
+              file=sys.stderr)
 
-    out_path = os.path.join(REPO, "GRAPH_SF1.json")
-    with open(out_path, "w") as f:
-        json.dump(doc, f, indent=1)
-        f.write("\n")
+    timed("spanning_forest", lambda: spanning_forest(weighted, max_rounds=20))
+    timed("mis", lambda: maximal_independent_set(edges))
+    timed("coloring", lambda: greedy_coloring(edges, max_rounds=60))
+    timed("cc_star", lambda: connected_components_star(edges))
+
+    bench.settle(spark)
+    twins["after"] = bench.twin_median(spark, "after")
+    bench.write_artifact(spark, "GRAPH_SF1.json", doc, twins)
     print(json.dumps({k: doc.get(k) for k in (
         "n_directed_edges", "spanning_forest_sec", "mis_sec",
         "coloring_sec", "cc_star_sec", "reference_drift")}))

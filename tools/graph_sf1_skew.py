@@ -21,8 +21,9 @@ machinery on it:
   the two operators whose hub defenses (argmax proposals, broadcast
   guards) only a skewed degree distribution can stress.
 * Each op runs once end-to-end (multi-round actions; round counts
-  dominate dispersion), max in-degree and the twin drift certificate
-  ride the artifact.
+  dominate dispersion); max in-degree rides the artifact.
+* Drift honesty: bench.py's twin certificate (the band at
+  `bench.DRIFT_TOLERANCE`), as on every SF1 sidecar.
 
 Writes GRAPH_SF1_SKEW.json at the repo root; bench.py embeds it into
 BENCH_FULL.json under "graph_sf1_skew" when present.
@@ -33,14 +34,10 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N_VERTICES = 1_000_000
 K_EDGES = 4          # attachment edges per vertex ≈ 4M directed edges
 
@@ -61,28 +58,8 @@ def main() -> None:
     from hugegraph_on_tikv_spark.session import get_spark
 
     spark = get_spark("graph-sf1-skew-probe")
-    spark.range(1).count()
-
-    def twin_pass(tag: str) -> dict[str, float]:
-        out = {}
-        for pname, pfn in bench._TWIN_PROBES.items():
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.perf_counter()
-            pfn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            out[pname] = round(time.perf_counter() - t0, 3)
-            print(f"# twin[{tag}] {pname}: {out[pname]}s", file=sys.stderr)
-        return out
-
-    def twin_median(tag: str) -> dict[str, float]:
-        ps = [twin_pass(tag) for _ in range(3)]
-        return {k: round(statistics.median([p[k] for p in ps]), 3)
-                for k in ps[0]}
-
-    for _ in range(2):                        # throwaway: JIT warm-up
-        for pfn in bench._TWIN_PROBES.values():
-            pfn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-    twins = {"before": twin_median("before")}
+    bench.warm_up(spark)
+    twins = {"before": bench.twin_median(spark, "before")}
 
     # preferential attachment: t = floor(i * u^2), u = md5(i:k)/2^20-ish
     base = spark.range(1, N_VERTICES).select(F.col("id").alias("src"))
@@ -118,14 +95,20 @@ def main() -> None:
     print(f"# graph: {n_edges} edges, max in-deg {doc['max_in_degree']}, "
           f"median {doc['median_in_degree']}", file=sys.stderr)
 
-    def timed(tag, fn):
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-        t0 = time.perf_counter()
-        n = fn()
-        doc[f"{tag}_sec"] = round(time.perf_counter() - t0, 3)
-        doc[f"{tag}_rows"] = n
-        print(f"# {tag}: {doc[f'{tag}_sec']}s rows={n}", file=sys.stderr)
+    def timed(tag, build):
+        # the op's build plus its count() job (the same global count
+        # aggregate) on the shared isolated timer; cache() keeps the one
+        # count row for the untimed read below
+        counts = []
+
+        def counted():
+            counts.append(build().groupBy().count().cache())
+            return counts[0]
+
+        doc[f"{tag}_sec"] = bench.run_isolated(spark, counted)
+        doc[f"{tag}_rows"] = counts[0].first()[0]
+        print(f"# {tag}: {doc[f'{tag}_sec']}s rows={doc[f'{tag}_rows']}",
+              file=sys.stderr)
 
     # r11: forest + MIS on the skewed graph — Boruvka's per-component
     # root broadcast guard and the min_by pick aggregation only see hub
@@ -135,46 +118,18 @@ def main() -> None:
         "src", "dst",
         (md5_long(F.concat_ws(":", u_, v_)) % 1_000_000)
         .cast("double").alias("weight"))
-    timed("spanning_forest",
-          lambda: spanning_forest(weighted, max_rounds=20).count())
-    timed("mis", lambda: maximal_independent_set(edges).count())
-    timed("coloring", lambda: greedy_coloring(edges, max_rounds=80).count())
-    timed("cc_star", lambda: connected_components_star(edges).count())
+    timed("spanning_forest", lambda: spanning_forest(weighted, max_rounds=20))
+    timed("mis", lambda: maximal_independent_set(edges))
+    timed("coloring", lambda: greedy_coloring(edges, max_rounds=80))
+    timed("cc_star", lambda: connected_components_star(edges))
     timed("pagerank", lambda: pagerank(edges, iterations=10,
-                                       checkpoint_every=2).count())
+                                       checkpoint_every=2))
     timed("louvain", lambda: louvain_full(edges, level1_rounds=3,
-                                          level2_rounds=2).count())
+                                          level2_rounds=2))
 
-    for _ in range(3):
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(15)
-    twin_pass("settle")              # throwaway: post-workload catchup
-    twins["after"] = twin_median("after")
-    cal = {}
-    if os.path.exists(bench.TWIN_FILE):
-        with open(bench.TWIN_FILE) as f:
-            cal_doc = json.load(f)
-        if cal_doc.get("sf_dir") == SF_DIR:
-            cal = cal_doc.get("medians", {})
-    drift = False
-    ratios = {}
-    for tag, tp in twins.items():
-        for pname, val in tp.items():
-            if pname in cal and cal[pname]:
-                r = round(val / cal[pname], 3)
-                ratios[f"{tag}.{pname}"] = r
-                if not (0.7 <= r <= 1 / 0.7):
-                    drift = True
-    doc.update({
-        "twin_runs": twins,
-        "twin_ratios_vs_calibration": ratios,
-        "reference_drift": drift,
-    })
-
-    out_path = os.path.join(REPO, "GRAPH_SF1_SKEW.json")
-    with open(out_path, "w") as f:
-        json.dump(doc, f, indent=1)
-        f.write("\n")
+    bench.settle(spark)
+    twins["after"] = bench.twin_median(spark, "after")
+    bench.write_artifact(spark, "GRAPH_SF1_SKEW.json", doc, twins)
     print(json.dumps({k: doc.get(k) for k in (
         "n_directed_edges", "max_in_degree", "spanning_forest_sec",
         "mis_sec", "coloring_sec", "cc_star_sec",

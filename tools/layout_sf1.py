@@ -17,9 +17,11 @@ measured number behind the pinned-plan argument at ~sf1 edge volume:
   parquet copies (repartitioned+sorted by src/dst, the same approximation
   GraphStore's /tmp cache uses), the layout side reads the catalog-bucketed
   dual copies.  Same protocol as bench.py's sf0.1 layout series.
-* Drift honesty: the frozen bench twin probes (bench._TWIN_PROBES) run
-  before and after at sf0.1 and are reported against BENCH_TWIN.json, so
-  the datapoint carries its own machine-state certificate.
+* Drift honesty: bench.py's twin certificate (the band at
+  `bench.DRIFT_TOLERANCE`), as on every SF1 sidecar.  The "before" twins
+  are sampled FIRST, before the 10x materialization churns the heap and
+  page cache (measured: twins run 2x calibration when sampled right after
+  the writes, even though the box is idle).
 
 Writes LAYOUT_SF1.json at the repo root; bench.py embeds it into
 BENCH_FULL.json under "layout_sf1" when present.
@@ -37,11 +39,9 @@ import sys
 import tempfile
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPLICAS = 10
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
@@ -54,37 +54,10 @@ def main() -> None:
     from hugegraph_on_tikv_spark.sources.graph import GraphStore, encode_id
 
     spark = get_spark("layout-sf1-probe")
-    spark.range(1).count()
-    # JIT/codegen warm-up, same shape bench.py uses: without it the first
-    # timed pass measures first-compilation, not steady state
-    from hugegraph_on_tikv_spark.operators.analytics import pagerank
-    toy = spark.range(200).select(
-        F.col("id").alias("src"), ((F.col("id") * 7 + 1) % 200).alias("dst"))
-    pagerank(toy, iterations=4, checkpoint_every=2).write.format(
-        "noop").mode("overwrite").save()
-    spark.catalog.clearCache()
+    bench.warm_up(spark)
+    twins = {"before": bench.twin_median(spark, "before")}
 
-    def twin_pass(tag: str) -> dict[str, float]:
-        out = {}
-        for pname, pfn in bench._TWIN_PROBES.items():
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.perf_counter()
-            pfn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            out[pname] = round(time.perf_counter() - t0, 3)
-            print(f"# twin[{tag}] {pname}: {out[pname]}s", file=sys.stderr)
-        return out
-
-    # idle-box certificate FIRST — before the 10x materialization churns
-    # the heap and page cache (measured: twins run 2x calibration when
-    # sampled right after the writes, even though the box is idle).  One
-    # untimed pass warms each probe's plan shape (bench.py's calibration
-    # medians are post-warm-up numbers too)
-    for pfn in bench._TWIN_PROBES.values():
-        pfn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-    twins = {"before": twin_pass("before")}
-
-    store = GraphStore(spark, SF_DIR)
+    store = GraphStore(spark, bench.SF_DIR)
     base = store.edges()
     # vertex ids are (label_code << 56) + key with keys far below 2^40 at
     # any test SF: replicas offset the KEY part by r * 2^40, preserving the
@@ -99,7 +72,7 @@ def main() -> None:
 
     tmp = tempfile.mkdtemp(prefix="layout_sf1_")
     layout = None
-    doc: dict = {"replicas": REPLICAS, "sf_dir": SF_DIR, "stride": stride,
+    doc: dict = {"replicas": REPLICAS, "sf_dir": bench.SF_DIR, "stride": stride,
                  "note": ("bench-only synthetic 10x disjoint-replica "
                           "amplification of the sf0.1 edge view; "
                           "correctness inputs are untouched")}
@@ -147,44 +120,20 @@ def main() -> None:
             finally:
                 spark.conf.set(key, prev)
 
-        def run_isolated(mk) -> float:
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.perf_counter()
-            mk().write.format("noop").mode("overwrite").save()
-            return round(time.perf_counter() - t0, 3)
-
         # warm-up (first execution of each plan shape) outside timing,
         # then 3 isolated runs each
-        run_isolated(khop_plain)
-        run_isolated(khop_layout)
+        bench.run_isolated(spark, khop_plain)
+        bench.run_isolated(spark, khop_layout)
         plain_s, layout_s, plain_sh, layout_sh = [], [], [], []
         for i in range(3):
-            plain_s.append(run_isolated(khop_plain))
-            layout_s.append(run_isolated(khop_layout))
+            plain_s.append(bench.run_isolated(spark, khop_plain))
+            layout_s.append(bench.run_isolated(spark, khop_layout))
             with no_broadcast():
-                plain_sh.append(run_isolated(khop_plain))
-                layout_sh.append(run_isolated(khop_layout))
+                plain_sh.append(bench.run_isolated(spark, khop_plain))
+                layout_sh.append(bench.run_isolated(spark, khop_layout))
             print(f"# series[{i}] plain={plain_s[-1]}s layout={layout_s[-1]}s "
                   f"plain_shuffle={plain_sh[-1]}s layout_shuffle={layout_sh[-1]}s",
                   file=sys.stderr)
-        twins["after"] = twin_pass("after")
-
-        cal = {}
-        if os.path.exists(bench.TWIN_FILE):
-            with open(bench.TWIN_FILE) as f:
-                cal_doc = json.load(f)
-            if cal_doc.get("sf_dir") == SF_DIR:
-                cal = cal_doc.get("medians", {})
-        drift = False
-        ratios = {}
-        for tag, tp in twins.items():
-            for pname, v in tp.items():
-                if pname in cal and cal[pname]:
-                    r = round(v / cal[pname], 3)
-                    ratios[f"{tag}.{pname}"] = r
-                    if not (0.7 <= r <= 1 / 0.7):
-                        drift = True
         doc.update({
             "khop2_plain_runs": plain_s,
             "khop2_layout_runs": layout_s,
@@ -194,9 +143,6 @@ def main() -> None:
             "khop2_shuffle_layout_runs": layout_sh,
             "khop2_shuffle_plain_median": round(statistics.median(plain_sh), 3),
             "khop2_shuffle_layout_median": round(statistics.median(layout_sh), 3),
-            "twin_runs": twins,
-            "twin_ratios_vs_calibration": ratios,
-            "reference_drift": drift,
         })
     finally:
         try:
@@ -206,10 +152,9 @@ def main() -> None:
             pass
         shutil.rmtree(tmp, ignore_errors=True)
 
-    out_path = os.path.join(REPO, "LAYOUT_SF1.json")
-    with open(out_path, "w") as f:
-        json.dump(doc, f, indent=1)
-        f.write("\n")
+    bench.settle(spark)
+    twins["after"] = bench.twin_median(spark, "after")
+    bench.write_artifact(spark, "LAYOUT_SF1.json", doc, twins)
     print(json.dumps({"khop2_plain": doc.get("khop2_plain_median"),
                       "khop2_layout": doc.get("khop2_layout_median"),
                       "khop2_shuffle_plain": doc.get("khop2_shuffle_plain_median"),

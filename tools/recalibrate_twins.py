@@ -1,9 +1,9 @@
 """Deliberate BENCH_TWIN.json recalibration (NOTES rule 20).
 
-Runs the three FROZEN twin probes from bench.py under the exact same
-warm-up + isolation protocol the bench uses (toy-pagerank JIT warm-up,
-clearCache + System.gc() before every sample), takes the median of
-N_SAMPLES samples per probe on an idle box, and rewrites BENCH_TWIN.json.
+Runs the three FROZEN twin probes from bench.py under bench.py's own
+warm-up and isolated timer (`bench.warm_up`, `bench.twin_pass`), takes the
+median of N_SAMPLES samples per probe on an idle box, and rewrites
+BENCH_TWIN.json through `bench.write_artifact` (so it records its box).
 
 Rationale: VERDICT r6 item 5 — `twin_join_agg` sat at 1.17-1.26x its
 round-5 calibration across three consecutive drift-clean runs; the box's
@@ -17,51 +17,29 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _TWIN_PROBES, SF_DIR, TWIN_FILE  # noqa: E402
+import bench  # noqa: E402
 from hugegraph_on_tikv_spark.session import get_spark  # noqa: E402
 
 N_SAMPLES = 7
 
 
 def main() -> None:
-    from pyspark.sql import functions as F
-
-    from hugegraph_on_tikv_spark.operators.analytics import pagerank
-
     spark = get_spark("twin-recalibration")
-    spark.range(1).count()
-    toy = spark.range(200).select(
-        F.col("id").alias("src"), ((F.col("id") * 7 + 1) % 200).alias("dst"))
-    pagerank(toy, iterations=4, checkpoint_every=2) \
-        .write.format("noop").mode("overwrite").save()
-    spark.catalog.clearCache()
-
-    samples: dict[str, list[float]] = {k: [] for k in _TWIN_PROBES}
-    for i in range(N_SAMPLES):
-        for pname, pfn in _TWIN_PROBES.items():
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.perf_counter()
-            pfn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            t = round(time.perf_counter() - t0, 3)
-            samples[pname].append(t)
-            print(f"# pass {i} {pname}: {t}s", file=sys.stderr)
-
+    bench.warm_up(spark)
+    passes = [bench.twin_pass(spark, f"pass {i}") for i in range(N_SAMPLES)]
+    samples = {p: [ps[p] for ps in passes] for p in bench._TWIN_PROBES}
     medians = {p: round(statistics.median(s), 3) for p, s in samples.items()}
-    doc = {
+    bench.write_artifact(spark, "BENCH_TWIN.json", {
         "medians": medians,
         "samples": samples,
-        "sf_dir": SF_DIR,
+        "sf_dir": bench.SF_DIR,
         "note": ("pinned-twin calibration per NOTES rule 20 (median of %d "
                  "isolated idle-box samples); annotate the round and the "
                  "superseded medians after running" % N_SAMPLES),
-    }
-    with open(TWIN_FILE, "w") as f:
-        json.dump(doc, f, indent=1)
+    })
     print(json.dumps(medians))
 
 

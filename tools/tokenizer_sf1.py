@@ -21,9 +21,8 @@ vocabulary work.  Consistency checks reported next to wall time: encode
 coverage (ids emitted == stream tokens × symbols/word) and the
 dense-permutation invariant (Σ block_pos == n(n-1)/2).
 
-Drift honesty: the frozen bench twin probes run before and after at
-sf0.1 against BENCH_TWIN.json — the datapoint carries its own
-machine-state certificate (the dedup_sf1/ann_sf1 protocol).
+Drift honesty: bench.py's twin certificate (the band at
+`bench.DRIFT_TOLERANCE`), as on every SF1 sidecar.
 
 Writes TOKENIZER_SF1.json at the repo root.
 Run ALONE on an idle box:  python tools/tokenizer_sf1.py
@@ -36,12 +35,10 @@ import shutil
 import statistics
 import sys
 import tempfile
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _TWIN_PROBES, SF_DIR, TWIN_FILE  # noqa: E402
+import bench  # noqa: E402
 from hugegraph_on_tikv_spark.session import get_spark  # noqa: E402
 
 N_DOCS = 50_000
@@ -63,31 +60,13 @@ def main() -> None:
     from hugegraph_on_tikv_spark.functions.text import tokens as _toks
 
     spark = get_spark("tokenizer-sf1")
-    spark.range(1).count()
-
-    def run_isolated(thunk) -> float:
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-        t0 = time.perf_counter()
-        thunk().write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 3)
-
-    def twin_pass() -> dict:
-        return {name: run_isolated(lambda f=fn: f(spark, SF_DIR))
-                for name, fn in _TWIN_PROBES.items()}
-
-    def twin_median() -> dict:
-        ps = [twin_pass() for _ in range(3)]
-        return {k: round(statistics.median([p[k] for p in ps]), 3)
-                for k in ps[0]}
+    bench.warm_up(spark)
+    twins = {"before": bench.twin_median(spark, "before")}
 
     tmp = tempfile.mkdtemp(prefix="tokenizer_sf1_")
     doc: dict = {"n_docs": N_DOCS, "doc_len": DOC_LEN, "vocab": VOCAB,
                  "seq_len": SEQ_LEN, "shards": SHARDS}
     try:
-        twin_pass(); twin_pass()     # throwaway: JIT warmup
-        twin_before = twin_median()
-
         def _tok(i):
             x = F.col("id") * 61 + i
             h = F.pmod(x * 0x9E3779B1, F.lit(2**32))
@@ -148,7 +127,7 @@ def main() -> None:
         samples: dict = {k: [] for k in series}
         for _ in range(3):
             for name, thunk in series.items():
-                samples[name].append(run_isolated(thunk))
+                samples[name].append(bench.run_isolated(spark, thunk))
         doc["queries"] = {k: round(statistics.median(v), 3)
                           for k, v in samples.items()}
         doc["samples"] = samples
@@ -174,29 +153,12 @@ def main() -> None:
         doc["budget_kept_docs"] = int(ka["n"])
         doc["budget_spent"] = int(ka["t"])
         doc["budget_respected"] = int(ka["m"]) <= budget
-
-        for _ in range(3):
-            spark.sparkContext._jvm.System.gc()
-            time.sleep(15)
-        twin_pass()                  # throwaway: post-workload catchup
-        twin_after = twin_median()
-        doc["twin_before"], doc["twin_after"] = twin_before, twin_after
-        cal = {}
-        if os.path.exists(TWIN_FILE):
-            with open(TWIN_FILE) as f:
-                cal = json.load(f).get("medians", {})
-        drift = False
-        for tw in (twin_before, twin_after):
-            for p, v in tw.items():
-                if cal.get(p) and abs(v / cal[p] - 1.0) > 0.30:
-                    drift = True
-        doc["reference_drift"] = drift
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
-    out_path = os.path.join(REPO, "TOKENIZER_SF1.json")
-    with open(out_path, "w") as f:
-        json.dump(doc, f, indent=1)
+    bench.settle(spark)
+    twins["after"] = bench.twin_median(spark, "after")
+    bench.write_artifact(spark, "TOKENIZER_SF1.json", doc, twins)
     print(json.dumps(doc["queries"]))
 
 
