@@ -1027,7 +1027,9 @@ _register(
 # -- Katz centrality (analytics.katz_centrality): beta + alpha·Σ in-neighbor
 #    scores per iteration, NO degree normalization (the walk-counting
 #    centrality, Katz 1953) — completes the spectral family next to
-#    pagerank/HITS.  Same unrolled-CTE oracle shape as pagerank. ------------
+#    pagerank/HITS.  It runs pagerank's sum-product round
+#    (analytics._sum_product) with base beta and damping alpha; same
+#    unrolled-CTE oracle shape as pagerank. ---------------------------------
 
 _KATZ_ITERS, _KATZ_ALPHA = 8, 0.05
 

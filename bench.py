@@ -470,14 +470,15 @@ def main() -> None:
     # simhash twins and the as-of join.
     extras: dict[str, float | str] = {}
     try:
-        from hugegraph_on_tikv_spark.functions.dedup import simhash_signatures
+        from hugegraph_on_tikv_spark.functions.dedup import (
+            _simhash_signatures_jvm, simhash_signatures)
         from hugegraph_on_tikv_spark.sources.catalog import load_table
 
         docs = load_table(spark, SF_DIR, "documents")
         extras["simhash_arrow"] = run_isolated(
             spark, lambda: simhash_signatures(docs))
         extras["simhash_jvm"] = run_isolated(
-            spark, lambda: simhash_signatures(docs, use_arrow=False))
+            spark, lambda: _simhash_signatures_jvm(docs))
         for name in ("asof_last_view", "contamination", "g_walks", "cm_sketch",
                      "g_kcore", "g_clustering", "sim_quantized_topk",
                      "bm25_ranked", "sim_hybrid_rrf", "profile_orders",

@@ -347,29 +347,19 @@ def near_dedup(docs: DataFrame, num_hashes: int = 32, rows_per_band: int = 4,
 # -- SimHash -----------------------------------------------------------------
 
 def simhash_signatures(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", use_arrow: bool = True) -> DataFrame:
+                       id_col: str = "doc_id") -> DataFrame:
     """48-bit SimHash over the token multiset: bit j of the signature is the
     sign of sum over tokens of (2*bit_j(h(token)) - 1).
 
-    Two bit-identical implementations: the default Arrow path vectorizes the
-    whole per-doc bit-count in numpy — measured 17× faster at sf0.1
-    (0.6s vs 10.2s) because the JVM form's tokens×48 explode pays interpreted
-    per-row expression evaluation on the amplified stream; the JVM form
-    remains as the oracle-portable reference semantics and the no-Python
-    fallback."""
-    if use_arrow:
-        return simhash_signatures_arrow(docs, text_col, id_col)
-    return _simhash_signatures_jvm(docs, text_col, id_col)
-
-
-def simhash_signatures_arrow(docs: DataFrame, text_col: str = "text",
-                             id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched SimHash twin: per batch, tokenize (mirrors
-    text.tokens() exactly), md5-hash each token (first 48 bits — identical
-    to hashing.md5_long48), and compute all 48 majority votes as one
-    tokens×48 numpy bit matrix.  Zero-token docs are absent from the output,
-    matching the JVM twin's explode semantics.  Transfers only
-    (id, text) in and (id, signature) out — no amplified intermediate."""
+    Arrow-batched: per batch, tokenize (mirrors text.tokens() exactly),
+    md5-hash each token (first 48 bits — identical to
+    hashing.md5_long48), and compute all 48 majority votes as one
+    tokens×48 numpy bit matrix.  Zero-token docs are absent from the
+    output.  Transfers only (id, text) in and (id, signature) out — no
+    amplified intermediate; measured 17× faster at sf0.1 (0.6s vs 10.2s)
+    than `_simhash_signatures_jvm`, the bit-identical reference twin whose
+    tokens×48 explode pays interpreted per-row expression evaluation on
+    the amplified stream."""
     import hashlib
     import re
 
@@ -402,8 +392,8 @@ def simhash_signatures_arrow(docs: DataFrame, text_col: str = "text",
 def _simhash_signatures_jvm(docs: DataFrame, text_col: str = "text",
                             id_col: str = "doc_id") -> DataFrame:
     """JVM twin: explodes tokens × 48 bit positions and partial-aggregates.
-    Kept as the reference semantics (the SQL oracle mirrors this shape) and
-    the Python-free fallback; the Arrow twin is the measured-faster default."""
+    Kept as the reference semantics (the SQL oracle mirrors this shape);
+    `simhash_signatures` is the measured-faster Arrow form."""
     spark = docs.sparkSession
     bits = spark.range(48).select(F.col("id").cast("int").alias("j"))
     tok = docs.select(F.col(id_col).alias("doc_id"),

@@ -1796,7 +1796,7 @@ def media_byte_simhash(media: DataFrame, ngram_bytes: int = 8,
                        stride: int = 4) -> DataFrame:
     """48-bit SimHash over shingled byte n-grams: (media_id, simhash).
 
-    Arrow-batched mapInPandas (same discipline as simhash_signatures_arrow —
+    Arrow-batched mapInPandas (same discipline as simhash_signatures —
     the amplified grams×48 intermediate never leaves the Python batch; only
     (id, payload) in and (id, signature) out cross the boundary).  Each
     n-gram token is the lowercase hex of `ngram_bytes` consecutive payload

@@ -4,7 +4,15 @@ The reference has no analytics operators (its splits API, TikvTable.java:
 284-336, exists precisely so OLAP engines like Spark can scan the graph in
 parallel and do this work).  These are GraphX-style algorithms re-expressed
 as DataFrame programs: aggregate-messages = groupBy on message destination;
-iterative algorithms run their rounds through `_fixpoint`.
+iterative algorithms run their rounds through `_fixpoint`.  Two rounds
+are written once each and shared:
+
+* the sum-product round `_sum_product`, x(v) = base(v) + damping ·
+  Σ contrib(x(u)) over in-edges — pagerank and katz_centrality;
+* the relax round `_relax`, which unions the messages shipped along the
+  edges with the state and re-aggregates — min for sssp and
+  shortest_paths (one Bellman-Ford loop, `_bellman_ford`),
+  hll_union_agg for hyperball.
 
 Scale posture: every iteration joins the edge table with the vertex
 state.  While the state fits the broadcast budget, pagerank, katz and
@@ -102,8 +110,10 @@ def pagerank(edges: DataFrame, iterations: int = 10, reset: float = 0.15,
     shape — the normalization aggregate sums weights instead of counting
     rows; the unweighted path keeps its exact count-based arithmetic.
 
-    Each iteration: contributions = rank/out_degree shipped along edges,
-    grouped by dst.
+    Each iteration is one round of the sum-product engine `_sum_product`:
+    rank(v) = reset·tele(v) + (1 − reset) · Σ_{(u,v)∈E} contrib(u, v),
+    contrib = rank(u)/out_degree(u) shipped along the degree-normalized
+    edge side, grouped by dst.  katz_centrality runs the same rounds.
 
     `init_ranks` (opt-in, (id, rank)) warm-starts the iteration from a
     previous run's output — the incremental path after an edge delta:
@@ -125,8 +135,9 @@ def pagerank(edges: DataFrame, iterations: int = 10, reset: float = 0.15,
     broadcast_ranks=None (the default) asks `broadcast_fits` with the
     vertex count; explicit True/False overrides the guard.  The verdict
     picks the partitioning of the loop-invariant edge side, which is
-    built after it.  This partition rule is shared with katz_centrality
-    and label_propagation:
+    built after it.  This partition rule is `_sum_product`'s, so it holds
+    for pagerank and katz_centrality alike; label_propagation keeps its
+    own copy keyed on `a`:
 
     * state broadcast: the edge side is persisted hash-partitioned on the
       round's AGGREGATION key (`dst` here), into `state_partitions`
@@ -142,123 +153,33 @@ def pagerank(edges: DataFrame, iterations: int = 10, reset: float = 0.15,
       state to `src` for the join and the contributions to `dst` for the
       group-by.
     """
-    # state_partitions sizes every iteration's shuffle to the rank-state
-    # scale instead of the session default: per-task fixed costs dominate
-    # iterative jobs when partitions are oversized (measured 2.3x at sf0.1
-    # with 32→8).  Sizing is PLAN-LEVEL — explicit repartition(n, key) on the
-    # iteration state, which Catalyst recognizes as satisfying the join/agg
-    # distribution so no extra exchange is inserted — never a session-conf
-    # override (which would race concurrent queries on the same session).
-    # materialize the iteration-invariant state ONCE: vertex set and the
-    # out-degree-normalized edge list (src, dst, out_degree).  Without this
-    # every iteration's plan re-reads and re-unions the raw edge sources.
-    verts = _endpoints(edges)
-    if state_partitions:
-        verts = verts.repartition(state_partitions, "id")
-    verts = verts.persist()
-    norm_edges = None
-    try:
-        def tele_of(col: Column) -> Column:
-            # teleport vector as a function of an arbitrary id column: the
-            # iteration needs it on "id" AND (r11) on the edge side's "src"
-            # for the left-join fill below
-            if teleport_ids is not None:
-                return (F.when(col.isin([int(v) for v in teleport_ids]),
-                               F.lit(1.0)).otherwise(F.lit(0.0)))
-            return F.lit(1.0)
+    def tele_of(col: Column) -> Column:
+        # teleport vector as a function of an arbitrary id column: the
+        # rounds need it on "id" AND on the edge side's "src" for the
+        # left-join fill
+        if teleport_ids is not None:
+            return (F.when(col.isin([int(v) for v in teleport_ids]),
+                           F.lit(1.0)).otherwise(F.lit(0.0)))
+        return F.lit(1.0)
 
-        tele = tele_of(F.col("id"))
-        # init_ranks (opt-in) warm-starts the iteration from a previous
-        # run's ranks — the incremental-recompute path after an edge
-        # delta: with tol= set, a warm start over a slightly-changed graph
-        # converges in a fraction of the cold rounds (the power iteration
-        # contracts toward the new fixpoint from wherever it starts, so
-        # correctness is unchanged — only the round count moves).  Vertices
-        # absent from init_ranks (newly added) fall back to the cold-start
-        # value; departed vertices' stale entries are dropped by the join.
-        if init_ranks is None:
-            ranks = verts.withColumn("rank", tele)
-        else:
-            ranks = (verts.join(
-                init_ranks.select("id", F.col("rank").alias("_ir")),
-                "id", "left")
-                .select("id", F.coalesce(F.col("_ir"), tele).alias("rank")))
-        if broadcast_ranks is None:
-            # verts is persisted and needed immediately anyway; the count
-            # is one cheap job against the cached state
-            broadcast_ranks = broadcast_fits(ranks, verts.count())
-        if weight_col is None:
-            out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-                F.count(F.lit(1)).alias("out_degree"))
-            e_sel = edges.select("src", "dst")
-        else:
-            w = F.coalesce(F.col(weight_col).cast("double"), F.lit(1.0))
-            out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-                F.sum(w).alias("out_degree"))
-            e_sel = edges.select("src", "dst", w.alias("_w"))
-        norm_edges = e_sel.join(out_deg.withColumnRenamed("id", "src"), "src")
-        # the partition rule (docstring): keyed on the aggregation key
-        # under a broadcast state, else on the join key
-        if broadcast_ranks:
-            norm_edges = _keyed(norm_edges, "dst", state_partitions)
-        elif state_partitions:
-            norm_edges = norm_edges.repartition(state_partitions, "src")
-        norm_edges = norm_edges.persist()
+    if weight_col is None:
+        deg, e_sel = F.count(F.lit(1)), edges.select("src", "dst")
+    else:
+        w = F.coalesce(F.col(weight_col).cast("double"), F.lit(1.0))
+        deg, e_sel = F.sum(w), edges.select("src", "dst", w.alias("_w"))
+    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
+        deg.alias("out_degree"))
 
-        def step(ranks: DataFrame, i: int) -> DataFrame:
-            rank_side = ranks.withColumnRenamed("id", "src")
-            if broadcast_ranks:
-                rank_side = F.broadcast(rank_side)
-            elif state_partitions:
-                rank_side = rank_side.repartition(state_partitions, "src")
-            # r11 (guide §2.4): from iteration 2 on, the rank state only
-            # covers vertices WITH in-edges (the contribution aggregation's
-            # key set) — an out-only vertex's rank is the constant
-            # reset·tele, so the contribution join goes LEFT with that
-            # constant as the fill, and the per-iteration `verts ⟕ contribs`
-            # completion join (one vertex-scale join × iterations) is gone;
-            # the full vertex domain is restored ONCE after the loop.
-            # Bit-exact: old ranks for out-only v were
-            # reset·tele + (1−reset)·0.0 ≡ reset·tele (IEEE: x + 0.0 = x,
-            # (1−reset)·0.0 = +0.0), the same double the fill supplies.
-            rank_eff = F.coalesce(F.col("rank"),
-                                  F.lit(reset) * tele_of(F.col("src")))
-            contrib_expr = (rank_eff / F.col("out_degree")
-                            if weight_col is None else
-                            rank_eff * F.col("_w") / F.col("out_degree"))
-            contribs = (
-                norm_edges.join(rank_side, "src", "left")
-                .select(F.col("dst").alias("id"), contrib_expr.alias("contrib"))
-            )
-            if state_partitions and not broadcast_ranks:
-                contribs = contribs.repartition(state_partitions, "id")
-            return (
-                contribs.groupBy("id")
-                .agg(F.sum("contrib").alias("contrib"))
-                .select(
-                    "id",
-                    (F.lit(reset) * tele
-                     + F.lit(1.0 - reset) * F.coalesce("contrib", F.lit(0.0))).alias("rank"),
-                )
-            )
+    def contrib(rank: Column) -> Column:
+        return ((rank if weight_col is None else rank * F.col("_w"))
+                / F.col("out_degree"))
 
-        ranks, iters_done, _ = _fixpoint(
-            step, ranks, iterations, every=checkpoint_every,
-            probe=None if tol is None else _within(tol, "rank"))
-        if _iters_out is not None:
-            _iters_out.append(iters_done)
-        if iters_done:
-            # restore the full vertex domain ONCE (see the loop comment):
-            # vertices absent from the in-vertex rank state are out-only
-            # and hold the constant reset·tele
-            ranks = verts.join(ranks, "id", "left").select(
-                "id",
-                F.coalesce(F.col("rank"), F.lit(reset) * tele).alias("rank"))
-        return ranks.localCheckpoint(eager=True)
-    finally:
-        verts.unpersist()
-        if norm_edges is not None:
-            norm_edges.unpersist()
+    return _sum_product(
+        edges, e_sel.join(out_deg.withColumnRenamed("id", "src"), "src"),
+        contrib, lambda c: F.lit(reset) * tele_of(c), 1.0 - reset, "rank",
+        iterations, start=tele_of(F.col("id")), init=init_ranks,
+        broadcast=broadcast_ranks, state_partitions=state_partitions,
+        every=checkpoint_every, tol=tol, iters_out=_iters_out)
 
 
 def katz_centrality(edges: DataFrame, iterations: int = 8,
@@ -274,66 +195,107 @@ def katz_centrality(edges: DataFrame, iterations: int = 8,
     for the test graphs; fixed `iterations` bounds the computation either
     way).  Returns (id, katz), unnormalized.
 
-    Plan shape is pagerank's (rank vector broadcast under the same
-    `broadcast_fits` guard, the edge side partitioned by pagerank's
-    partition rule, `_fixpoint` lineage cuts) minus the
-    degree-normalization join — see pagerank's docstring.
+    Runs pagerank's rounds (`_sum_product`, with pagerank's partition
+    rule): base beta, damping alpha, and the bare (src, dst) edge side
+    shipping the score itself — no degree-normalization join.
     """
+    return _sum_product(
+        edges, edges.select("src", "dst"), lambda r: r,
+        lambda c: F.lit(float(beta)), float(alpha), "katz", iterations,
+        start=F.lit(float(beta)), state_partitions=state_partitions,
+        every=checkpoint_every)
+
+
+def _sum_product(edges: DataFrame, side: DataFrame,
+                 contrib: Callable[[Column], Column],
+                 base: Callable[[Column], Column], damping: float, col: str,
+                 iterations: int, *, start: Column,
+                 state_partitions: int | None, every: int,
+                 init: DataFrame | None = None, broadcast: bool | None = None,
+                 tol: float | None = None, iters_out: list | None = None
+                 ) -> DataFrame:
+    """The sum-product round of pagerank and katz_centrality:
+    x(v) = base(v) + damping · Σ_{(u,v)∈side} contrib(x(u)), from x = start
+    (or `init`'s (id, col) values, start filling the vertices it lacks);
+    returns (id, col) over every endpoint of `edges`.
+
+    `side` is the loop-invariant edge side, (src, dst) plus whatever
+    columns `contrib` reads; it is partitioned by pagerank's partition rule
+    on the `broadcast_fits` verdict (None asks the guard with the vertex
+    count) and persisted for the rounds.  `damping` is the caller's own
+    double, never derived, so the arithmetic is bit-identical to the
+    operator's formula.
+
+    From round 2 on the state only covers vertices WITH in-edges (the
+    group-by's key set): an out-only vertex's value is the constant
+    base(v) — base + damping·0.0 ≡ base in IEEE (x + 0.0 = x,
+    damping·0.0 = +0.0) — so the contribution join goes LEFT with base as
+    the fill, and the full vertex domain is restored ONCE after the loop
+    instead of by a vertex-scale completion join every round.  `_fixpoint`
+    cuts every `every` rounds and, with `tol`, probes max |Δcol| on those
+    cuts; `iters_out`, when a list, receives the rounds run."""
+    # state_partitions sizes every round's shuffle to the state's scale
+    # instead of the session default: per-task fixed costs dominate
+    # iterative jobs when partitions are oversized (measured 2.3x at sf0.1
+    # with 32→8).  Sizing is PLAN-LEVEL — explicit repartition(n, key) on
+    # the state, which Catalyst recognizes as satisfying the join/agg
+    # distribution so no extra exchange is inserted — never a session-conf
+    # override (which would race concurrent queries on the same session).
+    # The vertex set is materialized once; without it every round's plan
+    # re-reads and re-unions the raw edge sources.
     verts = _endpoints(edges)
     if state_partitions:
         verts = verts.repartition(state_partitions, "id")
     verts = verts.persist()
-    e_sel = None
     try:
-        ranks = verts.withColumn("katz", F.lit(float(beta)))
-        broadcast_ranks = broadcast_fits(ranks, verts.count())
-        e_sel = edges.select("src", "dst")
-        if broadcast_ranks:
-            e_sel = _keyed(e_sel, "dst", state_partitions)
+        if init is None:
+            state = verts.withColumn(col, start)
+        else:
+            state = (verts.join(init.select("id", F.col(col).alias("_i")),
+                                "id", "left")
+                     .select("id", F.coalesce(F.col("_i"), start).alias(col)))
+        if broadcast is None:
+            # verts is persisted and needed immediately anyway; the count
+            # is one cheap job against the cached state
+            broadcast = broadcast_fits(state, verts.count())
+        # the partition rule (pagerank's docstring): keyed on the
+        # aggregation key under a broadcast state, else on the join key
+        if broadcast:
+            side = _keyed(side, "dst", state_partitions)
         elif state_partitions:
-            e_sel = e_sel.repartition(state_partitions, "src")
-        e_sel = e_sel.persist()
+            side = side.repartition(state_partitions, "src")
+        side = side.persist()
 
-        def step(ranks: DataFrame, i: int) -> DataFrame:
-            rank_side = ranks.withColumnRenamed("id", "src")
-            if broadcast_ranks:
-                rank_side = F.broadcast(rank_side)
+        def step(state: DataFrame, i: int) -> DataFrame:
+            src_side = state.withColumnRenamed("id", "src")
+            if broadcast:
+                src_side = F.broadcast(src_side)
             elif state_partitions:
-                rank_side = rank_side.repartition(state_partitions, "src")
-            # r11 (guide §2.4, pagerank's fill-join removal): from
-            # iteration 2 on the state only covers in-vertices; an
-            # out-only vertex's score is the constant beta (beta +
-            # alpha·0.0 ≡ beta in IEEE), supplied by the left-join fill,
-            # and the per-iteration verts completion join is gone —
-            # restored once after the loop.
-            contribs = (
-                e_sel.join(rank_side, "src", "left")
-                .select(F.col("dst").alias("id"),
-                        F.coalesce(F.col("katz"), F.lit(float(beta)))
-                        .alias("c"))
-            )
-            if state_partitions and not broadcast_ranks:
+                src_side = src_side.repartition(state_partitions, "src")
+            x = F.coalesce(F.col(col), base(F.col("src")))
+            contribs = (side.join(src_side, "src", "left")
+                        .select(F.col("dst").alias("id"),
+                                contrib(x).alias("contrib")))
+            if state_partitions and not broadcast:
                 contribs = contribs.repartition(state_partitions, "id")
-            return (
-                contribs.groupBy("id").agg(F.sum("c").alias("c"))
-                .select(
-                    "id",
-                    (F.lit(float(beta)) + F.lit(float(alpha))
-                     * F.coalesce("c", F.lit(0.0))).alias("katz"),
-                )
-            )
+            return (contribs.groupBy("id")
+                    .agg(F.sum("contrib").alias("contrib"))
+                    .select("id", (base(F.col("id")) + F.lit(damping)
+                                   * F.coalesce("contrib", F.lit(0.0)))
+                            .alias(col)))
 
-        ranks, _, _ = _fixpoint(step, ranks, iterations,
-                                every=checkpoint_every)
-        if iterations:
-            ranks = verts.join(ranks, "id", "left").select(
-                "id",
-                F.coalesce(F.col("katz"), F.lit(float(beta))).alias("katz"))
-        return ranks.localCheckpoint(eager=True)
+        state, rounds, _ = _fixpoint(
+            step, state, iterations, every=every,
+            probe=None if tol is None else _within(tol, col))
+        if iters_out is not None:
+            iters_out.append(rounds)
+        if rounds:
+            state = verts.join(state, "id", "left").select(
+                "id", F.coalesce(F.col(col), base(F.col("id"))).alias(col))
+        return state.localCheckpoint(eager=True)
     finally:
         verts.unpersist()
-        if e_sel is not None:
-            e_sel.unpersist()
+        side.unpersist()
 
 
 def hits(edges: DataFrame, iterations: int = 8,
@@ -1322,33 +1284,18 @@ def shortest_paths(edges: DataFrame, landmarks: list[int], iterations: int = 10)
     out-neighbors w of dist(w,l); seed dist(l,l)=0).
 
     Fixed iteration count (deterministic, oracle-matchable); converges when
-    iterations >= graph diameter.  One aggregate-messages shuffle per round
-    over (id, landmark) pairs — state size |V|×|landmarks|, so keep the
+    iterations >= graph diameter.  sssp's Bellman-Ford loop (the relax
+    round `_relax`) on the reversed unit-weight edge side, with `landmark`
+    as one more group key: one aggregate-messages shuffle per round over
+    (id, landmark) pairs — state size |V|×|landmarks|, so keep the
     landmark set small (that's the GraphX contract too).
     Returns (id, landmark, distance) for reachable pairs."""
-    spark = edges.sparkSession
-    adj = edges.select("src", "dst").distinct().persist()
-    try:
-        dists = spark.createDataFrame(
-            [(int(l), int(l), 0) for l in landmarks], "id long, landmark long, distance int"
-        )
-
-        def step(dists: DataFrame, i: int) -> DataFrame:
-            msgs = (
-                adj.join(dists.withColumnRenamed("id", "dst"), "dst")
-                .select(F.col("src").alias("id"), "landmark",
-                        (F.col("distance") + 1).alias("distance"))
-            )
-            return (
-                dists.unionByName(msgs)
-                .groupBy("id", "landmark")
-                .agg(F.min("distance").alias("distance"))
-            )
-
-        dists, _, _ = _fixpoint(step, dists, iterations)
-        return dists.localCheckpoint(eager=True)
-    finally:
-        adj.unpersist()
+    rev = edges.select(F.col("dst").alias("src"),
+                       F.col("src").alias("dst")).distinct()
+    seeds = edges.sparkSession.createDataFrame(
+        [(int(l), int(l), 0) for l in landmarks],
+        "id long, landmark long, distance int")
+    return _bellman_ford(rev, seeds, iterations, F.lit(1), ("landmark",))
 
 
 def label_propagation(edges: DataFrame, iterations: int = 5) -> DataFrame:
@@ -1970,30 +1917,49 @@ def louvain_full(edges: DataFrame, label_col: str = "community",
 def sssp(weighted_edges: DataFrame, source: int, iterations: int = 8) -> DataFrame:
     """Single-source shortest paths over weighted edges (src, dst, weight):
     Bellman-Ford rounds, d_t(v) = min(d_{t-1}(v), min over in-edges
-    (d_{t-1}(u) + w)).  Fixed round count; converges when iterations >=
-    longest shortest path's hop count.  Min-plus is deterministic across
-    engines (each candidate is one left-associated sum chain), so results
-    are oracle-matchable bit-for-bit.  Returns (id, distance)."""
-    spark = weighted_edges.sparkSession
-    e = weighted_edges.select("src", "dst", "weight").persist()
+    (d_{t-1}(u) + w)) — each round is the relax round `_relax`.  Fixed
+    round count; converges when iterations >= longest shortest path's hop
+    count.  Min-plus is deterministic across engines (each candidate is
+    one left-associated sum chain), so results are oracle-matchable
+    bit-for-bit.  Returns (id, distance)."""
+    seed = weighted_edges.sparkSession.createDataFrame(
+        [(int(source), 0.0)], "id long, distance double")
+    return _bellman_ford(weighted_edges.select("src", "dst", "weight"),
+                         seed, iterations, F.col("weight"))
+
+
+def _relax(side: DataFrame, val: str, msg: Column,
+           agg: Callable[[str], Column], keys: tuple[str, ...] = ()
+           ) -> Callable[[DataFrame, int], DataFrame]:
+    """The relax round of sssp, shortest_paths and hyperball, as a
+    `_fixpoint` step over an (id, *keys, val) state: ship every state row
+    along `side`'s (src, dst) edges as `msg` (over the joined row), union
+    the messages with the state, and re-aggregate per (id, *keys) with
+    `agg` — min for the min-plus distances, hll_union_agg for HyperBall's
+    sketches.  One join and one group-by shuffle per round."""
+    def step(state: DataFrame, i: int) -> DataFrame:
+        msgs = (side.join(state.withColumnRenamed("id", "src"), "src")
+                .select(F.col("dst").alias("id"), *keys, msg.alias(val)))
+        return (state.unionByName(msgs)
+                .groupBy("id", *keys).agg(agg(val).alias(val)))
+    return step
+
+
+def _bellman_ford(side: DataFrame, seed: DataFrame, rounds: int,
+                  weight: Column, keys: tuple[str, ...] = ()) -> DataFrame:
+    """`rounds` min-plus relax rounds from the (id, *keys, distance) seed
+    over the edge side, persisted for the loop, each edge adding `weight`
+    (a column of the side, or a literal for unit weights, which then
+    never enters the persisted side); the loop of sssp and
+    shortest_paths."""
+    side = side.persist()
     try:
-        dists = spark.createDataFrame([(int(source), 0.0)], "id long, distance double")
-
-        def step(dists: DataFrame, i: int) -> DataFrame:
-            relaxed = (
-                e.join(dists.withColumnRenamed("id", "src"), "src")
-                .select(F.col("dst").alias("id"), (F.col("distance") + F.col("weight")).alias("distance"))
-            )
-            return (
-                dists.unionByName(relaxed)
-                .groupBy("id")
-                .agg(F.min("distance").alias("distance"))
-            )
-
-        dists, _, _ = _fixpoint(step, dists, iterations)
+        dists, _, _ = _fixpoint(
+            _relax(side, "distance", F.col("distance") + weight, F.min,
+                   keys), seed, rounds)
         return dists.localCheckpoint(eager=True)
     finally:
-        e.unpersist()
+        side.unpersist()
 
 
 def harmonic_closeness(edges: DataFrame, landmarks: list[int],
@@ -2208,11 +2174,13 @@ def hyperball(edges: DataFrame, max_rounds: int = 16, lg_k: int = 12,
     HyperBall is O(rounds · m) with fixed 2^lg_k-byte state per vertex,
     which is why it's the only way to measure distance structure at scale.
 
-    Per round, ball_{r+1}(v) = ball_r(v) ∪ ⋃_{(v,u)∈E} ball_r(u) — one
-    join shipping neighbor sketches plus one hll_union_agg, both
-    JVM-side (Spark's datasketches HLL: mergeable, fixed-size, exactly
-    the combinable-aggregate shape the 100 TB plan needs; the same shuffle
-    key every round, so a bucketed-by-dst edge table co-locates it).
+    Per round, ball_{r+1}(v) = ball_r(v) ∪ ⋃_{(v,u)∈E} ball_r(u) — sssp's
+    relax round (`_relax`) on the reversed edges with hll_union_agg in
+    place of min: one join shipping neighbor sketches plus one
+    hll_union_agg, both JVM-side (Spark's datasketches HLL: mergeable,
+    fixed-size, exactly the combinable-aggregate shape the 100 TB plan
+    needs; the same shuffle key every round, so a bucketed-by-dst edge
+    table co-locates it).
     Stops early when N(r) grows by < rel_tol (relative) in a round — the
     1-row convergence probe follows the pagerank/CC collect contract.
 
@@ -2228,7 +2196,9 @@ def hyperball(edges: DataFrame, max_rounds: int = 16, lg_k: int = 12,
     pytest-covered (exact-BFS tolerance + monotonicity), like the other
     sketch/streaming surfaces."""
     spark = edges.sparkSession
-    e = edges.select("src", "dst").persist()
+    # reversed: a vertex's ball takes in its out-neighbours' balls
+    e = edges.select(F.col("dst").alias("src"),
+                     F.col("src").alias("dst")).persist()
     try:
         verts = _endpoints(e)
 
@@ -2244,18 +2214,13 @@ def hyperball(edges: DataFrame, max_rounds: int = 16, lg_k: int = 12,
                 [], "radius int, reachable_pairs double")
         totals = [float(t0)]
 
-        def step(state: DataFrame, i: int) -> DataFrame:
-            msgs = (e.join(state.withColumnRenamed("id", "dst"), "dst")
-                    .select(F.col("src").alias("id"), "ball"))
-            return (state.unionByName(msgs)
-                    .groupBy("id")
-                    .agg(F.hll_union_agg("ball").alias("ball")))
-
         def plateau(ck: DataFrame, prev: DataFrame) -> bool:
             totals.append(float(total(ck)))
             return totals[-1] - totals[-2] < rel_tol * totals[-2]
 
-        _, rounds, _ = _fixpoint(step, state, max_rounds, probe=plateau)
+        _, rounds, _ = _fixpoint(
+            _relax(e, "ball", F.col("ball"), F.hll_union_agg), state,
+            max_rounds, probe=plateau)
         if _rounds_out is not None:
             _rounds_out.append(rounds)
         return spark.createDataFrame(
@@ -2293,7 +2258,6 @@ def hyperball_summary(edges: DataFrame, max_rounds: int = 16,
             else:
                 eff = (r - 1) + (target - ns[r - 1]) / (ns[r] - ns[r - 1])
             break
-    spark = edges.sparkSession
     return spark.createDataFrame(
         [(float(n0), avg, eff)],
         "n_vertices double, avg_distance double, effective_diameter double")

@@ -276,7 +276,12 @@ def test_iteration_ports_job_counts(spark):
     probe rides its cut's one job, so a small ring-plus-DAG SCC, a K4
     truss and a 3-path betweenness stay at these job counts (the hand
     loops, with a separate probe action per round, submitted 103, 35 and
-    47)."""
+    47).  katz_centrality runs pagerank's sum-product round, and
+    shortest_paths and hyperball run sssp's relax round: a 4-edge DAG's
+    Katz, two-landmark paths on a 3-cycle with a tail, a weighted DAG's
+    sssp and the 3-path's HyperBall curve submitted 14, 13, 12 and 18
+    jobs when each operator still had its own round body, and stay
+    there."""
     def run(op):
         jobs = jobs_since(spark)
         rows = sorted(tuple(r) for r in op().collect())
@@ -302,6 +307,32 @@ def test_iteration_ports_job_counts(spark):
         lambda: analytics.betweenness_centrality(path, [1, 2, 3]))
     assert rows == [(1, 0.0), (2, 2.0), (3, 0.0)]
     assert jobs <= 30
+
+    dag = spark.createDataFrame([(1, 2), (1, 3), (2, 3), (3, 4)],
+                                "src long, dst long")
+    jobs, rows = run(lambda: analytics.katz_centrality(
+        dag, iterations=4, alpha=0.5))
+    assert rows == [(1, 1.0), (2, 1.5), (3, 2.25), (4, 2.125)]
+    assert jobs <= 14
+
+    cyc = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (3, 4)],
+                                "src long, dst long")
+    jobs, rows = run(lambda: analytics.shortest_paths(cyc, [1, 4],
+                                                      iterations=4))
+    assert rows == [(1, 1, 0), (1, 4, 3), (2, 1, 2), (2, 4, 2), (3, 1, 1),
+                    (3, 4, 1), (4, 4, 0)]
+    assert jobs <= 13
+
+    wdag = spark.createDataFrame(
+        [(1, 2, 1.0), (2, 3, 2.0), (1, 3, 5.0), (3, 4, 1.5)],
+        "src long, dst long, weight double")
+    jobs, rows = run(lambda: analytics.sssp(wdag, 1, iterations=4))
+    assert rows == [(1, 0.0), (2, 1.0), (3, 3.0), (4, 4.5)]
+    assert jobs <= 12
+
+    jobs, rows = run(lambda: analytics.hyperball(path, max_rounds=4))
+    assert rows == [(0, 3.0), (1, 5.0), (2, 6.0), (3, 6.0)]
+    assert jobs <= 18
 
 
 def test_k_hop_shuffle_fallback_matches_broadcast(tiny, no_broadcast):

@@ -129,8 +129,8 @@ def test_ivf_index_matches_inline_and_prunes_partitions(spark, tmp_path):
 
 
 def test_simhash_twins_bit_identical(spark):
-    """The Arrow SimHash twin (default; measured 17x faster at sf0.1) must
-    produce bit-identical signatures to the JVM explode form — same
+    """The Arrow SimHash (`simhash_signatures`; measured 17x faster at sf0.1)
+    must produce bit-identical signatures to the JVM explode form — same
     tokenization, same md5 48-bit sampling, same majority vote, same
     zero-token-doc absence."""
     from hugegraph_on_tikv_spark.functions.dedup import (
@@ -148,7 +148,7 @@ def test_simhash_twins_bit_identical(spark):
     arrow = {r["doc_id"]: r["simhash"]
              for r in simhash_signatures(docs).collect()}
     jvm = {r["doc_id"]: r["simhash"]
-           for r in simhash_signatures(docs, use_arrow=False).collect()}
+           for r in _simhash_signatures_jvm(docs).collect()}
     assert arrow == jvm
     assert len(arrow) > 0
     assert 10_000_001 not in arrow and 10_000_002 not in arrow  # no tokens
