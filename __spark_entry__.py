@@ -2372,8 +2372,8 @@ _register(
 )
 
 
-# -- distributed BPE merge learning (functions/bpe.py): tokenizer training
-#    on the word-frequency table; 6 rounds, each = freq-weighted pair count
+# -- BPE merge learning (functions/bpe.py): tokenizer training on the
+#    word-frequency table; 6 merges, each = freq-weighted pair count
 #    + deterministic argmax + marker-string replace.  The oracle unrolls
 #    all 6 rounds (pair counts via positional twin unnest, argmax via
 #    ORDER BY/LIMIT 1, apply via the same prefix-marker replace) and
@@ -3211,8 +3211,8 @@ def _pipe_assemble(spark: SparkSession, sf: str) -> DataFrame:
     # the corpus tokenize + the banded running-sum windows; without the
     # lazy checkpoint all three consumers (the kdocs join, the epoch
     # shuffle `ordr`, the budget totals row `bud`) re-ran that pipeline.
-    # The first action (bpe_learn's round-1 argmax over kdocs) materializes
-    # it as a side effect.
+    # The first action (bpe_learn's eager word-table checkpoint over kdocs)
+    # materializes it as a side effect.
     kept = token_budget_select(scored, budget=_BUDGET_TOKENS,
                                quality_col="quality", token_col="n_tokens",
                                id_col="doc_id", band_width=_BUDGET_BAND

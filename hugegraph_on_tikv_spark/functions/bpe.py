@@ -1,5 +1,5 @@
-"""Distributed BPE merge learning (Sennrich et al. 2016) — tokenizer
-training as a Spark program.
+"""BPE merge learning (Sennrich et al. 2016) — tokenizer training on
+the corpus' word-frequency table.
 
 Reference parity: the reference engine has no tokenizer ops (north-star
 LLM-pipeline surface, next to text.bpe_token_estimate's fixed ESTIMATOR —
@@ -8,9 +8,9 @@ this learns actual merges from the corpus).
 The classic trick makes this corpus-scale cheap: BPE statistics depend
 only on the WORD FREQUENCY table, not the corpus — one groupBy collapses
 terabytes of text into a vocab-sized (word, freq) table, and every merge
-round then runs on that small table:
+is learned from that small table:
 
-    round r:  pair counts  = explode adjacent symbol pairs × freq
+    merge r:  pair counts  = adjacent symbol pairs × freq
               best pair    = argmax (count DESC, left ASC, right ASC)
               apply        = replace the pair everywhere it occurs
 
@@ -18,22 +18,31 @@ Symbol sequences are MARKER-PREFIXED STRINGS, not arrays: the word "cat"
 is '_c_a_t', and applying merge (a, b) is replace(syms, '_a_b', '_ab').
 Because the marker prefixes each symbol (no shared separator between
 adjacent pair occurrences), non-overlapping left-to-right string
-replacement — the semantics of BOTH Spark's replace() and DuckDB's —
-implements exactly the greedy leftmost merge BPE specifies: '_a_a_a'
-→ '_aa_a', '_a_b_a_b' → '_ab_ab'.  That is what makes the whole
-train loop SQL-replayable (the driver oracle unrolls the rounds).
+replacement — the semantics of Python's str.replace, Spark's replace()
+and DuckDB's alike — implements exactly the greedy leftmost merge BPE
+specifies: '_a_a_a' → '_aa_a', '_a_b_a_b' → '_ab_ab'.  The search string
+is anchored on the left only, so '_a_b' also matches inside '_a_bc';
+all three engines share that too, which is what makes the whole train
+loop SQL-replayable (the driver oracle unrolls the rounds).
 
-Each round is one map-side-combinable aggregate over the vocab table
-plus a 1-row argmax collect (driver scalar probe, the pagerank/CC
-contract); the corpus itself is touched exactly once.  No word-boundary
-marker (</w>) is added — merges are token-internal; callers who need
-word-final symbols can append one to the tokens first.
+Learning is ONE pass over the word table: the corpus groupBy is cut once
+and the (syms, freq) rows are read into the driver, where the merge loop
+keeps the pair counts incrementally (a merge recounts only the words
+whose string contains its search string), as Sennrich's learn_bpe does.
+So training submits a fixed number of Spark jobs whatever `n_merges` is.
+Scale contract: the word table is held in one process — the
+bounded-small-table contract token_ids' single-partition window relies
+on, and what learn_bpe, sentencepiece and HF tokenizers do.  No
+word-boundary marker (</w>) is added — merges are token-internal;
+callers who need word-final symbols can append one to the tokens first.
 
 Tokens follow the engine-wide contract (text.tokens: lower → [a-z0-9]+),
 so the '_' marker can never collide with symbol text.
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -55,20 +64,10 @@ def word_freqs(docs: DataFrame, text_col: str = "text",
         "syms", F.regexp_replace(F.col("word"), "(.)", MARK + "$1"))
 
 
-def _pair_counts(words: DataFrame) -> DataFrame:
-    """(left, right, cnt): freq-weighted adjacent-pair counts over the
-    current symbol strings."""
-    arr = F.slice(F.split(F.col("syms"), MARK), 2, 2_000_000)  # drop lead ''
-    n = F.size(arr)
-    a = F.slice(arr, 1, F.greatest(n - 1, F.lit(0)))
-    b = F.slice(arr, 2, F.greatest(n - 1, F.lit(0)))
-    return (words.select("freq", F.explode(F.arrays_zip(a.alias("l"),
-                                                        b.alias("r")))
-                         .alias("p"))
-            .select(F.col("p.l").alias("left"), F.col("p.r").alias("right"),
-                    F.col("freq"))
-            .groupBy("left", "right")
-            .agg(F.sum("freq").cast("long").alias("cnt")))
+def _pairs(syms: str):
+    """Adjacent symbol pairs of a marker-prefixed string, in order."""
+    seq = syms.split(MARK)[1:]
+    return zip(seq, seq[1:])
 
 
 def bpe_learn(docs: DataFrame, n_merges: int = 8, min_word_freq: int = 1,
@@ -79,41 +78,40 @@ def bpe_learn(docs: DataFrame, n_merges: int = 8, min_word_freq: int = 1,
     final_words is the (word, freq, syms) table after all merges (feed to
     bpe_vocab for the symbol inventory).  Stops early if no pair is left.
 
+    Plan: the word-frequency table is cut with one eager localCheckpoint
+    and its (syms, freq) rows are collected once; every merge is then
+    learned in the driver on freq-weighted pair counts kept
+    incrementally.  final_words is bpe_apply over the cut, so no consumer
+    replays the corpus pass.
+
     Determinism: the argmax tie-break is (count DESC, left ASC,
     right ASC) — total, so learned merges are identical across runs,
     partitionings, and engines."""
-    words = word_freqs(docs, text_col, min_word_freq).persist()
+    words = word_freqs(docs, text_col, min_word_freq).localCheckpoint()
+    table = [(r["syms"], r["freq"])
+             for r in words.select("syms", "freq").collect()]
+    counts: Counter = Counter()
+    for syms, freq in table:
+        for p in _pairs(syms):
+            counts[p] += freq
     merges: list = []
-    try:
-        cur = words
-        for r in range(1, n_merges + 1):
-            top = (_pair_counts(cur)
-                   .orderBy(F.col("cnt").desc(), F.col("left").asc(),
-                            F.col("right").asc())
-                   .limit(1).collect())
-            if not top:
-                break
-            left, right, cnt = top[0]["left"], top[0]["right"], top[0]["cnt"]
-            merges.append((r, left, right, int(cnt)))
-            cur = cur.withColumn(
-                "syms", F.replace(F.col("syms"),
-                                  F.lit(MARK + left + MARK + right),
-                                  F.lit(MARK + left + right)))
-            # r11 (guide §1.2 action budget): LAZY checkpoint — the next
-            # round's argmax collect materializes it, so a merge round is
-            # ONE submitted job instead of two (eager checkpoint + argmax).
-            # Plan depth stays bounded: each round's plan is one replace()
-            # over the previous round's materialized RDD.
-            cur = cur.localCheckpoint(eager=False)
-        if merges:
-            # materialize the FINAL round's lazy checkpoint while `words`
-            # is still persisted — after the unpersist below, an
-            # unmaterialized checkpoint would silently replay the corpus
-            # word-frequency pass in the first downstream consumer
-            cur.count()
-        return merges, cur
-    finally:
-        words.unpersist()
+    for r in range(1, n_merges + 1):
+        counts = +counts  # drop pairs a merge used up
+        if not counts:
+            break
+        (left, right), cnt = min(counts.items(),
+                                 key=lambda pc: (-pc[1], pc[0]))
+        merges.append((r, left, right, cnt))
+        old, new = MARK + left + MARK + right, MARK + left + right
+        for i, (syms, freq) in enumerate(table):
+            if old in syms:
+                merged = syms.replace(old, new)
+                for p in _pairs(syms):
+                    counts[p] -= freq
+                for p in _pairs(merged):
+                    counts[p] += freq
+                table[i] = (merged, freq)
+    return merges, bpe_apply(words, merges)
 
 
 def bpe_apply(words: DataFrame, merges: list) -> DataFrame:
@@ -141,7 +139,7 @@ def token_ids(words_encoded: DataFrame) -> DataFrame:
     ids from 0 by (corpus frequency DESC, symbol ASC) over the encoded
     word table's symbol inventory.  The window is single-partition but
     VOCAB-sized (the whole point of the word-table formulation), the same
-    bounded-small-table contract as bpe_learn's argmax."""
+    bounded-small-table contract as bpe_learn's word table."""
     from pyspark.sql.window import Window
 
     w = Window.orderBy(F.desc("freq"), F.asc("symbol"))

@@ -2076,14 +2076,16 @@ def betweenness_centrality(edges: DataFrame, sources: list[int],
                 [(int(s), int(s), 1.0, 0) for s in sources],
                 "s long, v long, sigma double, depth int"),
             max_depth, probe=nothing_new)
-        levels = [_b(seen.filter(F.col("depth") == d).drop("depth"))
+        levels = [seen.filter(F.col("depth") == d).drop("depth")
                   for d in range(depth if converged else depth + 1)]
-        # backward dependency accumulation, deepest level first
+        # backward dependency accumulation, deepest level first; the
+        # broadcast hint goes on inner-join build sides only (a left
+        # join's preserved side cannot be built, so Spark drops it)
         deltas: list[DataFrame] = [None] * len(levels)
-        deltas[-1] = levels[-1].select(
+        deltas[-1] = _b(levels[-1]).select(
             "s", "v", F.lit(0.0).alias("delta"))
         for l in range(len(levels) - 1, 0, -1):
-            v_lvl = (levels[l].join(deltas[l], ["s", "v"])
+            v_lvl = (_b(levels[l]).join(deltas[l], ["s", "v"])
                      .select("s", F.col("v"),
                              F.col("sigma").alias("sigma_v"), "delta"))
             # predecessors: u -> v edge with u one level up
@@ -2092,7 +2094,7 @@ def betweenness_centrality(edges: DataFrame, sources: list[int],
                                "sigma_v", "delta"))
             up = levels[l - 1].select(
                 "s", F.col("v").alias("u"), F.col("sigma").alias("sigma_u"))
-            dep = (contrib.join(up, ["s", "u"])
+            dep = (contrib.join(_b(up), ["s", "u"])
                    .groupBy("s", "u")
                    .agg(F.sum(F.col("sigma_u") / F.col("sigma_v")
                               * (F.lit(1.0) + F.col("delta")))

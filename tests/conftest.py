@@ -60,6 +60,30 @@ def jobs_since(spark: SparkSession):
     return lambda: dag.nextJobId() - start
 
 
+@contextlib.contextmanager
+def jvm_log(spark: SparkSession):
+    """`with jvm_log(spark) as log:` captures what the JVM logs through
+    log4j's root logger inside the block (planner warnings included);
+    `log()` returns the captured text."""
+    jvm = spark._jvm
+    core = jvm.org.apache.logging.log4j.core
+    ctx = jvm.org.apache.logging.log4j.LogManager.getContext(False)
+    root = ctx.getConfiguration().getRootLogger()
+    writer = jvm.java.io.StringWriter()
+    app = core.appender.WriterAppender.createAppender(
+        core.layout.PatternLayout.createDefaultLayout(), None, writer,
+        "jvm_log", False, True)
+    app.start()
+    root.addAppender(app, None, None)
+    ctx.updateLoggers()
+    try:
+        yield writer.toString
+    finally:
+        root.removeAppender("jvm_log")
+        ctx.updateLoggers()
+        app.stop()
+
+
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
     s = (

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hugegraph_on_tikv_spark.operators import analytics, traversal
-from tests.conftest import jobs_since
+from tests.conftest import jobs_since, jvm_log
 
 
 @pytest.fixture(scope="module")
@@ -303,10 +303,13 @@ def test_iteration_ports_job_counts(spark):
     assert jobs <= 31
 
     path = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
-    jobs, rows = run(
-        lambda: analytics.betweenness_centrality(path, [1, 2, 3]))
+    with jvm_log(spark) as log:
+        jobs, rows = run(
+            lambda: analytics.betweenness_centrality(path, [1, 2, 3]))
     assert rows == [(1, 0.0), (2, 2.0), (3, 0.0)]
     assert jobs <= 30
+    # broadcast hints sit on inner-join build sides only
+    assert "Hint (strategy=broadcast) is not supported" not in log()
 
     dag = spark.createDataFrame([(1, 2), (1, 3), (2, 3), (3, 4)],
                                 "src long, dst long")

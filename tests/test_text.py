@@ -487,6 +487,83 @@ def test_bpe_apply_matches_learn_trajectory(spark):
     assert a == b and len(a) == 4
 
 
+def _bpe_full_recount(freqs: dict, n_merges: int):
+    """Reference BPE learner: every round recounts every word's pairs.
+    Returns (merges, final syms by word, events) where events records
+    which edge cases the trajectory hit."""
+    syms = {w: "".join("_" + c for c in w) for w in freqs}
+    merges, events = [], set()
+    for r in range(1, n_merges + 1):
+        counts: dict = {}
+        for w, s in syms.items():
+            seq = s.split("_")[1:]
+            for p in zip(seq, seq[1:]):
+                counts[p] = counts.get(p, 0) + freqs[w]
+        if not counts:
+            events.add("early_stop")
+            break
+        ranked = sorted(counts.items(), key=lambda pc: (-pc[1], pc[0]))
+        (left, right), cnt = ranked[0]
+        if len(ranked) > 1 and ranked[1][1] == cnt:
+            events.add("tie")
+        merges.append((r, left, right, cnt))
+        old, new = f"_{left}_{right}", f"_{left}{right}"
+        for w, s in syms.items():
+            seq = s.split("_")[1:]
+            if left == right and any(seq[i:i + 3] == [left] * 3
+                                     for i in range(len(seq))):
+                events.add("overlap")
+            if old in s and (left, right) not in set(zip(seq, seq[1:])):
+                events.add("prefix")
+            syms[w] = s.replace(old, new)
+    return merges, syms, events
+
+
+def test_bpe_learn_equals_full_recount(spark):
+    """bpe_learn's incremental pair counts learn the same merges and
+    final symbol strings as a learner that recounts every word each
+    round, on seeded random corpora over {a, b, c}; together the corpora
+    hit count ties, 'aaa' overlaps under (a, a), the '_a_b' match inside
+    '_a_bc' and the early stop (n_merges exceeds the mergeable pairs)."""
+    import random
+
+    from hugegraph_on_tikv_spark.functions.bpe import bpe_learn
+
+    seen: set = set()
+    for seed in range(10):
+        rng = random.Random(seed)
+        freqs: dict = {}
+        while len(freqs) < 6:
+            w = "".join(rng.choice("abc") for _ in range(rng.randint(1, 6)))
+            freqs[w] = rng.randint(1, 3)
+        text = " ".join(w for w, f in freqs.items() for _ in range(f))
+        docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
+        merges, words = bpe_learn(docs, n_merges=40)
+        ref_merges, ref_syms, events = _bpe_full_recount(freqs, 40)
+        assert merges == ref_merges, seed
+        assert {r["word"]: r["syms"] for r in words.collect()} == ref_syms
+        seen |= events
+    assert seen == {"tie", "overlap", "prefix", "early_stop"}
+
+
+def test_bpe_learn_jobs_independent_of_merges(spark):
+    """Learning reads the word table once: 3 merges and 10 merges submit
+    the same number of Spark jobs (a job or two per merge before)."""
+    from hugegraph_on_tikv_spark.functions.bpe import bpe_learn
+    from tests.conftest import jobs_since
+
+    docs = spark.createDataFrame(
+        [(1, "lower lower lowest newest newest widest")],
+        "doc_id long, text string")
+    jobs = []
+    for n in (3, 10):
+        since = jobs_since(spark)
+        merges, _ = bpe_learn(docs, n_merges=n)
+        jobs.append(since())
+        assert len(merges) == n
+    assert jobs[0] == jobs[1] <= 3, jobs
+
+
 def test_pack_token_ids_matches_pure_python(spark):
     """pack_token_ids reproduces the pure-Python shard-local GPT-style
     packing of a bpe_encode id stream: contiguous slots, docs running

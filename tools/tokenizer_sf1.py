@@ -7,7 +7,8 @@ design: injective avalanche-hash tokens, see tools/dedup_sf1.py for the
 three failed linear designs that motivated it, minus the planted copies
 which tokenizers don't need):
 
-* bpe_learn+encode : 6 merge rounds + full-corpus token-id emission
+* bpe_learn+encode : 6 merges learned in one word-table pass + full-corpus
+                     token-id emission
 * unigram_train+encode : seed vocab + 1 hard-EM round + Viterbi encode
 * training_order   : epoch-shuffle permutation of the 50k ids
 * token_budget_select : banded greedy selection at a 30% token budget
