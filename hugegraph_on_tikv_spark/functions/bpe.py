@@ -214,11 +214,13 @@ def bpe_encode(docs: DataFrame, merges: list, words: DataFrame | None = None,
     only the long tail — every key rarer than the head threshold by
     construction — goes through the shuffle join.
 
-    `words` defaults to the word-frequency table of `docs` itself, so
-    every stream word has an encoding — but note the ids are then
-    CORPUS-RELATIVE (assigned from THIS corpus' post-merge symbol
-    frequencies), so the same symbol can map to different ids across
-    corpora; a fixed trained vocabulary must pass the TRAINING `words`
+    `words` is the learned word table `bpe_learn` returns, the merges
+    already applied, so encoding applies them only to words outside it.
+    It defaults to the word-frequency table of `docs` itself with the
+    merges applied, so every stream word has an encoding — but note the
+    ids are then CORPUS-RELATIVE (assigned from THIS corpus' post-merge
+    symbol frequencies), so the same symbol can map to different ids
+    across corpora; a fixed trained vocabulary must pass the TRAINING
     table, from which ids are derived (frequency DESC, symbol ASC over
     the trained inventory — stable for a fixed training set).
 
@@ -243,13 +245,13 @@ def bpe_encode(docs: DataFrame, merges: list, words: DataFrame | None = None,
     residue slice of the stream."""
     derived = words is None
     if derived:
-        words = word_freqs(docs, text_col)
+        words = bpe_apply(word_freqs(docs, text_col), merges)
     # r11 (guide §2.4): enc / ids / wsym are VOCAB-sized but their lineage
     # carries the corpus-scale word_freqs groupBy; without the lazy
     # checkpoints every consumer (the head's TakeOrdered, the tail join,
     # the fallback path's symbol join + vocab_size count) re-ran that
     # corpus pass — 3-5 corpus aggregations per encode instead of one.
-    enc = bpe_apply(words, merges).localCheckpoint(eager=False)
+    enc = words.localCheckpoint(eager=False)
     ids = token_ids(enc).localCheckpoint(eager=False)
 
     arr = F.slice(F.split(F.col("syms"), MARK), 2, 2_000_000)

@@ -184,7 +184,9 @@ class QueryEngine:
             return self.df.filter(F.col(kc) == F.lit(ids[0]))
         out = self.df.filter(F.col(kc).isin(ids))
         pos = F.array_position(F.array(*[F.lit(i) for i in ids]), F.col(kc))
-        out = out.orderBy(pos)
+        # at most len(ids) rows: one partition sorts them locally, with no
+        # range-sampling job a global orderBy would plan
+        out = out.repartition(1).sortWithinPartitions(pos)
         if q.limit is not None:
             out = out.limit(q.limit)
         return out

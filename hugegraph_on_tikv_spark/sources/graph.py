@@ -108,6 +108,17 @@ EDGE_SPECS: list[tuple[str, str, tuple[str, str], tuple[str, str], dict[str, str
 ]
 
 
+def _ddl(keys: list[tuple[str, str]], props: list[tuple[str, str]]) -> str:
+    return ", ".join(f"{c} {t}" for c, t in keys + props)
+
+
+# the views' schemas, in the column order _build_vertices/_build_edges
+# select; their caches are read with them, so a warm read infers nothing
+_VERTEX_DDL = _ddl([("id", "long"), ("label", "string")], VERTEX_PROP_COLUMNS)
+_EDGE_DDL = _ddl([("src", "long"), ("dst", "long"), ("label", "string")],
+                 EDGE_PROP_COLUMNS)
+
+
 class GraphStore:
     """Loads the graph views.
 
@@ -185,10 +196,12 @@ class GraphStore:
         return f"/tmp/hugegraph_spark_cache/{key}/{name}.parquet"
 
     def _materialized(self, name: str, build: Callable[[], DataFrame],
-                      part_col: str) -> DataFrame:
+                      part_col: str, ddl: str) -> DataFrame:
         """The view `build()` returns, read from its cache when materializing.
         `build` runs only on a cache miss: each source read plans a schema
-        job, so a warm view costs the one cache read."""
+        job.  The cache is read with the view's declared schema `ddl`, so
+        a warm view submits no job at all (`_cache_path` hashes the specs
+        the schema comes from, so it cannot drift from the files)."""
         if not self.materialize:
             return build()
         import os
@@ -202,7 +215,7 @@ class GraphStore:
                    .write.mode("overwrite").parquet(path))
             except Exception:
                 return df  # read-only /tmp etc. — fall back to the live plan
-        return self.spark.read.parquet(path)
+        return self.spark.read.schema(ddl).parquet(path)
 
     def _build_vertices(self) -> DataFrame:
         parts = []
@@ -222,7 +235,8 @@ class GraphStore:
         if self.vertex_layout is not None:
             return self.vertex_layout.vertices()
         if self._vertices is None:
-            self._vertices = self._materialized("vertices", self._build_vertices, "id")
+            self._vertices = self._materialized(
+                "vertices", self._build_vertices, "id", _VERTEX_DDL)
         return self._vertices
 
     def _build_edges(self) -> DataFrame:
@@ -257,9 +271,10 @@ class GraphStore:
             return self.layout.edges(order_by)
         if order_by == "src":
             if self._edges is None:
-                self._edges = self._materialized("edges", self._build_edges, "src")
+                self._edges = self._materialized(
+                    "edges", self._build_edges, "src", _EDGE_DDL)
             return self._edges
         if self._edges_by_dst is None:
             self._edges_by_dst = self._materialized(
-                "edges_by_dst", self._build_edges, "dst")
+                "edges_by_dst", self._build_edges, "dst", _EDGE_DDL)
         return self._edges_by_dst

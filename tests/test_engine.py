@@ -23,7 +23,7 @@ from hugegraph_on_tikv_spark.plans.engine import decode_page, encode_page
 from hugegraph_on_tikv_spark.plans.ir import AggregateFunc, validate_scan_type
 from hugegraph_on_tikv_spark.schema import DataTypeKind, IndexType, SchemaRegistry
 from hugegraph_on_tikv_spark.sources.catalog import load_table
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_since
 
 
 @pytest.fixture(scope="module")
@@ -114,6 +114,17 @@ def test_multi_id_missing_ids_skipped(spark):
     eng = QueryEngine(load_table(spark, SF_DIR, "nation"), key="n_nationkey")
     rows = eng.query(IdQuery(table="nation", ids=[3, 999999, 1])).select("n_nationkey").collect()
     assert [r[0] for r in rows] == [3, 1]
+
+
+def test_multi_id_lookup_sorts_in_one_partition(spark):
+    """A multi-id lookup orders its rows (at most one per id) inside one
+    partition: 2 jobs, where a global orderBy's range sort plans 3."""
+    eng = QueryEngine(load_table(spark, SF_DIR, "nation"), key="n_nationkey")
+    ids = [7, 2, 9, 0, 4]
+    df = eng.query(IdQuery(table="nation", ids=ids)).select("n_nationkey")
+    jobs = jobs_since(spark)
+    assert [r[0] for r in df.collect()] == ids
+    assert jobs() <= 2
 
 
 # -- splits (I1) -------------------------------------------------------------

@@ -173,20 +173,24 @@ def test_ckpt_exact_count_no_extra_jobs_fresh_stats(spark):
     assert odd == 48
 
 
-def test_graph_store_warm_view_is_one_job(spark):
-    """A warm view cache builds no source plan: `edges()` and `vertices()`
-    of a fresh GraphStore cost at most the cache read's one job (each of
-    the six source reads would plan a schema job of its own)."""
+def test_graph_store_warm_view_runs_no_job(spark):
+    """A warm view cache builds no source plan and infers no schema:
+    `edges()` and `vertices()` of a fresh GraphStore submit no job (each
+    of the six source reads would plan a schema job of its own, and so
+    would an inferring cache read), and the declared schema they read
+    with is the one the cache files carry."""
     from hugegraph_on_tikv_spark.sources.graph import GraphStore
     from tests.conftest import SF_DIR
 
     warm = GraphStore(spark, SF_DIR)
     n_e, n_v = warm.edges().count(), warm.vertices().count()
     store = GraphStore(spark, SF_DIR)
-    for view, rows in ((store.edges, n_e), (store.vertices, n_v)):
+    for name, view, rows in (("edges", store.edges, n_e),
+                             ("vertices", store.vertices, n_v)):
         jobs = jobs_since(spark)
         df = view()
-        assert jobs() <= 1
+        assert jobs() == 0
+        assert df.schema == spark.read.parquet(store._cache_path(name)).schema
         assert df.count() == rows
 
 
@@ -346,6 +350,89 @@ def test_k_hop_shuffle_fallback_matches_broadcast(tiny, no_broadcast):
         sh = {(r["id"], r["hops"])
               for r in traversal.k_hop(tiny, [1], k=3).collect()}
     assert bc == sh == {(2, 1), (3, 1), (4, 2)}
+
+
+# vertex 0 fans out to few vertices and each of those to many, so a hop-1
+# frontier fits a 4-row budget while hop 2's raw neighbour ids do not, in
+# every direction; the hop-3 edges reach back into visited vertices
+_FAN = ([(0, 1, "a"), (0, 2, "a"), (3, 0, "b")]
+        + [(1, v, "a") for v in range(10, 18)] + [(1, 30, "a")]
+        + [(2, v, "b") for v in range(14, 22)]
+        + [(v, 3, "b") for v in range(30, 38)]
+        + [(v, 1, "b") for v in range(40, 48)]
+        + [(10, 50, "a"), (11, 50, "a"), (14, 0, "a"), (15, 1, "b"),
+           (20, 60, "b"), (21, 61, "a"), (70, 30, "a"), (71, 31, "b"),
+           (72, 40, "a")])
+
+
+def _bfs(edges, start, k, direction, labels):
+    """Pure-Python BFS layering: {(id, hops)}, start excluded."""
+    nbrs: dict = {}
+    for s, d, lab in edges:
+        if labels and lab not in labels:
+            continue
+        if direction in ("out", "both"):
+            nbrs.setdefault(s, []).append(d)
+        if direction in ("in", "both"):
+            nbrs.setdefault(d, []).append(s)
+    seen, frontier, out = {start}, {start}, set()
+    for hop in range(1, k + 1):
+        frontier = {n for v in frontier for n in nbrs.get(v, ())} - seen
+        seen |= frontier
+        out |= {(v, hop) for v in frontier}
+    return out
+
+
+@pytest.fixture
+def hop1_budget(spark):
+    """A broadcast threshold of 64 bytes (4 bare ids) for the test, the
+    previous threshold restored after it."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "64")
+    yield
+    spark.conf.set(key, prev)
+
+
+@pytest.mark.parametrize("direction,labels", [
+    ("out", None), ("in", None), ("both", None), ("out", ["a"]), ("in", ["b"])])
+def test_k_hop_handover_matches_held_and_bfs(spark, request, no_broadcast,
+                                             direction, labels):
+    """A budget that holds hop 1 but not hop 2 hands the traversal over to
+    the distributed step mid-way; its rows equal the all-held run, the
+    all-distributed run (no broadcast) and a pure-Python BFS."""
+    fan = spark.createDataFrame(_FAN, "src long, dst long, label string")
+
+    def run():
+        df = traversal.k_hop(fan, [0], k=3, direction=direction, labels=labels)
+        return df, {(r["id"], r["hops"]) for r in df.collect()}
+
+    held_df, held = run()
+    with no_broadcast():
+        _, spread = run()
+    request.getfixturevalue("hop1_budget")
+    handed_df, handed = run()
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "Join" not in plan(held_df)    # every hop held in the driver
+    assert "Join" in plan(handed_df)      # hop 3 runs distributed
+    assert held == spread == handed == _bfs(_FAN, 0, 3, direction, labels)
+    assert {h for _, h in held} == {1, 2, 3}
+
+
+def test_k_hop_held_jobs_and_no_persist(spark, tiny):
+    """A 2-hop from one vertex holds both hops in the driver: one job for
+    the frontier's broadcast and one for the hop's neighbour ids per hop,
+    none for the result, and nothing is left persisted."""
+    sc = spark.sparkContext
+    pinned = sc._jsc.getPersistentRDDs().size()
+    jobs = jobs_since(spark)
+    got = {(r["id"], r["hops"]) for r in traversal.k_hop(tiny, [1], k=2).collect()}
+    assert got == {(2, 1), (3, 1), (4, 2)}
+    assert jobs() <= 4
+    assert sc._jsc.getPersistentRDDs().size() == pinned
 
 
 def test_pagerank_state_partitions_no_conf_mutation(spark):

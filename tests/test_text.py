@@ -697,18 +697,40 @@ def test_bpe_encode_two_path_equals_single(spark):
     assert a == b and len(a) > 0
 
 
+def test_bpe_encode_applies_learned_merges_once(spark, monkeypatch):
+    """bpe_encode takes bpe_learn's table as learned — merges applied — so
+    the word table it cuts carries R replace() calls for R merges, not 2R
+    (the plans are read as each frame is checkpointed)."""
+    from hugegraph_on_tikv_spark.functions.bpe import bpe_encode, bpe_learn
+
+    docs = spark.createDataFrame(
+        [(1, "low lower lowest low"), (2, "new newer newest low new")],
+        "doc_id long, text string")
+    merges, words = bpe_learn(docs, n_merges=3)
+    assert len(merges) == 3
+    plans = []
+    cut = type(words).localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return cut(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(words), "localCheckpoint", spy)
+    bpe_encode(docs, merges, words=words, char_fallback=False)
+    assert plans and sum(p.count("replace(") for p in plans) == len(merges)
+
+
 def test_bpe_encode_foreign_words_drops_unseen(spark):
     """char_fallback=False keeps the r8 inner-join semantics: words absent
     from the supplied table emit nothing."""
-    from hugegraph_on_tikv_spark.functions.bpe import (
-        bpe_encode, bpe_learn, word_freqs)
+    from hugegraph_on_tikv_spark.functions.bpe import bpe_encode, bpe_learn
 
     train = spark.createDataFrame(
         [(1, "low lower low")], "doc_id long, text string")
     merges, twords = bpe_learn(train, n_merges=2)
     new = spark.createDataFrame(
         [(9, "low unseen")], "doc_id long, text string")
-    rows = bpe_encode(new, merges, words=word_freqs(train),
+    rows = bpe_encode(new, merges, words=twords,
                       char_fallback=False).collect()
     assert rows and all(r["wpos"] == 0 for r in rows)  # only "low" encodes
 
@@ -719,14 +741,13 @@ def test_bpe_encode_char_fallback_covers_every_token(spark):
     to trained ids, unknown symbols decompose to vocab_size + char-index
     ids; known-word encodings are unchanged from the no-fallback path."""
     from hugegraph_on_tikv_spark.functions.bpe import (
-        bpe_apply, bpe_encode, bpe_learn, token_ids, word_freqs)
+        bpe_encode, bpe_learn, token_ids)
 
     train = spark.createDataFrame(
         [(1, "low lower low lowest low")], "doc_id long, text string")
-    merges, _ = bpe_learn(train, n_merges=3)
-    twords = word_freqs(train)
+    merges, twords = bpe_learn(train, n_merges=3)
     ids = {r["symbol"]: r["token_id"]
-           for r in token_ids(bpe_apply(twords, merges)).collect()}
+           for r in token_ids(twords).collect()}
     V = len(ids)
     # "low" is trained; "slow" shares the trained 'low' symbol after merge
     # application; "zq9" has chars never seen in training
