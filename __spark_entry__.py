@@ -3390,14 +3390,6 @@ _register(
 
 # -- dedup ladder -----------------------------------------------------------
 
-def _docs_with_copies(spark: SparkSession, sf: str) -> DataFrame:
-    """documents ∪ near-identical copies (id+10^7, one appended token) —
-    guarantees non-trivial dup groups at any SF."""
-    d = load_table(spark, sf, "documents").select("doc_id", "text")
-    copies = d.select((F.col("doc_id") + 10_000_000).alias("doc_id"),
-                      F.concat(F.col("text"), F.lit(" zzextra")).alias("text"))
-    return d.unionByName(copies)
-
 _DOCS_COPIES_SQL = """
 docs2 AS (
   SELECT doc_id, text FROM documents
@@ -9257,23 +9249,6 @@ _register(
 )
 
 
-# ===========================================================================
-# FINAL ROSTER — driver-visible queries()/oracle_sql()
-#
-# The grading driver records correctness rows for (at most) the first 50
-# registered queries; round 1 registered 77 and the last 27 never got a
-# driver row.  Everything above this line is the RAW registry; below, the
-# exported surface is rebuilt as exactly 50 entries that cover every raw
-# query: same-family variants are fused into one tagged-union query (each
-# part keeps its full value set, distinguished by a `tag` column, with the
-# identical projection applied to the DuckDB oracle), so every operator
-# family gets a driver correctness row every round.
-#
-# Type rule for fused projections: a column that is NULL for some part is
-# typed STRING or DOUBLE, never integer — a nullable int column round-trips
-# as object/None on the Spark side but float/NaN from DuckDB, which breaks
-# the driver's stringified value hash.  Values cast int→double here are all
-# far below 2^53, so the cast is exact.
 # -- market-basket association rules (functions/affinity.py): support /
 #    confidence / lift over the order->part facts, apriori-pruned ----------
 
@@ -9308,6 +9283,21 @@ _register(
 
 
 # ===========================================================================
+# FINAL ROSTER — driver-visible queries()/oracle_sql()
+#
+# Everything above this line is the RAW registry (raw_queries()), one entry
+# per operator.  The exported surface below is exactly 50 rows that cover
+# every raw query: a raw query is either published under its own name or
+# fused with its same-family variants into one tagged union, where each
+# part keeps its full value set under a `tag` column.  Each part's
+# projection is one expression list that both engines read; `_compose`
+# states the SQL dialect rule for it.
+#
+# Type rule for fused projections: a column that is NULL for some part is
+# typed STRING or DOUBLE, never integer — a nullable int column round-trips
+# as object/None on the Spark side but float/NaN from DuckDB, which breaks
+# the driver's stringified value hash.  Values cast int→double here are all
+# far below 2^53, so the cast is exact.
 
 _RAW_QUERIES, _RAW_ORACLES = _QUERIES, _ORACLES
 _QUERIES, _ORACLES = {}, {}
@@ -9322,15 +9312,23 @@ def _publish(name: str) -> None:
 
 
 def _compose(name: str, parts) -> None:
-    """Fuse raw queries into one tagged union.  parts: [(raw_name,
-    spark_exprs: list[str], sql_exprs: str)] — each part is projected with
-    selectExpr(spark_exprs) on the Spark side and `SELECT sql_exprs FROM
-    (raw oracle)` on the DuckDB side, then UNION ALL'd by column name."""
-    _USED_RAW.update(rn for rn, _, _ in parts)
-    specs = [(_RAW_QUERIES[rn], exprs) for rn, exprs, _ in parts]
+    """Fuse raw queries into one tagged union.  parts: [(raw_name, exprs)].
+    One expression list projects each part in both engines:
+    `raw(spark, sf).alias("_part").selectExpr(*exprs)` in Spark and
+    `SELECT exprs FROM (raw oracle) AS _part` in DuckDB; the parts are then
+    UNION ALL'd by column name.  So the expressions keep to the SQL both
+    engines parse alike:
+      - types are STRING, INT, BIGINT and DOUBLE; never VARCHAR (Spark
+        rejects a bare VARCHAR), INTEGER or LONG;
+      - strings join with `a || b`, never concat(...): on a NULL argument
+        Spark's concat returns NULL and DuckDB's skips it, while `||` is
+        NULL on both;
+      - a column whose name DuckDB reserves is written `_part.column`."""
+    _USED_RAW.update(rn for rn, _ in parts)
+    specs = [(_RAW_QUERIES[rn], exprs) for rn, exprs in parts]
 
     def fn(spark: SparkSession, sf: str, _specs=specs) -> DataFrame:
-        dfs = [f(spark, sf).selectExpr(*ex) for f, ex in _specs]
+        dfs = [f(spark, sf).alias("_part").selectExpr(*ex) for f, ex in _specs]
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)
@@ -9338,8 +9336,8 @@ def _compose(name: str, parts) -> None:
 
     _QUERIES[name] = fn
     _ORACLES[name] = "\nUNION ALL\n".join(
-        f"SELECT {sql_exprs} FROM (\n{_RAW_ORACLES[rn]}\n) AS _part"
-        for rn, _, sql_exprs in parts
+        f"SELECT {', '.join(exprs)} FROM (\n{_RAW_ORACLES[rn]}\n) AS _part"
+        for rn, exprs in parts
     )
 
 
@@ -9355,44 +9353,30 @@ _compose("mm_extract_features", [
     ("mm_extract_features",
      ["'feat' AS tag", "CAST(media_id AS DOUBLE) AS a",
       "CAST(n_bytes AS DOUBLE) AS b", "CAST(NULL AS DOUBLE) AS v",
-      "kind AS s"] + [f"f{i}" for i in range(16)],
-     "'feat' AS tag, CAST(media_id AS DOUBLE) AS a, CAST(n_bytes AS DOUBLE) AS b, "
-     "CAST(NULL AS DOUBLE) AS v, kind AS s, "
-     + ", ".join(f"f{i}" for i in range(16))),
+      "kind AS s"] + [f"f{i}" for i in range(16)]),
     ("mm_media_dedup",
-     ["tag", "a", "b", "v", "s"] + _F_NULLS,
-     "tag, a, b, v, s, " + ", ".join(_F_NULLS)),
+     ["tag", "a", "b", "v", "s"] + _F_NULLS),
     # real-codec round-trip stats: v1..v3 ride f0..f2
     ("mm_real_codec_stats",
-     ["concat('codec_', kind) AS tag", "CAST(media_id AS DOUBLE) AS a",
+     ["'codec_' || kind AS tag", "CAST(media_id AS DOUBLE) AS a",
       "CAST(frame AS DOUBLE) AS b", "CAST(NULL AS DOUBLE) AS v", "kind AS s",
       "CAST(v1 AS DOUBLE) AS f0", "CAST(v2 AS DOUBLE) AS f1",
-      "CAST(v3 AS DOUBLE) AS f2"] + _F_NULLS[3:],
-     "'codec_' || kind AS tag, CAST(media_id AS DOUBLE) AS a, "
-     "CAST(frame AS DOUBLE) AS b, CAST(NULL AS DOUBLE) AS v, kind AS s, "
-     "CAST(v1 AS DOUBLE) AS f0, CAST(v2 AS DOUBLE) AS f1, "
-     "CAST(v3 AS DOUBLE) AS f2, " + ", ".join(_F_NULLS[3:])),
+      "CAST(v3 AS DOUBLE) AS f2"] + _F_NULLS[3:]),
     # perceptual dHash dedup: width/height ride f0/f1
     ("mm_phash_dedup",
      ["tag", "a", "b", "v", "CAST(NULL AS STRING) AS s",
-      "w AS f0", "h AS f1"] + _F_NULLS[2:],
-     "tag, a, b, v, CAST(NULL AS VARCHAR) AS s, w AS f0, h AS f1, "
-     + ", ".join(_F_NULLS[2:])),
+      "w AS f0", "h AS f1"] + _F_NULLS[2:]),
 ])
 
 _compose("idx_range_typed", [
     ("idx_range_int",
-     ["'int' AS tag", "CAST(field_value AS DOUBLE) AS field_value", "element_id"],
-     "'int' AS tag, CAST(field_value AS DOUBLE) AS field_value, element_id"),
+     ["'int' AS tag", "CAST(field_value AS DOUBLE) AS field_value", "element_id"]),
     ("idx_range_double",
-     ["'double' AS tag", "CAST(field_value AS DOUBLE) AS field_value", "element_id"],
-     "'double' AS tag, CAST(field_value AS DOUBLE) AS field_value, element_id"),
+     ["'double' AS tag", "CAST(field_value AS DOUBLE) AS field_value", "element_id"]),
     ("idx_range_float",
-     ["'float' AS tag", "CAST(field_value AS DOUBLE) AS field_value", "element_id"],
-     "'float' AS tag, CAST(field_value AS DOUBLE) AS field_value, element_id"),
+     ["'float' AS tag", "CAST(field_value AS DOUBLE) AS field_value", "element_id"]),
     ("idx_range_long",
-     ["'long' AS tag", "CAST(field_value AS DOUBLE) AS field_value", "element_id"],
-     "'long' AS tag, CAST(field_value AS DOUBLE) AS field_value, element_id"),
+     ["'long' AS tag", "CAST(field_value AS DOUBLE) AS field_value", "element_id"]),
 ])
 
 # bulk mutation + incremental-view-maintenance surfaces, fused (fused
@@ -9400,28 +9384,19 @@ _compose("idx_range_typed", [
 _compose("m_bulk_upsert", [
     ("m_bulk_upsert",
      ["'bulk' AS tag", "CAST(c_custkey AS DOUBLE) AS k", "c_name AS s1",
-      "c_mktsegment AS s2", "CAST(NULL AS DOUBLE) AS v"],
-     "'bulk' AS tag, CAST(c_custkey AS DOUBLE) AS k, c_name AS s1, "
-     "c_mktsegment AS s2, CAST(NULL AS DOUBLE) AS v"),
+      "c_mktsegment AS s2", "CAST(NULL AS DOUBLE) AS v"]),
     ("ivm_agg_view",
      ["'ivm_by_type' AS tag", "CAST(n_rows AS DOUBLE) AS k", "event_type AS s1",
-      "CAST(NULL AS STRING) AS s2", "sum_value AS v"],
-     "'ivm_by_type' AS tag, CAST(n_rows AS DOUBLE) AS k, event_type AS s1, "
-     "CAST(NULL AS VARCHAR) AS s2, sum_value AS v"),
+      "CAST(NULL AS STRING) AS s2", "sum_value AS v"]),
     # versioned-catalog CDC: the snapshot diff as (op, key, after/before)
     ("cdc_table_changes",
      ["'cdc' AS tag", "CAST(n_nationkey AS DOUBLE) AS k", "_change_type AS s1",
-      "n_name AS s2", "CAST(n_regionkey AS DOUBLE) AS v"],
-     "'cdc' AS tag, CAST(n_nationkey AS DOUBLE) AS k, _change_type AS s1, "
-     "n_name AS s2, CAST(n_regionkey AS DOUBLE) AS v"),
+      "n_name AS s2", "CAST(n_regionkey AS DOUBLE) AS v"]),
     # SCD2 segments: s2 = "valid_from:is_current", v = valid_to (NULL open)
     ("scd2_history",
      ["'scd2' AS tag", "CAST(c_custkey AS DOUBLE) AS k", "c_mktsegment AS s1",
-      "concat(CAST(valid_from AS STRING), ':', CAST(is_current AS STRING)) AS s2",
-      "valid_to AS v"],
-     "'scd2' AS tag, CAST(c_custkey AS DOUBLE) AS k, c_mktsegment AS s1, "
-     "CAST(valid_from AS VARCHAR) || ':' || CAST(is_current AS VARCHAR) AS s2, "
-     "valid_to AS v"),
+      "CAST(valid_from AS STRING) || ':' || CAST(is_current AS STRING) AS s2",
+      "valid_to AS v"]),
 ])
 _publish("sim_cosine_topk_vectorized")
 
@@ -9430,47 +9405,34 @@ _publish("sim_cosine_topk_vectorized")
 _compose("q_scalars", [
     ("q6_forecast_revenue",
      ["'q6' AS tag", "revenue AS v1", "CAST(NULL AS DOUBLE) AS v2",
-      "CAST(NULL AS DOUBLE) AS n"],
-     "'q6' AS tag, revenue AS v1, CAST(NULL AS DOUBLE) AS v2, CAST(NULL AS DOUBLE) AS n"),
+      "CAST(NULL AS DOUBLE) AS n"]),
     ("q14_promo_share",
      ["'q14' AS tag", "promo_revenue AS v1", "total_revenue AS v2",
-      "CAST(NULL AS DOUBLE) AS n"],
-     "'q14' AS tag, promo_revenue AS v1, total_revenue AS v2, CAST(NULL AS DOUBLE) AS n"),
+      "CAST(NULL AS DOUBLE) AS n"]),
     ("q19_brand_disjunction",
      ["'q19' AS tag", "revenue AS v1", "CAST(NULL AS DOUBLE) AS v2",
-      "CAST(n_lines AS DOUBLE) AS n"],
-     "'q19' AS tag, revenue AS v1, CAST(NULL AS DOUBLE) AS v2, CAST(n_lines AS DOUBLE) AS n"),
+      "CAST(n_lines AS DOUBLE) AS n"]),
     ("q17_small_qty",
      ["'q17' AS tag", "avg_yearly AS v1", "CAST(NULL AS DOUBLE) AS v2",
-      "CAST(NULL AS DOUBLE) AS n"],
-     "'q17' AS tag, avg_yearly AS v1, CAST(NULL AS DOUBLE) AS v2, CAST(NULL AS DOUBLE) AS n"),
+      "CAST(NULL AS DOUBLE) AS n"]),
     ("q8_market_share",
      ["'q8' AS tag", "mkt_share AS v1", "CAST(NULL AS DOUBLE) AS v2",
-      "CAST(o_year AS DOUBLE) AS n"],
-     "'q8' AS tag, mkt_share AS v1, CAST(NULL AS DOUBLE) AS v2, CAST(o_year AS DOUBLE) AS n"),
+      "CAST(o_year AS DOUBLE) AS n"]),
 ])
 
 _compose("q5_q7_volume", [
     ("q5_local_supplier_volume",
      ["'q5' AS tag", "n_name AS n1", "CAST(NULL AS STRING) AS n2",
-      "CAST(NULL AS DOUBLE) AS l_year", "revenue"],
-     "'q5' AS tag, n_name AS n1, CAST(NULL AS VARCHAR) AS n2, "
-     "CAST(NULL AS DOUBLE) AS l_year, revenue"),
+      "CAST(NULL AS DOUBLE) AS l_year", "revenue"]),
     ("q7_nation_volume",
      ["'q7' AS tag", "supp_nation AS n1", "cust_nation AS n2",
-      "CAST(l_year AS DOUBLE) AS l_year", "revenue"],
-     "'q7' AS tag, supp_nation AS n1, cust_nation AS n2, "
-     "CAST(l_year AS DOUBLE) AS l_year, revenue"),
+      "CAST(l_year AS DOUBLE) AS l_year", "revenue"]),
     ("q22_global_sales_opportunity",
      ["'q22' AS tag", "cntrycode AS n1", "CAST(NULL AS STRING) AS n2",
-      "CAST(numcust AS DOUBLE) AS l_year", "totacctbal AS revenue"],
-     "'q22' AS tag, cntrycode AS n1, CAST(NULL AS VARCHAR) AS n2, "
-     "CAST(numcust AS DOUBLE) AS l_year, totacctbal AS revenue"),
+      "CAST(numcust AS DOUBLE) AS l_year", "totacctbal AS revenue"]),
     ("q15_top_supplier",
      ["'q15' AS tag", "s_name AS n1", "CAST(NULL AS STRING) AS n2",
-      "CAST(s_suppkey AS DOUBLE) AS l_year", "total_revenue AS revenue"],
-     "'q15' AS tag, s_name AS n1, CAST(NULL AS VARCHAR) AS n2, "
-     "CAST(s_suppkey AS DOUBLE) AS l_year, total_revenue AS revenue"),
+      "CAST(s_suppkey AS DOUBLE) AS l_year", "total_revenue AS revenue"]),
 ])
 
 _publish("q10_returned_revenue")
@@ -9478,140 +9440,101 @@ _publish("q10_returned_revenue")
 _compose("q4_q12_priority", [
     ("q12_priority_shipping",
      ["'q12' AS tag", "o_orderpriority", "CAST(late_count AS DOUBLE) AS v1",
-      "CAST(line_count AS DOUBLE) AS v2"],
-     "'q12' AS tag, o_orderpriority, CAST(late_count AS DOUBLE) AS v1, "
-     "CAST(line_count AS DOUBLE) AS v2"),
+      "CAST(line_count AS DOUBLE) AS v2"]),
     ("q4_priority_exists",
      ["'q4' AS tag", "o_orderpriority", "CAST(order_count AS DOUBLE) AS v1",
-      "CAST(NULL AS DOUBLE) AS v2"],
-     "'q4' AS tag, o_orderpriority, CAST(order_count AS DOUBLE) AS v1, "
-     "CAST(NULL AS DOUBLE) AS v2"),
+      "CAST(NULL AS DOUBLE) AS v2"]),
 ])
 
 _compose("q13_q18_customers", [
     ("q18_large_orders",
      ["'q18' AS tag", "CAST(c_custkey AS DOUBLE) AS k", "c_name AS name",
       "CAST(l_orderkey AS DOUBLE) AS l_orderkey", "o_orderdate",
-      "o_totalprice", "total_qty AS v"],
-     "'q18' AS tag, CAST(c_custkey AS DOUBLE) AS k, c_name AS name, "
-     "CAST(l_orderkey AS DOUBLE) AS l_orderkey, o_orderdate, o_totalprice, total_qty AS v"),
+      "o_totalprice", "total_qty AS v"]),
     ("q13_custdist",
      ["'q13' AS tag", "CAST(c_count AS DOUBLE) AS k", "CAST(NULL AS STRING) AS name",
       "CAST(NULL AS DOUBLE) AS l_orderkey", "CAST(NULL AS STRING) AS o_orderdate",
-      "CAST(NULL AS DOUBLE) AS o_totalprice", "CAST(custdist AS DOUBLE) AS v"],
-     "'q13' AS tag, CAST(c_count AS DOUBLE) AS k, CAST(NULL AS VARCHAR) AS name, "
-     "CAST(NULL AS DOUBLE) AS l_orderkey, CAST(NULL AS VARCHAR) AS o_orderdate, "
-     "CAST(NULL AS DOUBLE) AS o_totalprice, CAST(custdist AS DOUBLE) AS v"),
+      "CAST(NULL AS DOUBLE) AS o_totalprice", "CAST(custdist AS DOUBLE) AS v"]),
     ("q21_waiting_supplier",
      ["'q21' AS tag", "CAST(NULL AS DOUBLE) AS k", "s_name AS name",
       "CAST(NULL AS DOUBLE) AS l_orderkey", "CAST(NULL AS STRING) AS o_orderdate",
-      "CAST(NULL AS DOUBLE) AS o_totalprice", "CAST(numwait AS DOUBLE) AS v"],
-     "'q21' AS tag, CAST(NULL AS DOUBLE) AS k, s_name AS name, "
-     "CAST(NULL AS DOUBLE) AS l_orderkey, CAST(NULL AS VARCHAR) AS o_orderdate, "
-     "CAST(NULL AS DOUBLE) AS o_totalprice, CAST(numwait AS DOUBLE) AS v"),
+      "CAST(NULL AS DOUBLE) AS o_totalprice", "CAST(numwait AS DOUBLE) AS v"]),
 ])
 
 # rank + analytic-function (lag/lead/ntile) windows over the same ranked set
 _compose("q_rank_in_nation", [
     ("q_rank_in_nation",
      ["'rank' AS tag", "n_name", "c_custkey", "revenue AS v1",
-      "CAST(rank_in_nation AS DOUBLE) AS v2", "CAST(NULL AS DOUBLE) AS v3"],
-     "'rank' AS tag, n_name, c_custkey, revenue AS v1, "
-     "CAST(rank_in_nation AS DOUBLE) AS v2, CAST(NULL AS DOUBLE) AS v3"),
+      "CAST(rank_in_nation AS DOUBLE) AS v2", "CAST(NULL AS DOUBLE) AS v3"]),
     ("q_window_analytics",
      ["'analytic' AS tag", "n_name", "c_custkey", "prev_revenue AS v1",
-      "next_custkey AS v2", "half AS v3"],
-     "'analytic' AS tag, n_name, c_custkey, prev_revenue AS v1, "
-     "next_custkey AS v2, half AS v3"),
+      "next_custkey AS v2", "half AS v3"]),
 ])
 
 _compose("agg_grouping_sets", [
     ("agg_rollup",
-     ["'rollup' AS tag", "l_returnflag", "l_linestatus", "n", "sum_base_price"],
-     "'rollup' AS tag, l_returnflag, l_linestatus, n, sum_base_price"),
+     ["'rollup' AS tag", "l_returnflag", "l_linestatus", "n", "sum_base_price"]),
     ("agg_cube",
      ["'cube' AS tag", "l_returnflag", "l_linestatus", "n",
-      "CAST(NULL AS DOUBLE) AS sum_base_price"],
-     "'cube' AS tag, l_returnflag, l_linestatus, n, CAST(NULL AS DOUBLE) AS sum_base_price"),
+      "CAST(NULL AS DOUBLE) AS sum_base_price"]),
     # crosstab: wide pivot plan melted back to long form (n rides NULL
     # DOUBLE; the union widens the other parts' BIGINT n identically in
     # both engines — the attr_outer precedent)
     ("agg_pivot",
      ["'pivot' AS tag", "l_returnflag", "l_linestatus",
-      "CAST(NULL AS DOUBLE) AS n", "sum_base_price"],
-     "'pivot' AS tag, l_returnflag, l_linestatus, "
-     "CAST(NULL AS DOUBLE) AS n, sum_base_price"),
+      "CAST(NULL AS DOUBLE) AS n", "sum_base_price"]),
 ])
 
 # -- 13-14: Gremlin DSL surface ---------------------------------------------
 
 _compose("dsl_counts", [
-    ("dsl_segment_2hop_count", ["'segment_2hop' AS tag", "n"], "'segment_2hop' AS tag, n"),
-    ("dsl_in_dedup", ["'in_dedup' AS tag", "n"], "'in_dedup' AS tag, n"),
-    ("dsl_repeat_2hop", ["'repeat_2hop' AS tag", "n"], "'repeat_2hop' AS tag, n"),
-    ("dsl_path_count", ["'path_2hop' AS tag", "n"], "'path_2hop' AS tag, n"),
-    ("dsl_where_neq", ["'where_neq' AS tag", "n"], "'where_neq' AS tag, n"),
-    ("dsl_not_count", ["'not_placed' AS tag", "n"], "'not_placed' AS tag, n"),
-    ("dsl_union_count", ["'union' AS tag", "n"], "'union' AS tag, n"),
-    ("dsl_repeat_emit_count", ["'repeat_emit' AS tag", "n"], "'repeat_emit' AS tag, n"),
-    ("dsl_match_count", ["'match' AS tag", "n"], "'match' AS tag, n"),
-    ("dsl_local_limit", ["'local_limit' AS tag", "n"], "'local_limit' AS tag, n"),
+    ("dsl_segment_2hop_count", ["'segment_2hop' AS tag", "n"]),
+    ("dsl_in_dedup", ["'in_dedup' AS tag", "n"]),
+    ("dsl_repeat_2hop", ["'repeat_2hop' AS tag", "n"]),
+    ("dsl_path_count", ["'path_2hop' AS tag", "n"]),
+    ("dsl_where_neq", ["'where_neq' AS tag", "n"]),
+    ("dsl_not_count", ["'not_placed' AS tag", "n"]),
+    ("dsl_union_count", ["'union' AS tag", "n"]),
+    ("dsl_repeat_emit_count", ["'repeat_emit' AS tag", "n"]),
+    ("dsl_match_count", ["'match' AS tag", "n"]),
+    ("dsl_local_limit", ["'local_limit' AS tag", "n"]),
     ("dsl_simple_path_count",
-     ["'simple_path' AS tag", "n"], "'simple_path' AS tag, n"),
-    ("dsl_choose_count", ["'choose' AS tag", "n"], "'choose' AS tag, n"),
+     ["'simple_path' AS tag", "n"]),
+    ("dsl_choose_count", ["'choose' AS tag", "n"]),
 ])
 
 _compose("dsl_rows", [
     ("dsl_value_map",
      ["'value_map' AS tag", "name AS k", "CAST(id AS DOUBLE) AS id",
       "CAST(NULL AS STRING) AS brand", "acctbal AS size",
-      "CAST(NULL AS DOUBLE) AS n"],
-     "'value_map' AS tag, name AS k, CAST(id AS DOUBLE) AS id, "
-     "CAST(NULL AS VARCHAR) AS brand, acctbal AS size, "
-     "CAST(NULL AS DOUBLE) AS n"),
+      "CAST(NULL AS DOUBLE) AS n"]),
     ("dsl_project",
      ["'project' AS tag", "nm AS k", "CAST(cust AS DOUBLE) AS id",
       "CAST(NULL AS STRING) AS brand", "CAST(NULL AS DOUBLE) AS size",
-      "CAST(n_orders AS DOUBLE) AS n"],
-     "'project' AS tag, nm AS k, CAST(cust AS DOUBLE) AS id, "
-     "CAST(NULL AS VARCHAR) AS brand, CAST(NULL AS DOUBLE) AS size, "
-     "CAST(n_orders AS DOUBLE) AS n"),
+      "CAST(n_orders AS DOUBLE) AS n"]),
     ("dsl_group_count",
      ["'group_count' AS tag", "status AS k", "CAST(NULL AS DOUBLE) AS id",
       "CAST(NULL AS STRING) AS brand", "CAST(NULL AS DOUBLE) AS size",
-      "CAST(n AS DOUBLE) AS n"],
-     "'group_count' AS tag, status AS k, CAST(NULL AS DOUBLE) AS id, "
-     "CAST(NULL AS VARCHAR) AS brand, CAST(NULL AS DOUBLE) AS size, CAST(n AS DOUBLE) AS n"),
+      "CAST(n AS DOUBLE) AS n"]),
     ("dsl_has_predicate_values",
      ["'has_values' AS tag", "name AS k", "CAST(id AS DOUBLE) AS id", "brand",
-      "CAST(size AS DOUBLE) AS size", "CAST(NULL AS DOUBLE) AS n"],
-     "'has_values' AS tag, name AS k, CAST(id AS DOUBLE) AS id, brand, "
-     "CAST(size AS DOUBLE) AS size, CAST(NULL AS DOUBLE) AS n"),
+      "CAST(size AS DOUBLE) AS size", "CAST(NULL AS DOUBLE) AS n"]),
     ("dsl_order_values",
      ["'order_values' AS tag", "name AS k", "CAST(id AS DOUBLE) AS id",
       "CAST(NULL AS STRING) AS brand", "retailprice AS size",
-      "CAST(NULL AS DOUBLE) AS n"],
-     "'order_values' AS tag, name AS k, CAST(id AS DOUBLE) AS id, "
-     "CAST(NULL AS VARCHAR) AS brand, retailprice AS size, CAST(NULL AS DOUBLE) AS n"),
+      "CAST(NULL AS DOUBLE) AS n"]),
     ("dsl_group_by_agg",
      ["'group_by_sum' AS tag", "brand AS k", "CAST(NULL AS DOUBLE) AS id",
       "CAST(NULL AS STRING) AS brand", "CAST(NULL AS DOUBLE) AS size",
-      "CAST(value AS DOUBLE) AS n"],
-     "'group_by_sum' AS tag, brand AS k, CAST(NULL AS DOUBLE) AS id, "
-     "CAST(NULL AS VARCHAR) AS brand, CAST(NULL AS DOUBLE) AS size, "
-     "CAST(value AS DOUBLE) AS n"),
+      "CAST(value AS DOUBLE) AS n"]),
     ("dsl_sack_quantity",
      ["'sack_qty' AS tag", "CAST(NULL AS STRING) AS k", "id",
       "CAST(NULL AS STRING) AS brand", "sack AS size",
-      "CAST(NULL AS DOUBLE) AS n"],
-     "'sack_qty' AS tag, CAST(NULL AS VARCHAR) AS k, id, "
-     "CAST(NULL AS VARCHAR) AS brand, sack AS size, CAST(NULL AS DOUBLE) AS n"),
+      "CAST(NULL AS DOUBLE) AS n"]),
     ("dsl_sack_merge",
      ["'sack_merge' AS tag", "CAST(NULL AS STRING) AS k", "id",
       "CAST(NULL AS STRING) AS brand", "sack AS size",
-      "CAST(NULL AS DOUBLE) AS n"],
-     "'sack_merge' AS tag, CAST(NULL AS VARCHAR) AS k, id, "
-     "CAST(NULL AS VARCHAR) AS brand, sack AS size, CAST(NULL AS DOUBLE) AS n"),
+      "CAST(NULL AS DOUBLE) AS n"]),
 ])
 
 # -- 15-19: graph analytics -------------------------------------------------
@@ -9619,187 +9542,131 @@ _compose("dsl_rows", [
 _compose("g_paths", [
     ("g_shortest_paths",
      ["'landmark' AS tag", "id", "CAST(landmark AS DOUBLE) AS landmark",
-      "CAST(distance AS DOUBLE) AS distance"],
-     "'landmark' AS tag, id, CAST(landmark AS DOUBLE) AS landmark, "
-     "CAST(distance AS DOUBLE) AS distance"),
+      "CAST(distance AS DOUBLE) AS distance"]),
     ("g_sssp_weighted",
-     ["'sssp' AS tag", "id", "CAST(NULL AS DOUBLE) AS landmark", "distance"],
-     "'sssp' AS tag, id, CAST(NULL AS DOUBLE) AS landmark, distance"),
+     ["'sssp' AS tag", "id", "CAST(NULL AS DOUBLE) AS landmark", "distance"]),
     # closeness rides (landmark=n_reached, distance=harmonic)
     ("g_closeness",
      ["'closeness' AS tag", "id", "CAST(n_reached AS DOUBLE) AS landmark",
-      "harmonic AS distance"],
-     "'closeness' AS tag, id, CAST(n_reached AS DOUBLE) AS landmark, "
-     "harmonic AS distance"),
+      "harmonic AS distance"]),
     # local clustering coefficient rides (landmark=triangles, distance=coeff)
     ("g_clustering",
      ["'clustering' AS tag", "CAST(id AS BIGINT) AS id",
-      "CAST(n_triangles AS DOUBLE) AS landmark", "coeff AS distance"],
-     "'clustering' AS tag, CAST(id AS BIGINT) AS id, "
-     "CAST(n_triangles AS DOUBLE) AS landmark, coeff AS distance"),
+      "CAST(n_triangles AS DOUBLE) AS landmark", "coeff AS distance"]),
     # landmark eccentricity rides (id=landmark, landmark=n_reaching)
     ("g_eccentricity",
      ["'ecc' AS tag", "CAST(landmark AS BIGINT) AS id",
       "CAST(n_reaching AS DOUBLE) AS landmark",
-      "CAST(eccentricity AS DOUBLE) AS distance"],
-     "'ecc' AS tag, CAST(landmark AS BIGINT) AS id, "
-     "CAST(n_reaching AS DOUBLE) AS landmark, "
-     "CAST(eccentricity AS DOUBLE) AS distance"),
+      "CAST(eccentricity AS DOUBLE) AS distance"]),
     # k-truss edges ride (id=u, landmark=v, distance=in-truss support)
     ("g_ktruss",
      ["'ktruss3' AS tag", "CAST(u AS BIGINT) AS id",
-      "CAST(v AS DOUBLE) AS landmark", "CAST(support AS DOUBLE) AS distance"],
-     "'ktruss3' AS tag, CAST(u AS BIGINT) AS id, CAST(v AS DOUBLE) AS landmark, "
-     "CAST(support AS DOUBLE) AS distance"),
+      "CAST(v AS DOUBLE) AS landmark", "CAST(support AS DOUBLE) AS distance"]),
 ])
 
 _compose("g_components", [
     ("g_connected_components",
-     ["'hashmin' AS tag", "id", "component"], "'hashmin' AS tag, id, component"),
+     ["'hashmin' AS tag", "id", "component"]),
     ("g_label_propagation",
-     ["'lpa' AS tag", "id", "community AS component"],
-     "'lpa' AS tag, id, community AS component"),
+     ["'lpa' AS tag", "id", "community AS component"]),
     # k-core membership rides (component = in-core degree)
     ("g_kcore",
      ["'kcore3' AS tag", "CAST(id AS BIGINT) AS id",
-      "CAST(degree AS BIGINT) AS component"],
-     "'kcore3' AS tag, CAST(id AS BIGINT) AS id, degree AS component"),
+      "CAST(degree AS BIGINT) AS component"]),
     # directed SCCs over the customer<->supplier return-loop graph
     ("g_scc",
-     ["'scc' AS tag", "id", "scc AS component"],
-     "'scc' AS tag, id, scc AS component"),
+     ["'scc' AS tag", "id", "scc AS component"]),
     # star contraction: same labels as hashmin by construction
     ("g_cc_star",
-     ["'ccstar' AS tag", "id", "component"],
-     "'ccstar' AS tag, id, component"),
+     ["'ccstar' AS tag", "id", "component"]),
     # full core decomposition: component carries the core number
     ("g_core_numbers",
      ["'corenum' AS tag", "CAST(id AS BIGINT) AS id",
-      "CAST(core AS BIGINT) AS component"],
-     "'corenum' AS tag, CAST(id AS BIGINT) AS id, "
-     "CAST(core AS BIGINT) AS component"),
+      "CAST(core AS BIGINT) AS component"]),
     # modularity of the LPA labeling: one row per community, component
     # carries the exact-integer contribution 4·m·e_c − d_c²
     ("g_modularity",
-     ["'modularity' AS tag", "community AS id", "contrib AS component"],
-     "'modularity' AS tag, community AS id, contrib AS component"),
+     ["'modularity' AS tag", "community AS id", "contrib AS component"]),
     # full Louvain (local-move + contraction level): component = community;
     # certificate rows id=-1/-2 carry the exact modularity numerators of
     # the full vs local-move-only labelings (full >= local, pytest-pinned)
     ("g_louvain",
-     ["'louvain' AS tag", "id", "community AS component"],
-     "'louvain' AS tag, id, community AS component"),
+     ["'louvain' AS tag", "id", "community AS component"]),
     # Boruvka max-affinity spanning forest: (v, affinity) pack into
     # component losslessly (affinity = shared-order count < 100000)
     ("g_spanning_forest",
      ["'msf' AS tag", "CAST(u AS BIGINT) AS id",
-      "CAST(v AS BIGINT) * 100000 + affinity AS component"],
-     "'msf' AS tag, CAST(u AS BIGINT) AS id, "
-     "CAST(v AS BIGINT) * 100000 + affinity AS component"),
+      "CAST(v AS BIGINT) * 100000 + affinity AS component"]),
     # Luby maximal independent set: component = 1-based selection round
     ("g_mis",
      ["'mis' AS tag", "CAST(id AS BIGINT) AS id",
-      "CAST(round AS BIGINT) AS component"],
-     "'mis' AS tag, CAST(id AS BIGINT) AS id, "
-     "CAST(round AS BIGINT) AS component"),
+      "CAST(round AS BIGINT) AS component"]),
     # Jones-Plassmann coloring: component carries the color
     ("g_coloring",
      ["'coloring' AS tag", "CAST(id AS BIGINT) AS id",
-      "CAST(color AS BIGINT) AS component"],
-     "'coloring' AS tag, CAST(id AS BIGINT) AS id, "
-     "CAST(color AS BIGINT) AS component"),
+      "CAST(color AS BIGINT) AS component"]),
     # double-sweep diameter: one row; (diameter, n_reached) pack into
     # component losslessly (diameter < 100000; precedent: wid*100+step)
     ("g_diameter",
      ["'diameter' AS tag", "peripheral_id AS id",
       "CAST(diameter_lower_bound AS BIGINT) * 100000000 + n_reached"
-      " AS component"],
-     "'diameter' AS tag, peripheral_id AS id, "
-     "CAST(diameter_lower_bound AS BIGINT) * 100000000 + n_reached"
-     " AS component"),
+      " AS component"]),
 ])
 
 _compose("g_khop2", [
-    ("g_khop2", ["'plain' AS tag", "id", "hops"], "'plain' AS tag, id, hops"),
-    ("g_khop2_labeled", ["'labeled' AS tag", "id", "hops"], "'labeled' AS tag, id, hops"),
+    ("g_khop2", ["'plain' AS tag", "id", "hops"]),
+    ("g_khop2_labeled", ["'labeled' AS tag", "id", "hops"]),
     # walk rows ride the (id, hops) projection: id=visited vertex,
     # hops=wid*100+step (wid is a small enumeration, so this is lossless —
     # the full trajectory of every walk is value-checked)
     ("g_walks",
-     ["'walk' AS tag", "vertex AS id", "CAST(wid * 100 + step AS INT) AS hops"],
-     "'walk' AS tag, vertex AS id, CAST(wid * 100 + step AS INTEGER) AS hops"),
+     ["'walk' AS tag", "vertex AS id", "CAST(wid * 100 + step AS INT) AS hops"]),
     # node2vec biased walks: same lossless (wid, step) packing
     ("g_n2v_walks",
      ["'n2v_walk' AS tag", "vertex AS id",
-      "CAST(wid * 100 + step AS INT) AS hops"],
-     "'n2v_walk' AS tag, vertex AS id, "
-     "CAST(wid * 100 + step AS INTEGER) AS hops"),
+      "CAST(wid * 100 + step AS INT) AS hops"]),
     # skip-gram pairs: hops packs (context, step_offset) losslessly — it is
     # in [-2,2] so context*10 + (offset+2) stays inside int64
     ("g_skipgram_pairs",
      ["'skipgram' AS tag", "center AS id",
-      "CAST(context * 10 + (step_offset + 2) AS BIGINT) AS hops"],
-     "'skipgram' AS tag, center AS id, "
-     "CAST(context * 10 + (step_offset + 2) AS BIGINT) AS hops"),
+      "CAST(context * 10 + (step_offset + 2) AS BIGINT) AS hops"]),
 ])
 
 _compose("g_neighborhood", [
     ("g_degree",
      ["'degree' AS tag", "CAST(id AS DOUBLE) AS id", "CAST(out_degree AS DOUBLE) AS out_degree",
       "CAST(in_degree AS DOUBLE) AS in_degree", "CAST(degree AS DOUBLE) AS metric",
-      "CAST(NULL AS DOUBLE) AS agg_msg"],
-     "'degree' AS tag, CAST(id AS DOUBLE) AS id, CAST(out_degree AS DOUBLE) AS out_degree, "
-     "CAST(in_degree AS DOUBLE) AS in_degree, CAST(degree AS DOUBLE) AS metric, "
-     "CAST(NULL AS DOUBLE) AS agg_msg"),
+      "CAST(NULL AS DOUBLE) AS agg_msg"]),
     ("g_triangle_count",
      ["'triangles' AS tag", "CAST(NULL AS DOUBLE) AS id", "CAST(NULL AS DOUBLE) AS out_degree",
       "CAST(NULL AS DOUBLE) AS in_degree", "CAST(n_triangles AS DOUBLE) AS metric",
-      "CAST(NULL AS DOUBLE) AS agg_msg"],
-     "'triangles' AS tag, CAST(NULL AS DOUBLE) AS id, CAST(NULL AS DOUBLE) AS out_degree, "
-     "CAST(NULL AS DOUBLE) AS in_degree, CAST(n_triangles AS DOUBLE) AS metric, "
-     "CAST(NULL AS DOUBLE) AS agg_msg"),
+      "CAST(NULL AS DOUBLE) AS agg_msg"]),
     ("g_four_cliques",
      ["'k4' AS tag", "CAST(NULL AS DOUBLE) AS id", "CAST(NULL AS DOUBLE) AS out_degree",
       "CAST(NULL AS DOUBLE) AS in_degree", "CAST(n_4cliques AS DOUBLE) AS metric",
-      "CAST(NULL AS DOUBLE) AS agg_msg"],
-     "'k4' AS tag, CAST(NULL AS DOUBLE) AS id, CAST(NULL AS DOUBLE) AS out_degree, "
-     "CAST(NULL AS DOUBLE) AS in_degree, CAST(n_4cliques AS DOUBLE) AS metric, "
-     "CAST(NULL AS DOUBLE) AS agg_msg"),
+      "CAST(NULL AS DOUBLE) AS agg_msg"]),
     # link-prediction pairs: id/out_degree carry (a, b); in_degree the
     # common-neighbor count; metric jaccard; agg_msg the quantized RA score
     ("g_link_prediction",
      ["'linkpred' AS tag", "CAST(a AS DOUBLE) AS id",
       "CAST(b AS DOUBLE) AS out_degree",
       "CAST(common_neighbors AS DOUBLE) AS in_degree", "jaccard AS metric",
-      "ra_score AS agg_msg"],
-     "'linkpred' AS tag, CAST(a AS DOUBLE) AS id, CAST(b AS DOUBLE) AS out_degree, "
-     "CAST(common_neighbors AS DOUBLE) AS in_degree, jaccard AS metric, "
-     "ra_score AS agg_msg"),
+      "ra_score AS agg_msg"]),
     # global structure: wedges/triangles exact ints, transitivity and
     # assortativity in metric/agg_msg
     ("g_structure",
      ["'structure' AS tag", "CAST(NULL AS DOUBLE) AS id",
       "CAST(n_wedges AS DOUBLE) AS out_degree",
       "CAST(n_triangles AS DOUBLE) AS in_degree",
-      "transitivity AS metric", "assortativity AS agg_msg"],
-     "'structure' AS tag, CAST(NULL AS DOUBLE) AS id, "
-     "CAST(n_wedges AS DOUBLE) AS out_degree, "
-     "CAST(n_triangles AS DOUBLE) AS in_degree, "
-     "transitivity AS metric, assortativity AS agg_msg"),
+      "transitivity AS metric", "assortativity AS agg_msg"]),
     ("g_summary",
      ["'summary' AS tag", "CAST(n_vertices AS DOUBLE) AS id",
       "CAST(n_edges AS DOUBLE) AS out_degree",
       "CAST(max_degree AS DOUBLE) AS in_degree", "avg_degree AS metric",
-      "CAST(NULL AS DOUBLE) AS agg_msg"],
-     "'summary' AS tag, CAST(n_vertices AS DOUBLE) AS id, "
-     "CAST(n_edges AS DOUBLE) AS out_degree, "
-     "CAST(max_degree AS DOUBLE) AS in_degree, avg_degree AS metric, "
-     "CAST(NULL AS DOUBLE) AS agg_msg"),
+      "CAST(NULL AS DOUBLE) AS agg_msg"]),
     ("g_aggregate_messages",
      ["'agg_messages' AS tag", "CAST(id AS DOUBLE) AS id", "CAST(NULL AS DOUBLE) AS out_degree",
-      "CAST(NULL AS DOUBLE) AS in_degree", "CAST(NULL AS DOUBLE) AS metric", "agg_msg"],
-     "'agg_messages' AS tag, CAST(id AS DOUBLE) AS id, CAST(NULL AS DOUBLE) AS out_degree, "
-     "CAST(NULL AS DOUBLE) AS in_degree, CAST(NULL AS DOUBLE) AS metric, agg_msg"),
+      "CAST(NULL AS DOUBLE) AS in_degree", "CAST(NULL AS DOUBLE) AS metric", "agg_msg"]),
 ])
 
 _publish("g_motif_paths")
@@ -9807,8 +9674,8 @@ _publish("g_motif_paths")
 # -- 20-28: sets, text, dedup, similarity, meta -----------------------------
 
 _compose("set_ops", [
-    ("set_intersect", ["'intersect' AS tag", "c_custkey"], "'intersect' AS tag, c_custkey"),
-    ("set_except", ["'except' AS tag", "c_custkey"], "'except' AS tag, c_custkey"),
+    ("set_intersect", ["'intersect' AS tag", "c_custkey"]),
+    ("set_except", ["'except' AS tag", "c_custkey"]),
 ])
 
 
@@ -9832,85 +9699,59 @@ _ORACLES["text_features"] = f"""
 _compose("text_quality_suite", [
     ("text_quality",
      ["'metrics' AS tag", "doc_id", "CAST(n_tokens AS DOUBLE) AS n_tokens",
-      "mean_token_len", "punct_ratio", "stopword_ratio"],
-     "'metrics' AS tag, doc_id, CAST(n_tokens AS DOUBLE) AS n_tokens, "
-     "mean_token_len, punct_ratio, stopword_ratio"),
+      "mean_token_len", "punct_ratio", "stopword_ratio"]),
     # chunking: the chunk TEXT is value-checked via its md5 riding the
     # tag (the pii-part pattern); chunk_id rides mean_token_len
     ("text_chunks",
-     ["concat('chunk_', md5(chunk_text)) AS tag", "doc_id",
+     ["'chunk_' || md5(chunk_text) AS tag", "doc_id",
       "CAST(n_tokens AS DOUBLE) AS n_tokens",
       "CAST(chunk_id AS DOUBLE) AS mean_token_len",
       "CAST(NULL AS DOUBLE) AS punct_ratio",
-      "CAST(NULL AS DOUBLE) AS stopword_ratio"],
-     "'chunk_' || md5(chunk_text) AS tag, doc_id, "
-     "CAST(n_tokens AS DOUBLE) AS n_tokens, "
-     "CAST(chunk_id AS DOUBLE) AS mean_token_len, "
-     "CAST(NULL AS DOUBLE) AS punct_ratio, "
-     "CAST(NULL AS DOUBLE) AS stopword_ratio"),
+      "CAST(NULL AS DOUBLE) AS stopword_ratio"]),
     ("text_quality_filter",
      ["'kept' AS tag", "doc_id", "CAST(NULL AS DOUBLE) AS n_tokens",
       "CAST(NULL AS DOUBLE) AS mean_token_len", "CAST(NULL AS DOUBLE) AS punct_ratio",
-      "CAST(NULL AS DOUBLE) AS stopword_ratio"],
-     "'kept' AS tag, doc_id, CAST(NULL AS DOUBLE) AS n_tokens, "
-     "CAST(NULL AS DOUBLE) AS mean_token_len, CAST(NULL AS DOUBLE) AS punct_ratio, "
-     "CAST(NULL AS DOUBLE) AS stopword_ratio"),
+      "CAST(NULL AS DOUBLE) AS stopword_ratio"]),
     # NB quality classifier: score_scaled rides mean_token_len (48-bit-ish
     # integers are double-exact), the mean-ratio decision rides punct_ratio
     ("text_nb_quality",
      ["'nb' AS tag", "doc_id", "CAST(n_tokens AS DOUBLE) AS n_tokens",
       "CAST(score_scaled AS DOUBLE) AS mean_token_len",
       "CAST(pred_mean AS DOUBLE) AS punct_ratio",
-      "CAST(NULL AS DOUBLE) AS stopword_ratio"],
-     "'nb' AS tag, doc_id, CAST(n_tokens AS DOUBLE) AS n_tokens, "
-     "CAST(score_scaled AS DOUBLE) AS mean_token_len, "
-     "CAST(pred_mean AS DOUBLE) AS punct_ratio, "
-     "CAST(NULL AS DOUBLE) AS stopword_ratio"),
+      "CAST(NULL AS DOUBLE) AS stopword_ratio"]),
     # BPE corpus encode: per-doc id-sequence md5 rides the tag, id count
     # on n_tokens; the totals sentinel carries vocab size / distinct ids
     ("text_bpe_encode",
      ["tag", "doc_id", "n_ids AS n_tokens", "v1 AS mean_token_len",
-      "v2 AS punct_ratio", "CAST(NULL AS DOUBLE) AS stopword_ratio"],
-     "tag, doc_id, n_ids AS n_tokens, v1 AS mean_token_len, "
-     "v2 AS punct_ratio, CAST(NULL AS DOUBLE) AS stopword_ratio"),
+      "v2 AS punct_ratio", "CAST(NULL AS DOUBLE) AS stopword_ratio"]),
     # epoch-level deterministic shuffle: read_pos/block_pos/shard on a 1/10
     # slice; the totals row proves the dense-permutation + no-collision
     # invariants (r9)
     ("text_train_order",
      ["tag", "doc_id", "n_ids AS n_tokens", "v1 AS mean_token_len",
-      "v2 AS punct_ratio", "CAST(NULL AS DOUBLE) AS stopword_ratio"],
-     "tag, doc_id, n_ids AS n_tokens, v1 AS mean_token_len, "
-     "v2 AS punct_ratio, CAST(NULL AS DOUBLE) AS stopword_ratio"),
+      "v2 AS punct_ratio", "CAST(NULL AS DOUBLE) AS stopword_ratio"]),
     # the complete assembly program: budget-select -> epoch shuffle -> BPE
     # train+encode on the kept subset -> pack in shuffled order; every
     # shard-0 training sequence md5-checked, composition-wide (r9)
     ("pipe_assemble",
      ["tag", "doc_id", "n_ids AS n_tokens", "v1 AS mean_token_len",
-      "v2 AS punct_ratio", "CAST(NULL AS DOUBLE) AS stopword_ratio"],
-     "tag, doc_id, n_ids AS n_tokens, v1 AS mean_token_len, "
-     "v2 AS punct_ratio, CAST(NULL AS DOUBLE) AS stopword_ratio"),
+      "v2 AS punct_ratio", "CAST(NULL AS DOUBLE) AS stopword_ratio"]),
     # token-budget selection: quality/tokens/running-spend per kept doc +
     # the utilization totals row (r9)
     ("text_budget_select",
      ["tag", "doc_id", "n_ids AS n_tokens", "v1 AS mean_token_len",
-      "v2 AS punct_ratio", "CAST(NULL AS DOUBLE) AS stopword_ratio"],
-     "tag, doc_id, n_ids AS n_tokens, v1 AS mean_token_len, "
-     "v2 AS punct_ratio, CAST(NULL AS DOUBLE) AS stopword_ratio"),
+      "v2 AS punct_ratio", "CAST(NULL AS DOUBLE) AS stopword_ratio"]),
     # unigram-LM tokenizer (Kudo 2018): per-doc id-sequence md5 tags on the
     # %20==7 slice, encode totals, and the vocab-certificate row whose md5
     # value-checks the trained (piece, count) table itself
     ("text_unigram",
      ["tag", "doc_id", "n_ids AS n_tokens", "v1 AS mean_token_len",
-      "v2 AS punct_ratio", "CAST(NULL AS DOUBLE) AS stopword_ratio"],
-     "tag, doc_id, n_ids AS n_tokens, v1 AS mean_token_len, "
-     "v2 AS punct_ratio, CAST(NULL AS DOUBLE) AS stopword_ratio"),
+      "v2 AS punct_ratio", "CAST(NULL AS DOUBLE) AS stopword_ratio"]),
     # foreign-vocab encode with char fallback: per-doc md5 tags on the odd
     # slice, the 100%-coverage totals row, the fallback-id stats row
     ("text_bpe_fallback",
      ["tag", "doc_id", "n_ids AS n_tokens", "v1 AS mean_token_len",
-      "v2 AS punct_ratio", "CAST(NULL AS DOUBLE) AS stopword_ratio"],
-     "tag, doc_id, n_ids AS n_tokens, v1 AS mean_token_len, "
-     "v2 AS punct_ratio, CAST(NULL AS DOUBLE) AS stopword_ratio"),
+      "v2 AS punct_ratio", "CAST(NULL AS DOUBLE) AS stopword_ratio"]),
     # curated-corpus stats mapped onto the suite's projection: doc_id carries
     # n_docs, n_tokens the BPE budget, mean/punct the two drop counts
     ("pipe_curate_corpus",
@@ -9918,31 +9759,20 @@ _compose("text_quality_suite", [
       "CAST(total_bpe_tokens AS DOUBLE) AS n_tokens",
       "CAST(n_dropped_neardup AS DOUBLE) AS mean_token_len",
       "CAST(n_dropped_quality AS DOUBLE) AS punct_ratio",
-      "CAST(NULL AS DOUBLE) AS stopword_ratio"],
-     "'curated' AS tag, n_docs AS doc_id, CAST(total_bpe_tokens AS DOUBLE) AS n_tokens, "
-     "CAST(n_dropped_neardup AS DOUBLE) AS mean_token_len, "
-     "CAST(n_dropped_quality AS DOUBLE) AS punct_ratio, "
-     "CAST(NULL AS DOUBLE) AS stopword_ratio"),
+      "CAST(NULL AS DOUBLE) AS stopword_ratio"]),
     # v2 adds the per-source cap stage; stopword_ratio carries its drop count
     ("pipe_curate_v2",
      ["'curated_v2' AS tag", "n_docs AS doc_id",
       "CAST(total_bpe_tokens AS DOUBLE) AS n_tokens",
       "CAST(n_dropped_neardup AS DOUBLE) AS mean_token_len",
       "CAST(n_dropped_quality AS DOUBLE) AS punct_ratio",
-      "CAST(n_dropped_cap AS DOUBLE) AS stopword_ratio"],
-     "'curated_v2' AS tag, n_docs AS doc_id, CAST(total_bpe_tokens AS DOUBLE) AS n_tokens, "
-     "CAST(n_dropped_neardup AS DOUBLE) AS mean_token_len, "
-     "CAST(n_dropped_quality AS DOUBLE) AS punct_ratio, "
-     "CAST(n_dropped_cap AS DOUBLE) AS stopword_ratio"),
+      "CAST(n_dropped_cap AS DOUBLE) AS stopword_ratio"]),
     # repetition signals mapped onto the suite's projection: mean/punct/
     # stopword carry frac_distinct / top_token_frac / dup_bigram_frac
     ("text_repetition",
      ["'repetition' AS tag", "doc_id", "CAST(n_tokens AS DOUBLE) AS n_tokens",
       "frac_distinct AS mean_token_len", "top_token_frac AS punct_ratio",
-      "dup_bigram_frac AS stopword_ratio"],
-     "'repetition' AS tag, doc_id, CAST(n_tokens AS DOUBLE) AS n_tokens, "
-     "frac_distinct AS mean_token_len, top_token_frac AS punct_ratio, "
-     "dup_bigram_frac AS stopword_ratio"),
+      "dup_bigram_frac AS stopword_ratio"]),
     # packing placements: mean/punct/stopword carry start_seq / end_seq /
     # offset_in_seq (shard is implicit — any shard-assignment divergence
     # breaks the per-doc cumulative sums these derive from)
@@ -9950,132 +9780,83 @@ _compose("text_quality_suite", [
      ["'packing' AS tag", "doc_id", "CAST(n_tokens AS DOUBLE) AS n_tokens",
       "CAST(start_seq AS DOUBLE) AS mean_token_len",
       "CAST(end_seq AS DOUBLE) AS punct_ratio",
-      "CAST(offset_in_seq AS DOUBLE) AS stopword_ratio"],
-     "'packing' AS tag, doc_id, CAST(n_tokens AS DOUBLE) AS n_tokens, "
-     "CAST(start_seq AS DOUBLE) AS mean_token_len, "
-     "CAST(end_seq AS DOUBLE) AS punct_ratio, "
-     "CAST(offset_in_seq AS DOUBLE) AS stopword_ratio"),
+      "CAST(offset_in_seq AS DOUBLE) AS stopword_ratio"]),
     # corpus df scoring: mean/punct carry sum_df / mean_df
     ("text_df_stats",
      ["'df_stats' AS tag", "doc_id",
       "CAST(n_distinct_tokens AS DOUBLE) AS n_tokens",
       "CAST(sum_df AS DOUBLE) AS mean_token_len", "mean_df AS punct_ratio",
-      "CAST(NULL AS DOUBLE) AS stopword_ratio"],
-     "'df_stats' AS tag, doc_id, CAST(n_distinct_tokens AS DOUBLE) AS n_tokens, "
-     "CAST(sum_df AS DOUBLE) AS mean_token_len, mean_df AS punct_ratio, "
-     "CAST(NULL AS DOUBLE) AS stopword_ratio"),
+      "CAST(NULL AS DOUBLE) AS stopword_ratio"]),
     # v3 = the complete program; the split/PII counts ride the tag string,
     # the doubles carry the same stage-drop layout as v2 (BPE budget is
     # post-redaction)
     ("pipe_curate_v3",
-     ["concat('curated_v3_', CAST(n_train AS STRING), '_', "
-      "CAST(n_val AS STRING), '_', CAST(n_test AS STRING), '_', "
-      "CAST(n_pii AS STRING)) AS tag",
+     ["'curated_v3_' || CAST(n_train AS STRING) || '_' || "
+      "CAST(n_val AS STRING) || '_' || CAST(n_test AS STRING) || '_' || "
+      "CAST(n_pii AS STRING) AS tag",
       "n_docs AS doc_id", "CAST(total_bpe_tokens AS DOUBLE) AS n_tokens",
       "CAST(n_dropped_neardup AS DOUBLE) AS mean_token_len",
       "CAST(n_dropped_quality AS DOUBLE) AS punct_ratio",
-      "CAST(n_dropped_cap AS DOUBLE) AS stopword_ratio"],
-     "'curated_v3_' || CAST(n_train AS VARCHAR) || '_' || "
-     "CAST(n_val AS VARCHAR) || '_' || CAST(n_test AS VARCHAR) || '_' || "
-     "CAST(n_pii AS VARCHAR) AS tag, "
-     "n_docs AS doc_id, CAST(total_bpe_tokens AS DOUBLE) AS n_tokens, "
-     "CAST(n_dropped_neardup AS DOUBLE) AS mean_token_len, "
-     "CAST(n_dropped_quality AS DOUBLE) AS punct_ratio, "
-     "CAST(n_dropped_cap AS DOUBLE) AS stopword_ratio"),
+      "CAST(n_dropped_cap AS DOUBLE) AS stopword_ratio"]),
     # v4 = v3 + decontamination + temperature mixing; the two new stages'
     # drop counts join the splits/PII counts inside the tag string
     ("pipe_curate_v4",
-     ["concat('curated_v4_', CAST(n_train AS STRING), '_', "
-      "CAST(n_val AS STRING), '_', CAST(n_test AS STRING), '_', "
-      "CAST(n_pii AS STRING), '_', CAST(n_dropped_decontam AS STRING), '_', "
-      "CAST(n_dropped_mix AS STRING)) AS tag",
+     ["'curated_v4_' || CAST(n_train AS STRING) || '_' || "
+      "CAST(n_val AS STRING) || '_' || CAST(n_test AS STRING) || '_' || "
+      "CAST(n_pii AS STRING) || '_' || CAST(n_dropped_decontam AS STRING) "
+      "|| '_' || CAST(n_dropped_mix AS STRING) AS tag",
       "n_docs AS doc_id", "CAST(total_bpe_tokens AS DOUBLE) AS n_tokens",
       "CAST(n_dropped_neardup AS DOUBLE) AS mean_token_len",
       "CAST(n_dropped_quality AS DOUBLE) AS punct_ratio",
-      "CAST(n_dropped_cap AS DOUBLE) AS stopword_ratio"],
-     "'curated_v4_' || CAST(n_train AS VARCHAR) || '_' || "
-     "CAST(n_val AS VARCHAR) || '_' || CAST(n_test AS VARCHAR) || '_' || "
-     "CAST(n_pii AS VARCHAR) || '_' || CAST(n_dropped_decontam AS VARCHAR) "
-     "|| '_' || CAST(n_dropped_mix AS VARCHAR) AS tag, "
-     "n_docs AS doc_id, CAST(total_bpe_tokens AS DOUBLE) AS n_tokens, "
-     "CAST(n_dropped_neardup AS DOUBLE) AS mean_token_len, "
-     "CAST(n_dropped_quality AS DOUBLE) AS punct_ratio, "
-     "CAST(n_dropped_cap AS DOUBLE) AS stopword_ratio"),
+      "CAST(n_dropped_cap AS DOUBLE) AS stopword_ratio"]),
     # v5 = v4 + the bigram-LM quality filter and privacy suppression; the
     # two new stages' drop counts join the tag string
     ("pipe_curate_v5",
-     ["concat('curated_v5_', CAST(n_train AS STRING), '_', "
-      "CAST(n_val AS STRING), '_', CAST(n_test AS STRING), '_', "
-      "CAST(n_pii AS STRING), '_', CAST(n_dropped_decontam AS STRING), '_', "
-      "CAST(n_dropped_lm AS STRING), '_', CAST(n_dropped_mix AS STRING), "
-      "'_', CAST(n_dropped_privacy AS STRING)) AS tag",
+     ["'curated_v5_' || CAST(n_train AS STRING) || '_' || "
+      "CAST(n_val AS STRING) || '_' || CAST(n_test AS STRING) || '_' || "
+      "CAST(n_pii AS STRING) || '_' || CAST(n_dropped_decontam AS STRING) "
+      "|| '_' || CAST(n_dropped_lm AS STRING) || '_' || "
+      "CAST(n_dropped_mix AS STRING) || '_' || "
+      "CAST(n_dropped_privacy AS STRING) AS tag",
       "n_docs AS doc_id", "CAST(total_bpe_tokens AS DOUBLE) AS n_tokens",
       "CAST(n_dropped_neardup AS DOUBLE) AS mean_token_len",
       "CAST(n_dropped_quality AS DOUBLE) AS punct_ratio",
-      "CAST(n_dropped_cap AS DOUBLE) AS stopword_ratio"],
-     "'curated_v5_' || CAST(n_train AS VARCHAR) || '_' || "
-     "CAST(n_val AS VARCHAR) || '_' || CAST(n_test AS VARCHAR) || '_' || "
-     "CAST(n_pii AS VARCHAR) || '_' || CAST(n_dropped_decontam AS VARCHAR) "
-     "|| '_' || CAST(n_dropped_lm AS VARCHAR) || '_' || "
-     "CAST(n_dropped_mix AS VARCHAR) || '_' || "
-     "CAST(n_dropped_privacy AS VARCHAR) AS tag, "
-     "n_docs AS doc_id, CAST(total_bpe_tokens AS DOUBLE) AS n_tokens, "
-     "CAST(n_dropped_neardup AS DOUBLE) AS mean_token_len, "
-     "CAST(n_dropped_quality AS DOUBLE) AS punct_ratio, "
-     "CAST(n_dropped_cap AS DOUBLE) AS stopword_ratio"),
+      "CAST(n_dropped_cap AS DOUBLE) AS stopword_ratio"]),
     # PII scrubbing: counts ride the doubles, the redacted-text fingerprint
     # rides inside the tag (the value-hash then pins the full redaction)
     ("text_pii",
-     ["concat('pii_', redacted_fp) AS tag", "doc_id",
+     ["'pii_' || redacted_fp AS tag", "doc_id",
       "CAST(n_email AS DOUBLE) AS n_tokens",
       "CAST(n_ssn AS DOUBLE) AS mean_token_len",
       "CAST(n_phone AS DOUBLE) AS punct_ratio",
-      "CAST(NULL AS DOUBLE) AS stopword_ratio"],
-     "'pii_' || redacted_fp AS tag, doc_id, CAST(n_email AS DOUBLE) AS n_tokens, "
-     "CAST(n_ssn AS DOUBLE) AS mean_token_len, CAST(n_phone AS DOUBLE) AS punct_ratio, "
-     "CAST(NULL AS DOUBLE) AS stopword_ratio"),
+      "CAST(NULL AS DOUBLE) AS stopword_ratio"]),
     # exact phrase search: the hit set, n_chars along for the ride
     ("text_phrase",
      ["'phrase' AS tag", "doc_id", "CAST(n_chars AS DOUBLE) AS n_tokens",
       "CAST(NULL AS DOUBLE) AS mean_token_len",
       "CAST(NULL AS DOUBLE) AS punct_ratio",
-      "CAST(NULL AS DOUBLE) AS stopword_ratio"],
-     "'phrase' AS tag, doc_id, CAST(n_chars AS DOUBLE) AS n_tokens, "
-     "CAST(NULL AS DOUBLE) AS mean_token_len, CAST(NULL AS DOUBLE) AS punct_ratio, "
-     "CAST(NULL AS DOUBLE) AS stopword_ratio"),
+      "CAST(NULL AS DOUBLE) AS stopword_ratio"]),
     # BPE merge learning: the merge pair / vocab symbol rides the tag
     # (pii/chunk pattern); doc_id carries the round (99 = final vocab)
     ("text_bpe_learn",
-     ["concat('bpe_', CAST(round AS STRING), '_', sym) AS tag",
-      "CAST(round AS LONG) AS doc_id", "CAST(freq AS DOUBLE) AS n_tokens",
+     ["'bpe_' || CAST(round AS STRING) || '_' || sym AS tag",
+      "CAST(round AS BIGINT) AS doc_id", "CAST(freq AS DOUBLE) AS n_tokens",
       "CAST(NULL AS DOUBLE) AS mean_token_len",
       "CAST(NULL AS DOUBLE) AS punct_ratio",
-      "CAST(NULL AS DOUBLE) AS stopword_ratio"],
-     "'bpe_' || CAST(round AS VARCHAR) || '_' || sym AS tag, "
-     "CAST(round AS BIGINT) AS doc_id, CAST(freq AS DOUBLE) AS n_tokens, "
-     "CAST(NULL AS DOUBLE) AS mean_token_len, "
-     "CAST(NULL AS DOUBLE) AS punct_ratio, "
-     "CAST(NULL AS DOUBLE) AS stopword_ratio"),
+      "CAST(NULL AS DOUBLE) AS stopword_ratio"]),
     # OOV scoring: mean/punct/stopword carry n_oov / oov_rate / sum_vocab_cf
     ("text_oov",
      ["'oov' AS tag", "doc_id", "CAST(n_tokens AS DOUBLE) AS n_tokens",
       "CAST(n_oov AS DOUBLE) AS mean_token_len",
       "oov_rate AS punct_ratio",
-      "CAST(sum_vocab_cf AS DOUBLE) AS stopword_ratio"],
-     "'oov' AS tag, doc_id, CAST(n_tokens AS DOUBLE) AS n_tokens, "
-     "CAST(n_oov AS DOUBLE) AS mean_token_len, oov_rate AS punct_ratio, "
-     "CAST(sum_vocab_cf AS DOUBLE) AS stopword_ratio"),
+      "CAST(sum_vocab_cf AS DOUBLE) AS stopword_ratio"]),
     # eval-set decontamination: mean/punct/stopword carry hit_grams /
     # eval_docs_hit / contaminated_tokens; n_tokens carries total_tokens
     ("dedup_decontam",
      ["'decontam' AS tag", "doc_id", "CAST(total_tokens AS DOUBLE) AS n_tokens",
       "CAST(hit_grams AS DOUBLE) AS mean_token_len",
       "CAST(eval_docs_hit AS DOUBLE) AS punct_ratio",
-      "CAST(contaminated_tokens AS DOUBLE) AS stopword_ratio"],
-     "'decontam' AS tag, doc_id, CAST(total_tokens AS DOUBLE) AS n_tokens, "
-     "CAST(hit_grams AS DOUBLE) AS mean_token_len, "
-     "CAST(eval_docs_hit AS DOUBLE) AS punct_ratio, "
-     "CAST(contaminated_tokens AS DOUBLE) AS stopword_ratio"),
+      "CAST(contaminated_tokens AS DOUBLE) AS stopword_ratio"]),
     # Bloom-pruned decontamination: identical values under a different
     # physical plan (word-table bloom prune -> tiny-side exact verify)
     ("dedup_decontam_bloom",
@@ -10083,208 +9864,142 @@ _compose("text_quality_suite", [
       "CAST(total_tokens AS DOUBLE) AS n_tokens",
       "CAST(hit_grams AS DOUBLE) AS mean_token_len",
       "CAST(eval_docs_hit AS DOUBLE) AS punct_ratio",
-      "CAST(contaminated_tokens AS DOUBLE) AS stopword_ratio"],
-     "'decontam_bloom' AS tag, doc_id, CAST(total_tokens AS DOUBLE) AS n_tokens, "
-     "CAST(hit_grams AS DOUBLE) AS mean_token_len, "
-     "CAST(eval_docs_hit AS DOUBLE) AS punct_ratio, "
-     "CAST(contaminated_tokens AS DOUBLE) AS stopword_ratio"),
+      "CAST(contaminated_tokens AS DOUBLE) AS stopword_ratio"]),
     # bigram-LM (CCNet) quality scoring: n_tokens carries n_scored,
     # mean_token_len the exact-integer sum_p_scaled (< 1e8 — double-exact)
     ("text_lm_score",
      ["'lm' AS tag", "doc_id", "CAST(n_scored AS DOUBLE) AS n_tokens",
       "CAST(sum_p_scaled AS DOUBLE) AS mean_token_len",
       "CAST(NULL AS DOUBLE) AS punct_ratio",
-      "CAST(NULL AS DOUBLE) AS stopword_ratio"],
-     "'lm' AS tag, doc_id, CAST(n_scored AS DOUBLE) AS n_tokens, "
-     "CAST(sum_p_scaled AS DOUBLE) AS mean_token_len, "
-     "CAST(NULL AS DOUBLE) AS punct_ratio, "
-     "CAST(NULL AS DOUBLE) AS stopword_ratio"),
+      "CAST(NULL AS DOUBLE) AS stopword_ratio"]),
 ])
 
 _compose("dedup_exact_canonical", [
     ("dedup_exact",
      ["'exact_groups' AS tag", "fp", "CAST(n_docs AS DOUBLE) AS n_docs",
-      "canonical_id AS id"],
-     "'exact_groups' AS tag, fp, CAST(n_docs AS DOUBLE) AS n_docs, canonical_id AS id"),
+      "canonical_id AS id"]),
     ("dedup_canonicalize",
      ["'survivors' AS tag", "CAST(NULL AS STRING) AS fp", "CAST(NULL AS DOUBLE) AS n_docs",
-      "doc_id AS id"],
-     "'survivors' AS tag, CAST(NULL AS VARCHAR) AS fp, CAST(NULL AS DOUBLE) AS n_docs, "
-     "doc_id AS id"),
+      "doc_id AS id"]),
     ("dedup_near_clusters",
      ["'near_clusters' AS tag", "CAST(NULL AS STRING) AS fp",
-      "CAST(cluster_id AS DOUBLE) AS n_docs", "doc_id AS id"],
-     "'near_clusters' AS tag, CAST(NULL AS VARCHAR) AS fp, "
-     "CAST(cluster_id AS DOUBLE) AS n_docs, doc_id AS id"),
+      "CAST(cluster_id AS DOUBLE) AS n_docs", "doc_id AS id"]),
     ("sample_split",
      ["'sample_split' AS tag", "split AS fp", "CAST(NULL AS DOUBLE) AS n_docs",
-      "doc_id AS id"],
-     "'sample_split' AS tag, split AS fp, CAST(NULL AS DOUBLE) AS n_docs, "
-     "doc_id AS id"),
+      "doc_id AS id"]),
     ("sample_cap",
      ["'cap_kept' AS tag", "CAST(NULL AS STRING) AS fp",
-      "CAST(NULL AS DOUBLE) AS n_docs", "doc_id AS id"],
-     "'cap_kept' AS tag, CAST(NULL AS VARCHAR) AS fp, "
-     "CAST(NULL AS DOUBLE) AS n_docs, doc_id AS id"),
+      "CAST(NULL AS DOUBLE) AS n_docs", "doc_id AS id"]),
     ("sample_weighted",
      ["'weighted_kept' AS tag", "CAST(NULL AS STRING) AS fp",
-      "CAST(NULL AS DOUBLE) AS n_docs", "doc_id AS id"],
-     "'weighted_kept' AS tag, CAST(NULL AS VARCHAR) AS fp, "
-     "CAST(NULL AS DOUBLE) AS n_docs, doc_id AS id"),
+      "CAST(NULL AS DOUBLE) AS n_docs", "doc_id AS id"]),
     # corpus mixture: fp carries the domain, the per-domain kept counts
     # value-check the target proportions AND the undersupply contract
     ("sample_mix",
      ["'mix_kept' AS tag", "source AS fp", "CAST(NULL AS DOUBLE) AS n_docs",
-      "doc_id AS id"],
-     "'mix_kept' AS tag, source AS fp, CAST(NULL AS DOUBLE) AS n_docs, "
-     "doc_id AS id"),
+      "doc_id AS id"]),
     # temperature-flattened mixture: fp carries the derived skewed domain
     ("sample_temp_mix",
      ["'temp_mix' AS tag", "domain AS fp", "CAST(NULL AS DOUBLE) AS n_docs",
-      "doc_id AS id"],
-     "'temp_mix' AS tag, domain AS fp, CAST(NULL AS DOUBLE) AS n_docs, "
-     "doc_id AS id"),
+      "doc_id AS id"]),
     # DSIR importance resample: fp carries the exact-integer scaled log
     # importance weight, n_docs the scaled Gumbel draw (< 2^26, double-exact)
     ("sample_dsir",
      ["'dsir' AS tag", "CAST(logw_scaled AS STRING) AS fp",
-      "CAST(gumbel_scaled AS DOUBLE) AS n_docs", "doc_id AS id"],
-     "'dsir' AS tag, CAST(logw_scaled AS VARCHAR) AS fp, "
-     "CAST(gumbel_scaled AS DOUBLE) AS n_docs, doc_id AS id"),
+      "CAST(gumbel_scaled AS DOUBLE) AS n_docs", "doc_id AS id"]),
     # leakage-safe split: fp carries the split name, n_docs the cluster id
     ("cluster_safe_split",
      ["'cluster_split' AS tag", "split AS fp",
-      "CAST(cluster_id AS DOUBLE) AS n_docs", "doc_id AS id"],
-     "'cluster_split' AS tag, split AS fp, "
-     "CAST(cluster_id AS DOUBLE) AS n_docs, doc_id AS id"),
+      "CAST(cluster_id AS DOUBLE) AS n_docs", "doc_id AS id"]),
     # fixed-segment (C4/MassiveText) sub-document dedup: rebuilt text
     # value-checks via md5-in-tag, fp carries n_segs, n_docs the drop count
     ("dedup_segments",
-     ["concat('segdedup_', md5(text)) AS tag",
+     ["'segdedup_' || md5(text) AS tag",
       "CAST(n_segs AS STRING) AS fp",
-      "CAST(n_dropped AS DOUBLE) AS n_docs", "doc_id AS id"],
-     "'segdedup_' || md5(text) AS tag, CAST(n_segs AS VARCHAR) AS fp, "
-     "CAST(n_dropped AS DOUBLE) AS n_docs, doc_id AS id"),
+      "CAST(n_dropped AS DOUBLE) AS n_docs", "doc_id AS id"]),
 ])
 
 _compose("dedup_pairs", [
     ("dedup_ngram_jaccard",
      ["'ngram' AS tag", "doc_a", "doc_b", "jaccard",
-      "CAST(NULL AS STRING) AS detail"],
-     "'ngram' AS tag, doc_a, doc_b, jaccard, CAST(NULL AS VARCHAR) AS detail"),
+      "CAST(NULL AS STRING) AS detail"]),
     ("dedup_minhash_lsh",
      ["'minhash_lsh' AS tag", "doc_a", "doc_b", "jaccard",
-      "CAST(NULL AS STRING) AS detail"],
-     "'minhash_lsh' AS tag, doc_a, doc_b, jaccard, "
-     "CAST(NULL AS VARCHAR) AS detail"),
+      "CAST(NULL AS STRING) AS detail"]),
     ("contamination",
      ["'contamination' AS tag", "train_id AS doc_a", "test_id AS doc_b",
-      "jaccard", "CAST(NULL AS STRING) AS detail"],
-     "'contamination' AS tag, train_id AS doc_a, test_id AS doc_b, jaccard, "
-     "CAST(NULL AS VARCHAR) AS detail"),
+      "jaccard", "CAST(NULL AS STRING) AS detail"]),
     # incremental index probe: tag carries the pair scope (cross|batch),
     # jaccard carries the signature-agreement estimate
     ("dedup_index_probe",
-     ["concat('idx_', scope) AS tag", "doc_a", "doc_b",
-      "est_jaccard AS jaccard", "CAST(NULL AS STRING) AS detail"],
-     "'idx_' || scope AS tag, doc_a, doc_b, est_jaccard AS jaccard, "
-     "CAST(NULL AS VARCHAR) AS detail"),
+     ["'idx_' || scope AS tag", "doc_a", "doc_b",
+      "est_jaccard AS jaccard", "CAST(NULL AS STRING) AS detail"]),
     # fuzzy entity-resolution pairs: jaccard carries the edit distance
     ("dedup_fuzzy_names",
      ["'fuzzy' AS tag", "id_a AS doc_a", "id_b AS doc_b",
-      "CAST(distance AS DOUBLE) AS jaccard", "CAST(NULL AS STRING) AS detail"],
-     "'fuzzy' AS tag, id_a AS doc_a, id_b AS doc_b, "
-     "CAST(distance AS DOUBLE) AS jaccard, CAST(NULL AS VARCHAR) AS detail"),
+      "CAST(distance AS DOUBLE) AS jaccard", "CAST(NULL AS STRING) AS detail"]),
     # exact set-similarity via prefix filtering vs brute-force oracle
     ("dedup_setsim_names",
      ["'setsim' AS tag", "id_a AS doc_a", "id_b AS doc_b", "jaccard",
-      "CAST(NULL AS STRING) AS detail"],
-     "'setsim' AS tag, id_a AS doc_a, id_b AS doc_b, jaccard, "
-     "CAST(NULL AS VARCHAR) AS detail"),
+      "CAST(NULL AS STRING) AS detail"]),
     # Fellegi-Sunter linkage: jaccard carries the odds-ratio weight,
     # detail value-checks decision + the per-field agreement vector
     ("dedup_fs_linkage",
      ["'fslink' AS tag", "l_id AS doc_a", "r_id AS doc_b",
       "weight AS jaccard",
-      "concat(decision, ':', CAST(agr_name AS STRING), "
-      "CAST(agr_phone AS STRING), CAST(agr_segment AS STRING)) AS detail"],
-     "'fslink' AS tag, l_id AS doc_a, r_id AS doc_b, weight AS jaccard, "
-     "decision || ':' || CAST(agr_name AS VARCHAR) || "
-     "CAST(agr_phone AS VARCHAR) || CAST(agr_segment AS VARCHAR) AS detail"),
+      "decision || ':' || CAST(agr_name AS STRING) || "
+      "CAST(agr_phone AS STRING) || CAST(agr_segment AS STRING) AS detail"]),
     # ER golden records: doc_a = cluster id, doc_b = member count, the
     # canonical field values all ride the detail string (survivorship
     # divergence breaks the hash)
     ("dedup_er_golden",
      ["'er' AS tag", "cluster_id AS doc_a", "n_members AS doc_b",
       "CAST(NULL AS DOUBLE) AS jaccard",
-      "concat(name, '|', phone, '|', segment) AS detail"],
-     "'er' AS tag, cluster_id AS doc_a, n_members AS doc_b, "
-     "CAST(NULL AS DOUBLE) AS jaccard, "
-     "name || '|' || phone || '|' || segment AS detail"),
+      "name || '|' || phone || '|' || segment AS detail"]),
     # span REMOVAL: the rebuilt text's md5 rides the tag, removed-token
     # count rides jaccard; doc_b slot carries the doc id again (type rule)
     ("dedup_despan",
-     ["concat('despanned_', md5(text)) AS tag", "doc_id AS doc_a",
+     ["'despanned_' || md5(text) AS tag", "doc_id AS doc_a",
       "doc_id AS doc_b", "CAST(n_removed_tokens AS DOUBLE) AS jaccard",
-      "CAST(NULL AS STRING) AS detail"],
-     "'despanned_' || md5(text) AS tag, doc_id AS doc_a, doc_id AS doc_b, "
-     "CAST(n_removed_tokens AS DOUBLE) AS jaccard, "
-     "CAST(NULL AS VARCHAR) AS detail"),
+      "CAST(NULL AS STRING) AS detail"]),
     # cross-document exact substring spans: jaccard carries span_len,
     # detail value-checks the positions as 'start_a:start_b:span_len'
     ("dedup_spans",
      ["'spans' AS tag", "doc_a", "doc_b", "CAST(span_len AS DOUBLE) AS jaccard",
-      "concat(CAST(start_a AS STRING), ':', CAST(start_b AS STRING), ':', "
-      "CAST(span_len AS STRING)) AS detail"],
-     "'spans' AS tag, doc_a, doc_b, CAST(span_len AS DOUBLE) AS jaccard, "
-     "CAST(start_a AS VARCHAR) || ':' || CAST(start_b AS VARCHAR) || ':' || "
-     "CAST(span_len AS VARCHAR) AS detail"),
+      "CAST(start_a AS STRING) || ':' || CAST(start_b AS STRING) || ':' || "
+      "CAST(span_len AS STRING) AS detail"]),
 ])
 
 _compose("sim_ann_neardup", [
     ("sim_ann_lsh",
      ["'ann_lsh' AS tag", "query_id AS a", "neighbor_id AS b", "cos_sim",
-      "CAST(rank AS DOUBLE) AS rank"],
-     "'ann_lsh' AS tag, query_id AS a, neighbor_id AS b, cos_sim, CAST(rank AS DOUBLE) AS rank"),
+      "CAST(rank AS DOUBLE) AS rank"]),
     ("sim_embedding_neardup",
      ["'neardup' AS tag", "vec_a AS a", "vec_b AS b", "cos_sim",
-      "CAST(NULL AS DOUBLE) AS rank"],
-     "'neardup' AS tag, vec_a AS a, vec_b AS b, cos_sim, CAST(NULL AS DOUBLE) AS rank"),
+      "CAST(NULL AS DOUBLE) AS rank"]),
     # int8 quantization rides (b = md5-48 code fingerprint, cos_sim = scale)
     ("sim_quantize",
      ["'quantized' AS tag", "vec_id AS a", "codes_fp AS b", "scale AS cos_sim",
-      "CAST(NULL AS DOUBLE) AS rank"],
-     "'quantized' AS tag, vec_id AS a, codes_fp AS b, scale AS cos_sim, "
-     "CAST(NULL AS DOUBLE) AS rank"),
+      "CAST(NULL AS DOUBLE) AS rank"]),
     # quantized-scan top-k rides with its exact-integer cosine scores
     ("sim_quantized_topk",
      ["'q_topk' AS tag", "query_id AS a", "neighbor_id AS b",
-      "qcos_sim AS cos_sim", "CAST(rank AS DOUBLE) AS rank"],
-     "'q_topk' AS tag, query_id AS a, neighbor_id AS b, qcos_sim AS cos_sim, "
-     "CAST(rank AS DOUBLE) AS rank"),
+      "qcos_sim AS cos_sim", "CAST(rank AS DOUBLE) AS rank"]),
     # JL projection coordinates: b = dim index, cos_sim = coordinate
     ("sim_random_projection",
      ["'rp' AS tag", "vec_id AS a", "CAST(dim AS DOUBLE) AS b",
-      "value AS cos_sim", "CAST(NULL AS DOUBLE) AS rank"],
-     "'rp' AS tag, vec_id AS a, CAST(dim AS DOUBLE) AS b, value AS cos_sim, "
-     "CAST(NULL AS DOUBLE) AS rank"),
+      "value AS cos_sim", "CAST(NULL AS DOUBLE) AS rank"]),
     # SemDeDup: cell rides the rank slot; kept rows carry centroid_sim
     ("sim_semdedup_pairs",
      ["'semdd_pair' AS tag", "id_a AS a", "id_b AS b", "cos_sim",
-      "CAST(cell AS DOUBLE) AS rank"],
-     "'semdd_pair' AS tag, id_a AS a, id_b AS b, cos_sim, "
-     "CAST(cell AS DOUBLE) AS rank"),
+      "CAST(cell AS DOUBLE) AS rank"]),
     ("sim_semdedup_kept",
      ["'semdd_kept' AS tag", "id AS a", "CAST(NULL AS DOUBLE) AS b",
-      "centroid_sim AS cos_sim", "CAST(cell AS DOUBLE) AS rank"],
-     "'semdd_kept' AS tag, id AS a, CAST(NULL AS DOUBLE) AS b, "
-     "centroid_sim AS cos_sim, CAST(cell AS DOUBLE) AS rank"),
+      "centroid_sim AS cos_sim", "CAST(cell AS DOUBLE) AS rank"]),
     # contrastive mining: kind rides the tag, per-anchor rank in rank (r9)
     ("sim_contrastive_pairs",
-     ["concat('ctr_', kind) AS tag", "anchor_id AS a", "other_id AS b",
-      "cos_sim", "CAST(pair_rank AS DOUBLE) AS rank"],
-     "'ctr_' || kind AS tag, anchor_id AS a, other_id AS b, cos_sim, "
-     "CAST(pair_rank AS DOUBLE) AS rank"),
+     ["'ctr_' || kind AS tag", "anchor_id AS a", "other_id AS b",
+      "cos_sim", "CAST(pair_rank AS DOUBLE) AS rank"]),
 ])
 
 # IVF probe + PQ/ADC share one roster row (tag ivf / pq); score carries
@@ -10292,153 +10007,101 @@ _compose("sim_ann_neardup", [
 _compose("sim_ivf_topk", [
     ("sim_ivf_topk",
      ["'ivf' AS tag", "query_id", "neighbor_id", "cos_sim AS score",
-      "CAST(rank AS DOUBLE) AS rank"],
-     "'ivf' AS tag, query_id, neighbor_id, cos_sim AS score, "
-     "CAST(rank AS DOUBLE) AS rank"),
+      "CAST(rank AS DOUBLE) AS rank"]),
     ("sim_pq_topk",
      ["'pq' AS tag", "query_id", "neighbor_id", "adc_score AS score",
-      "CAST(rank AS DOUBLE) AS rank"],
-     "'pq' AS tag, query_id, neighbor_id, adc_score AS score, "
-     "CAST(rank AS DOUBLE) AS rank"),
+      "CAST(rank AS DOUBLE) AS rank"]),
     # metadata-filtered ANN over the SAME index (r9)
     ("sim_ivf_filtered",
      ["'ivf_filt' AS tag", "query_id", "neighbor_id", "cos_sim AS score",
-      "CAST(rank AS DOUBLE) AS rank"],
-     "'ivf_filt' AS tag, query_id, neighbor_id, cos_sim AS score, "
-     "CAST(rank AS DOUBLE) AS rank"),
+      "CAST(rank AS DOUBLE) AS rank"]),
     # recall@k of the probe vs exact ground truth, exact-integer hits (r9)
     ("sim_ann_recall",
      ["'recall' AS tag", "query_id", "CAST(NULL AS DOUBLE) AS neighbor_id",
-      "CAST(hits AS DOUBLE) AS score", "CAST(k AS DOUBLE) AS rank"],
-     "'recall' AS tag, query_id, CAST(NULL AS DOUBLE) AS neighbor_id, "
-     "CAST(hits AS DOUBLE) AS score, CAST(k AS DOUBLE) AS rank"),
+      "CAST(hits AS DOUBLE) AS score", "CAST(k AS DOUBLE) AS rank"]),
     # autotune walk (r11): n_probe rides query_id, exact-integer hits in
     # score, total in rank — the doubling schedule + stop rule replayed
     ("sim_ann_autotune",
      ["'autotune' AS tag", "n_probe AS query_id",
       "CAST(NULL AS DOUBLE) AS neighbor_id", "CAST(hits AS DOUBLE) AS score",
-      "CAST(total AS DOUBLE) AS rank"],
-     "'autotune' AS tag, n_probe AS query_id, "
-     "CAST(NULL AS DOUBLE) AS neighbor_id, CAST(hits AS DOUBLE) AS score, "
-     "CAST(total AS DOUBLE) AS rank"),
+      "CAST(total AS DOUBLE) AS rank"]),
 ])
 _compose("i1_splits", [
     ("i1_splits",
      ["'splits' AS tag", "CAST(shard_idx AS DOUBLE) AS a", "start_key AS b",
-      "end_key AS c", "CAST(NULL AS DOUBLE) AS d", "CAST(NULL AS STRING) AS s"],
-     "'splits' AS tag, CAST(shard_idx AS DOUBLE) AS a, start_key AS b, "
-     "end_key AS c, CAST(NULL AS DOUBLE) AS d, CAST(NULL AS VARCHAR) AS s"),
+      "end_key AS c", "CAST(NULL AS DOUBLE) AS d", "CAST(NULL AS STRING) AS s"]),
     # optimizer statistics: exact join cardinality / deterministic KMV
     # estimate (threshold rank rides the string - 2^60 exceeds double
     # precision) / FK containment
     ("stats_join_exact",
      ["'join_exact' AS tag", "CAST(join_rows AS DOUBLE) AS a",
       "CAST(n_keys_a AS DOUBLE) AS b", "CAST(n_keys_b AS DOUBLE) AS c",
-      "CAST(n_keys_both AS DOUBLE) AS d", "CAST(NULL AS STRING) AS s"],
-     "'join_exact' AS tag, CAST(join_rows AS DOUBLE) AS a, "
-     "CAST(n_keys_a AS DOUBLE) AS b, CAST(n_keys_b AS DOUBLE) AS c, "
-     "CAST(n_keys_both AS DOUBLE) AS d, CAST(NULL AS VARCHAR) AS s"),
+      "CAST(n_keys_both AS DOUBLE) AS d", "CAST(NULL AS STRING) AS s"]),
     ("stats_join_kmv",
      ["'join_kmv' AS tag", "CAST(estimate_scaled AS DOUBLE) AS a",
       "CAST(sampled_product AS DOUBLE) AS b", "CAST(n_sampled AS DOUBLE) AS c",
-      "CAST(NULL AS DOUBLE) AS d", "CAST(threshold_rank AS STRING) AS s"],
-     "'join_kmv' AS tag, CAST(estimate_scaled AS DOUBLE) AS a, "
-     "CAST(sampled_product AS DOUBLE) AS b, CAST(n_sampled AS DOUBLE) AS c, "
-     "CAST(NULL AS DOUBLE) AS d, CAST(threshold_rank AS VARCHAR) AS s"),
+      "CAST(NULL AS DOUBLE) AS d", "CAST(threshold_rank AS STRING) AS s"]),
     ("stats_containment",
      ["'containment' AS tag", "CAST(n_keys_a AS DOUBLE) AS a",
       "CAST(n_contained AS DOUBLE) AS b", "CAST(NULL AS DOUBLE) AS c",
-      "containment AS d", "CAST(NULL AS STRING) AS s"],
-     "'containment' AS tag, CAST(n_keys_a AS DOUBLE) AS a, "
-     "CAST(n_contained AS DOUBLE) AS b, CAST(NULL AS DOUBLE) AS c, "
-     "containment AS d, CAST(NULL AS VARCHAR) AS s"),
+      "containment AS d", "CAST(NULL AS STRING) AS s"]),
     # z-order layout keys: every order's Morton value over
     # (custkey, price-cents) — the data-skipping sort key, value-checked
     ("zorder_values",
      ["'zorder' AS tag", "CAST(o_orderkey AS DOUBLE) AS a",
       "CAST(zval AS DOUBLE) AS b", "CAST(NULL AS DOUBLE) AS c",
-      "CAST(NULL AS DOUBLE) AS d", "CAST(NULL AS STRING) AS s"],
-     "'zorder' AS tag, CAST(o_orderkey AS DOUBLE) AS a, "
-     "CAST(zval AS DOUBLE) AS b, CAST(NULL AS DOUBLE) AS c, "
-     "CAST(NULL AS DOUBLE) AS d, CAST(NULL AS VARCHAR) AS s"),
+      "CAST(NULL AS DOUBLE) AS d", "CAST(NULL AS STRING) AS s"]),
     # skew diagnosis: hot keys + summary, salt-factor recommendation
     ("stats_skew_report",
-     ["concat('skew_', tag) AS tag", "CAST(n_rows AS DOUBLE) AS a",
+     ["'skew_' || tag AS tag", "CAST(n_rows AS DOUBLE) AS a",
       "CAST(share_ppm AS DOUBLE) AS b", "CAST(salt_factor AS DOUBLE) AS c",
-      "CAST(NULL AS DOUBLE) AS d", "key_str AS s"],
-     "'skew_' || tag AS tag, CAST(n_rows AS DOUBLE) AS a, "
-     "CAST(share_ppm AS DOUBLE) AS b, CAST(salt_factor AS DOUBLE) AS c, "
-     "CAST(NULL AS DOUBLE) AS d, key_str AS s"),
+      "CAST(NULL AS DOUBLE) AS d", "key_str AS s"]),
     # t-closeness: per-nation TVD of the segment mix vs global; the exact
     # rational rides the string (num:den), the double division rides d
     ("privacy_tclose",
      ["'tclose' AS tag", "CAST(g AS DOUBLE) AS a",
       "CAST(n_rows AS DOUBLE) AS b", "CAST(NULL AS DOUBLE) AS c",
-      "tvd AS d", "concat(tvd_num, ':', tvd_den) AS s"],
-     "'tclose' AS tag, CAST(g AS DOUBLE) AS a, CAST(n_rows AS DOUBLE) AS b, "
-     "CAST(NULL AS DOUBLE) AS c, tvd AS d, tvd_num || ':' || tvd_den AS s"),
+      "tvd AS d", "tvd_num || ':' || tvd_den AS s"]),
 ])
 
 _compose("win_windows", [
     ("win_tumbling",
      ["'tumbling' AS tag", "window_start AS t1", "CAST(NULL AS STRING) AS t2",
-      "event_type AS s", "CAST(NULL AS DOUBLE) AS user_id", "n_events", "sum_value"],
-     "'tumbling' AS tag, window_start AS t1, CAST(NULL AS VARCHAR) AS t2, event_type AS s, "
-     "CAST(NULL AS DOUBLE) AS user_id, n_events, sum_value"),
+      "event_type AS s", "CAST(NULL AS DOUBLE) AS user_id", "n_events", "sum_value"]),
     # gap-filled resampling: raw per-bucket sum rides the user_id double
     # slot, forward-filled sum rides sum_value — both value-checked
     ("win_gapfill",
      ["'gapfill' AS tag", "bucket_start AS t1", "CAST(NULL AS STRING) AS t2",
       "event_type AS s", "sum_value AS user_id", "n_events",
-      "filled_value AS sum_value"],
-     "'gapfill' AS tag, bucket_start AS t1, CAST(NULL AS VARCHAR) AS t2, "
-     "event_type AS s, sum_value AS user_id, n_events, "
-     "filled_value AS sum_value"),
+      "filled_value AS sum_value"]),
     # exact-rational interpolation: numerator rides sum_value, the
     # denominator rides the user_id double slot — both exact integers
     ("win_interpolate",
      ["'interp' AS tag", "bucket_start AS t1", "CAST(NULL AS STRING) AS t2",
       "event_type AS s", "CAST(interp_den AS DOUBLE) AS user_id", "n_events",
-      "CAST(interp_num AS DOUBLE) AS sum_value"],
-     "'interp' AS tag, bucket_start AS t1, CAST(NULL AS VARCHAR) AS t2, "
-     "event_type AS s, CAST(interp_den AS DOUBLE) AS user_id, n_events, "
-     "CAST(interp_num AS DOUBLE) AS sum_value"),
+      "CAST(interp_num AS DOUBLE) AS sum_value"]),
     # Markov transition matrix: s carries from_type, t2 to_type,
     # n_events the exact pair count, sum_value the row-normalized p
     ("win_transitions",
      ["'transitions' AS tag", "CAST(NULL AS STRING) AS t1", "to_type AS t2",
       "from_type AS s", "CAST(NULL AS DOUBLE) AS user_id", "n AS n_events",
-      "p AS sum_value"],
-     "'transitions' AS tag, CAST(NULL AS VARCHAR) AS t1, to_type AS t2, "
-     "from_type AS s, CAST(NULL AS DOUBLE) AS user_id, n AS n_events, "
-     "p AS sum_value"),
+      "p AS sum_value"]),
     ("win_sliding",
      ["'sliding' AS tag", "window_start AS t1", "CAST(NULL AS STRING) AS t2",
       "CAST(NULL AS STRING) AS s", "CAST(NULL AS DOUBLE) AS user_id", "n_events",
-      "CAST(NULL AS DOUBLE) AS sum_value"],
-     "'sliding' AS tag, window_start AS t1, CAST(NULL AS VARCHAR) AS t2, "
-     "CAST(NULL AS VARCHAR) AS s, CAST(NULL AS DOUBLE) AS user_id, n_events, "
-     "CAST(NULL AS DOUBLE) AS sum_value"),
+      "CAST(NULL AS DOUBLE) AS sum_value"]),
     ("win_session",
      ["'session' AS tag", "session_start AS t1", "session_end AS t2",
       "CAST(NULL AS STRING) AS s", "CAST(user_id AS DOUBLE) AS user_id", "n_events",
-      "CAST(NULL AS DOUBLE) AS sum_value"],
-     "'session' AS tag, session_start AS t1, session_end AS t2, CAST(NULL AS VARCHAR) AS s, "
-     "CAST(user_id AS DOUBLE) AS user_id, n_events, CAST(NULL AS DOUBLE) AS sum_value"),
+      "CAST(NULL AS DOUBLE) AS sum_value"]),
     ("win_attribution_join",
      ["'attrib' AS tag", "CAST(NULL AS STRING) AS t1", "CAST(NULL AS STRING) AS t2",
       "CAST(click_id AS STRING) AS s", "CAST(user_id AS DOUBLE) AS user_id",
-      "view_id AS n_events", "CAST(lag_us AS DOUBLE) AS sum_value"],
-     "'attrib' AS tag, CAST(NULL AS VARCHAR) AS t1, CAST(NULL AS VARCHAR) AS t2, "
-     "CAST(click_id AS VARCHAR) AS s, CAST(user_id AS DOUBLE) AS user_id, "
-     "view_id AS n_events, CAST(lag_us AS DOUBLE) AS sum_value"),
+      "view_id AS n_events", "CAST(lag_us AS DOUBLE) AS sum_value"]),
     ("asof_last_view",
      ["'asof' AS tag", "click_ts AS t1", "view_ts AS t2",
       "CAST(click_id AS STRING) AS s", "CAST(user_id AS DOUBLE) AS user_id",
-      "view_id AS n_events", "CAST(NULL AS DOUBLE) AS sum_value"],
-     "'asof' AS tag, click_ts AS t1, view_ts AS t2, "
-     "CAST(click_id AS VARCHAR) AS s, CAST(user_id AS DOUBLE) AS user_id, "
-     "view_id AS n_events, CAST(NULL AS DOUBLE) AS sum_value"),
+      "view_id AS n_events", "CAST(NULL AS DOUBLE) AS sum_value"]),
     # nullable view_id/lag_us are cast DOUBLE (fusion type rule); the union
     # then coerces the whole n_events column long→double identically in
     # Spark (unionByName) and DuckDB (UNION ALL)
@@ -10447,82 +10110,58 @@ _compose("win_windows", [
       "CAST(NULL AS STRING) AS t2", "CAST(click_id AS STRING) AS s",
       "CAST(user_id AS DOUBLE) AS user_id",
       "CAST(view_id AS DOUBLE) AS n_events",
-      "CAST(lag_us AS DOUBLE) AS sum_value"],
-     "'attr_outer' AS tag, CAST(NULL AS VARCHAR) AS t1, "
-     "CAST(NULL AS VARCHAR) AS t2, CAST(click_id AS VARCHAR) AS s, "
-     "CAST(user_id AS DOUBLE) AS user_id, CAST(view_id AS DOUBLE) AS n_events, "
-     "CAST(lag_us AS DOUBLE) AS sum_value"),
+      "CAST(lag_us AS DOUBLE) AS sum_value"]),
     # full outer adds never-attributed views: click_id now nullable too
     ("win_attribution_full",
      ["'attr_full' AS tag", "CAST(NULL AS STRING) AS t1",
       "CAST(NULL AS STRING) AS t2", "CAST(click_id AS STRING) AS s",
       "CAST(user_id AS DOUBLE) AS user_id",
       "CAST(view_id AS DOUBLE) AS n_events",
-      "CAST(lag_us AS DOUBLE) AS sum_value"],
-     "'attr_full' AS tag, CAST(NULL AS VARCHAR) AS t1, "
-     "CAST(NULL AS VARCHAR) AS t2, CAST(click_id AS VARCHAR) AS s, "
-     "CAST(user_id AS DOUBLE) AS user_id, CAST(view_id AS DOUBLE) AS n_events, "
-     "CAST(lag_us AS DOUBLE) AS sum_value"),
+      "CAST(lag_us AS DOUBLE) AS sum_value"]),
     # cohort retention rides (t1=cohort week, sum_value=period offset)
     ("win_cohort_retention",
      ["'cohort' AS tag", "cohort AS t1", "CAST(NULL AS STRING) AS t2",
       "CAST(NULL AS STRING) AS s", "CAST(NULL AS DOUBLE) AS user_id",
-      "n_users AS n_events", "CAST(period_offset AS DOUBLE) AS sum_value"],
-     "'cohort' AS tag, cohort AS t1, CAST(NULL AS VARCHAR) AS t2, "
-     "CAST(NULL AS VARCHAR) AS s, CAST(NULL AS DOUBLE) AS user_id, "
-     "n_users AS n_events, CAST(period_offset AS DOUBLE) AS sum_value"),
+      "n_users AS n_events", "CAST(period_offset AS DOUBLE) AS sum_value"]),
     # funnel completion rides (s=step, sum_value=step index)
     ("win_funnel",
      ["'funnel' AS tag", "CAST(NULL AS STRING) AS t1",
       "CAST(NULL AS STRING) AS t2", "step AS s",
       "CAST(NULL AS DOUBLE) AS user_id", "n_users AS n_events",
-      "CAST(step_index AS DOUBLE) AS sum_value"],
-     "'funnel' AS tag, CAST(NULL AS VARCHAR) AS t1, "
-     "CAST(NULL AS VARCHAR) AS t2, step AS s, CAST(NULL AS DOUBLE) AS user_id, "
-     "n_users AS n_events, CAST(step_index AS DOUBLE) AS sum_value"),
+      "CAST(step_index AS DOUBLE) AS sum_value"]),
 ])
 
 # -- 29-50: core scan/filter/agg/index/mutation surfaces --------------------
 
 _compose("s1_scan_paging", [
     ("s1_scan_all",
-     ["'scan_all' AS tag", "l_orderkey", "l_linenumber", "l_quantity"],
-     "'scan_all' AS tag, l_orderkey, l_linenumber, l_quantity"),
+     ["'scan_all' AS tag", "l_orderkey", "l_linenumber", "l_quantity"]),
     ("paging_keyset",
-     ["'page_resume' AS tag", "l_orderkey", "l_linenumber", "l_quantity"],
-     "'page_resume' AS tag, l_orderkey, l_linenumber, l_quantity"),
+     ["'page_resume' AS tag", "l_orderkey", "l_linenumber", "l_quantity"]),
 ])
 
 _compose("s2_point_multi", [
     ("s2_point_get",
      ["'point' AS tag", "id", "label", "name", "mktsegment",
-      "CAST(NULL AS DOUBLE) AS input_pos"],
-     "'point' AS tag, id, label, name, mktsegment, CAST(NULL AS DOUBLE) AS input_pos"),
+      "CAST(NULL AS DOUBLE) AS input_pos"]),
     ("s5_multi_id_ordered",
      ["'multi' AS tag", "id", "label", "name", "CAST(NULL AS STRING) AS mktsegment",
-      "CAST(input_pos AS DOUBLE) AS input_pos"],
-     "'multi' AS tag, id, label, name, CAST(NULL AS VARCHAR) AS mktsegment, "
-     "CAST(input_pos AS DOUBLE) AS input_pos"),
+      "CAST(input_pos AS DOUBLE) AS input_pos"]),
 ])
 
 _compose("s6_prefix_adjacency", [
     ("s6_prefix_scan",
      ["'prefix' AS tag", "CAST(c_custkey AS BIGINT) AS k1", "CAST(NULL AS DOUBLE) AS k2",
-      "c_name AS s"],
-     "'prefix' AS tag, CAST(c_custkey AS BIGINT) AS k1, CAST(NULL AS DOUBLE) AS k2, "
-     "c_name AS s"),
+      "c_name AS s"]),
     ("s6_adjacency_scan",
-     ["'adjacency' AS tag", "src AS k1", "CAST(dst AS DOUBLE) AS k2", "orderdate AS s"],
-     "'adjacency' AS tag, src AS k1, CAST(dst AS DOUBLE) AS k2, orderdate AS s"),
+     ["'adjacency' AS tag", "src AS k1", "CAST(dst AS DOUBLE) AS k2", "orderdate AS s"]),
 ])
 
 _compose("s7_range_limit0", [
     ("s7_range_scan",
-     ["'range' AS tag", "o_orderkey AS k", "o_totalprice AS v"],
-     "'range' AS tag, o_orderkey AS k, o_totalprice AS v"),
+     ["'range' AS tag", "o_orderkey AS k", "o_totalprice AS v"]),
     ("f5_limit0",
-     ["'limit0' AS tag", "l_orderkey AS k", "CAST(l_linenumber AS DOUBLE) AS v"],
-     "'limit0' AS tag, l_orderkey AS k, CAST(l_linenumber AS DOUBLE) AS v"),
+     ["'limit0' AS tag", "l_orderkey AS k", "CAST(l_linenumber AS DOUBLE) AS v"]),
 ])
 
 _publish("s8_shard_scan")
@@ -10530,25 +10169,19 @@ _publish("s8_shard_scan")
 _compose("s11_q16_parts", [
     ("s11_condition_query",
      ["'condition' AS tag", "CAST(p_partkey AS DOUBLE) AS k", "p_brand", "p_type",
-      "CAST(p_size AS DOUBLE) AS p_size", "CAST(NULL AS DOUBLE) AS n"],
-     "'condition' AS tag, CAST(p_partkey AS DOUBLE) AS k, p_brand, p_type, "
-     "CAST(p_size AS DOUBLE) AS p_size, CAST(NULL AS DOUBLE) AS n"),
+      "CAST(p_size AS DOUBLE) AS p_size", "CAST(NULL AS DOUBLE) AS n"]),
     ("q16_supplier_cnt",
      ["'q16' AS tag", "CAST(NULL AS DOUBLE) AS k", "p_brand", "p_type",
-      "CAST(p_size AS DOUBLE) AS p_size", "CAST(supplier_cnt AS DOUBLE) AS n"],
-     "'q16' AS tag, CAST(NULL AS DOUBLE) AS k, p_brand, p_type, "
-     "CAST(p_size AS DOUBLE) AS p_size, CAST(supplier_cnt AS DOUBLE) AS n"),
+      "CAST(p_size AS DOUBLE) AS p_size", "CAST(supplier_cnt AS DOUBLE) AS n"]),
 ])
 
 _publish("f2_lte_prefix_bound")
 
 _compose("f_predicates", [
     ("f_text_contains",
-     ["'text_contains' AS tag", "doc_id AS id", "CAST(NULL AS DOUBLE) AS v"],
-     "'text_contains' AS tag, doc_id AS id, CAST(NULL AS DOUBLE) AS v"),
+     ["'text_contains' AS tag", "doc_id AS id", "CAST(NULL AS DOUBLE) AS v"]),
     ("f_contains_key",
-     ["'contains_key' AS tag", "event_id AS id", "CAST(k_value AS DOUBLE) AS v"],
-     "'contains_key' AS tag, event_id AS id, CAST(k_value AS DOUBLE) AS v"),
+     ["'contains_key' AS tag", "event_id AS id", "CAST(k_value AS DOUBLE) AS v"]),
 ])
 
 # a1_count + agg_extended share one fused slot (freed for q_partsupp_suite)
@@ -10556,163 +10189,102 @@ _compose("a1_agg_counts", [
     ("a1_count",
      ["'count' AS tag", "CAST(NULL AS STRING) AS k", "CAST(NULL AS DOUBLE) AS v_min",
       "CAST(NULL AS DOUBLE) AS v_max", "CAST(NULL AS DOUBLE) AS v_sum",
-      "CAST(NULL AS DOUBLE) AS v_avg", "CAST(n AS DOUBLE) AS n"],
-     "'count' AS tag, CAST(NULL AS VARCHAR) AS k, CAST(NULL AS DOUBLE) AS v_min, "
-     "CAST(NULL AS DOUBLE) AS v_max, CAST(NULL AS DOUBLE) AS v_sum, "
-     "CAST(NULL AS DOUBLE) AS v_avg, CAST(n AS DOUBLE) AS n"),
+      "CAST(NULL AS DOUBLE) AS v_avg", "CAST(n AS DOUBLE) AS n"]),
     # expectation audit: n_rows rides v_sum, violations ride n
     ("quality_expectations",
      ["'expect' AS tag", "check_name AS k", "CAST(NULL AS DOUBLE) AS v_min",
       "CAST(NULL AS DOUBLE) AS v_max", "CAST(n_rows AS DOUBLE) AS v_sum",
-      "CAST(NULL AS DOUBLE) AS v_avg", "CAST(n_violations AS DOUBLE) AS n"],
-     "'expect' AS tag, check_name AS k, CAST(NULL AS DOUBLE) AS v_min, "
-     "CAST(NULL AS DOUBLE) AS v_max, CAST(n_rows AS DOUBLE) AS v_sum, "
-     "CAST(NULL AS DOUBLE) AS v_avg, CAST(n_violations AS DOUBLE) AS n"),
+      "CAST(NULL AS DOUBLE) AS v_avg", "CAST(n_violations AS DOUBLE) AS n"]),
     ("agg_extended",
      ["'agg' AS tag", "l_returnflag AS k", "CAST(min_qty AS DOUBLE) AS v_min",
       "CAST(max_qty AS DOUBLE) AS v_max", "CAST(sum_qty AS DOUBLE) AS v_sum",
-      "CAST(avg_qty AS DOUBLE) AS v_avg", "CAST(n_suppliers AS DOUBLE) AS n"],
-     "'agg' AS tag, l_returnflag AS k, CAST(min_qty AS DOUBLE) AS v_min, "
-     "CAST(max_qty AS DOUBLE) AS v_max, CAST(sum_qty AS DOUBLE) AS v_sum, "
-     "CAST(avg_qty AS DOUBLE) AS v_avg, CAST(n_suppliers AS DOUBLE) AS n"),
+      "CAST(avg_qty AS DOUBLE) AS v_avg", "CAST(n_suppliers AS DOUBLE) AS n"]),
     # privacy audits: k-anonymity violations / table level / l-diversity
     # violations / post-suppression survivors, all exact integers
     ("privacy_kanon",
      ["'kanon' AS tag",
-      "concat(CAST(c_nationkey AS STRING), ':', c_mktsegment) AS k",
+      "CAST(c_nationkey AS STRING) || ':' || c_mktsegment AS k",
       "CAST(NULL AS DOUBLE) AS v_min", "CAST(NULL AS DOUBLE) AS v_max",
       "CAST(NULL AS DOUBLE) AS v_sum", "CAST(NULL AS DOUBLE) AS v_avg",
-      "CAST(n_rows AS DOUBLE) AS n"],
-     "'kanon' AS tag, CAST(c_nationkey AS VARCHAR) || ':' || c_mktsegment AS k, "
-     "CAST(NULL AS DOUBLE) AS v_min, CAST(NULL AS DOUBLE) AS v_max, "
-     "CAST(NULL AS DOUBLE) AS v_sum, CAST(NULL AS DOUBLE) AS v_avg, "
-     "CAST(n_rows AS DOUBLE) AS n"),
+      "CAST(n_rows AS DOUBLE) AS n"]),
     ("privacy_level",
      ["'anon_level' AS tag", "CAST(NULL AS STRING) AS k",
       "CAST(k_level AS DOUBLE) AS v_min", "CAST(NULL AS DOUBLE) AS v_max",
       "CAST(n_groups AS DOUBLE) AS v_sum", "CAST(NULL AS DOUBLE) AS v_avg",
-      "CAST(n_rows_at_risk AS DOUBLE) AS n"],
-     "'anon_level' AS tag, CAST(NULL AS VARCHAR) AS k, "
-     "CAST(k_level AS DOUBLE) AS v_min, CAST(NULL AS DOUBLE) AS v_max, "
-     "CAST(n_groups AS DOUBLE) AS v_sum, CAST(NULL AS DOUBLE) AS v_avg, "
-     "CAST(n_rows_at_risk AS DOUBLE) AS n"),
+      "CAST(n_rows_at_risk AS DOUBLE) AS n"]),
     ("privacy_ldiv",
      ["'ldiv' AS tag",
-      "concat(CAST(c_nationkey AS STRING), ':', c_mktsegment) AS k",
+      "CAST(c_nationkey AS STRING) || ':' || c_mktsegment AS k",
       "CAST(NULL AS DOUBLE) AS v_min", "CAST(NULL AS DOUBLE) AS v_max",
       "CAST(n_rows AS DOUBLE) AS v_sum", "CAST(NULL AS DOUBLE) AS v_avg",
-      "CAST(n_distinct_sensitive AS DOUBLE) AS n"],
-     "'ldiv' AS tag, CAST(c_nationkey AS VARCHAR) || ':' || c_mktsegment AS k, "
-     "CAST(NULL AS DOUBLE) AS v_min, CAST(NULL AS DOUBLE) AS v_max, "
-     "CAST(n_rows AS DOUBLE) AS v_sum, CAST(NULL AS DOUBLE) AS v_avg, "
-     "CAST(n_distinct_sensitive AS DOUBLE) AS n"),
+      "CAST(n_distinct_sensitive AS DOUBLE) AS n"]),
     ("privacy_suppress",
      ["'ksup' AS tag", "CAST(c_custkey AS STRING) AS k",
       "CAST(NULL AS DOUBLE) AS v_min", "CAST(NULL AS DOUBLE) AS v_max",
       "CAST(NULL AS DOUBLE) AS v_sum", "CAST(NULL AS DOUBLE) AS v_avg",
-      "CAST(NULL AS DOUBLE) AS n"],
-     "'ksup' AS tag, CAST(c_custkey AS VARCHAR) AS k, "
-     "CAST(NULL AS DOUBLE) AS v_min, CAST(NULL AS DOUBLE) AS v_max, "
-     "CAST(NULL AS DOUBLE) AS v_sum, CAST(NULL AS DOUBLE) AS v_avg, "
-     "CAST(NULL AS DOUBLE) AS n"),
+      "CAST(NULL AS DOUBLE) AS n"]),
     # MAD anomaly detection: k = "event_type:row_id", v_min/v_max carry
     # med/mad, v_sum the scaled value, v_avg robust_z, n the deviation
     ("events_mad_outliers",
-     ["'mad' AS tag", "concat(event_type, ':', CAST(row_id AS STRING)) AS k",
+     ["'mad' AS tag", "event_type || ':' || CAST(row_id AS STRING) AS k",
       "CAST(med AS DOUBLE) AS v_min", "CAST(mad AS DOUBLE) AS v_max",
       "CAST(v AS DOUBLE) AS v_sum", "robust_z AS v_avg",
-      "CAST(dev AS DOUBLE) AS n"],
-     "'mad' AS tag, event_type || ':' || CAST(row_id AS VARCHAR) AS k, "
-     "CAST(med AS DOUBLE) AS v_min, CAST(mad AS DOUBLE) AS v_max, "
-     "CAST(v AS DOUBLE) AS v_sum, robust_z AS v_avg, "
-     "CAST(dev AS DOUBLE) AS n"),
+      "CAST(dev AS DOUBLE) AS n"]),
     # the count-min COUNTER TABLE, value-checked cell by cell (k = "d:w")
     ("cm_sketch",
-     ["'cm' AS tag", "concat(CAST(d AS STRING), ':', CAST(w AS STRING)) AS k",
+     ["'cm' AS tag", "CAST(d AS STRING) || ':' || CAST(w AS STRING) AS k",
       "CAST(NULL AS DOUBLE) AS v_min", "CAST(NULL AS DOUBLE) AS v_max",
       "CAST(NULL AS DOUBLE) AS v_sum", "CAST(NULL AS DOUBLE) AS v_avg",
-      "CAST(c AS DOUBLE) AS n"],
-     "'cm' AS tag, CAST(d AS VARCHAR) || ':' || CAST(w AS VARCHAR) AS k, "
-     "CAST(NULL AS DOUBLE) AS v_min, CAST(NULL AS DOUBLE) AS v_max, "
-     "CAST(NULL AS DOUBLE) AS v_sum, CAST(NULL AS DOUBLE) AS v_avg, "
-     "CAST(c AS DOUBLE) AS n"),
+      "CAST(c AS DOUBLE) AS n"]),
     # exact heavy hitters over the token stream (MG candidates + verify)
     ("hh_tokens",
      ["'hh' AS tag", "value AS k",
       "CAST(NULL AS DOUBLE) AS v_min", "CAST(NULL AS DOUBLE) AS v_max",
       "CAST(NULL AS DOUBLE) AS v_sum", "CAST(NULL AS DOUBLE) AS v_avg",
-      "CAST(n_occurrences AS DOUBLE) AS n"],
-     "'hh' AS tag, value AS k, "
-     "CAST(NULL AS DOUBLE) AS v_min, CAST(NULL AS DOUBLE) AS v_max, "
-     "CAST(NULL AS DOUBLE) AS v_sum, CAST(NULL AS DOUBLE) AS v_avg, "
-     "CAST(n_occurrences AS DOUBLE) AS n"),
+      "CAST(n_occurrences AS DOUBLE) AS n"]),
     # anti-entropy checksums: the 60-bit XOR rides the k string so no
     # double rounding can soften the check
     ("integrity_checksum",
      ["'cksum' AS tag",
-      "concat(CAST(bucket AS STRING), ':', CAST(checksum AS STRING)) AS k",
+      "CAST(bucket AS STRING) || ':' || CAST(checksum AS STRING) AS k",
       "CAST(NULL AS DOUBLE) AS v_min", "CAST(NULL AS DOUBLE) AS v_max",
       "CAST(NULL AS DOUBLE) AS v_sum", "CAST(NULL AS DOUBLE) AS v_avg",
-      "CAST(n_rows AS DOUBLE) AS n"],
-     "'cksum' AS tag, CAST(bucket AS VARCHAR) || ':' || CAST(checksum AS VARCHAR) AS k, "
-     "CAST(NULL AS DOUBLE) AS v_min, CAST(NULL AS DOUBLE) AS v_max, "
-     "CAST(NULL AS DOUBLE) AS v_sum, CAST(NULL AS DOUBLE) AS v_avg, "
-     "CAST(n_rows AS DOUBLE) AS n"),
+      "CAST(n_rows AS DOUBLE) AS n"]),
     # equi-width histogram (k = bin, v_min/v_max = edges, n = count)
     ("profile_histogram",
      ["'hist' AS tag", "CAST(bin AS STRING) AS k", "bin_lo AS v_min",
       "bin_hi AS v_max", "CAST(NULL AS DOUBLE) AS v_sum",
-      "CAST(NULL AS DOUBLE) AS v_avg", "CAST(n AS DOUBLE) AS n"],
-     "'hist' AS tag, CAST(bin AS VARCHAR) AS k, bin_lo AS v_min, "
-     "bin_hi AS v_max, CAST(NULL AS DOUBLE) AS v_sum, "
-     "CAST(NULL AS DOUBLE) AS v_avg, CAST(n AS DOUBLE) AS n"),
+      "CAST(NULL AS DOUBLE) AS v_avg", "CAST(n AS DOUBLE) AS n"]),
     # equi-depth histogram (k = bin, v_max = exact percentile edge)
     ("profile_equidepth",
      ["'eqdepth' AS tag", "CAST(bin AS STRING) AS k",
       "CAST(NULL AS DOUBLE) AS v_min", "bin_hi AS v_max",
       "CAST(NULL AS DOUBLE) AS v_sum", "CAST(NULL AS DOUBLE) AS v_avg",
-      "CAST(n AS DOUBLE) AS n"],
-     "'eqdepth' AS tag, CAST(bin AS VARCHAR) AS k, "
-     "CAST(NULL AS DOUBLE) AS v_min, bin_hi AS v_max, "
-     "CAST(NULL AS DOUBLE) AS v_sum, CAST(NULL AS DOUBLE) AS v_avg, "
-     "CAST(n AS DOUBLE) AS n"),
+      "CAST(n AS DOUBLE) AS n"]),
     # corpus top bigrams (k = ngram, v_avg = rank, n = count)
     ("text_top_ngrams",
      ["'ngrams' AS tag", "ngram AS k", "CAST(NULL AS DOUBLE) AS v_min",
       "CAST(NULL AS DOUBLE) AS v_max", "CAST(NULL AS DOUBLE) AS v_sum",
-      "CAST(rank AS DOUBLE) AS v_avg", "CAST(n_occurrences AS DOUBLE) AS n"],
-     "'ngrams' AS tag, ngram AS k, CAST(NULL AS DOUBLE) AS v_min, "
-     "CAST(NULL AS DOUBLE) AS v_max, CAST(NULL AS DOUBLE) AS v_sum, "
-     "CAST(rank AS DOUBLE) AS v_avg, CAST(n_occurrences AS DOUBLE) AS n"),
+      "CAST(rank AS DOUBLE) AS v_avg", "CAST(n_occurrences AS DOUBLE) AS n"]),
     # PMI collocations: k = the pair, v_min/v_max = unigram counts,
     # v_sum = exact lift surrogate, v_avg = rank, n = pair count
     ("text_collocations",
-     ["'colloc' AS tag", "concat(w1, ' ', w2) AS k",
+     ["'colloc' AS tag", "w1 || ' ' || w2 AS k",
       "CAST(c_x AS DOUBLE) AS v_min", "CAST(c_y AS DOUBLE) AS v_max",
       "CAST(lift_scaled AS DOUBLE) AS v_sum", "CAST(rank AS DOUBLE) AS v_avg",
-      "CAST(c_xy AS DOUBLE) AS n"],
-     "'colloc' AS tag, w1 || ' ' || w2 AS k, "
-     "CAST(c_x AS DOUBLE) AS v_min, CAST(c_y AS DOUBLE) AS v_max, "
-     "CAST(lift_scaled AS DOUBLE) AS v_sum, CAST(rank AS DOUBLE) AS v_avg, "
-     "CAST(c_xy AS DOUBLE) AS n"),
+      "CAST(c_xy AS DOUBLE) AS n"]),
     # exact-integer Pearson pairs (k = "col_a:col_b", v_avg = corr)
     ("stats_corr",
-     ["'corr' AS tag", "concat(col_a, ':', col_b) AS k",
+     ["'corr' AS tag", "col_a || ':' || col_b AS k",
       "CAST(NULL AS DOUBLE) AS v_min", "CAST(NULL AS DOUBLE) AS v_max",
       "CAST(NULL AS DOUBLE) AS v_sum", "corr AS v_avg",
-      "CAST(NULL AS DOUBLE) AS n"],
-     "'corr' AS tag, col_a || ':' || col_b AS k, "
-     "CAST(NULL AS DOUBLE) AS v_min, CAST(NULL AS DOUBLE) AS v_max, "
-     "CAST(NULL AS DOUBLE) AS v_sum, corr AS v_avg, CAST(NULL AS DOUBLE) AS n"),
+      "CAST(NULL AS DOUBLE) AS n"]),
     # one-pass column profile (k = column name; v_sum/v_avg carry
     # n_distinct / n_nonnull)
     ("profile_orders",
-     ["'profile' AS tag", "column AS k", "min_value AS v_min",
+     ["'profile' AS tag", "_part.column AS k", "min_value AS v_min",
       "max_value AS v_max", "CAST(n_distinct AS DOUBLE) AS v_sum",
-      "CAST(n_nonnull AS DOUBLE) AS v_avg", "CAST(n_rows AS DOUBLE) AS n"],
-     "'profile' AS tag, \"column\" AS k, min_value AS v_min, "
-     "max_value AS v_max, CAST(n_distinct AS DOUBLE) AS v_sum, "
-     "CAST(n_nonnull AS DOUBLE) AS v_avg, CAST(n_rows AS DOUBLE) AS n"),
+      "CAST(n_nonnull AS DOUBLE) AS v_avg", "CAST(n_rows AS DOUBLE) AS n"]),
 ])
 
 # the partsupp-derived TPC-H tail + skew-join toolkit (wave 8): six raw
@@ -10720,9 +10292,7 @@ _compose("a1_agg_counts", [
 _compose("q_partsupp_suite", [
     ("q2_min_cost_supplier",
      ["'q2' AS tag", "s_name AS c1", "n_name AS c2",
-      "CAST(p_partkey AS DOUBLE) AS d1", "ps_supplycost AS d2", "s_acctbal AS d3"],
-     "'q2' AS tag, s_name AS c1, n_name AS c2, CAST(p_partkey AS DOUBLE) AS d1, "
-     "ps_supplycost AS d2, s_acctbal AS d3"),
+      "CAST(p_partkey AS DOUBLE) AS d1", "ps_supplycost AS d2", "s_acctbal AS d3"]),
     # association rules: c1 packs the item pair, c2 the three exact counts
     # (injective '|' packing over integers), d1/d2 the rounded ratios
     ("q_basket_rules",
@@ -10730,64 +10300,40 @@ _compose("q_partsupp_suite", [
       "CAST(item_a AS STRING) || '|' || CAST(item_b AS STRING) AS c1",
       "CAST(n_a AS STRING) || '|' || CAST(n_b AS STRING) || '|' || "
       "CAST(n_ab AS STRING) AS c2",
-      "confidence AS d1", "lift AS d2", "CAST(NULL AS DOUBLE) AS d3"],
-     "'basket' AS tag, "
-     "CAST(item_a AS VARCHAR) || '|' || CAST(item_b AS VARCHAR) AS c1, "
-     "CAST(n_a AS VARCHAR) || '|' || CAST(n_b AS VARCHAR) || '|' || "
-     "CAST(n_ab AS VARCHAR) AS c2, "
-     "confidence AS d1, lift AS d2, CAST(NULL AS DOUBLE) AS d3"),
+      "confidence AS d1", "lift AS d2", "CAST(NULL AS DOUBLE) AS d3"]),
     ("q9_product_profit",
      ["'q9' AS tag", "nation AS c1", "CAST(NULL AS STRING) AS c2",
-      "CAST(o_year AS DOUBLE) AS d1", "profit AS d2", "CAST(NULL AS DOUBLE) AS d3"],
-     "'q9' AS tag, nation AS c1, CAST(NULL AS VARCHAR) AS c2, "
-     "CAST(o_year AS DOUBLE) AS d1, profit AS d2, CAST(NULL AS DOUBLE) AS d3"),
+      "CAST(o_year AS DOUBLE) AS d1", "profit AS d2", "CAST(NULL AS DOUBLE) AS d3"]),
     # interval overlap join: per-supplier overlapping transit windows;
     # c1 carries the overlap length, d1-d3 the key and the pair ids
     ("j_interval_overlap",
      ["'overlap' AS tag", "CAST(overlap_days AS STRING) AS c1",
       "CAST(NULL AS STRING) AS c2", "CAST(k AS DOUBLE) AS d1",
-      "CAST(lid AS DOUBLE) AS d2", "CAST(rid AS DOUBLE) AS d3"],
-     "'overlap' AS tag, CAST(overlap_days AS VARCHAR) AS c1, "
-     "CAST(NULL AS VARCHAR) AS c2, CAST(k AS DOUBLE) AS d1, "
-     "CAST(lid AS DOUBLE) AS d2, CAST(rid AS DOUBLE) AS d3"),
+      "CAST(lid AS DOUBLE) AS d2", "CAST(rid AS DOUBLE) AS d3"]),
     ("q11_important_stock",
      ["'q11' AS tag", "CAST(NULL AS STRING) AS c1", "CAST(NULL AS STRING) AS c2",
-      "CAST(ps_partkey AS DOUBLE) AS d1", "value AS d2", "CAST(NULL AS DOUBLE) AS d3"],
-     "'q11' AS tag, CAST(NULL AS VARCHAR) AS c1, CAST(NULL AS VARCHAR) AS c2, "
-     "CAST(ps_partkey AS DOUBLE) AS d1, value AS d2, CAST(NULL AS DOUBLE) AS d3"),
+      "CAST(ps_partkey AS DOUBLE) AS d1", "value AS d2", "CAST(NULL AS DOUBLE) AS d3"]),
     ("q20_potential_promotion",
      ["'q20' AS tag", "s_name AS c1", "CAST(NULL AS STRING) AS c2",
       "CAST(s_suppkey AS DOUBLE) AS d1", "CAST(NULL AS DOUBLE) AS d2",
-      "CAST(NULL AS DOUBLE) AS d3"],
-     "'q20' AS tag, s_name AS c1, CAST(NULL AS VARCHAR) AS c2, "
-     "CAST(s_suppkey AS DOUBLE) AS d1, CAST(NULL AS DOUBLE) AS d2, "
-     "CAST(NULL AS DOUBLE) AS d3"),
+      "CAST(NULL AS DOUBLE) AS d3"]),
     ("j_salted_hub_revenue",
      ["'jsalt' AS tag", "priority AS c1", "CAST(NULL AS STRING) AS c2",
-      "CAST(NULL AS DOUBLE) AS d1", "revenue AS d2", "CAST(NULL AS DOUBLE) AS d3"],
-     "'jsalt' AS tag, priority AS c1, CAST(NULL AS VARCHAR) AS c2, "
-     "CAST(NULL AS DOUBLE) AS d1, revenue AS d2, CAST(NULL AS DOUBLE) AS d3"),
+      "CAST(NULL AS DOUBLE) AS d1", "revenue AS d2", "CAST(NULL AS DOUBLE) AS d3"]),
     ("j_range_bucket_counts",
      ["'jrange' AS tag", "CAST(NULL AS STRING) AS c1", "CAST(NULL AS STRING) AS c2",
       "CAST(bucket AS DOUBLE) AS d1", "CAST(n AS DOUBLE) AS d2",
-      "CAST(NULL AS DOUBLE) AS d3"],
-     "'jrange' AS tag, CAST(NULL AS VARCHAR) AS c1, CAST(NULL AS VARCHAR) AS c2, "
-     "CAST(bucket AS DOUBLE) AS d1, CAST(n AS DOUBLE) AS d2, "
-     "CAST(NULL AS DOUBLE) AS d3"),
+      "CAST(NULL AS DOUBLE) AS d3"]),
 ])
 _publish("schema_by_name")
 
 _compose("idx_equality", [
     ("idx_secondary",
      ["'secondary' AS tag", "CAST(c_custkey AS DOUBLE) AS id", "c_name AS s1",
-      "c_mktsegment AS s2", "CAST(NULL AS DOUBLE) AS n"],
-     "'secondary' AS tag, CAST(c_custkey AS DOUBLE) AS id, c_name AS s1, "
-     "c_mktsegment AS s2, CAST(NULL AS DOUBLE) AS n"),
+      "c_mktsegment AS s2", "CAST(NULL AS DOUBLE) AS n"]),
     ("idx_label",
      ["'label' AS tag", "CAST(NULL AS DOUBLE) AS id", "label AS s1",
-      "CAST(NULL AS STRING) AS s2", "CAST(n_elements AS DOUBLE) AS n"],
-     "'label' AS tag, CAST(NULL AS DOUBLE) AS id, label AS s1, "
-     "CAST(NULL AS VARCHAR) AS s2, CAST(n_elements AS DOUBLE) AS n"),
+      "CAST(NULL AS STRING) AS s2", "CAST(n_elements AS DOUBLE) AS n"]),
 ])
 
 # text-retrieval family: token search index + scored retrieval (BM25 and
@@ -10796,41 +10342,28 @@ _compose("idx_search", [
     ("idx_search",
      ["'tok' AS tag", "CAST(element_id AS DOUBLE) AS id",
       "CAST(matched_tokens AS DOUBLE) AS v1", "CAST(NULL AS DOUBLE) AS v2",
-      "CAST(NULL AS DOUBLE) AS v3", "CAST(NULL AS DOUBLE) AS v4"],
-     "'tok' AS tag, CAST(element_id AS DOUBLE) AS id, "
-     "CAST(matched_tokens AS DOUBLE) AS v1, CAST(NULL AS DOUBLE) AS v2, "
-     "CAST(NULL AS DOUBLE) AS v3, CAST(NULL AS DOUBLE) AS v4"),
+      "CAST(NULL AS DOUBLE) AS v3", "CAST(NULL AS DOUBLE) AS v4"]),
     ("bm25_ranked",
      ["'bm25' AS tag", "CAST(doc_id AS DOUBLE) AS id", "score AS v1",
       "CAST(rank AS DOUBLE) AS v2", "CAST(dl AS DOUBLE) AS v3",
-      "CAST(NULL AS DOUBLE) AS v4"],
-     "'bm25' AS tag, CAST(doc_id AS DOUBLE) AS id, score AS v1, "
-     "CAST(rank AS DOUBLE) AS v2, CAST(dl AS DOUBLE) AS v3, "
-     "CAST(NULL AS DOUBLE) AS v4"),
+      "CAST(NULL AS DOUBLE) AS v4"]),
     ("sim_hybrid_rrf",
      ["'rrf' AS tag", "CAST(doc_id AS DOUBLE) AS id", "rrf_score AS v1",
-      "CAST(rank AS DOUBLE) AS v2", "rank_kw AS v3", "rank_vec AS v4"],
-     "'rrf' AS tag, CAST(doc_id AS DOUBLE) AS id, rrf_score AS v1, "
-     "CAST(rank AS DOUBLE) AS v2, rank_kw AS v3, rank_vec AS v4"),
+      "CAST(rank AS DOUBLE) AS v2", "rank_kw AS v3", "rank_vec AS v4"]),
     # MMR diversified retrieval: v3 carries the query id so every
     # (query, step) selection is value-checked
     ("sim_mmr_topk",
      ["'mmr' AS tag", "CAST(neighbor_id AS DOUBLE) AS id", "cos_sim AS v1",
       "CAST(mmr_rank AS DOUBLE) AS v2", "CAST(query_id AS DOUBLE) AS v3",
-      "CAST(NULL AS DOUBLE) AS v4"],
-     "'mmr' AS tag, CAST(neighbor_id AS DOUBLE) AS id, cos_sim AS v1, "
-     "CAST(mmr_rank AS DOUBLE) AS v2, CAST(query_id AS DOUBLE) AS v3, "
-     "CAST(NULL AS DOUBLE) AS v4"),
+      "CAST(NULL AS DOUBLE) AS v4"]),
 ])
 
 _compose("idx_unique_shard", [
     ("idx_unique",
      ["'unique' AS tag", "c_custkey AS k", "CAST(NULL AS STRING) AS s",
-      "CAST(n AS BIGINT) AS v"],
-     "'unique' AS tag, c_custkey AS k, CAST(NULL AS VARCHAR) AS s, CAST(n AS BIGINT) AS v"),
+      "CAST(n AS BIGINT) AS v"]),
     ("idx_shard",
-     ["'shard' AS tag", "element_id AS k", "p_brand AS s", "CAST(range_value AS BIGINT) AS v"],
-     "'shard' AS tag, element_id AS k, p_brand AS s, CAST(range_value AS BIGINT) AS v"),
+     ["'shard' AS tag", "element_id AS k", "p_brand AS s", "CAST(range_value AS BIGINT) AS v"]),
 ])
 
 _publish("q1_pricing_summary")
@@ -10840,40 +10373,30 @@ _publish("m1_insert_upsert")
 _compose("m2_m7_delete_truncate", [
     ("m2_delete",
      ["'delete' AS tag", "CAST(n_nationkey AS INT) AS k", "n_name AS name",
-      "CAST(n_regionkey AS INT) AS extra"],
-     "'delete' AS tag, CAST(n_nationkey AS INTEGER) AS k, n_name AS name, "
-     "CAST(n_regionkey AS INTEGER) AS extra"),
+      "CAST(n_regionkey AS INT) AS extra"]),
     ("m7_truncate",
      ["'truncate' AS tag", "CAST(r_regionkey AS INT) AS k", "r_name AS name",
-      "CAST(NULL AS INT) AS extra"],
-     "'truncate' AS tag, CAST(r_regionkey AS INTEGER) AS k, r_name AS name, "
-     "CAST(NULL AS INTEGER) AS extra"),
+      "CAST(NULL AS INT) AS extra"]),
 ])
 
 _publish("m3_append_eliminate")
 _publish("m4_ttl_expiry")
 _compose("g_pagerank", [
     ("g_pagerank",
-     ["'global' AS tag", "id", "rank", "CAST(NULL AS DOUBLE) AS rank2"],
-     "'global' AS tag, id, rank, CAST(NULL AS DOUBLE) AS rank2"),
+     ["'global' AS tag", "id", "rank", "CAST(NULL AS DOUBLE) AS rank2"]),
     ("g_ppr",
-     ["'personalized' AS tag", "id", "rank", "CAST(NULL AS DOUBLE) AS rank2"],
-     "'personalized' AS tag, id, rank, CAST(NULL AS DOUBLE) AS rank2"),
+     ["'personalized' AS tag", "id", "rank", "CAST(NULL AS DOUBLE) AS rank2"]),
     ("g_pagerank_weighted",
-     ["'weighted' AS tag", "id", "rank", "CAST(NULL AS DOUBLE) AS rank2"],
-     "'weighted' AS tag, id, rank, CAST(NULL AS DOUBLE) AS rank2"),
+     ["'weighted' AS tag", "id", "rank", "CAST(NULL AS DOUBLE) AS rank2"]),
     # HITS: one raw run carries both vectors (rank = authority, rank2 = hub)
     ("g_hits",
-     ["'hits' AS tag", "id", "auth AS rank", "hub AS rank2"],
-     "'hits' AS tag, id, auth AS rank, hub AS rank2"),
+     ["'hits' AS tag", "id", "auth AS rank", "hub AS rank2"]),
     # Katz: walk-counting centrality, no degree normalization (r9)
     ("g_katz",
-     ["'katz' AS tag", "id", "katz AS rank", "CAST(NULL AS DOUBLE) AS rank2"],
-     "'katz' AS tag, id, katz AS rank, CAST(NULL AS DOUBLE) AS rank2"),
+     ["'katz' AS tag", "id", "katz AS rank", "CAST(NULL AS DOUBLE) AS rank2"]),
     # warm-start == cold fixpoint: the oracle is the cold 10-iter unroll
     ("g_pagerank_warm",
-     ["'warm' AS tag", "id", "rank", "CAST(NULL AS DOUBLE) AS rank2"],
-     "'warm' AS tag, id, rank, CAST(NULL AS DOUBLE) AS rank2"),
+     ["'warm' AS tag", "id", "rank", "CAST(NULL AS DOUBLE) AS rank2"]),
 ])
 _publish("sim_cosine_topk")
 

@@ -27,20 +27,24 @@ import __spark_entry__ as E  # noqa: E402
 sys.path.insert(0, "/root/repo/tests")
 from oracle_diff import compare, duck_connection  # noqa: E402
 
-rows = E.entry(spark).collect()
-print(f"entry(): {len(rows)} rows", flush=True)
-
 qs = E.queries()
 oracles = E.oracle_sql()
 only = set(sys.argv[1:])
 if only:  # named rows may also be raw registrations fused into the roster
     qs = {**E._RAW_QUERIES, **qs}
     oracles = {**E._RAW_ORACLES, **oracles}
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown query names: {', '.join(unknown)}", flush=True)
+        sys.exit(2)
+    qs = {name: fn for name, fn in qs.items() if name in only}
+
+rows = E.entry(spark).collect()
+print(f"entry(): {len(rows)} rows", flush=True)
+
 con = duck_connection(SF)
 failed = []
 for name, fn in qs.items():
-    if only and name not in only:
-        continue
     t0 = time.time()
     try:
         df = fn(spark, SF)
@@ -58,5 +62,5 @@ for name, fn in qs.items():
           flush=True)
     failed.extend(problems)
 
-print(f"\n{len(qs) if not only else len(only)} queries, {len(failed)} problems")
+print(f"\n{len(qs)} queries, {len(failed)} problems")
 sys.exit(1 if failed else 0)
