@@ -525,9 +525,16 @@ def lsh_probe_index(spark, path: str, new_docs: DataFrame,
     deterministic integer comparisons, so the estimate itself is
     oracle-checkable.  Pure read: nothing is appended."""
     meta = _read_index_meta(path)
+    new_sigs = minhash_signatures(new_docs, meta["num_hashes"], meta["k"],
+                                  text_col, id_col).localCheckpoint(eager=True)
+    return _probe_sigs(spark, path, meta, new_sigs, threshold, max_bucket_size)
+
+
+def _probe_sigs(spark, path: str, meta: dict, new_sigs: DataFrame,
+                threshold: float, max_bucket_size: int | None) -> DataFrame:
+    """lsh_probe_index's body over the batch's already-cut signatures, so
+    lsh_append_index computes them once for the probe and the append."""
     n, r = meta["num_hashes"], meta["rows_per_band"]
-    new_sigs = minhash_signatures(new_docs, n, meta["k"], text_col, id_col) \
-        .localCheckpoint(eager=True)
     new_bands = lsh_bands(new_sigs, r)
     res_bands = spark.read.parquet(f"{path}/bands")
     if max_bucket_size is not None:
@@ -574,10 +581,10 @@ def lsh_append_index(spark, path: str, new_docs: DataFrame,
             and batch_id <= meta["last_batch_id"]:
         return spark.createDataFrame(
             [], "doc_a long, doc_b long, scope string, est_jaccard double")
-    pairs = lsh_probe_index(spark, path, new_docs, threshold, max_bucket_size,
-                            text_col, id_col).localCheckpoint(eager=True)
     new_sigs = minhash_signatures(new_docs, meta["num_hashes"], meta["k"],
                                   text_col, id_col).localCheckpoint(eager=True)
+    pairs = _probe_sigs(spark, path, meta, new_sigs, threshold,
+                        max_bucket_size).localCheckpoint(eager=True)
     new_sigs.write.mode("append").parquet(f"{path}/signatures")
     (lsh_bands(new_sigs, meta["rows_per_band"]).repartition("band")
      .write.mode("append").partitionBy("band").parquet(f"{path}/bands"))

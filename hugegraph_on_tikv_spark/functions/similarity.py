@@ -12,6 +12,19 @@ Two paths, as a real 100 TB pipeline would ship them:
   state, oracle-expressible), equi-join buckets, exact rerank inside the
   bucket.  The candidate join touches only same-bucket pairs; recall is
   tunable via n_bits / multi-probe.
+
+Every top-k operator is one search core fed by a different candidate
+generator (exact, LSH, IVF, SQ8, PQ, IVF-PQ), and its parts are written
+once: `_topk` (the per-query rank cut), `_probe_cells` (a query's n_probe
+nearest IVF cells), `_adc_topk` (the PQ lookup-table scan and its
+shortlist), `_rerank` (the exact float-cosine second stage),
+`_exact_mean` (the Lloyd mean), `_wide_codes` (the pq_codes column),
+`_query_block` (the vectorized kernels' driver-collect guard) and
+`_index_meta` / `_merge_index_meta` (the one reader and the one writer
+of index_meta.json).  The vectorized kernels' per-batch numpy loops stay
+inside their mapInPandas closures: cloudpickle ships a module-level
+helper by reference, so a worker that cannot import this package would
+fail with ModuleNotFoundError.
 """
 
 from __future__ import annotations
@@ -38,6 +51,29 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _topk(scored: DataFrame, k: int, score: str = "cos_sim") -> DataFrame:
+    """Keep each query's k best rows of (query_id, neighbor_id, score),
+    ranked by (score desc, neighbor_id asc) — deterministic under ties.
+    Appends `rank`."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("query_id").orderBy(F.col(score).desc(), F.col("neighbor_id").asc())
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k))
+
+
+def _rerank(cand: DataFrame, qv: DataFrame, cv: DataFrame, k: int) -> DataFrame:
+    """Exact second stage: re-score the (query_id, neighbor_id) candidates
+    by float cosine between qv (query_id, q_vec) and cv (neighbor_id,
+    c_vec) — float I/O only for the candidate rows — and cut the top k.
+    Returns (query_id, neighbor_id, cos_sim, rank)."""
+    exact = (cand.join(cv, "neighbor_id").join(F.broadcast(qv), "query_id")
+             .select("query_id", "neighbor_id",
+                     F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6)
+                     .alias("cos_sim")))
+    return _topk(exact, k)
+
+
 def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Exact top-k neighbors per query (excluding self): broadcast the query
@@ -60,13 +96,7 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
                 F.round(dot(F.col("q_vec"), F.col("c_vec"))
                         / (F.col("_qn") * F.col("_cn")), 6).alias("cos_sim"))
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk(scored, k)
 
 
 def mmr_topk(queries: DataFrame, corpus: DataFrame, k: int = 3,
@@ -181,10 +211,7 @@ def ann_lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 5, n_bits: int 
         .select("query_id", "neighbor_id",
                 F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cos_sim"))
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topk(scored, k)
 
 
 def embedding_near_duplicates(vectors: DataFrame, threshold: float = 0.95, n_bits: int = 6,
@@ -233,18 +260,9 @@ def cosine_topk_vectorized(queries: DataFrame, corpus: DataFrame, k: int = 5,
     import numpy as np
     import pandas as pd
 
-    first = queries.select(vec_col).first()
-    if first is None or first[0] is None:
-        # empty query set OR a NULL vector in the probe row: both mean the
-        # dense-matrix contract can't be established — fall back to the
-        # joins-only exact plan like every other guard branch (ADVICE r10)
-        return cosine_topk(queries, corpus, k, id_col, vec_col)
-    dim = max(1, len(first[0]))
-    row_cap = min(max_query_rows, max_query_floats // dim)
-    if row_cap < 1:
-        return cosine_topk(queries, corpus, k, id_col, vec_col)
-    qp = queries.select(id_col, vec_col).limit(row_cap + 1).toPandas()
-    if len(qp) > row_cap:
+    qp = _query_block(queries, id_col, vec_col, max_query_rows,
+                      max_query_floats)
+    if qp is None:
         return cosine_topk(queries, corpus, k, id_col, vec_col)
     q_ids = qp[id_col].to_numpy()
     q_mat = np.stack(qp[vec_col].to_numpy()).astype(np.float64)
@@ -282,11 +300,30 @@ def cosine_topk_vectorized(queries: DataFrame, corpus: DataFrame, k: int = 5,
                     rows["cos_sim"].append(float(col[i]))
             yield pd.DataFrame(rows)
 
-    from pyspark.sql.window import Window
+    return _topk(corpus.select(id_col, vec_col).mapInPandas(run, out_schema), k)
 
-    partial = corpus.select(id_col, vec_col).mapInPandas(run, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return partial.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+def _query_block(queries: DataFrame, id_col: str, vec_col: str,
+                 max_rows: int, max_floats: int = 50_000_000,
+                 dim: int | None = None):
+    """The driver-collected query block of a vectorized kernel, as pandas
+    (id_col, vec_col) — or None when the dense-matrix contract cannot
+    hold, and the caller takes its joins-only plan: no rows, a NULL
+    vector, or more than min(max_rows, max_floats // dim) rows (the
+    collect is bounded in floats, not rows).  `dim` defaults to a one-row
+    probe of `queries`."""
+    if dim is None:
+        first = queries.select(vec_col).first()
+        if first is None or first[0] is None:
+            return None
+        dim = len(first[0])
+    row_cap = min(max_rows, max_floats // max(1, dim))
+    if row_cap < 1:
+        return None
+    qp = queries.select(id_col, vec_col).limit(row_cap + 1).toPandas()
+    if qp.empty or len(qp) > row_cap or qp[vec_col].isna().any():
+        return None
+    return qp
 
 
 def assign_best_cell(df: DataFrame, cents: DataFrame, ident: str, vec: str) -> DataFrame:
@@ -308,6 +345,23 @@ def assign_best_cell(df: DataFrame, cents: DataFrame, ident: str, vec: str) -> D
                                (-F.col("cell")).alias("neg_cell"))).alias("best"))
         .select(ident, F.col("best.cell").alias("cell"), F.col("best.v").alias(vec))
     )
+
+
+def _probe_cells(queries: DataFrame, cents: DataFrame, n_probe: int,
+                 id_col: str, vec_col: str) -> DataFrame:
+    """Each query's n_probe nearest cells by centroid cosine, ties to the
+    lower cell id: (query_id, q_vec, cell).  The query side needs the
+    top-n_probe cells, not just assign_best_cell's argmax — a window
+    top-n over the (small) query batch is fine there."""
+    from pyspark.sql.window import Window
+
+    scored = queries.select(id_col, vec_col).crossJoin(F.broadcast(cents)).select(
+        id_col, vec_col, "cell", cosine(F.col(vec_col), F.col("c_vec")).alias("cell_sim"))
+    w = Window.partitionBy(id_col).orderBy(F.col("cell_sim").desc(), F.col("cell").asc())
+    return (scored.withColumn("crank", F.row_number().over(w))
+            .filter(F.col("crank") <= n_probe)
+            .select(F.col(id_col).alias("query_id"),
+                    F.col(vec_col).alias("q_vec"), "cell"))
 
 
 def ivf_centroids(corpus: DataFrame, n_cells: int = 16, refine_iters: int = 1,
@@ -335,19 +389,23 @@ def ivf_centroids(corpus: DataFrame, n_cells: int = 16, refine_iters: int = 1,
     )
     for _ in range(refine_iters):
         best = assign_best_cell(corpus.select(id_col, vec_col), cents, id_col, vec_col)
-        # per-cell mean, dimension-wise: posexplode → quantized exact mean →
-        # re-assemble in dimension order
-        cents = (
-            best.select("cell", F.posexplode(F.transform(F.col(vec_col),
-                                                         lambda x: x.cast("double"))))
-            .groupBy("cell", "pos")
-            .agg((F.sum(F.round(F.col("col") * 1000000).cast("long")).cast("double")
-                  / (F.lit(1000000.0) * F.count(F.lit(1)))).alias("m"))
-            .groupBy("cell")
-            .agg(F.transform(F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                             lambda s: s["m"]).alias("c_vec"))
-        )
+        cents = _exact_mean(best, ["cell"], _as_double(F.col(vec_col)))
     return cents
+
+
+def _exact_mean(rows: DataFrame, keys: list, vec: Column) -> DataFrame:
+    """Lloyd update: (*keys, c_vec) with c_vec the dimension-wise mean of
+    each key group's `vec` arrays — posexplode, exact integer sum of the
+    1e-6-quantized values divided back out, re-assembled in dimension
+    order (see ivf_centroids for why the sum is integer)."""
+    return (rows.select(*keys, F.posexplode(vec).alias("pos", "x"))
+            .groupBy(*keys, "pos")
+            .agg((F.sum(F.round(F.col("x") * 1000000).cast("long"))
+                  .cast("double")
+                  / (F.lit(1000000.0) * F.count(F.lit(1)))).alias("x"))
+            .groupBy(*keys)
+            .agg(F.transform(F.array_sort(F.collect_list(F.struct("pos", "x"))),
+                             lambda s: s["x"]).alias("c_vec")))
 
 
 def ivf_write_index(corpus: DataFrame, path: str, n_cells: int = 16,
@@ -381,20 +439,27 @@ def ivf_write_index(corpus: DataFrame, path: str, n_cells: int = 16,
     _merge_index_meta(path, {"quantize_bits": quantize_bits})
 
 
+def _index_meta(path: str) -> dict:
+    """{path}/index_meta.json as a dict; {} when the index has none."""
+    import json as _json
+    import os as _os
+
+    meta_path = f"{path}/index_meta.json"
+    if not _os.path.exists(meta_path):
+        return {}
+    with open(meta_path) as f:
+        return _json.load(f)
+
+
 def _merge_index_meta(path: str, updates: dict) -> None:
     """Atomically merge keys into {path}/index_meta.json."""
     import json as _json
     import os as _os
 
     meta_path = f"{path}/index_meta.json"
-    meta = {}
-    if _os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = _json.load(f)
-    meta.update(updates)
     tmp = meta_path + ".tmp"
     with open(tmp, "w") as f:
-        _json.dump(meta, f)
+        _json.dump({**_index_meta(path), **updates}, f)
     _os.replace(tmp, meta_path)
 
 
@@ -419,14 +484,7 @@ def ivf_append_index(spark, path: str, new_vectors: DataFrame,
     parquet append and the meta write re-appends on replay — the same
     at-least-once seam every file-append sink has; route exact pipelines
     through a staging dir if that matters.)  Returns rows appended."""
-    import json as _json
-    import os as _os
-
-    meta_path = f"{path}/index_meta.json"
-    meta = {}
-    if _os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = _json.load(f)
+    meta = _index_meta(path)
     if batch_id is not None and meta.get("last_batch_id") is not None \
             and batch_id <= meta["last_batch_id"]:
         return 0
@@ -448,11 +506,7 @@ def ivf_append_index(spark, path: str, new_vectors: DataFrame,
     (assigned.repartition("cell").write.mode("append")
      .partitionBy("cell").parquet(f"{path}/corpus"))
     if batch_id is not None:
-        meta["last_batch_id"] = batch_id
-        tmp = meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(meta, f)
-        _os.replace(tmp, meta_path)
+        _merge_index_meta(path, {"last_batch_id": batch_id})
     return n
 
 
@@ -487,29 +541,17 @@ def ivf_compact(spark, path: str, n_cells: int | None = None,
     rewrite the cell-partitioned layout — `ivf_write_index` fed by the
     index's own corpus.  `n_cells` defaults to the existing cell count.
     The batch-id watermark survives (appends after a compact keep their
-    exactly-once contract)."""
-    import json as _json
-    import os as _os
-
+    exactly-once contract): ivf_write_index merges its keys into
+    index_meta.json, so last_batch_id rides through."""
     corpus = spark.read.parquet(f"{path}/corpus").select(id_col, vec_col) \
         .localCheckpoint(eager=True)  # cut lineage before overwriting source
     if n_cells is None:
         n_cells = spark.read.parquet(f"{path}/centroids").count()
     # preserve the index's recorded quantization precision across the
     # recluster (a 4-bit or flat index must not come back 8-bit)
-    bits = 8
-    meta_path = f"{path}/index_meta.json"
-    if _os.path.exists(meta_path):
-        with open(meta_path) as f:
-            bits = _json.load(f).get("quantize_bits", 8)
+    bits = _index_meta(path).get("quantize_bits", 8)
     ivf_write_index(corpus, path, n_cells=n_cells, refine_iters=refine_iters,
                     id_col=id_col, vec_col=vec_col, quantize_bits=bits)
-    # ivf_write_index does not touch index_meta.json, so last_batch_id
-    # rides through; assert the invariant stays visible to readers
-    meta_path = f"{path}/index_meta.json"
-    if _os.path.exists(meta_path):
-        with open(meta_path) as f:
-            _json.load(f)
 
 
 def ivf_maybe_compact(spark, path: str, skew_ratio: float = 4.0,
@@ -571,44 +613,31 @@ def ivf_search_index(spark, path: str, queries: DataFrame, k: int = 5,
     top-k comes from exact scores — r ≈ 3 recovers exact-search results
     in practice; candidates ⊇ cell membership makes it exactly the flat
     search."""
-    from pyspark.sql.window import Window
-
     cents = spark.read.parquet(f"{path}/centroids")
-    q = queries.select(id_col, vec_col).crossJoin(F.broadcast(cents)).select(
-        id_col, vec_col, "cell", cosine(F.col(vec_col), F.col("c_vec")).alias("cell_sim"))
-    w = Window.partitionBy(id_col).orderBy(F.col("cell_sim").desc(), F.col("cell").asc())
-    q_assigned = (q.withColumn("crank", F.row_number().over(w))
-                  .filter(F.col("crank") <= n_probe)
-                  .select(F.col(id_col).alias("query_id"),
-                          F.col(vec_col).alias("q_vec2"), "cell"))
+    q_assigned = _probe_cells(queries, cents, n_probe, id_col, vec_col)
     probe_cells = [r["cell"] for r in q_assigned.select("cell").distinct().collect()]
     raw = spark.read.parquet(f"{path}/corpus").filter(
         F.col("cell").isin(probe_cells))
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc())
     if not quantized:
         corpus = raw.select(F.col(id_col).alias("neighbor_id"),
-                            F.col(vec_col).alias("c_vec2"), "cell")
+                            F.col(vec_col).alias("c_vec"), "cell")
         scored = (
             corpus.join(F.broadcast(q_assigned), "cell")
             .filter(F.col("query_id") != F.col("neighbor_id"))
             .select("query_id", "neighbor_id",
-                    F.round(cosine(F.col("q_vec2"), F.col("c_vec2")), 6).alias("cos_sim"))
+                    F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cos_sim"))
             .distinct()
         )
-        return scored.withColumn("rank", F.row_number().over(w2)) \
-            .filter(F.col("rank") <= k)
+        return _topk(scored, k)
     if "codes" not in raw.columns:
         raise ValueError("index was not written with quantize_bits — "
                          "rebuild via ivf_write_index(quantize_bits=8)")
     # codes-only scan: the float vec_col never leaves disk here
     corpus_q = raw.select(F.col(id_col).alias("neighbor_id"),
                           F.col("codes").alias("c_codes"), "cell")
-    q_distinct = (q_assigned.select("query_id", "q_vec2").distinct()
-                  .select(F.col("query_id").alias(id_col),
-                          F.col("q_vec2").alias(vec_col)))
-    qq = quantize_embeddings(q_distinct, vec_col, id_col).select(
-        F.col(id_col).alias("query_id"), F.col("codes").alias("q_codes"))
+    qv = q_assigned.select("query_id", "q_vec").distinct()
+    qq = quantize_embeddings(qv, "q_vec", "query_id").select(
+        "query_id", F.col("codes").alias("q_codes"))
     q_cells = q_assigned.select("query_id", "cell") \
         .join(F.broadcast(qq), "query_id")
     n_q = _int_dot(F.col("q_codes"), F.col("q_codes"))
@@ -623,21 +652,12 @@ def ivf_search_index(spark, path: str, queries: DataFrame, k: int = 5,
                 F.round(qscore, 6).alias("cos_sim"))
         .distinct()
     )
-    ranked = scored.withColumn("rank", F.row_number().over(w2))
     if refine is None:
-        return ranked.filter(F.col("rank") <= k)
-    cands = ranked.filter(F.col("rank") <= refine * k) \
-        .select("query_id", "neighbor_id")
+        return _topk(scored, k)
+    cands = _topk(scored, refine * k).select("query_id", "neighbor_id")
     floats = raw.select(F.col(id_col).alias("neighbor_id"),
-                        F.col(vec_col).alias("c_vec2")).distinct()
-    qv = q_assigned.select("query_id", "q_vec2").distinct()
-    exact = (cands.join(floats, "neighbor_id")
-             .join(F.broadcast(qv), "query_id")
-             .select("query_id", "neighbor_id",
-                     F.round(cosine(F.col("q_vec2"), F.col("c_vec2")), 6)
-                     .alias("cos_sim")))
-    return exact.withColumn("rank", F.row_number().over(w2)) \
-        .filter(F.col("rank") <= k)
+                        F.col(vec_col).alias("c_vec")).distinct()
+    return _rerank(cands, qv, floats, k)
 
 
 def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 5, n_cells: int = 16,
@@ -667,8 +687,6 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 5, n_cells: int = 1
     cents = ivf_centroids(corpus, n_cells, refine_iters, id_col, vec_col) \
         .select("cell", "c_vec")
     cents = cents.persist()
-    from pyspark.sql.window import Window
-
     try:
         # corpus side (the big one): argmax as a max_by AGGREGATE — map-side
         # partial agg, no sort shuffle of corpus×n_cells rows
@@ -676,15 +694,8 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 5, n_cells: int = 1
             else corpus
         c_assigned = assign_best_cell(cand.select(id_col, vec_col), cents,
                                       id_col, vec_col) \
-            .select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec2"), "cell")
-        # query side needs the TOP-n_probe cells, not just the argmax — a
-        # window top-n over the (small) query batch is fine there
-        q_scored = queries.select(id_col, vec_col).crossJoin(F.broadcast(cents)).select(
-            id_col, vec_col, "cell", cosine(F.col(vec_col), F.col("c_vec")).alias("cell_sim"))
-        wq = Window.partitionBy(id_col).orderBy(F.col("cell_sim").desc(), F.col("cell").asc())
-        q_assigned = (q_scored.withColumn("crank", F.row_number().over(wq))
-                      .filter(F.col("crank") <= n_probe)) \
-            .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec2"), "cell")
+            .select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"), "cell")
+        q_assigned = _probe_cells(queries, cents, n_probe, id_col, vec_col)
         if queries.select(id_col).limit(broadcast_max_queries // max(n_probe, 1) + 1) \
                 .count() * n_probe <= broadcast_max_queries:
             q_assigned = F.broadcast(q_assigned)
@@ -693,14 +704,12 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 5, n_cells: int = 1
             c_assigned.join(q_assigned, "cell")
             .filter(F.col("query_id") != F.col("neighbor_id"))
             .select("query_id", "neighbor_id",
-                    F.round(cosine(F.col("q_vec2"), F.col("c_vec2")), 6).alias("cos_sim"))
+                    F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cos_sim"))
             .distinct()
         )
-        w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-        out = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
         # materialize before releasing the cached centroids: the returned
         # DataFrame must not reference the unpersisted blocks
-        return out.localCheckpoint(eager=True)
+        return _topk(scored, k).localCheckpoint(eager=True)
     finally:
         cents.unpersist()
 
@@ -783,13 +792,7 @@ def ann_autotune(spark, path: str, queries: DataFrame,
     sample-sized — that is the report's contract, same as
     ann_recall_report)."""
     if quantized is None:
-        import json as _json
-        meta_path = f"{path}/index_meta.json"
-        try:
-            with open(meta_path) as fh:
-                quantized = bool(_json.load(fh).get("quantize_bits"))
-        except OSError:
-            quantized = False
+        quantized = bool(_index_meta(path).get("quantize_bits"))
     cents_n = spark.read.parquet(f"{path}/centroids").count()
     corpus = (spark.read.parquet(f"{path}/corpus")
               .select(id_col, vec_col).localCheckpoint(eager=True))
@@ -947,12 +950,7 @@ def quantized_cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
         qc.join(F.broadcast(qq), F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", F.round(score, 6).alias("qcos_sim"))
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("qcos_sim").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _topk(scored, k, "qcos_sim")
 
 
 # -- Product Quantization (PQ) ----------------------------------------------
@@ -1038,16 +1036,8 @@ def pq_train(corpus: DataFrame, m: int = 4, n_codes: int = 16,
     books = (slices.join(F.broadcast(seed_ids), "id")
              .select("sub", F.col("id").alias("code"), F.col("v").alias("c_vec")))
     for _ in range(refine_iters):
-        best = _pq_assign(slices, books, "id")
-        books = (best.select("sub", "code", F.posexplode("v").alias("pos", "x"))
-                 .groupBy("sub", "code", "pos")
-                 .agg((F.sum(F.round(F.col("x") * 1000000).cast("long"))
-                       .cast("double")
-                       / (F.lit(1000000.0) * F.count(F.lit(1)))).alias("mx"))
-                 .groupBy("sub", "code")
-                 .agg(F.transform(
-                     F.array_sort(F.collect_list(F.struct("pos", "mx"))),
-                     lambda s: s["mx"]).alias("c_vec")))
+        books = _exact_mean(_pq_assign(slices, books, "id"), ["sub", "code"],
+                            F.col("v"))
     return books
 
 
@@ -1060,6 +1050,60 @@ def pq_encode(corpus: DataFrame, books: DataFrame, m: int = 4,
     slices = _pq_slices(corpus, m, dim, id_col, vec_col, "id")
     return _pq_assign(slices, books, "id", with_vec=False).select(
         F.col("id").alias(id_col), "sub", "code")
+
+
+def _wide_codes(corpus: DataFrame, books: DataFrame, m: int, id_col: str,
+                vec_col: str) -> DataFrame:
+    """(id_col, pq_codes): each vector's pq_encode codes as one
+    array<int> in sub order — the persisted index column."""
+    return (pq_encode(corpus, books, m, id_col, vec_col).groupBy(id_col)
+            .agg(F.transform(
+                F.array_sort(F.collect_list(F.struct("sub", "code"))),
+                lambda s: s["code"]).alias("pq_codes")))
+
+
+def _adc_topk(codes: DataFrame, queries: DataFrame, books: DataFrame,
+              m: int, k: int, shortlist: int | None, floats: DataFrame,
+              id_col: str, vec_col: str) -> DataFrame:
+    """The ADC search shared by the PQ operators (see pq_topk).  `codes`
+    is (neighbor_id, sub, code); IVF-PQ passes codes that already carry
+    the probing query_id from the cell join, and the LUT then joins on
+    (query_id, sub, code).  `floats` is (neighbor_id, c_vec), read only
+    for the shortlist's exact rerank.  Returns (query_id, neighbor_id,
+    adc_score, rank), or cos_sim instead of adc_score with a shortlist."""
+    dim = _vec_dim(queries, vec_col)
+    qslices = _pq_slices(queries, m, dim, id_col, vec_col, "query_id")
+    lut = (qslices.join(F.broadcast(books), "sub")
+           .select("query_id", "sub", "code",
+                   F.round(dot(F.col("v"), F.col("c_vec")) * 1000000)
+                   .cast("long").alias("qdot")))
+    cnorms = books.select(
+        "sub", "code",
+        F.round(dot(F.col("c_vec"), F.col("c_vec")) * 1000000)
+        .cast("long").alias("cn2"))
+    # r12 audit note (guide §1.1 discipline): hoisting Σcn2 to a
+    # per-NEIGHBOR norm table (it is a per-neighbor constant — each
+    # (neighbor, sub) has exactly one code) was built and MEASURED WORSE
+    # (warm 4.0-4.7s → 5.0-5.4s over three alternated pairs): the
+    # replacement broadcast probe lands on every aggregated (query,
+    # neighbor) row and the codes table needs a checkpoint for its
+    # second consumer, costing more than the map-side-combined extra sum
+    # column it removed.  Reverted; the in-aggregation cn2 sum stands.
+    keys = ["query_id", "sub", "code"] if "query_id" in codes.columns \
+        else ["sub", "code"]
+    scored = (codes.join(F.broadcast(lut), keys)
+              .join(F.broadcast(cnorms), ["sub", "code"])
+              .filter(F.col("query_id") != F.col("neighbor_id"))
+              .groupBy("query_id", "neighbor_id")
+              .agg(((F.sum("qdot").cast("double") / F.lit(1000000.0))
+                    / F.sqrt(F.sum("cn2").cast("double") / F.lit(1000000.0)))
+                   .alias("adc_score")))
+    if shortlist is None:
+        return _topk(scored, k, "adc_score")
+    cand = _topk(scored, shortlist, "adc_score").select("query_id", "neighbor_id")
+    qv = queries.select(F.col(id_col).alias("query_id"),
+                        F.col(vec_col).alias("q_vec"))
+    return _rerank(cand, qv, floats, k)
 
 
 def pq_topk(queries: DataFrame, corpus: DataFrame, k: int = 5, m: int = 4,
@@ -1104,52 +1148,10 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, k: int = 5, m: int = 4,
         .localCheckpoint(eager=False)
     codes = pq_encode(corpus, books, m, id_col, vec_col) \
         .withColumnRenamed(id_col, "neighbor_id")
-    dim = _vec_dim(queries, vec_col)
-    qslices = _pq_slices(queries, m, dim, id_col, vec_col, "query_id")
-    lut = (qslices.join(F.broadcast(books), "sub")
-           .select("query_id", "sub", "code",
-                   F.round(dot(F.col("v"), F.col("c_vec")) * 1000000)
-                   .cast("long").alias("qdot")))
-    cnorms = books.select(
-        "sub", "code",
-        F.round(dot(F.col("c_vec"), F.col("c_vec")) * 1000000)
-        .cast("long").alias("cn2"))
-    # r12 audit note (guide §1.1 discipline): hoisting Σcn2 to a
-    # per-NEIGHBOR norm table (it is a per-neighbor constant — each
-    # (neighbor, sub) has exactly one code) was built and MEASURED WORSE
-    # (warm 4.0-4.7s → 5.0-5.4s over three alternated pairs): the
-    # replacement broadcast probe lands on every aggregated (query,
-    # neighbor) row and the codes table needs a checkpoint for its
-    # second consumer, costing more than the map-side-combined extra sum
-    # column it removed.  Reverted; the in-aggregation cn2 sum stands.
-    scored = (codes.join(F.broadcast(lut), ["sub", "code"])
-              .join(F.broadcast(cnorms), ["sub", "code"])
-              .filter(F.col("query_id") != F.col("neighbor_id"))
-              .groupBy("query_id", "neighbor_id")
-              .agg(((F.sum("qdot").cast("double") / F.lit(1000000.0))
-                    / F.sqrt(F.sum("cn2").cast("double") / F.lit(1000000.0)))
-                   .alias("adc_score")))
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("neighbor_id").asc())
-    ranked = scored.withColumn("rank", F.row_number().over(w))
-    if shortlist is None:
-        return ranked.filter(F.col("rank") <= k)
-    cand = ranked.filter(F.col("rank") <= shortlist) \
-        .select("query_id", "neighbor_id")
-    qv = queries.select(F.col(id_col).alias("query_id"),
-                        F.col(vec_col).alias("q_vec"))
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"),
-                       F.col(vec_col).alias("c_vec"))
-    rer = (cand.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id")
-           .select("query_id", "neighbor_id",
-                   F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6)
-                   .alias("cos_sim")))
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return (rer.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k))
+    floats = corpus.select(F.col(id_col).alias("neighbor_id"),
+                           F.col(vec_col).alias("c_vec"))
+    return _adc_topk(codes, queries, books, m, k, shortlist, floats,
+                     id_col, vec_col)
 
 
 # -- SemDeDup (semantic deduplication) --------------------------------------
@@ -1388,11 +1390,7 @@ def pq_write_index(corpus: DataFrame, path: str, m: int = 4,
     books = pq_train(corpus, m, n_codes, refine_iters, id_col, vec_col)
     books.write.mode("overwrite").parquet(f"{path}/books")
     books = corpus.sparkSession.read.parquet(f"{path}/books")
-    codes = pq_encode(corpus, books, m, id_col, vec_col)
-    wide = (codes.groupBy(id_col)
-            .agg(F.transform(
-                F.array_sort(F.collect_list(F.struct("sub", "code"))),
-                lambda s: s["code"]).alias("pq_codes")))
+    wide = _wide_codes(corpus, books, m, id_col, vec_col)
     (corpus.select(id_col, vec_col).join(wide, id_col)
      .write.mode("overwrite").parquet(f"{path}/corpus"))
     _merge_index_meta(path, {"pq_m": m, "pq_n_codes": n_codes})
@@ -1408,59 +1406,17 @@ def pq_search_index(spark, path: str, queries: DataFrame, k: int = 5,
     reading floats for K candidate rows per query.  Identical output to
     inline pq_topk with the same parameters (training is deterministic;
     equality-tested)."""
-    from pyspark.sql.window import Window
-
     if shortlist is not None and shortlist < k:
         raise ValueError(f"shortlist ({shortlist}) must be >= k ({k})")
-    import json as _json
-    import os as _os
-
-    meta = {}
-    meta_path = f"{path}/index_meta.json"
-    if _os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = _json.load(f)
-    m = int(meta.get("pq_m", 4))
+    m = int(_index_meta(path).get("pq_m", 4))
     books = spark.read.parquet(f"{path}/books")
-    dim = _vec_dim(queries, vec_col)
-    qslices = _pq_slices(queries, m, dim, id_col, vec_col, "query_id")
-    lut = (qslices.join(F.broadcast(books), "sub")
-           .select("query_id", "sub", "code",
-                   F.round(dot(F.col("v"), F.col("c_vec")) * 1000000)
-                   .cast("long").alias("qdot")))
-    cnorms = books.select(
-        "sub", "code",
-        F.round(dot(F.col("c_vec"), F.col("c_vec")) * 1000000)
-        .cast("long").alias("cn2"))
-    codes = (spark.read.parquet(f"{path}/corpus")
-             .select(F.col(id_col).alias("neighbor_id"),
-                     F.posexplode("pq_codes").alias("sub", "code")))
-    scored = (codes.join(F.broadcast(lut), ["sub", "code"])
-              .join(F.broadcast(cnorms), ["sub", "code"])
-              .filter(F.col("query_id") != F.col("neighbor_id"))
-              .groupBy("query_id", "neighbor_id")
-              .agg(((F.sum("qdot").cast("double") / F.lit(1000000.0))
-                    / F.sqrt(F.sum("cn2").cast("double") / F.lit(1000000.0)))
-                   .alias("adc_score")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("neighbor_id").asc())
-    ranked = scored.withColumn("rank", F.row_number().over(w))
-    if shortlist is None:
-        return ranked.filter(F.col("rank") <= k)
-    cand = ranked.filter(F.col("rank") <= shortlist) \
-        .select("query_id", "neighbor_id")
-    floats = spark.read.parquet(f"{path}/corpus").select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    qv = queries.select(F.col(id_col).alias("query_id"),
-                        F.col(vec_col).alias("q_vec"))
-    rer = (cand.join(floats, "neighbor_id").join(F.broadcast(qv), "query_id")
-           .select("query_id", "neighbor_id",
-                   F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6)
-                   .alias("cos_sim")))
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return (rer.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k))
+    corpus = spark.read.parquet(f"{path}/corpus")
+    codes = corpus.select(F.col(id_col).alias("neighbor_id"),
+                          F.posexplode("pq_codes").alias("sub", "code"))
+    floats = corpus.select(F.col(id_col).alias("neighbor_id"),
+                           F.col(vec_col).alias("c_vec"))
+    return _adc_topk(codes, queries, books, m, k, shortlist, floats,
+                     id_col, vec_col)
 
 
 def ivfpq_write_index(corpus: DataFrame, path: str, n_cells: int = 16,
@@ -1484,11 +1440,7 @@ def ivfpq_write_index(corpus: DataFrame, path: str, n_cells: int = 16,
     books = corpus.sparkSession.read.parquet(f"{path}/books")
     assigned = assign_best_cell(corpus.select(id_col, vec_col), cents,
                                 id_col, vec_col)
-    codes = pq_encode(corpus, books, m, id_col, vec_col)
-    wide = (codes.groupBy(id_col)
-            .agg(F.transform(
-                F.array_sort(F.collect_list(F.struct("sub", "code"))),
-                lambda s: s["code"]).alias("pq_codes")))
+    wide = _wide_codes(corpus, books, m, id_col, vec_col)
     (assigned.join(wide, id_col)
      .select(id_col, vec_col, "pq_codes", "cell")
      .repartition("cell").write.mode("overwrite")
@@ -1508,73 +1460,23 @@ def ivfpq_search_index(spark, path: str, queries: DataFrame, k: int = 5,
     float cosine.  With n_probe = n_cells the candidate set is the whole
     corpus and the result equals pq_search_index exactly (equality-
     tested)."""
-    from pyspark.sql.window import Window
-
     if shortlist is not None and shortlist < k:
         raise ValueError(f"shortlist ({shortlist}) must be >= k ({k})")
     cents = spark.read.parquet(f"{path}/centroids")
     books = spark.read.parquet(f"{path}/books")
-    meta_path = f"{path}/index_meta.json"
-    import json as _json
-    import os as _os
-    meta = {}
-    if _os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = _json.load(f)
-    m = int(meta.get("pq_m", 4))
-
-    qa = queries.select(id_col, vec_col).crossJoin(F.broadcast(cents)) \
-        .select(id_col, vec_col, "cell",
-                cosine(F.col(vec_col), F.col("c_vec")).alias("cs"))
-    wq = Window.partitionBy(id_col).orderBy(F.col("cs").desc(),
-                                            F.col("cell").asc())
-    q_cells = (qa.withColumn("r", F.row_number().over(wq))
-               .filter(F.col("r") <= n_probe)
-               .select(F.col(id_col).alias("query_id"), "cell"))
-    probe_cells = [r["cell"] for r in
-                   q_cells.select("cell").distinct().collect()]
-
-    dim = _vec_dim(queries, vec_col)
-    qslices = _pq_slices(queries, m, dim, id_col, vec_col, "query_id")
-    lut = (qslices.join(F.broadcast(books), "sub")
-           .select("query_id", "sub", "code",
-                   F.round(dot(F.col("v"), F.col("c_vec")) * 1000000)
-                   .cast("long").alias("qdot")))
-    cnorms = books.select(
-        "sub", "code",
-        F.round(dot(F.col("c_vec"), F.col("c_vec")) * 1000000)
-        .cast("long").alias("cn2"))
-    raw = spark.read.parquet(f"{path}/corpus").filter(
-        F.col("cell").isin(probe_cells))
-    codes = (raw.select(F.col(id_col).alias("neighbor_id"), "cell",
-                        F.posexplode("pq_codes").alias("sub", "code")))
-    scored = (codes.join(F.broadcast(q_cells), "cell")
-              .join(F.broadcast(lut), ["query_id", "sub", "code"])
-              .join(F.broadcast(cnorms), ["sub", "code"])
-              .filter(F.col("query_id") != F.col("neighbor_id"))
-              .groupBy("query_id", "neighbor_id")
-              .agg(((F.sum("qdot").cast("double") / F.lit(1000000.0))
-                    / F.sqrt(F.sum("cn2").cast("double") / F.lit(1000000.0)))
-                   .alias("adc_score")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("neighbor_id").asc())
-    ranked = scored.withColumn("rank", F.row_number().over(w))
-    if shortlist is None:
-        return ranked.filter(F.col("rank") <= k)
-    cand = ranked.filter(F.col("rank") <= shortlist) \
-        .select("query_id", "neighbor_id")
-    floats = spark.read.parquet(f"{path}/corpus").select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    qv = queries.select(F.col(id_col).alias("query_id"),
-                        F.col(vec_col).alias("q_vec"))
-    rer = (cand.join(floats, "neighbor_id").join(F.broadcast(qv), "query_id")
-           .select("query_id", "neighbor_id",
-                   F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6)
-                   .alias("cos_sim")))
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return (rer.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k))
+    m = int(_index_meta(path).get("pq_m", 4))
+    q_cells = _probe_cells(queries, cents, n_probe, id_col, vec_col) \
+        .select("query_id", "cell")
+    probe_cells = [r["cell"] for r in q_cells.select("cell").distinct().collect()]
+    corpus = spark.read.parquet(f"{path}/corpus")
+    codes = (corpus.filter(F.col("cell").isin(probe_cells))
+             .select(F.col(id_col).alias("neighbor_id"), "cell",
+                     F.posexplode("pq_codes").alias("sub", "code"))
+             .join(F.broadcast(q_cells), "cell"))
+    floats = corpus.select(F.col(id_col).alias("neighbor_id"),
+                           F.col(vec_col).alias("c_vec"))
+    return _adc_topk(codes, queries, books, m, k, shortlist, floats,
+                     id_col, vec_col)
 
 
 def pq_adc_vectorized(spark, path: str, queries: DataFrame, k: int = 5,
@@ -1592,23 +1494,25 @@ def pq_adc_vectorized(spark, path: str, queries: DataFrame, k: int = 5,
     exactly, divided with the same expression) — equality-tested.
 
     Reads ONLY the pq_codes column of the index.  Queries are collected
-    to the driver (dense LUT contract); above max_query_rows falls back
-    to pq_search_index."""
+    to the driver (dense LUT contract) under cosine_topk_vectorized's
+    guard — at most min(max_query_rows, 50M // dim) rows, dim taken from
+    the codebooks; no rows, a NULL vector or a larger set falls back to
+    pq_search_index."""
     import numpy as np
     import pandas as pd
 
-    qp = queries.select(id_col, vec_col).limit(max_query_rows + 1).toPandas()
-    if len(qp) > max_query_rows:
-        return pq_search_index(spark, path, queries, k=k,
-                               id_col=id_col, vec_col=vec_col)
     books = spark.read.parquet(f"{path}/books").toPandas()
     subs = sorted(books["sub"].unique())
     labels = np.array(sorted(books[books["sub"] == subs[0]]["code"]))
     m = len(subs)
     n_codes = len(labels)
     lab_pos = {c: i for i, c in enumerate(labels)}
-    dim = len(qp[vec_col].iloc[0])
-    subdim = dim // m
+    subdim = len(books["c_vec"].iloc[0])
+    qp = _query_block(queries, id_col, vec_col, max_query_rows,
+                      dim=m * subdim)
+    if qp is None:
+        return pq_search_index(spark, path, queries, k=k,
+                               id_col=id_col, vec_col=vec_col)
     cvecs = np.zeros((m, n_codes, subdim))
     for _, r in books.iterrows():
         cvecs[int(r["sub"]), lab_pos[r["code"]]] = np.array(r["c_vec"])
@@ -1657,11 +1561,6 @@ def pq_adc_vectorized(spark, path: str, queries: DataFrame, k: int = 5,
                     rows["adc_score"].append(float(col[i]))
             yield pd.DataFrame(rows)
 
-    from pyspark.sql.window import Window
-
     partial = (spark.read.parquet(f"{path}/corpus")
                .select(id_col, "pq_codes").mapInPandas(run, out_schema))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("neighbor_id").asc())
-    return partial.withColumn("rank", F.row_number().over(w)) \
-        .filter(F.col("rank") <= k)
+    return _topk(partial, k, "adc_score")

@@ -324,8 +324,10 @@ def test_lsh_index_incremental_equals_oneshot(spark, tmp_path):
     """Incremental corpus dedup: write(A) then append(B) finds exactly the
     candidate pairs involving B that the one-shot pipeline over A∪B finds
     — no resident signature is recomputed, and a replayed batch is a
-    no-op."""
+    no-op.  The append cuts B's signatures once: its jobs are the probe's
+    plus the signature and band writes (3), no second cut."""
     from hugegraph_on_tikv_spark.functions import dedup
+    from tests.conftest import jobs_since
 
     def mk(rows):
         return spark.createDataFrame(rows, "doc_id long, text string")
@@ -338,7 +340,15 @@ def test_lsh_index_incremental_equals_oneshot(spark, tmp_path):
 
     path = str(tmp_path / "lshidx")
     dedup.lsh_write_index(a, path, num_hashes=16, rows_per_band=4, k=3)
+    jobs = jobs_since(spark)
+    probe = dedup.lsh_probe_index(spark, path, b, threshold=0.0) \
+        .localCheckpoint(eager=True)
+    probe_jobs = jobs()
+    jobs = jobs_since(spark)
     got = dedup.lsh_append_index(spark, path, b, batch_id=1, threshold=0.0)
+    append_jobs = jobs()
+    assert append_jobs - probe_jobs <= 3, (append_jobs, probe_jobs)
+    assert sorted(got.collect()) == sorted(probe.collect())
     got_pairs = {(r["doc_a"], r["doc_b"], r["scope"]) for r in got.collect()}
 
     # one-shot candidates over A∪B, restricted to pairs touching B
@@ -531,10 +541,12 @@ def test_ivf_append_preserves_quantize_bits(spark, tmp_path):
         .alias("m")).collect()[0]["m"]
     assert qmax <= 7, qmax
 
-    # compact preserves the recorded precision
+    # compact preserves the recorded precision and the batch watermark:
+    # replaying batch 1 after the compact appends nothing
     similarity.ivf_compact(spark, path)
     with open(f"{path}/index_meta.json") as f:
         assert json.load(f)["quantize_bits"] == 4
+    assert similarity.ivf_append_index(spark, path, part_b, batch_id=1) == 0
     corpus2 = spark.read.parquet(f"{path}/corpus")
     qmax2 = corpus2.select(
         F.max(F.aggregate("codes", F.lit(0),
@@ -882,7 +894,11 @@ def test_ivfpq_full_probe_equals_pq_and_prunes(spark, tmp_path):
 
 def test_pq_adc_vectorized_equals_relational(spark, tmp_path):
     """The Arrow ADC kernel reproduces the relational pq_search_index
-    result bit-for-bit (same quantized-integer LUT arithmetic)."""
+    result bit-for-bit (same quantized-integer LUT arithmetic).  Its
+    driver collect is guarded like cosine_topk_vectorized's: a query set
+    over the cap runs pq_search_index's joins-only plan, and an empty one
+    raises its clear ValueError (not a pandas IndexError)."""
+    import pytest
     from pyspark.sql import functions as F
 
     from hugegraph_on_tikv_spark.functions.similarity import (
@@ -898,6 +914,14 @@ def test_pq_adc_vectorized_equals_relational(spark, tmp_path):
     want = sorted((r["query_id"], r["rank"], r["neighbor_id"], r["adc_score"])
                   for r in pq_search_index(spark, path, q, k=5).collect())
     assert got == want and len(got) > 0
+
+    capped = pq_adc_vectorized(spark, path, q, k=5, max_query_rows=1)
+    plan = capped._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan, plan
+    assert sorted((r["query_id"], r["rank"], r["neighbor_id"], r["adc_score"])
+                  for r in capped.collect()) == want
+    with pytest.raises(ValueError, match="dimension"):
+        pq_adc_vectorized(spark, path, q.filter(F.lit(False)), k=5)
 
 
 def test_ivf_filtered_search_semantics(spark):

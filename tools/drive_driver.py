@@ -4,8 +4,10 @@ import os
 import sys
 import time
 
-os.environ["PYTHONPATH"] = "/root/repo"
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, wherever it is run from
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+os.environ["PYTHONPATH"] = ROOT
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession
 
@@ -18,13 +20,13 @@ spark = (
     .config("spark.sql.session.timeZone", "America/New_York")
     .config("spark.ui.enabled", "false")
     .config("spark.driver.memory", "6g")
-    .config("spark.executorEnv.PYTHONPATH", "/root/repo")
+    .config("spark.executorEnv.PYTHONPATH", ROOT)
     .getOrCreate()
 )
 
 import __spark_entry__ as E  # noqa: E402
 
-sys.path.insert(0, "/root/repo/tests")
+sys.path.insert(0, os.path.join(ROOT, "tests"))
 from oracle_diff import compare, duck_connection  # noqa: E402
 
 qs = E.queries()
