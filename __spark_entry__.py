@@ -2821,7 +2821,7 @@ _register("text_bpe_fallback", _text_bpe_fallback, _bpe_fallback_oracle())
 #    Scores are integer-scaled log-probs (floor(ln(cnt/tot)*1e6)) so the
 #    Viterbi DP is bit-exact across engines; the oracle unrolls the DP
 #    per end-position (max word length 8 in the token contract's corpus;
-#    the Spark fold itself is unbounded).
+#    the driver-side DP itself is unbounded).
 
 _UNI_MAXP = 4      # max piece length
 _UNI_MULTI = 200   # seed multi-char pieces
@@ -2829,30 +2829,33 @@ _UNI_MAXW = 10     # oracle DP unroll bound (corpus max is 8; +2 slack)
 
 
 def _text_unigram(spark: SparkSession, sf: str) -> DataFrame:
+    import pyarrow as pa
+
     from hugegraph_on_tikv_spark.functions import unigram as U
-    from hugegraph_on_tikv_spark.functions.text import tokens as _toks
     docs = load_table(spark, sf, "documents")
-    # r12 (guide §2.4): ONE corpus tokenize pass feeds everything below —
-    # the word-frequency table is eagerly checkpointed and shared by the
-    # contract guard, training, and the encoder's word-domain Viterbi
-    # (its segmentation is freq-independent; see unigram_encode).  Before:
-    # 4 corpus tokenizes (guard aggregate, word_freqs, stream-distinct,
-    # stream join); after: 2 (this one + the unavoidable stream join).
-    words = U.word_freqs(docs).localCheckpoint(eager=True)
-    # contract guard (ADVICE r9): the DuckDB oracle unrolls the Viterbi DP
-    # to _UNI_MAXW end positions while the Spark fold is unbounded — a
+    # ONE corpus tokenize pass feeds everything below: the word-frequency
+    # table is collected once into an Arrow local relation (whose
+    # collect() submits no job) shared by the contract guard, training,
+    # and the encoder's word-domain Viterbi (its segmentation is
+    # freq-independent; see unigram_encode).  The stream join is the only
+    # other corpus pass.
+    table = U.word_freqs(docs).collect()
+    # contract guard: the DuckDB oracle unrolls the Viterbi DP to
+    # _UNI_MAXW end positions while the driver-side DP is unbounded — a
     # corpus word longer than the unroll would silently vanish from the
     # oracle's segmentation and surface as an inscrutable hash mismatch.
-    # Fail loudly at the source instead (now a word-table aggregate: the
-    # longest word in the corpus IS the longest word in its word table).
-    mw = words.select(F.max(F.length("word")).alias("m")).first()[0]
-    if mw is not None and mw > _UNI_MAXW:
+    # Fail loudly at the source instead.
+    mw = max((len(r["word"]) for r in table), default=0)
+    if mw > _UNI_MAXW:
         raise AssertionError(
             f"unigram oracle DP is unrolled to {_UNI_MAXW} chars but the "
             f"corpus has a {mw}-char word; raise _UNI_MAXW to match")
+    words = spark.createDataFrame(pa.table({
+        "word": pa.array([r["word"] for r in table], pa.string()),
+        "freq": pa.array([r["freq"] for r in table], pa.int64()),
+    }))
     vocab, _ = U.unigram_train(docs, n_iters=1, max_piece_len=_UNI_MAXP,
                                n_multi=_UNI_MULTI, words=words)
-    vocab = vocab.persist()
     enc = U.unigram_encode(docs, vocab, max_piece_len=_UNI_MAXP,
                            words=words).persist()
     per = (
@@ -2869,7 +2872,7 @@ def _text_unigram(spark: SparkSession, sf: str) -> DataFrame:
             F.lit(None).cast("double").alias("v1"),
             F.lit(None).cast("double").alias("v2"),
         ))
-    nvocab = vocab.count()
+    nvocab = len(vocab.collect())
     tot = (
         enc.agg(F.count(F.lit(1)).cast("double").alias("n_ids"),
                 F.lit(float(nvocab)).alias("v1"),
@@ -2894,8 +2897,8 @@ def _text_unigram(spark: SparkSession, sf: str) -> DataFrame:
 def _uni_dp_ctes(prefix: str, scores: str, maxw: int, maxp: int) -> list:
     """Unrolled Viterbi CTEs {prefix}0..{prefix}{maxw} over the uw word
     table with the given score table, plus the final vseg_{prefix}
-    segmentation (word, seg).  Mirrors unigram.viterbi_segment's fold:
-    argmax by (score DESC, seg ASC) at each end position."""
+    segmentation (word, seg).  Mirrors unigram._viterbi: argmax by
+    (score DESC, seg ASC) at each end position."""
     ctes = [f"{prefix}0 AS (SELECT word, CAST(0 AS BIGINT) AS sc, "
             f"'' AS seg FROM uw)"]
     for i in range(1, maxw + 1):

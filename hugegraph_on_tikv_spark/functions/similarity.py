@@ -1457,9 +1457,9 @@ def ivfpq_search_index(spark, path: str, queries: DataFrame, k: int = 5,
     cells (broadcast centroids), push the probed cell set into the scan
     as a partition filter, ADC-rank the probed rows reading ONLY the
     pq_codes column, and optionally exact-rerank the top `shortlist` by
-    float cosine.  With n_probe = n_cells the candidate set is the whole
-    corpus and the result equals pq_search_index exactly (equality-
-    tested)."""
+    float cosine, read from the same probed cells.  With n_probe =
+    n_cells the candidate set is the whole corpus and the result equals
+    pq_search_index exactly (equality-tested)."""
     if shortlist is not None and shortlist < k:
         raise ValueError(f"shortlist ({shortlist}) must be >= k ({k})")
     cents = spark.read.parquet(f"{path}/centroids")
@@ -1468,12 +1468,12 @@ def ivfpq_search_index(spark, path: str, queries: DataFrame, k: int = 5,
     q_cells = _probe_cells(queries, cents, n_probe, id_col, vec_col) \
         .select("query_id", "cell")
     probe_cells = [r["cell"] for r in q_cells.select("cell").distinct().collect()]
-    corpus = spark.read.parquet(f"{path}/corpus")
-    codes = (corpus.filter(F.col("cell").isin(probe_cells))
-             .select(F.col(id_col).alias("neighbor_id"), "cell",
-                     F.posexplode("pq_codes").alias("sub", "code"))
+    probed = spark.read.parquet(f"{path}/corpus") \
+        .filter(F.col("cell").isin(probe_cells))
+    codes = (probed.select(F.col(id_col).alias("neighbor_id"), "cell",
+                           F.posexplode("pq_codes").alias("sub", "code"))
              .join(F.broadcast(q_cells), "cell"))
-    floats = corpus.select(F.col(id_col).alias("neighbor_id"),
+    floats = probed.select(F.col(id_col).alias("neighbor_id"),
                            F.col(vec_col).alias("c_vec"))
     return _adc_topk(codes, queries, books, m, k, shortlist, floats,
                      id_col, vec_col)

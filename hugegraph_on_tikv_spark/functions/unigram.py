@@ -7,39 +7,47 @@ model starts from a LARGE seed vocabulary of substrings and fits piece
 log-probabilities so each word's best (Viterbi) segmentation under the
 model maximizes likelihood, shrinking the vocabulary as pieces fall out
 of use.  This module implements hard-EM (Viterbi-EM) training and
-Viterbi encoding as Spark DataFrame programs.
+Viterbi encoding.
 
 Scale design (the same collapse as BPE): every statistic depends only on
 the WORD-FREQUENCY table — one groupBy collapses terabytes of corpus
 into a vocab-sized (word, freq) table, and training never touches the
-corpus again.  The per-word Viterbi dynamic program runs JVM-side in a
-single ``F.aggregate`` higher-order fold over the word's pre-joined
-match array (piece occurrences sorted by end position), so there is no
-Python in the loop and no driver-side iteration over rows: one
-whole-stage-codegen pass segments the entire word table.
+corpus again.  That table is collected ONCE and the whole fit runs in
+the driver: the seed vocabulary, every hard-EM round (one Viterbi pass
+over the table plus an integer count) and the final ids.  Encoding
+segments the stream's word DOMAIN in the driver with the same `_viterbi`
+and joins the corpus against one (word, spos, token_id) local relation.
+So training submits the word table's jobs alone whatever `n_iters` is.
+Scale contract: the word table (or the stream's distinct-word domain)
+is held in one process — bpe_learn's contract, and what sentencepiece's
+trainer does.
 
 Cross-engine exactness (the driver oracle replays training + encode in
 DuckDB): piece scores are INTEGER-scaled log-probs —
-``floor(ln(cnt / tot) * 1_000_000)`` as BIGINT — so the DP accumulates
-and compares integers bit-exactly in both engines; the only float op is
-the one ``ln`` per piece, whose floor-boundary sensitivity is the same
+``floor(ln(cnt / tot) * 1_000_000)`` — so the DP accumulates and compares
+integers bit-exactly in both engines; the only float op is the one
+``ln`` per piece, whose floor-boundary sensitivity is the same
 measure-zero risk the repo already accepts for round(cos_sim, 6).
 Ties on equal integer scores break on the lexicographically-smaller
-segmentation string, identical byte order in both engines for the
-[a-z0-9 ] alphabet.
+segmentation string; Python's code-point string order is the UTF-8
+byte order Spark and DuckDB compare in, for every code point.
 
 Vocabulary retention rule (deterministic, SQL-replayable): after each
 M-step, multi-character pieces keep their Viterbi-usage count (dropped
 when unused); single characters are ALWAYS retained with
-``greatest(count, 1)`` so every word over the seed alphabet stays
+``max(count, 1)`` so every word over the seed alphabet stays
 segmentable — full coverage by construction, the unigram analogue of
 bpe_encode's char fallback.
 """
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Window
+import heapq
+import math
+from collections import Counter
+
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hugegraph_on_tikv_spark.functions.text import tokens
@@ -54,132 +62,30 @@ def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
             .groupBy("word").agg(F.count(F.lit(1)).cast("long").alias("freq")))
 
 
-def piece_counts(words: DataFrame, max_piece_len: int = 4) -> DataFrame:
-    """(piece, cnt): freq-weighted counts of every substring of length
-    1..max_piece_len — the unigram seed-candidate statistics."""
-    s = F.explode(F.sequence(F.lit(1), F.length("word"))).alias("s")
-    with_s = words.select("word", "freq", s)
-    l = F.explode(F.sequence(
-        F.lit(1),
-        F.least(F.lit(max_piece_len), F.length("word") - F.col("s") + 1),
-    )).alias("l")
-    return (with_s.select("word", "freq", "s", l)
-            .select(F.expr("substring(word, s, l)").alias("piece"), "freq")
-            .groupBy("piece").agg(F.sum("freq").cast("long").alias("cnt")))
+def _scores(pieces: dict[str, int]) -> dict[str, int]:
+    """Integer-scaled log-probabilities floor(ln(cnt / total) * SCALE)."""
+    tot = sum(pieces.values())
+    return {p: math.floor(math.log(c / tot) * SCALE) for p, c in pieces.items()}
 
 
-def seed_pieces(words: DataFrame, max_piece_len: int = 4,
-                n_multi: int = 200) -> DataFrame:
-    """(piece, cnt): the seed vocabulary — EVERY single character (coverage
-    floor) plus the top `n_multi` multi-character substrings by
-    (cnt DESC, piece ASC)."""
-    pc = piece_counts(words, max_piece_len)
-    chars = pc.filter(F.length("piece") == 1)
-    w = Window.orderBy(F.col("cnt").desc(), F.col("piece").asc())
-    multi = (pc.filter(F.length("piece") > 1)
-             .withColumn("rn", F.row_number().over(w))
-             .filter(F.col("rn") <= n_multi).drop("rn"))
-    return chars.unionByName(multi)
-
-
-def piece_scores(pieces: DataFrame) -> DataFrame:
-    """(piece, sc): integer-scaled log-probabilities
-    floor(ln(cnt / total) * SCALE).  The unpartitioned window is a
-    vocab-sized single-partition total — deliberately tiny."""
-    tot = F.sum("cnt").over(Window.partitionBy())
-    return pieces.select(
-        "piece",
-        F.floor(F.log(F.col("cnt").cast("double") / tot) * SCALE)
-        .cast("long").alias("sc"))
-
-
-# The per-word Viterbi fold.  `matches` is the word's piece occurrences as
-# struct(i, j, sc, p) — piece p spans characters j+1..i (1-based substr
-# semantics), score sc — sorted ascending by (i, j).  The accumulator is
-# the DP table: acc[k] (0-based index k = position) holds the best
-# (score, segmentation) for the word's first k characters.  Because every
-# position has a single-char match, position i's first match arrives when
-# size(acc) == i (append); later matches for the same i challenge the
-# incumbent (higher score wins; equal scores break on smaller seg string).
-_FOLD = """
-aggregate(
-  matches,
-  array(named_struct('sc', CAST(0 AS BIGINT), 'seg', '')),
-  (acc, m) -> CASE WHEN size(acc) <= m.i THEN
-      concat(acc, array(named_struct(
-        'sc', element_at(acc, m.j + 1).sc + m.sc,
-        'seg', CASE WHEN m.j = 0 THEN m.p
-               ELSE concat(element_at(acc, m.j + 1).seg, ' ', m.p) END)))
-    ELSE transform(acc, (x, k) -> CASE WHEN k = m.i AND (
-           element_at(acc, m.j + 1).sc + m.sc > x.sc OR (
-             element_at(acc, m.j + 1).sc + m.sc = x.sc AND
-             CASE WHEN m.j = 0 THEN m.p
-                  ELSE concat(element_at(acc, m.j + 1).seg, ' ', m.p) END
-             < x.seg))
-         THEN named_struct(
-           'sc', element_at(acc, m.j + 1).sc + m.sc,
-           'seg', CASE WHEN m.j = 0 THEN m.p
-                  ELSE concat(element_at(acc, m.j + 1).seg, ' ', m.p) END)
-         ELSE x END)
-  END
-)
-"""
-
-
-def viterbi_segment(words: DataFrame, scored: DataFrame,
-                    max_piece_len: int = 4) -> DataFrame:
-    """(word, freq, seg, sc): each word's best segmentation under the
-    scored pieces (seg = space-joined pieces), via one JVM-side fold.
-
-    Words containing characters absent from the piece table cannot be
-    segmented and are dropped (seed_pieces retains every corpus
-    character, so this only affects foreign alphabets; callers can union
-    a fallback).  One broadcast join (vocab-sized pieces) + one groupBy
-    word — no shuffle beyond the word table's own key.
-    """
-    j = F.explode(F.sequence(F.lit(0), F.length("word") - 1)).alias("j")
-    with_j = words.select("word", "freq", j)
-    i = F.explode(F.sequence(
-        F.col("j") + 1,
-        F.least(F.col("j") + max_piece_len, F.length("word")),
-    )).alias("i")
-    spans = (with_j.select("word", "freq", "j", i)
-             .withColumn("p", F.expr("substring(word, j + 1, i - j)")))
-    matched = spans.join(F.broadcast(scored), spans.p == scored.piece) \
-        .select("word", "freq", "i", "j", "sc", "p")
-    per_word = (matched.groupBy("word")
-                .agg(F.first("freq").alias("freq"),
-                     F.array_sort(F.collect_list(F.struct(
-                         F.col("i").cast("int").alias("i"),
-                         F.col("j").cast("int").alias("j"),
-                         F.col("sc").alias("sc"),
-                         F.col("p").alias("p")))).alias("matches"),
-                     F.sum((F.col("i") - F.col("j") == 1).cast("long"))
-                     .alias("n_char_matches")))
-    # coverage guard: every position needs its single-char match or the
-    # fold would index past the accumulator (ANSI element_at)
-    covered = per_word.filter(F.col("n_char_matches") == F.length("word"))
-    best = F.element_at(F.expr(_FOLD), F.length("word") + 1)
-    return covered.select("word", "freq", best.getField("seg").alias("seg"),
-                          best.getField("sc").alias("sc"))
-
-
-def mstep_vocab(segmented: DataFrame, prev_pieces: DataFrame) -> DataFrame:
-    """(piece, cnt): Viterbi-usage counts with the retention rule —
-    multi-char pieces live only while used; single chars always survive
-    with greatest(count, 1)."""
-    used = (segmented.select("freq", F.explode(F.split("seg", " "))
-                             .alias("piece"))
-            .groupBy("piece").agg(F.sum("freq").cast("long").alias("cnt")))
-    chars = prev_pieces.filter(F.length("piece") == 1).select("piece")
-    return (used.join(chars.withColumn("is_char", F.lit(True)),
-                      "piece", "full_outer")
-            .select("piece",
-                    F.when(F.col("is_char").isNotNull(),
-                           F.greatest(F.coalesce(F.col("cnt"), F.lit(0)),
-                                      F.lit(1)))
-                    .otherwise(F.col("cnt")).cast("long").alias("cnt"))
-            .filter(F.col("cnt").isNotNull()))
+def _viterbi(word: str, scores: dict[str, int],
+             max_piece_len: int) -> str | None:
+    """The word's best segmentation under the scored pieces, as the
+    space-joined pieces: at each end position the argmax by (score DESC,
+    seg ASC) over pieces of at most max_piece_len characters.  None when
+    a character of the word is not a piece (the word cannot segment)."""
+    if not all(c in scores for c in word):
+        return None
+    best = [(0, "")]
+    for i in range(1, len(word) + 1):
+        cands = []
+        for j in range(max(0, i - max_piece_len), i):
+            p = word[j:i]
+            if p in scores:
+                sc, seg = best[j]
+                cands.append((sc + scores[p], f"{seg} {p}" if j else p))
+        best.append(min(cands, key=lambda t: (-t[0], t[1])))
+    return best[-1][1]
 
 
 def unigram_train(docs: DataFrame, n_iters: int = 1, max_piece_len: int = 4,
@@ -188,46 +94,52 @@ def unigram_train(docs: DataFrame, n_iters: int = 1, max_piece_len: int = 4,
                   words: DataFrame | None = None) -> tuple[DataFrame, DataFrame]:
     """Fit the unigram model by hard-EM.  Returns (vocab, words): vocab is
     (piece, cnt, sc, token_id) — the tokenizer artifact, ids dense by
-    (cnt DESC, piece ASC) — and words is the (word, freq) table.
+    (cnt DESC, piece ASC), an Arrow-built local relation — and words is
+    the (word, freq) table.
 
-    Each EM iteration = one Viterbi E-step over the word table (one fold
-    pass) + one integer M-step count; n_iters is small (1-2) by design —
-    hard-EM converges in very few rounds and each round is vocab-sized.
+    The seed vocabulary is EVERY single character (coverage floor) plus
+    the top `n_multi` multi-character substrings of length up to
+    max_piece_len by freq-weighted count (cnt DESC, piece ASC).  Each EM
+    round is one Viterbi E-step over the word table plus one integer
+    M-step count, all in the driver over the rows collected once.
 
-    `words` (r12, guide §2.4): callers that already hold the corpus'
-    (word, freq) table — e.g. one materialized by word_freqs and shared
-    with unigram_encode — pass it here so training never re-tokenizes
-    the corpus; it must equal word_freqs(docs, text_col).  A `words`
-    table the caller has cached stays cached: training persists, and
-    later releases, only a table nobody had cached.
+    `words`: callers that already hold the corpus' (word, freq) table —
+    e.g. one shared with unigram_encode — pass it here so training never
+    re-tokenizes the corpus; it must equal word_freqs(docs, text_col).
     """
     if words is None:
         words = word_freqs(docs, text_col)
-    owns_cache = words.storageLevel == StorageLevel.NONE
-    if owns_cache:
-        words = words.persist()
-    pieces = seed_pieces(words, max_piece_len, n_multi).persist()
+    table = [(r["word"], r["freq"])
+             for r in words.select("word", "freq").collect()]
+    counts: Counter = Counter()
+    for w, f in table:
+        for s in range(len(w)):
+            for e in range(s + 1, min(s + max_piece_len, len(w)) + 1):
+                counts[w[s:e]] += f
+    chars = [p for p in counts if len(p) == 1]
+    pieces = {p: counts[p] for p in chars}
+    pieces.update(heapq.nsmallest(
+        n_multi, ((p, c) for p, c in counts.items() if len(p) > 1),
+        key=lambda t: (-t[1], t[0])))
     for _ in range(n_iters):
-        seg = viterbi_segment(words, piece_scores(pieces), max_piece_len)
-        nxt = mstep_vocab(seg, pieces).persist()
-        pieces.unpersist()
-        pieces = nxt
-    w = Window.orderBy(F.col("cnt").desc(), F.col("piece").asc())
-    vocab = (piece_scores(pieces)
-             .join(pieces, "piece")
-             .withColumn("token_id",
-                         (F.row_number().over(w) - 1).cast("long"))
-             .select("piece", "cnt", "sc", "token_id"))
-    # cache hygiene (ADVICE r9): vocab is vocab-sized — cut it eagerly
-    # to a checkpoint so the iteration caches (words + final pieces) can
-    # be released HERE instead of leaking executor cache across repeated
-    # train calls in a long-lived session.  A words table this call
-    # persisted is returned unpersisted but still valid (it recomputes
-    # from docs if used).
-    vocab = vocab.localCheckpoint(eager=True)
-    pieces.unpersist()
-    if owns_cache:
-        words.unpersist()
+        scores = _scores(pieces)
+        used: Counter = Counter()
+        for w, f in table:
+            seg = _viterbi(w, scores, max_piece_len)
+            if seg is not None:
+                for p in seg.split(" "):
+                    used[p] += f
+        pieces = dict(used)
+        for c in chars:
+            pieces[c] = max(used[c], 1)
+    scores = _scores(pieces)
+    ranked = sorted(pieces, key=lambda p: (-pieces[p], p))
+    vocab = words.sparkSession.createDataFrame(pa.table({
+        "piece": pa.array(ranked, pa.string()),
+        "cnt": pa.array([pieces[p] for p in ranked], pa.int64()),
+        "sc": pa.array([scores[p] for p in ranked], pa.int64()),
+        "token_id": pa.array(range(len(ranked)), pa.int64()),
+    }))
     return vocab, words
 
 
@@ -238,29 +150,37 @@ def unigram_encode(docs: DataFrame, vocab: DataFrame,
                    words: DataFrame | None = None) -> DataFrame:
     """(id_col, wpos, spos, token_id): every document's token-id sequence
     under the trained vocab — Viterbi segmentation of the STREAM's own
-    word table (foreign words segment through the always-retained
-    character floor), then one stream join.  The corpus is touched
-    exactly twice (word table + stream join), both scale-right.
+    word domain in the driver (foreign words segment through the
+    always-retained character floor; a word with an untrained character
+    is dropped), then one stream join against the (word, spos, token_id)
+    local relation.
 
-    `words` (r12, guide §2.4): a precomputed (word, freq) table covering
-    the stream's word domain (e.g. word_freqs of the SAME docs, shared
-    with training) replaces the stream-distinct pass — the Viterbi
-    segmentation is freq-independent (seg/sc are functions of the word
-    and the piece scores alone), so the emitted token ids are identical;
-    one fewer corpus tokenize pass."""
+    `words`: a precomputed (word, freq) table covering the stream's word
+    domain (e.g. word_freqs of the SAME docs, shared with training)
+    replaces the stream-distinct pass — the segmentation is a function of
+    the word and the piece scores alone, so the emitted token ids are
+    identical; one fewer corpus tokenize pass."""
     stream = docs.select(
         F.col(id_col),
         F.posexplode(tokens(F.col(text_col))).alias("wpos", "word"))
-    swords = (stream.select("word").distinct()
-              .withColumn("freq", F.lit(1).cast("long"))
-              if words is None else words.select("word", "freq"))
-    seg = viterbi_segment(
-        swords, vocab.select("piece", "sc"), max_piece_len)
-    spieces = (seg.select("word", F.posexplode(F.split("seg", " "))
-                          .alias("spos", "piece"))
-               .join(F.broadcast(vocab.select("piece", "token_id")), "piece")
-               .select("word", F.col("spos").cast("long").alias("spos"),
-                       "token_id"))
+    domain = (stream.select("word").distinct() if words is None
+              else words.select("word"))
+    vrows = vocab.select("piece", "sc", "token_id").collect()
+    scores = {r["piece"]: r["sc"] for r in vrows}
+    ids = {r["piece"]: r["token_id"] for r in vrows}
+    seg_word, seg_pos, seg_id = [], [], []
+    for w in dict.fromkeys(r["word"] for r in domain.collect()):
+        seg = _viterbi(w, scores, max_piece_len)
+        if seg is not None:
+            for spos, p in enumerate(seg.split(" ")):
+                seg_word.append(w)
+                seg_pos.append(spos)
+                seg_id.append(ids[p])
+    spieces = docs.sparkSession.createDataFrame(pa.table({
+        "word": pa.array(seg_word, pa.string()),
+        "spos": pa.array(seg_pos, pa.int64()),
+        "token_id": pa.array(seg_id, pa.int64()),
+    }))
     return (stream.join(spieces, "word")
             .select(id_col, F.col("wpos").cast("long").alias("wpos"),
                     "spos", "token_id"))

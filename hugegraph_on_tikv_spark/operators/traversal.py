@@ -108,7 +108,8 @@ def neighbors(edges: DataFrame, vertex_ids: Sequence[int], direction: str = OUT,
 
 def _id_frame(spark: SparkSession, ids: Iterable[int]) -> DataFrame:
     """A one-column `id long` frame over driver-held ids, built from Arrow:
-    a LocalRelation, which collects without a job (a frame built from a
+    a LocalRelation, whose `collect()` submits no job (its `toArrow()`
+    and `toPandas()` submit one and `count()` two; a frame built from a
     Python list is a LogicalRDD, whose every read is a job)."""
     return spark.createDataFrame(pa.table({"id": pa.array(list(ids), pa.int64())}))
 

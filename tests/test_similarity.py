@@ -891,6 +891,21 @@ def test_ivfpq_full_probe_equals_pq_and_prunes(spark, tmp_path):
     code_scans = [sc for sc in schemas if "pq_codes" in sc]
     assert code_scans and all("embedding" not in sc for sc in code_scans)
 
+    # the shortlist's exact rerank reads floats from the probed cells only:
+    # every index-corpus scan (the ones with the `cell` partition column)
+    # whose ReadSchema holds the float column carries the cell filter
+    short = ivfpq_search_index(spark, p1, q, k=5, n_probe=3, shortlist=10)
+    assert short.count() > 0
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        short.explain()
+    float_scans = [ln for ln in buf.getvalue().splitlines()
+                   if "FileScan" in ln and re.search(r"[\[,]cell#", ln)
+                   and "embedding" in ln.split("ReadSchema: ", 1)[1]]
+    assert float_scans
+    for ln in float_scans:
+        assert re.search(r"PartitionFilters: \[[^\]]*cell#", ln), ln
+
 
 def test_pq_adc_vectorized_equals_relational(spark, tmp_path):
     """The Arrow ADC kernel reproduces the relational pq_search_index

@@ -1,13 +1,20 @@
 """Unigram-LM tokenizer (functions/unigram.py) vs a pure-Python Viterbi
-reference, plus structural invariants on the real corpus."""
+reference, plus structural invariants on the real corpus, the raw
+text_unigram query vs its DuckDB oracle, and its job-count pins."""
 from __future__ import annotations
 
 import math
+import random
+from collections import defaultdict
 
 import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__ as E
 from hugegraph_on_tikv_spark.functions import unigram as U
+from hugegraph_on_tikv_spark.functions.text import tokens
+from tests.conftest import jobs_since
+from tests.oracle_diff import compare, duck_connection
 
 SF_DIR = "/root/testdata/sf0.001"
 SCALE = 1_000_000
@@ -22,7 +29,7 @@ DOCS = [
 
 def _py_viterbi(word: str, scores: dict[str, int], maxp: int):
     """The reference DP: best (score, seg) per prefix, ties on smaller
-    seg string — must agree with the JVM fold exactly."""
+    seg string — must agree with unigram._viterbi exactly."""
     best = [(0, "")]
     for i in range(1, len(word) + 1):
         cands = []
@@ -89,7 +96,7 @@ def test_train_matches_python_reference(spark, toy):
 
 def test_train_keeps_caller_cached_words(spark, toy):
     """A (word, freq) table the caller persisted is still cached after
-    training: unigram_train releases only the caches it created."""
+    training: unigram_train caches and releases nothing."""
     words = U.word_freqs(toy).persist()
     try:
         vocab, _ = U.unigram_train(toy, n_iters=1, max_piece_len=4,
@@ -100,36 +107,71 @@ def test_train_keeps_caller_cached_words(spark, toy):
         words.unpersist()
 
 
+def _py_encode(docs, ids, scores, maxp=4):
+    """Sorted (doc_id, wpos, spos, token_id) rows of the reference encode."""
+    want = []
+    for doc_id, text in docs:
+        for wpos, w in enumerate(text.split()):
+            _, seg = _py_viterbi(w, scores, maxp)
+            for spos, p in enumerate(seg.split(" ")):
+                want.append((doc_id, wpos, spos, ids[p]))
+    return sorted(want)
+
+
 def test_encode_matches_python_reference(spark, toy):
     vocab, _ = U.unigram_train(toy, n_iters=1, max_piece_len=4, n_multi=200)
     enc = U.unigram_encode(toy, vocab, max_piece_len=4)
     got = sorted((r.doc_id, r.wpos, r.spos, r.token_id) for r in enc.collect())
     _, ids, scores = _py_ref(DOCS)
-    want = []
-    for doc_id, text in DOCS:
-        for wpos, w in enumerate(text.split()):
-            _, seg = _py_viterbi(w, scores, 4)
-            for spos, p in enumerate(seg.split(" ")):
-                want.append((doc_id, wpos, spos, ids[p]))
-    assert got == sorted(want)
+    assert got == _py_encode(DOCS, ids, scores)
+
+
+@pytest.mark.parametrize("n_iters", [1, 2, 3])
+def test_driver_em_matches_reference_on_random_corpora(spark, n_iters):
+    """Seeded random corpora over a two-letter alphabet, so piece counts
+    and Viterbi scores tie often and the small seed cut lands inside a
+    tie: training (counts and ids) and encode equal the references for
+    several EM rounds."""
+    for seed in range(3):
+        rng = random.Random(seed * 10 + n_iters)
+        docs = [(d, " ".join("".join(rng.choice("ab")
+                                     for _ in range(rng.randint(1, 7)))
+                             for _ in range(rng.randint(1, 8))))
+                for d in range(25)]
+        df = spark.createDataFrame(docs, ["doc_id", "text"])
+        vocab, _ = U.unigram_train(df, n_iters=n_iters, max_piece_len=3,
+                                   n_multi=7)
+        ref_vocab, ref_ids, ref_scores = _py_ref(docs, n_iters=n_iters,
+                                                 maxp=3, n_multi=7)
+        got = {r.piece: (r.cnt, r.sc, r.token_id) for r in vocab.collect()}
+        assert got == {p: (c, ref_scores[p], ref_ids[p])
+                       for p, c in ref_vocab.items()}
+        enc = U.unigram_encode(df, vocab, max_piece_len=3)
+        assert sorted(tuple(r) for r in enc.collect()) == \
+            _py_encode(docs, ref_ids, ref_scores, maxp=3)
 
 
 def test_roundtrip_and_coverage_on_corpus(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    vocab, words = U.unigram_train(docs, n_iters=1, max_piece_len=4,
-                                   n_multi=200)
-    seg = U.viterbi_segment(words, vocab.select("piece", "sc"),
-                            max_piece_len=4)
-    # full coverage: every corpus word segments, and pieces respell it
-    assert seg.count() == words.count()
-    bad = seg.filter(
-        F.regexp_replace("seg", " ", "") != F.col("word")).count()
-    assert bad == 0
+    vocab, _ = U.unigram_train(docs, n_iters=1, max_piece_len=4,
+                               n_multi=200)
+    enc = U.unigram_encode(docs, vocab, max_piece_len=4)
+    pieces = {r.token_id: r.piece for r in vocab.collect()}
+    got = defaultdict(list)
+    for r in enc.collect():
+        got[(r.doc_id, r.wpos)].append((r.spos, pieces[r.token_id]))
+    stream = docs.select("doc_id", F.posexplode(tokens(F.col("text")))
+                         .alias("wpos", "word"))
+    want = {(r.doc_id, r.wpos): r.word for r in stream.collect()}
+    # full coverage: every corpus word occurrence is encoded
+    assert want and set(got) == set(want)
+    # pieces (spos 0..n-1) respell the word
+    for key, ps in got.items():
+        ps.sort()
+        assert [s for s, _ in ps] == list(range(len(ps)))
+        assert "".join(p for _, p in ps) == want[key]
     # ids dense 0..V-1
-    v = vocab.agg(F.count("*").alias("n"), F.min("token_id").alias("lo"),
-                  F.max("token_id").alias("hi"),
-                  F.count_distinct("token_id").alias("d")).first()
-    assert (v.lo, v.hi, v.d) == (0, v.n - 1, v.n)
+    assert sorted(pieces) == list(range(len(pieces)))
 
 
 def test_foreign_word_segments_through_char_floor(spark, toy):
@@ -148,5 +190,35 @@ def test_unknown_char_words_drop_not_crash(spark, toy):
     mixed = spark.createDataFrame([(1, "banana xyzq")], ["doc_id", "text"])
     enc = U.unigram_encode(mixed, vocab, max_piece_len=4)
     # 'xyzq' has chars outside the trained alphabet (no x/y/z/q in corpus):
-    # the coverage guard drops it instead of faulting the fold
+    # the coverage guard drops it instead of failing the encode
     assert enc.select("wpos").distinct().count() == 1
+
+
+def test_train_jobs_do_not_grow_with_em_rounds(spark, toy):
+    """The word table is read once and every EM round runs in the driver,
+    so more rounds submit no more jobs."""
+    jobs = []
+    for n_iters in (1, 3):
+        since = jobs_since(spark)
+        vocab, _ = U.unigram_train(toy, n_iters=n_iters, max_piece_len=4,
+                                   n_multi=200)
+        vocab.collect()
+        jobs.append(since())
+    assert jobs[0] == jobs[1], jobs
+
+
+def test_text_unigram_matches_oracle_and_job_budget(spark):
+    """The raw text_unigram query (fused into the slow-tier
+    text_quality_suite row) against its DuckDB oracle, and its job count:
+    one word-table pass plus the encode's stream join."""
+    fn = E._RAW_QUERIES["text_unigram"]
+    since = jobs_since(spark)
+    fn(spark, SF_DIR).collect()
+    assert since() <= 11
+    con = duck_connection(SF_DIR)
+    try:
+        problems = compare(fn(spark, SF_DIR), con,
+                           E._RAW_ORACLES["text_unigram"], "text_unigram")
+    finally:
+        con.close()
+    assert not problems, "\n".join(problems)
