@@ -143,7 +143,9 @@ def test_driver_em_matches_reference_on_random_corpora(spark, n_iters):
                                    n_multi=7)
         ref_vocab, ref_ids, ref_scores = _py_ref(docs, n_iters=n_iters,
                                                  maxp=3, n_multi=7)
-        got = {r.piece: (r.cnt, r.sc, r.token_id) for r in vocab.collect()}
+        rows = vocab.collect()
+        assert len(rows) == len(ref_vocab)
+        got = {r.piece: (r.cnt, r.sc, r.token_id) for r in rows}
         assert got == {p: (c, ref_scores[p], ref_ids[p])
                        for p, c in ref_vocab.items()}
         enc = U.unigram_encode(df, vocab, max_piece_len=3)
@@ -156,7 +158,8 @@ def test_roundtrip_and_coverage_on_corpus(spark):
     vocab, _ = U.unigram_train(docs, n_iters=1, max_piece_len=4,
                                n_multi=200)
     enc = U.unigram_encode(docs, vocab, max_piece_len=4)
-    pieces = {r.token_id: r.piece for r in vocab.collect()}
+    rows = vocab.collect()
+    pieces = {r.token_id: r.piece for r in rows}
     got = defaultdict(list)
     for r in enc.collect():
         got[(r.doc_id, r.wpos)].append((r.spos, pieces[r.token_id]))
@@ -170,8 +173,9 @@ def test_roundtrip_and_coverage_on_corpus(spark):
         ps.sort()
         assert [s for s, _ in ps] == list(range(len(ps)))
         assert "".join(p for _, p in ps) == want[key]
-    # ids dense 0..V-1
-    assert sorted(pieces) == list(range(len(pieces)))
+    # ids dense 0..V-1, one per vocab row
+    ids = [r.token_id for r in rows]
+    assert sorted(ids) == list(range(len(rows)))
 
 
 def test_foreign_word_segments_through_char_floor(spark, toy):
