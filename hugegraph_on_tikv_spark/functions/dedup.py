@@ -22,7 +22,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hugegraph_on_tikv_spark.functions.hashing import MINHASH_P, md5_long, md5_long48, minhash_seed
-from hugegraph_on_tikv_spark.functions.text import fingerprint, normalized, tokens
+from hugegraph_on_tikv_spark.functions.similarity import _index_meta, _merge_index_meta
+from hugegraph_on_tikv_spark.functions.text import TOKEN_PATTERN, fingerprint, tokens
 
 # -- exact -------------------------------------------------------------------
 
@@ -80,7 +81,7 @@ def shingle_set_arrow(docs: DataFrame, text_col: str = "text", id_col: str = "do
     import pandas as pd
 
     id_type = docs.schema[id_col].dataType.simpleString()
-    pat = re.compile("[^a-z0-9]+")
+    pat = re.compile(TOKEN_PATTERN)
 
     def run(batches):
         for pdf in batches:
@@ -105,6 +106,18 @@ def shingle_set_arrow(docs: DataFrame, text_col: str = "text", id_col: str = "do
 
 # -- MinHash + LSH -----------------------------------------------------------
 
+def _hashed_shingles(sh: DataFrame) -> DataFrame:
+    """The shingle set plus each shingle's base hash h (portable md5)."""
+    return sh.withColumn("h", md5_long(F.col("shingle")) % MINHASH_P)
+
+
+def _minhash_aggs(num_hashes: int) -> list[Column]:
+    """mh_0 .. mh_{n-1}: min over a doc's hashed shingles of
+    (a_i * h + b_i) mod P — every permutation a parallel min-aggregate."""
+    return [F.min((F.lit(a) * F.col("h") + F.lit(b)) % MINHASH_P).alias(f"mh_{i}")
+            for i, (a, b) in enumerate(map(minhash_seed, range(num_hashes)))]
+
+
 def minhash_signatures(docs: DataFrame, num_hashes: int = 32, k: int = 3,
                        text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Wide minhash signatures: (doc_id, mh_0 .. mh_{n-1}) where mh_i = min
@@ -114,16 +127,8 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 32, k: int = 3,
     min-aggregates (map-side partial aggregation); the per-shingle base hash
     is computed once.  This beats the (doc_id, i)-exploded layout by ~n× in
     shuffle volume — the shape that matters at corpus scale."""
-    sh = shingle_set_arrow(docs, text_col, id_col, k).withColumn(
-        "h", md5_long(F.col("shingle")) % MINHASH_P
-    )
-    aggs = []
-    for i in range(num_hashes):
-        a, b = minhash_seed(i)
-        aggs.append(
-            F.min((F.lit(a) * F.col("h") + F.lit(b)) % MINHASH_P).alias(f"mh_{i}")
-        )
-    return sh.groupBy("doc_id").agg(*aggs)
+    return (_hashed_shingles(shingle_set_arrow(docs, text_col, id_col, k))
+            .groupBy("doc_id").agg(*_minhash_aggs(num_hashes)))
 
 
 def lsh_bands(signatures: DataFrame, rows_per_band: int = 4) -> DataFrame:
@@ -144,6 +149,18 @@ def lsh_bands(signatures: DataFrame, rows_per_band: int = 4) -> DataFrame:
     )
 
 
+def _cap_buckets(bands: DataFrame, max_bucket_size: int | None) -> DataFrame:
+    """`bands` without the (band, band_sig) buckets holding more than
+    max_bucket_size members; unchanged when the cap is None."""
+    if max_bucket_size is None:
+        return bands
+    ok = (bands.groupBy("band", "band_sig")
+          .agg(F.count(F.lit(1)).alias("__n"))
+          .filter(F.col("__n") <= max_bucket_size)
+          .select("band", "band_sig"))
+    return bands.join(ok, ["band", "band_sig"], "leftsemi")
+
+
 def lsh_candidate_pairs(bands: DataFrame, max_bucket_size: int | None = None) -> DataFrame:
     """Distinct candidate pairs (doc_a < doc_b) sharing any band bucket —
     the equi-join that replaces the O(n²) comparison.
@@ -155,14 +172,7 @@ def lsh_candidate_pairs(bands: DataFrame, max_bucket_size: int | None = None) ->
     can still pair through their other bands (and truly near-identical docs
     collide on all bands), so recall loss is confined to the boilerplate
     shingle itself.  The matching oracle applies the identical HAVING cap."""
-    if max_bucket_size is not None:
-        ok = (
-            bands.groupBy("band", "band_sig")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") <= max_bucket_size)
-            .select("band", "band_sig")
-        )
-        bands = bands.join(ok, ["band", "band_sig"], "leftsemi")
+    bands = _cap_buckets(bands, max_bucket_size)
     a = bands.select("band", "band_sig", F.col("doc_id").alias("doc_a"))
     b = bands.select("band", "band_sig", F.col("doc_id").alias("doc_b"))
     return (
@@ -223,37 +233,17 @@ def minhash_lsh_duplicates(docs: DataFrame, num_hashes: int = 32, rows_per_band:
     """Full near-dup pipeline: LSH candidates verified with exact Jaccard
     over shingle sets; returns (doc_a, doc_b, jaccard) above threshold.
     `max_bucket_size` caps degenerate band buckets (see lsh_candidate_pairs)."""
-    pairs, _sh = _minhash_pairs(docs, num_hashes, rows_per_band, k, threshold,
-                                text_col, id_col, max_bucket_size)
-    # the returned plan references the persisted shingles (they feed
-    # signatures, sizes, AND verification); callers that materialize the
-    # result and want the cache back use near_duplicate_clusters' pattern
-    return pairs
-
-
-def _minhash_pairs(docs: DataFrame, num_hashes: int, rows_per_band: int, k: int,
-                   threshold: float, text_col: str, id_col: str,
-                   max_bucket_size: int | None) -> tuple[DataFrame, DataFrame]:
-    """(pairs plan, persisted shingle handle) — the handle lets callers that
-    eagerly materialize the pairs unpersist the shingle cache afterwards."""
-    # one shingle materialization feeds signatures, sizes, and verification
-    sh = shingle_set_arrow(docs, text_col, id_col, k).persist()
-    hashed = sh.withColumn("h", md5_long(F.col("shingle")) % MINHASH_P)
-    aggs = []
-    for i in range(num_hashes):
-        a, b = minhash_seed(i)
-        aggs.append(F.min((F.lit(a) * F.col("h") + F.lit(b)) % MINHASH_P).alias(f"mh_{i}"))
-    # r12 (guide §2.4): the shingle-set size rides the SAME groupBy as the
-    # 32 min-aggregates (one more partial-agg column) instead of paying a
-    # second full shingle-scale aggregation pass + exchange; sigs is
-    # doc-sized, so the lazy checkpoint lets its three consumers (bands ×
-    # the self-join's two sides, sizes) read it instead of replaying the
-    # shingle aggregation.  n_sh values are identical by construction.
-    sigs = (hashed.groupBy("doc_id")
-            .agg(*aggs, F.count(F.lit(1)).alias("n_sh"))
+    # one shingle cut feeds the signatures and the verify join: a lazy
+    # local checkpoint like sigs, so its blocks go with the returned plan
+    sh = shingle_set_arrow(docs, text_col, id_col, k).localCheckpoint(eager=False)
+    # r12: the shingle-set size n_sh rides the SAME groupBy as the
+    # min-aggregates instead of a second shingle-scale aggregation; sigs
+    # is doc-sized, and its lazy cut lets its consumers (bands × the
+    # self-join's two sides, sizes) read it instead of replaying that.
+    sigs = (_hashed_shingles(sh).groupBy("doc_id")
+            .agg(*_minhash_aggs(num_hashes), F.count(F.lit(1)).alias("n_sh"))
             .localCheckpoint(eager=False))
     cands = lsh_candidate_pairs(lsh_bands(sigs, rows_per_band), max_bucket_size)
-    sizes = sigs.select("doc_id", "n_sh")
     sh_a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     sh_b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
     common = (
@@ -261,7 +251,13 @@ def _minhash_pairs(docs: DataFrame, num_hashes: int, rows_per_band: int, k: int,
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    pairs = (
+    return _jaccard(common, sigs.select("doc_id", "n_sh"), threshold)
+
+
+def _jaccard(common: DataFrame, sizes: DataFrame, threshold: float) -> DataFrame:
+    """Exact Jaccard verify: shared-shingle counts (doc_a, doc_b, n_common)
+    and set sizes (doc_id, n_sh) → (doc_a, doc_b, jaccard ≥ threshold)."""
+    return (
         common
         .join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a")), "doc_a")
         .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b")), "doc_b")
@@ -269,7 +265,6 @@ def _minhash_pairs(docs: DataFrame, num_hashes: int, rows_per_band: int, k: int,
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-    return pairs, sh
 
 
 def near_duplicate_clusters(docs: DataFrame, num_hashes: int = 32, rows_per_band: int = 4,
@@ -287,17 +282,13 @@ def near_duplicate_clusters(docs: DataFrame, num_hashes: int = 32, rows_per_band
     so diameters are tiny."""
     from hugegraph_on_tikv_spark.operators.analytics import connected_components
 
-    pairs, sh = _minhash_pairs(docs, num_hashes, rows_per_band, k, threshold,
-                               text_col, id_col, max_bucket_size)
-    try:
-        # materialize the (tiny) pair edge list ONCE before iterating: the
-        # CC rounds then re-read a checkpointed edge list instead of
-        # re-running the whole minhash pipeline per round, and the shingle
-        # cache can be released immediately
-        edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")) \
-            .localCheckpoint(eager=True)
-    finally:
-        sh.unpersist()
+    pairs = minhash_lsh_duplicates(docs, num_hashes, rows_per_band, k, threshold,
+                                   text_col, id_col, max_bucket_size)
+    # materialize the (tiny) pair edge list ONCE before iterating: the CC
+    # rounds then re-read a checkpointed edge list instead of re-running
+    # the whole minhash pipeline per round
+    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")) \
+        .localCheckpoint(eager=True)
     cc = connected_components(edges, max_iterations=cc_iterations)
     return cc.select(F.col("id").alias("doc_id"), F.col("component").alias("cluster_id"))
 
@@ -367,7 +358,7 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text",
     import pandas as pd
 
     id_type = docs.schema[id_col].dataType.simpleString()
-    pat = re.compile("[^a-z0-9]+")
+    pat = re.compile(TOKEN_PATTERN)
 
     def run(batches):
         for pdf in batches:
@@ -448,14 +439,7 @@ def ngram_jaccard_pairs(docs: DataFrame, k: int = 3, threshold: float = 0.5,
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    return (
-        common
-        .join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b")), "doc_b")
-        .withColumn("jaccard", F.round(F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _jaccard(common, sizes, threshold)
 
 
 # -- incremental corpus dedup index -----------------------------------------
@@ -464,27 +448,18 @@ def ngram_jaccard_pairs(docs: DataFrame, k: int = 3, threshold: float = 0.5,
 # probes them by banded equi-join and appends its own — near-dup detection
 # against ALL prior data without recomputing a single resident signature.
 
-def _index_meta_path(path: str) -> str:
-    import os as _os
-
-    return _os.path.join(path, "index_meta.json")
-
-
-def _read_index_meta(path: str) -> dict:
-    import json as _json
-
-    with open(_index_meta_path(path)) as f:
-        return _json.load(f)
+def _lsh_meta(path: str) -> dict:
+    """The index's index_meta.json; FileNotFoundError when there is none."""
+    if not (meta := _index_meta(path)):
+        raise FileNotFoundError(f"no dedup index at {path}: index_meta.json missing")
+    return meta
 
 
-def _write_index_meta(path: str, meta: dict) -> None:
-    import json as _json
-    import os as _os
-
-    tmp = _index_meta_path(path) + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump(meta, f)
-    _os.replace(tmp, _index_meta_path(path))
+def _batch_sigs(new_docs: DataFrame, meta: dict, text_col: str, id_col: str) -> DataFrame:
+    """A batch's minhash signatures under the index's parameters, cut once
+    so the probe (and the append) read them without recomputing."""
+    return minhash_signatures(new_docs, meta["num_hashes"], meta["k"],
+                              text_col, id_col).localCheckpoint(eager=True)
 
 
 def lsh_write_index(docs: DataFrame, path: str, num_hashes: int = 32,
@@ -501,7 +476,7 @@ def lsh_write_index(docs: DataFrame, path: str, num_hashes: int = 32,
     sigs = docs.sparkSession.read.parquet(f"{path}/signatures")
     (lsh_bands(sigs, rows_per_band).repartition("band")
      .write.mode("overwrite").partitionBy("band").parquet(f"{path}/bands"))
-    _write_index_meta(path, {"num_hashes": num_hashes,
+    _merge_index_meta(path, {"num_hashes": num_hashes,
                              "rows_per_band": rows_per_band, "k": k,
                              "last_batch_id": None})
 
@@ -524,10 +499,9 @@ def lsh_probe_index(spark, path: str, new_docs: DataFrame,
     doc_a < doc_b there).  est_jaccard = fraction of agreeing minhashes —
     deterministic integer comparisons, so the estimate itself is
     oracle-checkable.  Pure read: nothing is appended."""
-    meta = _read_index_meta(path)
-    new_sigs = minhash_signatures(new_docs, meta["num_hashes"], meta["k"],
-                                  text_col, id_col).localCheckpoint(eager=True)
-    return _probe_sigs(spark, path, meta, new_sigs, threshold, max_bucket_size)
+    meta = _lsh_meta(path)
+    return _probe_sigs(spark, path, meta, _batch_sigs(new_docs, meta, text_col, id_col),
+                       threshold, max_bucket_size)
 
 
 def _probe_sigs(spark, path: str, meta: dict, new_sigs: DataFrame,
@@ -536,13 +510,7 @@ def _probe_sigs(spark, path: str, meta: dict, new_sigs: DataFrame,
     lsh_append_index computes them once for the probe and the append."""
     n, r = meta["num_hashes"], meta["rows_per_band"]
     new_bands = lsh_bands(new_sigs, r)
-    res_bands = spark.read.parquet(f"{path}/bands")
-    if max_bucket_size is not None:
-        ok = (res_bands.groupBy("band", "band_sig")
-              .agg(F.count(F.lit(1)).alias("__n"))
-              .filter(F.col("__n") <= max_bucket_size)
-              .select("band", "band_sig"))
-        res_bands = res_bands.join(ok, ["band", "band_sig"], "leftsemi")
+    res_bands = _cap_buckets(spark.read.parquet(f"{path}/bands"), max_bucket_size)
     cross = (
         new_bands.select("band", "band_sig", F.col("doc_id").alias("doc_a"))
         .join(res_bands.select("band", "band_sig", F.col("doc_id").alias("doc_b")),
@@ -576,21 +544,19 @@ def lsh_append_index(spark, path: str, new_docs: DataFrame,
     about to add).  Exactly-once by monotonically increasing `batch_id`
     (committed after the append lands; replay returns an empty frame and
     appends nothing).  Append-only id contract as ivf_append_index."""
-    meta = _read_index_meta(path)
+    meta = _lsh_meta(path)
     if batch_id is not None and meta.get("last_batch_id") is not None \
             and batch_id <= meta["last_batch_id"]:
         return spark.createDataFrame(
             [], "doc_a long, doc_b long, scope string, est_jaccard double")
-    new_sigs = minhash_signatures(new_docs, meta["num_hashes"], meta["k"],
-                                  text_col, id_col).localCheckpoint(eager=True)
+    new_sigs = _batch_sigs(new_docs, meta, text_col, id_col)
     pairs = _probe_sigs(spark, path, meta, new_sigs, threshold,
                         max_bucket_size).localCheckpoint(eager=True)
     new_sigs.write.mode("append").parquet(f"{path}/signatures")
     (lsh_bands(new_sigs, meta["rows_per_band"]).repartition("band")
      .write.mode("append").partitionBy("band").parquet(f"{path}/bands"))
     if batch_id is not None:
-        meta["last_batch_id"] = batch_id
-        _write_index_meta(path, meta)
+        _merge_index_meta(path, {"last_batch_id": batch_id})
     return pairs
 
 
@@ -626,6 +592,16 @@ def deletion_neighborhood_sql(e: str, max_distance: int = 1) -> str:
             )
 
 
+def _deletion_blocks(df: DataFrame, id_col: str, text_col: str,
+                     max_distance: int, out_id: str, out_s: str) -> DataFrame:
+    """One side of the deletion-neighborhood join: (out_id, out_s, _blk)
+    with one row per SymSpell variant `_blk` of the row's text."""
+    return df.select(
+        F.col(id_col).alias(out_id), F.col(text_col).alias(out_s),
+        F.explode(F.expr(deletion_neighborhood_sql(text_col, max_distance))
+                  ).alias("_blk"))
+
+
 def fuzzy_pairs(df: DataFrame, text_col: str = "text",
                 id_col: str = "doc_id", max_distance: int = 1) -> DataFrame:
     """All pairs (id_a < id_b) whose `text_col` values are within
@@ -641,14 +617,8 @@ def fuzzy_pairs(df: DataFrame, text_col: str = "text",
     verify is codegen'd, no Python boundary anywhere.  Ordering of
     (id_a, id_b) follows the id column's own type comparison — pass
     string ids for engine-portable ordering."""
-    base = df.select(
-        F.col(id_col).alias("_id"), F.col(text_col).alias("_s"),
-        F.explode(F.expr(deletion_neighborhood_sql(text_col, max_distance))
-                  ).alias("_blk"))
-    a = base.select(F.col("_id").alias("id_a"), F.col("_s").alias("s_a"),
-                    "_blk")
-    b = base.select(F.col("_id").alias("id_b"), F.col("_s").alias("s_b"),
-                    "_blk")
+    a = _deletion_blocks(df, id_col, text_col, max_distance, "id_a", "s_a")
+    b = _deletion_blocks(df, id_col, text_col, max_distance, "id_b", "s_b")
     # r11 (guide §2.3, shuffle fewer bytes): verify BEFORE the dedup
     # exchange — levenshtein is codegen'd and cheap on short keys, so
     # computing it per candidate occurrence (instead of per distinct
@@ -673,15 +643,8 @@ def fuzzy_join(left: DataFrame, right: DataFrame, text_col: str,
     text_col within max_distance): same deletion-neighborhood blocking as
     fuzzy_pairs, keyed across the two tables.  Returns (left_id,
     right_id, distance)."""
-    def side(d, idc, out_id, out_s):
-        return d.select(
-            F.col(idc).alias(out_id), F.col(text_col).alias(out_s),
-            F.explode(F.expr(deletion_neighborhood_sql(text_col,
-                                                       max_distance))
-                      ).alias("_blk"))
-
-    a = side(left, left_id, "_ida", "_sa")
-    b = side(right, right_id, "_idb", "_sb")
+    a = _deletion_blocks(left, left_id, text_col, max_distance, "_ida", "_sa")
+    b = _deletion_blocks(right, right_id, text_col, max_distance, "_idb", "_sb")
     # verify-then-distinct, same as fuzzy_pairs (r11): the dedup exchange
     # carries (id, id, int) on verified matches only
     return (
@@ -757,6 +720,16 @@ def set_similarity_join(df: DataFrame, set_col: str = "tokens",
 
 # -- cross-document exact substring (span) dedup ------------------------------
 
+def _gram_fps(docs: DataFrame, n: int, text_col: str, id_col: str) -> DataFrame:
+    """Positioned n-gram fingerprints (doc_id, pos, fp): every n-token
+    window (NO distinct — position matters), fp = md5 of the space-joined
+    window so the join key is 32 chars regardless of n."""
+    return (docs.select(
+        F.col(id_col).alias("doc_id"),
+        F.posexplode(word_shingles(F.col(text_col), n)).alias("pos", "gram"))
+        .select("doc_id", "pos", F.md5(F.col("gram")).alias("fp")))
+
+
 def duplicated_spans(docs: DataFrame, n: int = 8, text_col: str = "text",
                      id_col: str = "doc_id",
                      max_docs_per_gram: int = 20) -> DataFrame:
@@ -775,9 +748,7 @@ def duplicated_spans(docs: DataFrame, n: int = 8, text_col: str = "text",
     documents that no whole-document fingerprint can see.
 
     Plan (nothing all-pairs, nothing per-corpus sorted):
-    1. positioned n-grams: posexplode over word_shingles (NO distinct —
-       position matters), fingerprint = md5 of the space-joined window so
-       the join key is 32 chars regardless of n;
+    1. positioned n-gram fingerprints (_gram_fps);
     2. hot-gram cap: fingerprints in < 2 (no partner) or
        > max_docs_per_gram distinct documents (boilerplate headers — the
        quadratic bucket) are dropped BEFORE the join; spans running
@@ -793,10 +764,7 @@ def duplicated_spans(docs: DataFrame, n: int = 8, text_col: str = "text",
         raise ValueError("span n-gram width must be >= 2")
     from pyspark.sql.window import Window
 
-    grams = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(word_shingles(F.col(text_col), n)).alias("pos", "gram"))
-    fps = grams.select("doc_id", "pos", F.md5(F.col("gram")).alias("fp"))
+    fps = _gram_fps(docs, n, text_col, id_col)
     ok = (fps.groupBy("fp")
           .agg(F.countDistinct("doc_id").alias("_nd"))
           .filter((F.col("_nd") >= 2) & (F.col("_nd") <= max_docs_per_gram))
@@ -860,8 +828,8 @@ def contamination_report(corpus: DataFrame, eval_docs: DataFrame, n: int = 8,
     * hit_grams — distinct contaminated n-gram positions in the doc;
     * eval_docs_hit — distinct eval documents it collides with;
     * contaminated_tokens — exact token coverage of the union of the hit
-      windows [pos, pos+n) (gaps-and-islands interval merge, disjoint iff
-      the position gap exceeds n);
+      windows [pos, pos+n) (the _union_intervals merge: for one fixed
+      width, windows are disjoint iff the position gap exceeds n);
     * total_tokens — the doc's token count, so callers can threshold on
       the contaminated fraction.
 
@@ -887,14 +855,9 @@ def contamination_report(corpus: DataFrame, eval_docs: DataFrame, n: int = 8,
         raise ValueError("decontamination n-gram width must be >= 2")
     if mode not in ("set", "bloom"):
         raise ValueError(f"mode must be 'set' or 'bloom', got {mode!r}")
-    from pyspark.sql.window import Window
-
     toks = corpus.select(F.col(id_col).alias("doc_id"),
                          F.size(tokens(F.col(text_col))).alias("total_tokens"))
-    grams = (corpus.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(word_shingles(F.col(text_col), n)).alias("pos", "gram"))
-        .select("doc_id", "pos", F.md5(F.col("gram")).alias("fp")))
+    grams = _gram_fps(corpus, n, text_col, id_col)
     ev = (eval_docs.select(
         F.col(id_col).alias("eval_id"),
         F.explode(F.array_distinct(word_shingles(F.col(text_col), n)))
@@ -925,25 +888,35 @@ def contamination_report(corpus: DataFrame, eval_docs: DataFrame, n: int = 8,
 
     eval_counts = (hits.groupBy("doc_id")
                    .agg(F.countDistinct("eval_id").alias("eval_docs_hit")))
-    pos_hits = hits.select("doc_id", "pos").distinct()
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    isl = (pos_hits
-           .withColumn("_new", F.when(
-               F.lag("pos").over(w).isNull()
-               | (F.col("pos") - F.lag("pos").over(w) > n), 1).otherwise(0))
-           .withColumn("_isl", F.sum("_new").over(
-               w.rowsBetween(Window.unboundedPreceding, 0))))
-    cov = (isl.groupBy("doc_id", "_isl")
-           .agg((F.max("pos") - F.min("pos") + n).alias("_len"),
-                F.count(F.lit(1)).alias("_np"))
-           .groupBy("doc_id")
-           .agg(F.sum("_len").cast("long").alias("contaminated_tokens"),
-                F.sum("_np").cast("long").alias("hit_grams")))
+    windows = (hits.select("doc_id", "pos").distinct()
+               .select("doc_id", F.col("pos").alias("s"), (F.col("pos") + n).alias("e")))
+    cov = (_union_intervals(windows).groupBy("doc_id")
+           .agg(F.sum(F.col("e") - F.col("s")).cast("long").alias("contaminated_tokens"),
+                F.sum("_n").cast("long").alias("hit_grams")))
     return (cov.join(eval_counts, "doc_id")
             .join(toks, "doc_id")
             .select("doc_id", "hit_grams", "eval_docs_hit",
                     "contaminated_tokens",
                     F.col("total_tokens").cast("long").alias("total_tokens")))
+
+
+def _union_intervals(iv: DataFrame) -> DataFrame:
+    """Per-document union of half-open intervals (doc_id, s, e) → (doc_id,
+    s, e, _n), _n = the number of intervals merged.  Gaps-and-islands in
+    (s, e) order: an island breaks where s exceeds the running max e of
+    the earlier rows.  The only window is per document."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("doc_id").orderBy("s", "e")
+    prior_max_e = F.max("e").over(w.rowsBetween(Window.unboundedPreceding, -1))
+    return (iv.withColumn("_new", F.when(
+        prior_max_e.isNull() | (F.col("s") > prior_max_e), 1).otherwise(0))
+        .withColumn("_isl", F.sum("_new").over(
+            w.rowsBetween(Window.unboundedPreceding, 0)))
+        .groupBy("doc_id", "_isl")
+        .agg(F.min("s").alias("s"), F.max("e").alias("e"),
+             F.count(F.lit(1)).alias("_n"))
+        .drop("_isl"))
 
 
 def decontaminate(corpus: DataFrame, eval_docs: DataFrame, n: int = 8,
@@ -972,10 +945,9 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 8,
     doc_b — chains resolve naturally (in a 1-2-3 chain, pair (1,2) clears
     doc 2 and pairs (1,3)/(2,3) clear doc 3).
 
-    Overlapping removal intervals within a doc are unioned with a
-    running-max-end gaps-and-islands pass (variable-length intervals —
-    an island breaks where start > max prior end), then surviving token
-    positions are re-assembled in order.  All windows are per-document.
+    Overlapping removal intervals within a doc are unioned
+    (_union_intervals), then surviving token positions are re-assembled
+    in order.  All windows are per-document.
 
     Returns every input doc as (doc_id, text, n_removed_tokens):
     untouched docs pass through with their ORIGINAL text; modified docs
@@ -983,22 +955,11 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 8,
     surgery is inherently on the normalized stream (case/punctuation
     inside a removed span are gone with it), the standard behavior of
     token-level dedup pipelines."""
-    from pyspark.sql.window import Window
-
     spans = duplicated_spans(docs, n=n, text_col=text_col, id_col=id_col,
                              max_docs_per_gram=max_docs_per_gram)
-    iv = spans.select(F.col("doc_b").alias("doc_id"),
-                      F.col("start_b").alias("s"),
-                      (F.col("start_b") + F.col("span_len")).alias("e"))
-    w = Window.partitionBy("doc_id").orderBy("s", "e")
-    prior_max_e = F.max("e").over(
-        w.rowsBetween(Window.unboundedPreceding, -1))
-    merged = (iv.withColumn("_new", F.when(
-        prior_max_e.isNull() | (F.col("s") > prior_max_e), 1).otherwise(0))
-        .withColumn("_isl", F.sum("_new").over(
-            w.rowsBetween(Window.unboundedPreceding, 0)))
-        .groupBy("doc_id", "_isl")
-        .agg(F.min("s").alias("s"), F.max("e").alias("e")))
+    merged = _union_intervals(spans.select(
+        F.col("doc_b").alias("doc_id"), F.col("start_b").alias("s"),
+        (F.col("start_b") + F.col("span_len")).alias("e")))
 
     toks = docs.select(F.col(id_col).alias("doc_id"),
                        F.posexplode(tokens(F.col(text_col)))

@@ -21,7 +21,8 @@ shortlist), `_rerank` (the exact float-cosine second stage),
 `_exact_mean` (the Lloyd mean), `_wide_codes` (the pq_codes column),
 `_query_block` (the vectorized kernels' driver-collect guard) and
 `_index_meta` / `_merge_index_meta` (the one reader and the one writer
-of index_meta.json).  The vectorized kernels' per-batch numpy loops stay
+of index_meta.json; dedup.py's LSH index reads and writes its meta
+through them too).  The vectorized kernels' per-batch numpy loops stay
 inside their mapInPandas closures: cloudpickle ships a module-level
 helper by reference, so a worker that cannot import this package would
 fail with ModuleNotFoundError.

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from hugegraph_on_tikv_spark.functions import similarity
 from hugegraph_on_tikv_spark.sources.catalog import load_table
 from tests.conftest import SF_DIR
@@ -384,6 +386,59 @@ def test_lsh_index_incremental_equals_oneshot(spark, tmp_path):
     partners = {r["doc_b"] for r in got2.collect()}
     assert {2, 13} <= partners          # near-identical "today" docs found
     assert all(r["scope"] == "cross" for r in got2.collect())
+
+
+def test_lsh_index_missing_meta_raises(spark, tmp_path):
+    """Probing or appending to a path that holds no index names the path
+    in a FileNotFoundError (not a KeyError on a missing meta key)."""
+    from hugegraph_on_tikv_spark.functions import dedup
+
+    batch = spark.createDataFrame([(1, "a b c d e f")], "doc_id long, text string")
+    path = str(tmp_path / "no_index")
+    with pytest.raises(FileNotFoundError, match="no_index"):
+        dedup.lsh_probe_index(spark, path, batch)
+    with pytest.raises(FileNotFoundError, match="no_index"):
+        dedup.lsh_append_index(spark, path, batch, batch_id=1)
+
+
+def test_minhash_pipeline_leaves_no_cached_frame(spark):
+    """The MinHash pipeline's shingle cut belongs to the returned plan: a
+    collected minhash_lsh_duplicates or cross_corpus_contamination leaves
+    the session's cache manager empty."""
+    from pyspark.sql import functions as F
+
+    from hugegraph_on_tikv_spark.functions import dedup
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
+    dedup.minhash_lsh_duplicates(docs, threshold=0.3).collect()
+    assert cache.isEmpty()
+    dedup.cross_corpus_contamination(
+        docs.filter(F.col("doc_id") % 3 != 0), docs.filter(F.col("doc_id") % 3 == 0),
+        threshold=0.3).collect()
+    assert cache.isEmpty()
+
+
+@pytest.mark.parametrize("name, max_jobs", [
+    ("dedup_minhash_lsh", 10), ("contamination", 11), ("dedup_index_probe", 21)])
+def test_minhash_rows_match_oracle_and_job_budget(spark, name, max_jobs):
+    """The raw MinHash rows (fused into the slow-tier dedup_pairs roster
+    row) against their DuckDB oracles, and their cold job counts."""
+    import __spark_entry__ as E
+    from tests.conftest import jobs_since
+    from tests.oracle_diff import compare, duck_connection
+
+    fn = E._RAW_QUERIES[name]
+    since = jobs_since(spark)
+    fn(spark, SF_DIR).collect()
+    assert since() <= max_jobs
+    con = duck_connection(SF_DIR)
+    try:
+        problems = compare(fn(spark, SF_DIR), con, E._RAW_ORACLES[name], name)
+    finally:
+        con.close()
+    assert not problems, "\n".join(problems)
 
 
 def test_multi_probe_lsh_recall_knob(spark):
